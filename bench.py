@@ -226,22 +226,9 @@ def main() -> None:
     # total comparisons divide by the canary ratio to separate code
     # movement from tenancy (per-query spreads already separate
     # within-round noise; this separates BETWEEN-round noise).
-    def _canary_once() -> float:
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 10_000_000, 1, cpus)
-            .select(
-                (F.col("id") % 1000).alias("k"),
-                ((F.col("id") * 2654435761) % 104729).alias("v"),
-            )
-            .groupBy("k")
-            .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-            .agg(F.sum("s").alias("t"), F.sum("n").alias("m"))
-            .collect()
-        )
-        return time.perf_counter() - t0
+    from perfbench.canary import canary_seconds
 
-    canary_runs = [_canary_once() for _ in range(5)]
+    canary_runs = [canary_seconds(spark) for _ in range(5)]
     canary_steady = canary_runs[1:]
     canary = {
         "best_sec": round(min(canary_runs), 3),

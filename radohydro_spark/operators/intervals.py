@@ -83,12 +83,17 @@ def concurrency_sweep(
             .rowsBetween(W.unboundedPreceding, -1)
         )
         offs = sub.select(
-            "_pid",
-            *keys,
+            F.col("_pid").alias("_opid"),
+            *[F.col(k).alias(f"_okey{i}") for i, k in enumerate(keys)],
             F.coalesce(F.sum("_psum").over(woff), F.lit(0)).alias("_off"),
         )
+        # NULL is a key of its own here (the window and the offsets
+        # aggregate both group it), so the join back is NULL-safe
+        on = F.col("_pid") == F.col("_opid")
+        for i, k in enumerate(keys):
+            on = on & F.col(k).eqNullSafe(F.col(f"_okey{i}"))
         return (
-            m.join(offs, ["_pid", *keys])
+            m.join(offs, on)
             .withColumn("concurrency", F.col("_loc") + F.col("_off"))
             .select(*keys, "t", "delta", "concurrency")
         )

@@ -14,11 +14,39 @@ Distinct counts are exact (``count(distinct col)`` — Spark expands to
 expand+two-phase agg) so the DuckDB oracle matches bit-for-bit; at
 trillion-row scale swap in ``approx_count_distinct`` (HLL, one pass, ~2%
 error) — the ``exact=False`` flag does exactly that and drops the oracle.
+
+The drift and concentration statistics come as twins: a global form
+(``ks_drift``) and a per-group form (``ks_drift_by``).  Each pair
+computes its law ONCE, in a private keyed core (``_ks``), under one
+contract:
+
+* the global form is the core with ``group_cols=[]``; the ``_by`` form
+  rejects empty ``group_cols`` and calls the same core with its keys;
+* rows with a NULL group key or a NULL value are excluded;
+* on empty input the global form of a scalar statistic returns one
+  all-NULL row and the ``_by`` form zero rows; diagram statistics (one
+  row per bucket / category / cell) return zero rows in both forms;
+* every BIGINT overflow guard is named after the public function.  The
+  global forms that cumulate (ks, auc, wasserstein, gini, cusum) know
+  their totals on the driver and raise a ``ValueError`` before any job
+  runs; every other form carries the guard in-plan as a named
+  ``assert_true``;
+* cumulation goes through ``_cumulate``: a keyed form runs one
+  group-partitioned window, so one group's domain must fit one task's
+  sort; a global form range-partitions its domain (``_ranged_cumsums``),
+  has no such bound, and its output does not depend on ``n_parts``.
+
+A single-constant-group ``_by`` run therefore equals the global row(s)
+plus the group column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+import operator
+from collections.abc import Callable
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
@@ -128,76 +156,6 @@ def check_constraints(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def psi_drift(
-    old: DataFrame,
-    new: DataFrame,
-    col: str,
-    n_buckets: int = 10,
-    eps: float = 1e-6,
-) -> DataFrame:
-    """Population Stability Index between two snapshots of a numeric
-    column (r6) — the standard drift monitor run before retraining on a
-    new data drop: PSI < 0.1 stable, 0.1-0.25 moderate shift, > 0.25 act.
-
-    Equi-width buckets span the OLD snapshot's [min, max] (the reference
-    distribution defines the grid); NEW values outside the range clamp
-    into the edge buckets, so drift beyond the old support is visible in
-    bucket 0 / n-1 rather than silently dropped.  Proportions are floored
-    at ``eps`` (the standard zero-bucket smoothing) before the
-    ``(p_old - p_new)·ln(p_old/p_new)`` contribution.
-
-    Plan shape: one 1-row aggregate on old (bucket edges, broadcast by
-    crossJoin), one groupBy(bucket) per snapshot — each map-side
-    combinable — and a full-outer join of two ≤ n_buckets-row results.
-    Nothing driver-side scales with the data.  Emits one row per bucket
-    (``bucket, n_old, n_new, p_old, p_new, psi_contrib``); callers sum
-    ``psi_contrib`` for the scalar PSI.
-    """
-    ext = old.agg(F.min(col).alias("_lo"), F.max(col).alias("_hi"))
-
-    def bucketize(df: DataFrame) -> DataFrame:
-        b = F.greatest(
-            F.least(
-                F.floor(
-                    (F.col(col) - F.col("_lo"))
-                    / ((F.col("_hi") - F.col("_lo")) / F.lit(float(n_buckets)))
-                ),
-                F.lit(n_buckets - 1),
-            ),
-            F.lit(0),
-        ).cast("long")
-        return (
-            df.crossJoin(F.broadcast(ext))
-            .filter(F.col(col).isNotNull())
-            .withColumn("bucket", b)
-            .groupBy("bucket")
-            .agg(F.count("*").alias("n"))
-        )
-
-    o = bucketize(old).select("bucket", F.col("n").alias("n_old"))
-    n = bucketize(new).select("bucket", F.col("n").alias("n_new"))
-    j = (
-        o.join(n, "bucket", "full_outer")
-        .select(
-            "bucket",
-            F.coalesce("n_old", F.lit(0)).alias("n_old"),
-            F.coalesce("n_new", F.lit(0)).alias("n_new"),
-        )
-    )
-    tot_o = F.sum("n_old").over(W.partitionBy())
-    tot_n = F.sum("n_new").over(W.partitionBy())
-    p_old = F.greatest(F.col("n_old") / tot_o, F.lit(eps))
-    p_new = F.greatest(F.col("n_new") / tot_n, F.lit(eps))
-    return j.select(
-        "bucket",
-        "n_old",
-        "n_new",
-        F.round(p_old, 9).alias("p_old"),
-        F.round(p_new, 9).alias("p_new"),
-        F.round((p_old - p_new) * F.log(p_old / p_new), 9).alias("psi_contrib"),
-    )
 
 
 def zscore_outliers(
@@ -363,12 +321,89 @@ def table_fingerprint(
     )
 
 
+_BIGINT_MAX = (1 << 63) - 1
+# the ppm/micro laws scale the numerator by 10^6 exactly up to this
+# bound and floor the divisor by 10^6 past it (each family states which
+# operand it branches on)
+_EXACT = 9_000_000_000_000
+
+
+def _require_keys(
+    group_cols: list[str], op_name: str, global_name: str
+) -> None:
+    if not group_cols:
+        raise ValueError(
+            f"{op_name}: group_cols is empty — use {global_name} for the "
+            "global form (operators/profile.py)"
+        )
+
+
+def _not_null(*cols: "str | Column") -> Column:
+    """The twin contract's row filter: values and group keys non-NULL."""
+    return reduce(
+        operator.and_,
+        [(F.col(c) if isinstance(c, str) else c).isNotNull() for c in cols],
+    )
+
+
+def _with_key_rows(
+    df: DataFrame, small: DataFrame, keys: list[str]
+) -> DataFrame:
+    """Broadcast a per-key (|groups|-row; keyless: 1-row) frame back
+    onto ``df`` — the dimension-sized stats-join of the family."""
+    if keys:
+        return df.join(F.broadcast(small), keys)
+    return df.crossJoin(F.broadcast(small))
+
+
+def _merge_counts(o: DataFrame, n: DataFrame) -> DataFrame:
+    """Full-outer merge of per-value count frames ``o = (v_, _c1)`` and
+    ``n = (v_, _c2)``; a value missing on one side counts 0 there."""
+    return o.join(n, "v_", "full_outer").select(
+        "v_",
+        F.coalesce(F.col("_c1"), F.lit(0)).alias("_c1"),
+        F.coalesce(F.col("_c2"), F.lit(0)).alias("_c2"),
+    )
+
+
+def _two_sided_counts(
+    old: DataFrame, new: DataFrame, keys: list[str], v: Column
+) -> DataFrame:
+    """Per-(key, value) counts of two snapshots: ``(<keys>, v_, _c1,
+    _c2)`` with ``v`` evaluated on each side.  Keyless: one
+    map-side-combinable count aggregate per side and a full-outer join
+    of the two domain-sized results.  Keyed: ONE union-tagged count
+    aggregate, whose group exchange the keyed window reuses."""
+    keep = _not_null(v, *keys)
+    if not keys:
+        o, n = (
+            df.filter(keep).groupBy(v.alias("v_")).agg(F.count("*").alias(c))
+            for df, c in ((old, "_c1"), (new, "_c2"))
+        )
+        return _merge_counts(o, n)
+    sides = [
+        df.filter(keep).select(
+            *keys,
+            v.alias("v_"),
+            F.lit(s1).alias("_s1"),
+            F.lit(s2).alias("_s2"),
+        )
+        for df, s1, s2 in ((old, 1, 0), (new, 0, 1))
+    ]
+    return (
+        sides[0]
+        .unionByName(sides[1])
+        .groupBy(*keys, "v_")
+        .agg(F.sum("_s1").alias("_c1"), F.sum("_s2").alias("_c2"))
+    )
+
+
 def _ranged_cumsums(
     df: DataFrame,
     order_col: str,
     cols: list[str],
-    n_parts: int,
-) -> tuple[DataFrame, dict[str, int]] | None:
+    n_parts: int | None = None,
+) -> tuple[DataFrame, dict[str, int | None]]:
     """Range-partitioned cumulative sums — the scale-safe replacement
     for a single-partition global window (the :func:`~radohydro_spark.
     operators.dedup.global_rank` machinery generalized to k measures):
@@ -377,13 +412,15 @@ def _ranged_cumsums(
     of per-partition subtotals (``n_parts`` rows × k longs) whose
     prefix sums become literal offsets.  The cumulation is a pure
     function of the total order, so the output is identical for ANY
-    ``n_parts``.
+    ``n_parts`` (default: ``spark.sql.shuffle.partitions``).
 
     Returns ``(df_with_cums, totals)`` where each input col ``c`` gains
     ``_cum_<c>`` (INCLUSIVE cumulative) and ``totals[c]`` is the
-    driver-side grand total — or ``None`` on empty input.  Shared by
-    :func:`ks_drift` (two-sided CDFs) and :func:`auc_mann_whitney`
-    (tie-averaged rank sums)."""
+    driver-side grand total (``None`` on empty input)."""
+    if n_parts is None:
+        n_parts = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+        )
     m = df.repartitionByRange(n_parts, F.col(order_col)).withColumn(
         "_pid", F.spark_partition_id()
     )
@@ -394,6 +431,9 @@ def _ranged_cumsums(
     )
     for c in cols:
         m = m.withColumn(f"_loc_{c}", F.sum(c).over(wloc))
+    # the subtotal collect and the offset-stitched consumers must see
+    # the SAME range boundaries (repartitionByRange samples them), so
+    # pin one materialization; the session pool releases it
     m = m.cache()
     from radohydro_spark.plans.pipeline import _PERSISTED
 
@@ -404,34 +444,142 @@ def _ranged_cumsums(
         .agg(*[F.sum(c).alias(c) for c in cols])
         .collect()
     )
-    if not parts:
-        return None
-    totals = {c: sum(p[i + 1] for p in parts) for i, c in enumerate(cols)}
     out = m
     for i, c in enumerate(cols):
-        acc, offs = 0, {}
+        offs, acc = [], 0
         for p in parts:
-            offs[p[0]] = acc
+            offs += [p[0], acc]
             acc += p[i + 1]
-        omap = F.create_map(
-            *[F.lit(x) for pid in sorted(offs) for x in (pid, offs[pid])]
+        offset = F.create_map(*map(F.lit, offs))[F.col("_pid")]
+        cum = (
+            F.col(f"_loc_{c}") + offset if parts else F.lit(None).cast("long")
         )
-        out = out.withColumn(
-            f"_cum_{c}", F.col(f"_loc_{c}") + omap[F.col("_pid")]
-        )
+        out = out.withColumn(f"_cum_{c}", cum)
+    totals = {
+        c: sum(p[i + 1] for p in parts) if parts else None
+        for i, c in enumerate(cols)
+    }
     return out.drop(*[f"_loc_{c}" for c in cols]), totals
 
 
-def _label_01_checked(label_col: str, op_name: str) -> "F.Column":
+def _cumulate(
+    df: DataFrame,
+    keys: list[str],
+    order: str | None,
+    cols: list[str],
+    n_parts: int | None = None,
+    lead: bool = False,
+) -> tuple[DataFrame, dict[str, int | None] | None]:
+    """The twins' one cumulation: adds ``_tot_<c>`` (the key's total of
+    each col) and, given an ``order``, ``_cum_<c>`` (INCLUSIVE running
+    sum in that order).  ``lead`` also adds ``_next`` (the next order
+    value within the key, NULL at the last) and ``_tot_span`` (the
+    key's order range).
+
+    Keyed: ONE group-partitioned window (one group's domain must fit
+    one task's sort).  Keyless without an order: a 1-row aggregate
+    broadcast back — no window, no collect, no persist.  Keyless with
+    an order: :func:`_ranged_cumsums` — no single-partition sort, and
+    the totals are known on the driver.
+
+    Returns ``(frame, totals)``: ``totals`` maps each ``_tot_*`` name
+    to its driver-side value in the keyless ordered case (all ``None``
+    on empty input) and is ``None`` when the totals are runtime
+    values."""
+    tots = {c: f"_tot_{c}" for c in cols}
+    if keys:
+        wk = W.partitionBy(*keys)
+        add = []
+        if order is not None:
+            wo = wk.orderBy(order)
+            run = wo.rowsBetween(W.unboundedPreceding, W.currentRow)
+            add += [F.sum(c).over(run).alias(f"_cum_{c}") for c in cols]
+        add += [F.sum(c).over(wk).alias(t) for c, t in tots.items()]
+        if lead:
+            add += [
+                F.lead(order).over(wo).alias("_next"),
+                (F.max(order).over(wk) - F.min(order).over(wk)).alias(
+                    "_tot_span"
+                ),
+            ]
+        return df.select("*", *add), None
+    if order is None:
+        sums = df.agg(*[F.sum(c).alias(t) for c, t in tots.items()])
+        return df.crossJoin(F.broadcast(sums)), None
+    m, sums = _ranged_cumsums(df, order, cols, n_parts)
+    totals = {tots[c]: sums[c] for c in cols}
+    if lead:
+        # each range partition's last row leads into the NEXT
+        # partition's first value: per-partition extents (one more
+        # dimension-sized collect) give those heads and the span
+        ext = sorted(
+            (r["_pid"], r["lo"], r["hi"])
+            for r in m.groupBy("_pid")
+            .agg(F.min(order).alias("lo"), F.max(order).alias("hi"))
+            .collect()
+        )
+        heads = [x for a, b in zip(ext, ext[1:]) for x in (a[0], b[1])]
+        boundary = (
+            F.create_map(*map(F.lit, heads))[F.col("_pid")]
+            if heads
+            else F.lit(None)
+        ).cast(m.schema[order].dataType)
+        nxt = F.lead(order).over(W.partitionBy("_pid").orderBy(order))
+        m = m.withColumn("_next", F.coalesce(nxt, boundary))
+        totals["_tot_span"] = ext[-1][2] - ext[0][1] if ext else None
+    for t, v in totals.items():
+        m = m.withColumn(t, F.lit(v).cast("long"))
+    return m, totals
+
+
+def _div(a: "int | Column", b: "int | Column") -> "int | Column":
+    """Exact BIGINT ``div`` on driver ints or on columns, so a guard
+    reads the same in both places."""
+    if isinstance(a, int) and isinstance(b, int):
+        return a // b
+    return F.call_function(
+        "div", *[F.lit(x) if isinstance(x, int) else x for x in (a, b)]
+    )
+
+
+def _max1(x: "int | Column") -> "int | Column":
+    return max(x, 1) if isinstance(x, int) else F.greatest(x, F.lit(1))
+
+
+def _bound(
+    x: Column,
+    ok: Callable[[Callable[[str], "int | Column"]], "bool | Column"],
+    totals: dict[str, int | None] | None,
+    msg: str,
+) -> Column:
+    """A family's named BIGINT overflow contract, guarding the law
+    operand ``x``.  ``ok(g)`` states the contract over the ``_tot_*``
+    totals (``g(name)``) with ``_div``/``_max1`` and comparisons only,
+    checked divisionally so no guarded product is ever formed.
+
+    When the totals are driver-side ints (the keyless cumulating
+    forms) a breach raises ``ValueError(msg)`` before any job runs;
+    otherwise the check is an in-plan ``assert_true`` carrying
+    ``msg``."""
+    if totals is not None:
+        if None not in totals.values() and not ok(totals.__getitem__):
+            raise ValueError(f"{msg}; totals {totals}")
+        return x
+    cond = ok(F.col)
+    return F.when(cond, x).otherwise(
+        F.assert_true(cond, F.lit(msg)).cast("long")
+    )
+
+
+def _label_01_checked(label_col: str, op_name: str) -> Column:
     """Shared 0/1-label contract: the checked column every positive-
-    count consumer (auc / calibration, global and per-group) sums.
+    count consumer (auc / calibration) sums.
 
     The guard runs on the RAW column BEFORE the long cast — a
     fractional label (0.9, the probability-column misuse) would
     truncate to 0 and slip past a post-cast check while still
-    corrupting n_pos (r16 review); any value outside {0, 1} raises the
-    named in-plan ``assert_true`` (the loud-contract convention for
-    per-row domains).  NULL labels are the caller's pre-filter.
+    corrupting n_pos; any value outside {0, 1} raises the named
+    in-plan ``assert_true``.  NULL labels are the caller's pre-filter.
     """
     raw = F.col(label_col)
     guard = (raw == 0) | (raw == 1)
@@ -444,6 +592,178 @@ def _label_01_checked(label_col: str, op_name: str) -> "F.Column":
                 "count silently (operators/profile.py)"
             ),
         ).cast("long")
+    )
+
+
+# ------------------------------------------------------------------ psi
+
+
+def _psi_rows(counts: DataFrame, keys: list[str], eps: float) -> DataFrame:
+    """The eps-floored PSI projection over per-bucket counts ``(<keys>,
+    v_, _c1, _c2)`` — one float law for the equi-width twins and the
+    reference-quantile / stored-baseline forms.  A key with no NEW rows
+    reports ``p_new`` and ``psi_contrib`` as NULL (proportions are
+    undefined on an empty side)."""
+    m, _ = _cumulate(counts, keys, None, ["_c1", "_c2"])
+    p_old = F.greatest(F.col("_c1") / F.col("_tot__c1"), F.lit(eps))
+    p_new = F.greatest(F.col("_c2") / F.col("_tot__c2"), F.lit(eps))
+    one_sided = F.col("_tot__c2") == 0
+    return m.select(
+        *keys,
+        F.col("v_").cast("long").alias("bucket"),
+        F.col("_c1").cast("long").alias("n_old"),
+        F.col("_c2").cast("long").alias("n_new"),
+        F.round(p_old, 9).alias("p_old"),
+        F.when(one_sided, F.lit(None).cast("double"))
+        .otherwise(F.round(p_new, 9))
+        .alias("p_new"),
+        F.when(one_sided, F.lit(None).cast("double"))
+        .otherwise(F.round((p_old - p_new) * F.log(p_old / p_new), 9))
+        .alias("psi_contrib"),
+    )
+
+
+def _psi(
+    old: DataFrame,
+    new: DataFrame,
+    col: str,
+    keys: list[str],
+    n_buckets: int,
+    eps: float,
+) -> DataFrame:
+    keep = _not_null(col, *keys)
+    ext = (
+        old.filter(keep)
+        .groupBy(*keys)
+        .agg(F.min(col).alias("_lo"), F.max(col).alias("_hi"))
+    )
+    # a constant reference extent (hi == lo) buckets everything to 0
+    b = F.when(F.col("_hi") == F.col("_lo"), F.lit(0).cast("long")).otherwise(
+        F.greatest(
+            F.least(
+                F.floor(
+                    (F.col(col) - F.col("_lo"))
+                    / ((F.col("_hi") - F.col("_lo")) / F.lit(float(n_buckets)))
+                ),
+                F.lit(n_buckets - 1),
+            ),
+            F.lit(0),
+        ).cast("long")
+    )
+    o, n = (
+        _with_key_rows(df.filter(keep), ext, keys).select(*keys, b.alias("_b"))
+        for df in (old, new)
+    )
+    return _psi_rows(_two_sided_counts(o, n, keys, F.col("_b")), keys, eps)
+
+
+def psi_drift(
+    old: DataFrame,
+    new: DataFrame,
+    col: str,
+    n_buckets: int = 10,
+    eps: float = 1e-6,
+) -> DataFrame:
+    """Population Stability Index between two snapshots of a numeric
+    column — the standard drift monitor run before retraining on a new
+    data drop: PSI < 0.1 stable, 0.1-0.25 moderate shift, > 0.25 act.
+
+    Equi-width buckets span the OLD snapshot's [min, max] (the reference
+    distribution defines the grid; a constant reference puts every row
+    in bucket 0); NEW values outside the range clamp into the edge
+    buckets, so drift beyond the old support is visible in bucket 0 /
+    n-1 rather than silently dropped.  Proportions are floored at
+    ``eps`` (the standard zero-bucket smoothing) before the
+    ``(p_old - p_new)·ln(p_old/p_new)`` contribution.
+
+    Plan shape: one 1-row extent aggregate on old (broadcast back), one
+    ``groupBy(bucket)`` per snapshot — each map-side combinable — and a
+    full-outer join of two ≤ n_buckets-row results.  Nothing
+    driver-side scales with the data.  Emits one row per bucket
+    (``bucket, n_old, n_new, p_old, p_new, psi_contrib``); callers sum
+    ``psi_contrib`` for the scalar PSI.  Twin: :func:`psi_drift_by`.
+    """
+    return _psi(old, new, col, [], n_buckets, eps)
+
+
+def psi_drift_by(
+    old: DataFrame,
+    new: DataFrame,
+    col: str,
+    group_cols: list[str],
+    n_buckets: int = 10,
+    eps: float = 1e-6,
+) -> DataFrame:
+    """Per-group :func:`psi_drift` (twin contract in the module
+    docstring): each group's grid spans ITS old ``[min, max]``, so a
+    group with no old rows has no grid and does not appear.  The
+    per-group extents (|groups| rows) are broadcast back; no row ever
+    shuffles on the group key.
+
+    Returns ``(<group_cols>, bucket, n_old, n_new, p_old, p_new,
+    psi_contrib)`` per non-empty (group, bucket).
+    """
+    _require_keys(group_cols, "psi_drift_by", "psi_drift")
+    assert 2 <= n_buckets <= 10_000
+    return _psi(old, new, col, group_cols, n_buckets, eps)
+
+
+# ------------------------------------------------------------------ auc
+
+
+def _auc(
+    df: DataFrame,
+    score_col: str,
+    label_col: str,
+    keys: list[str],
+    op_name: str,
+    n_parts: int | None = None,
+) -> DataFrame:
+    y = _label_01_checked(label_col, op_name)
+    counts = (
+        df.filter(_not_null(score_col, label_col, *keys))
+        .groupBy(*keys, F.col(score_col).alias("v_"))
+        .agg(F.count("*").alias("_ct"), F.sum(y).alias("_cp"))
+    )
+    m, t = _cumulate(counts, keys, "v_", ["_ct", "_cp"], n_parts)
+    # 2R+ <= n_pos*(2*n_tot + 1): n_pos*n_tot < 2^61 keeps it (and the
+    # 2*n_pos*n_neg denominator) in BIGINT
+    cp = _bound(
+        F.col("_cp"),
+        lambda g: g("_tot__ct") <= _div((1 << 61) - 1, _max1(g("_tot__cp"))),
+        t,
+        f"{op_name}: 2*n_pos*n_tot exceeds the BIGINT rank-statistic "
+        "domain (2^62) — sample a class or pre-quantize the score "
+        "(operators/profile.py)",
+    )
+    # exclusive cumulative count C = inclusive - own
+    excl = F.col("_cum__ct") - F.col("_ct")
+    scored = m.select(
+        *keys,
+        (cp * (F.lit(2) * excl + F.col("_ct") + F.lit(1))).alias("_term"),
+        "_tot__ct",
+        "_tot__cp",
+    )
+    out = scored.groupBy(*keys).agg(
+        F.max("_tot__cp").alias("n_pos"),
+        (F.max("_tot__ct") - F.max("_tot__cp")).alias("n_neg"),
+        F.sum("_term").alias("rank_sum_pos_x2"),
+    )
+    # branch on the denominator 2*n_pos*n_neg
+    ppm = F.expr(
+        "CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL"
+        f"     WHEN 2 * n_pos * n_neg <= {_EXACT}"
+        "     THEN (1000000 * (rank_sum_pos_x2 - n_pos * (n_pos + 1)))"
+        "          div (2 * n_pos * n_neg)"
+        "     ELSE (rank_sum_pos_x2 - n_pos * (n_pos + 1))"
+        "          div ((2 * n_pos * n_neg) div 1000000) END"
+    )
+    return out.select(
+        *keys,
+        F.col("n_pos").cast("long").alias("n_pos"),
+        F.col("n_neg").cast("long").alias("n_neg"),
+        F.col("rank_sum_pos_x2").cast("long").alias("rank_sum_pos_x2"),
+        ppm.cast("long").alias("auc_ppm"),
     )
 
 
@@ -467,94 +787,96 @@ def auc_mann_whitney(
     tie-averaged rank of every row at value v is
     ``C(v) + (c_tot(v)+1)/2`` — so the DOUBLED rank-sum
     ``2·R⁺ = Σ_v c_pos(v)·(2·C(v) + c_tot(v) + 1)`` is an integer and
-    no half ever materializes.  The reported ``auc_ppm`` is ONE
-    terminal floored division with the :func:`ks_drift` piecewise
-    overflow law: denominator ``2·n₊·n₋`` below 9e12 scales the
-    numerator by 10⁶ exactly, above it divides first — same law in the
-    oracle, identical truncation.  Validity bound ``2·n₊·n₋ < 2^63``
-    (~2e9 rows balanced) raises this operator's NAMED ValueError (the
-    totals are driver-side longs), never an opaque ANSI overflow.
+    no half ever materializes.  ``auc_ppm`` is ONE terminal floored
+    division branching on the denominator ``2·n₊·n₋``: below 9e12 it
+    scales the numerator by 10⁶ exactly, above it divides first — same
+    law in the oracle.  Validity bound ``n₊·n_tot < 2^61`` (it keeps
+    2·R⁺ itself in BIGINT).  ``label_col`` must be 0/1 (named in-plan
+    assert).
 
-    Plan shape: one per-value count aggregate (map-side combinable,
-    output = the score's value domain), cumulative counts via
-    :func:`_ranged_cumsums` (range partition + per-range local window +
-    one n_parts-row subtotal collect — no single-partition sort, no row
-    cap, the r14 ks_drift rework shared), one 1-row sum.  A
-    near-distinct continuous score (the common case: model logits,
-    prices) is exactly the regime the range partitioning exists for.
+    Plan shape: one per-value count aggregate (output = the score's
+    value domain), cumulative counts on the range-partitioned
+    :func:`_cumulate`, one 1-row sum.  Output does not depend on
+    ``n_parts``.
 
     Returns ONE row ``(n_pos, n_neg, rank_sum_pos_x2, auc_ppm)``;
-    ``auc_ppm`` is NULL when either class is empty, and the degenerate
-    empty input yields the all-NULL row (the ks_drift convention).
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
+    ``auc_ppm`` is NULL when either class is empty.  Twin:
+    :func:`auc_by`.
     """
-    spark = df.sparkSession
-    if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    # shared 0/1 label contract (raw-column check — r15 ADVICE +
-    # r16 review: a fractional label must not truncate past the guard)
-    y_checked = _label_01_checked(label_col, "auc_mann_whitney")
-    g = (
-        df.filter(
-            F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
-        )
-        .groupBy(F.col(score_col).alias("v"))
-        .agg(
-            F.count("*").alias("_ct"),
-            F.sum(y_checked).alias("_cp"),
-        )
+    return _auc(df, score_col, label_col, [], "auc_mann_whitney", n_parts)
+
+
+def auc_by(
+    df: DataFrame,
+    score_col: str,
+    label_col: str,
+    group_cols: list[str],
+) -> DataFrame:
+    """Per-group :func:`auc_mann_whitney` (twin contract in the module
+    docstring) — production classifier evaluation is per slice: a score
+    that ranks well globally can invert on a minority segment.
+    One-class groups report ``auc_ppm = NULL``.
+
+    Returns ``(<group_cols>, n_pos, n_neg, rank_sum_pos_x2, auc_ppm)``
+    per group.
+    """
+    _require_keys(group_cols, "auc_by", "auc_mann_whitney")
+    return _auc(df, score_col, label_col, group_cols, "auc_by")
+
+
+# ------------------------------------------------------------------- ks
+
+
+def _ks(
+    old: DataFrame,
+    new: DataFrame,
+    col: str,
+    keys: list[str],
+    op_name: str,
+    n_parts: int | None = None,
+) -> DataFrame:
+    counts = _two_sided_counts(old, new, keys, F.col(col))
+    m, t = _cumulate(counts, keys, "v_", ["_c1", "_c2"], n_parts)
+    n2 = _bound(
+        F.col("_tot__c2"),
+        lambda g: g("_tot__c2") <= _div(_BIGINT_MAX, _max1(g("_tot__c1"))),
+        t,
+        f"{op_name}: n1*n2 exceeds the BIGINT cross-multiplication "
+        "domain (2^63) — pre-quantize the column (psi_drift-style "
+        "bucketing) or sample a side (operators/profile.py)",
     )
-    # _cp rides the subtotal collect so n_pos is free (no extra job);
-    # its cumulative column is simply unused
-    cum = _ranged_cumsums(g, "v", ["_ct", "_cp"], n_parts)
-    if cum is None:
-        return spark.range(1).select(
-            F.lit(None).cast("long").alias("n_pos"),
-            F.lit(None).cast("long").alias("n_neg"),
-            F.lit(None).cast("long").alias("rank_sum_pos_x2"),
-            F.lit(None).cast("long").alias("auc_ppm"),
-        )
-    m, totals = cum
-    n_tot = totals["_ct"]
-    n_pos = totals["_cp"]
-    n_neg = n_tot - n_pos
-    den = 2 * n_pos * n_neg
-    if den >= (1 << 63):
-        raise ValueError(
-            f"auc_mann_whitney: 2*n_pos*n_neg = 2*{n_pos}*{n_neg} "
-            "exceeds the BIGINT rank-statistic domain (2^63) — sample "
-            "a class or pre-quantize the score (operators/profile.py)"
-        )
-    r2 = m.select(
-        F.sum(
-            F.col("_cp")
-            * (
-                F.lit(2) * (F.col("_cum__ct") - F.col("_ct"))
-                + F.col("_ct")
-                + F.lit(1)
-            )
-        ).alias("r2")
+    scored = m.select(
+        *keys,
+        "v_",
+        F.abs(F.col("_cum__c1") * n2 - F.col("_cum__c2") * F.col("_tot__c1"))
+        .alias("_d"),
+        "_tot__c1",
+        "_tot__c2",
     )
-    if n_pos == 0 or n_neg == 0:
-        ppm = F.lit(None).cast("long")
-    else:
-        # numerator = 2*R+ - n_pos*(n_pos+1) <= den, so the 10^6 scale
-        # is exact below 9e12 pair-products (the ks_drift law)
-        if den <= 9_000_000_000_000:
-            ppm = F.expr(
-                f"(1000000 * (r2 - {n_pos * (n_pos + 1)})) div {den}"
-            )
-        else:
-            ppm = F.expr(
-                f"(r2 - {n_pos * (n_pos + 1)}) div {den // 1_000_000}"
-            )
-    return r2.select(
-        F.lit(n_pos).cast("long").alias("n_pos"),
-        F.lit(n_neg).cast("long").alias("n_neg"),
-        F.col("r2").cast("long").alias("rank_sum_pos_x2"),
-        ppm.cast("long").alias("auc_ppm"),
+    out = scored.groupBy(*keys).agg(
+        F.max("_tot__c1").alias("n_old"),
+        F.max("_tot__c2").alias("n_new"),
+        F.max("_d").alias("d_num"),
+        # smallest value attaining the max: negate the score, never the
+        # value (any orderable type)
+        F.min_by(
+            "v_", F.struct((-F.col("_d")).alias("nd"), F.col("v_"))
+        ).alias("at_value"),
+    )
+    # branch on the denominator n1*n2
+    ppm = F.expr(
+        "CASE WHEN n_old <= 0 OR n_new <= 0 THEN NULL"
+        f"     WHEN n_old * n_new <= {_EXACT}"
+        "     THEN (1000000 * d_num) div (n_old * n_new)"
+        "     ELSE d_num div ((n_old * n_new) div 1000000) END"
+    )
+    return out.select(
+        *keys,
+        F.col("n_old").cast("long").alias("n_old"),
+        F.col("n_new").cast("long").alias("n_new"),
+        F.col("d_num").cast("long").alias("d_num"),
+        ppm.cast("long").alias("ks_ppm"),
+        "at_value",
     )
 
 
@@ -573,122 +895,103 @@ def ks_drift(
     EXACT cross-engine by integer CROSS-MULTIPLICATION: with cumulative
     counts ``c1(v), c2(v)`` and totals ``n1, n2``, the statistic
     compares ``|c1·n2 − c2·n1|`` — pure BIGINT, no ratio ever
-    materializes, so engines can never split on a division ulp.
-    Valid while ``n1·n2 < 2^63`` (~3e9 rows per side; document-level
-    drift checks sit far below) — NOW AN ENFORCED contract: the totals
-    are driver-side longs (one number per range partition, see below),
-    so the bound raises a named ``ValueError`` instead of an opaque
-    ANSI ARITHMETIC_OVERFLOW deep in a task (r13 ADVICE).  The reported
-    ``ks_ppm`` is the single terminal division, floored the same way on
-    both engines — computed piecewise so the ``10⁶·d`` numerator cannot
-    overflow (d can reach n1·n2, so the naive scaling dies at ~3e6 rows
-    per side; r13 review): below 9e12 pair-products it is
-    ``(10⁶·d) div (n1·n2)`` exactly, above it
-    ``d div ((n1·n2) div 10⁶)`` — same law in the oracle, so the
-    off-by-one-ppm truncation difference between the branches can never
-    split engines.
+    materializes, so engines can never split on a division ulp.  Valid
+    while ``n1·n2 < 2^63`` (~3e9 rows per side).  ``ks_ppm`` is the
+    single terminal division, floored the same way on both engines and
+    branching on the denominator so the ``10⁶·d`` numerator cannot
+    overflow: below 9e12 pair-products it is ``(10⁶·d) div (n1·n2)``
+    exactly, above it ``d div ((n1·n2) div 10⁶)`` — same law in the
+    oracle.
 
-    Plan shape (r14 — the scale-safe rework of the round-13 weak spot):
-    one per-value count aggregate per snapshot (map-side combinable,
-    output = the column's VALUE DOMAIN), a full-outer join on the
-    value, then cumulative counts via the :func:`~radohydro_spark.
-    operators.dedup.global_rank` RANGE-PARTITION machinery instead of a
-    single-partition global window: range-partition the merged domain
-    on ``v``, per-partition running sums (a window partitioned by the
-    physical partition id — each task sorts only its own range), and
-    ONE dimension-sized driver collect of per-partition subtotals
-    (``n_parts`` rows, two longs each) whose prefix sums become literal
-    offsets.  On a near-distinct continuous column (the r13 verdict's
-    case: cents-quantized prices, value domain ≈ row count) no single
-    core ever sorts the whole relation and there is no 10M-row cap —
-    the cumulation is a pure function of the total ``v`` order, so the
-    output is identical for ANY ``n_parts`` (the global_rank argument;
-    property-tested against the hand case).  The subtotal collect also
-    yields ``n1``/``n2`` for free, so the old totals-aggregate +
-    broadcast cross-join stage disappears.
-
-    ``n_parts`` defaults to the session's
-    ``spark.sql.shuffle.partitions`` (the global_rank convention: a
-    cluster sized for 100 TB raises it, and each range partition must
-    fit one task's sort).
+    Plan shape: one per-value count aggregate per snapshot (map-side
+    combinable, output = the column's VALUE DOMAIN), a full-outer join
+    on the value, then cumulative counts via the range-partitioned
+    :func:`_cumulate`: range-partition the merged domain on the value,
+    per-partition running sums, and ONE dimension-sized driver collect
+    of per-partition subtotals (``n_parts`` rows, two longs each) whose
+    prefix sums become literal offsets and whose sums are ``n1``/``n2``.
+    On a near-distinct continuous column (value domain ≈ row count) no
+    single core ever sorts the whole relation, and the output is
+    identical for ANY ``n_parts`` (default:
+    ``spark.sql.shuffle.partitions``; each range partition must fit
+    one task's sort).
 
     Returns ONE row: ``(n_old, n_new, d_num, ks_ppm, at_value)`` where
     ``d_num = max |c1·n2 − c2·n1|``, ``ks_ppm = 10⁶·d_num div (n1·n2)``
     and ``at_value`` is the smallest value attaining the max (the drift
-    location, deterministic under ties).
+    location, deterministic under ties).  Twin: :func:`ks_drift_by`.
     """
-    spark = old.sparkSession
-    if n_parts is None:
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    o = (
-        old.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).alias("v"))
-        .agg(F.count("*").alias("_c1"))
-    )
-    n = (
-        new.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).alias("v"))
-        .agg(F.count("*").alias("_c2"))
-    )
-    merged = o.join(n, "v", "full_outer").select(
-        "v",
-        F.coalesce(F.col("_c1"), F.lit(0)).alias("_c1"),
-        F.coalesce(F.col("_c2"), F.lit(0)).alias("_c2"),
-    )
-    v_type = merged.schema["v"].dataType
+    return _ks(old, new, col, [], "ks_drift", n_parts)
 
-    cum = _ranged_cumsums(merged, "v", ["_c1", "_c2"], n_parts)
-    if cum is None:
-        # empty merged domain: preserve the pre-r14 degenerate row
-        # (aggregating an empty relation yielded one all-NULL row)
-        return spark.range(1).select(
-            F.lit(None).cast("long").alias("n_old"),
-            F.lit(None).cast("long").alias("n_new"),
-            F.lit(None).cast("long").alias("d_num"),
-            F.lit(None).cast("long").alias("ks_ppm"),
-            F.lit(None).cast(v_type).alias("at_value"),
-        )
-    m, totals = cum
-    n1, n2 = totals["_c1"], totals["_c2"]
-    if n1 * n2 >= (1 << 63):
-        raise ValueError(
-            f"ks_drift: n1*n2 = {n1}*{n2} exceeds the BIGINT "
-            "cross-multiplication domain (2^63) — pre-quantize the "
-            "column (psi_drift-style bucketing) or sample a side "
-            "(operators/profile.py)"
-        )
-    scored = m.select(
-        "v",
-        F.abs(
-            F.col("_cum__c1") * F.lit(n2) - F.col("_cum__c2") * F.lit(n1)
-        ).alias("_d"),
+
+def ks_drift_by(
+    old: DataFrame,
+    new: DataFrame,
+    col: str,
+    group_cols: list[str],
+) -> DataFrame:
+    """Per-group :func:`ks_drift` (twin contract in the module
+    docstring): one D statistic per segment / arm / source.  The
+    cumulation is a group-partitioned window, so one group's value
+    domain must fit one task's sort; for a single segment with an
+    unbounded near-distinct domain run :func:`ks_drift` on that
+    segment's filter.  The count aggregate, both windows and the final
+    ``groupBy(group)`` share one group-key exchange.
+
+    Returns ``(<group_cols>, n_old, n_new, d_num, ks_ppm, at_value)``
+    per group.
+    """
+    _require_keys(group_cols, "ks_drift_by", "ks_drift")
+    return _ks(old, new, col, group_cols, "ks_drift_by")
+
+
+# ------------------------------------------------------------------ tvd
+
+
+def _tvd(counts: DataFrame, keys: list[str], op_name: str) -> DataFrame:
+    m, _ = _cumulate(counts, keys, None, ["_c1", "_c2"])
+    # 2*n1*n2 < 2^63 bounds every term and their sum
+    n2 = _bound(
+        F.col("_tot__c2"),
+        lambda g: g("_tot__c2") <= _div((1 << 62) - 1, _max1(g("_tot__c1"))),
+        None,
+        f"{op_name}: 2*n1*n2 exceeds the BIGINT cross-multiplication "
+        "domain (2^63) — sample a side (operators/profile.py)",
     )
-    if n1 <= 0 or n2 <= 0:
-        ppm = F.lit(None).cast("long")
-    elif n1 * n2 <= 9_000_000_000_000:
-        ppm = F.expr(f"(1000000 * d_num) div {n1 * n2}")
-    else:
-        ppm = F.expr(f"d_num div {(n1 * n2) // 1_000_000}")
-    return (
-        scored.groupBy()
-        .agg(
-            F.max("_d").alias("d_num"),
-            # smallest value attaining the max (numeric tie-law: max_by
-            # on (_d, -v) picks max _d then min v)
-            F.max_by(
-                "v",
-                F.struct(F.col("_d").alias("d"), (-F.col("v")).alias("nv")),
-            ).alias("at_value"),
-        )
-        .select(
-            F.lit(n1).cast("long").alias("n_old"),
-            F.lit(n2).cast("long").alias("n_new"),
-            "d_num",
-            ppm.cast("long").alias("ks_ppm"),
-            "at_value",
-        )
+    scored = m.select(
+        *keys,
+        "v_",
+        F.abs(
+            F.col("_c1") * n2 - F.col("_c2") * F.col("_tot__c1")
+        ).alias("_d"),
+        "_tot__c1",
+        "_tot__c2",
+    )
+    out = scored.groupBy(*keys).agg(
+        F.max("_tot__c1").alias("n_old"),
+        F.max("_tot__c2").alias("n_new"),
+        F.sum("_d").alias("tvd_num"),
+        # largest per-category numerator, smallest category on ties
+        F.min_by(
+            "v_", F.struct((-F.col("_d")).alias("nd"), F.col("v_"))
+        ).alias("top_category"),
+        F.max("_d").alias("top_num"),
+    )
+    # branch on the denominator 2*n1*n2
+    ppm = F.expr(
+        "CASE WHEN n_old = 0 OR n_new = 0 THEN NULL"
+        f"     WHEN 2 * n_old * n_new <= {_EXACT}"
+        "     THEN (1000000 * tvd_num) div (2 * n_old * n_new)"
+        "     ELSE tvd_num div ((2 * n_old * n_new) div 1000000) END"
+    )
+    return out.select(
+        *keys,
+        F.col("n_old").cast("long").alias("n_old"),
+        F.col("n_new").cast("long").alias("n_new"),
+        F.col("tvd_num").cast("long").alias("tvd_num"),
+        ppm.cast("long").alias("tvd_ppm"),
+        "top_category",
+        F.col("top_num").cast("long").alias("top_num"),
     )
 
 
@@ -698,132 +1001,127 @@ def tvd_drift(
     col: str,
 ) -> DataFrame:
     """Exact total-variation distance between two snapshots of a
-    CATEGORICAL column — the fourth leg of the drift family:
-    :func:`psi_drift` (bucketed numeric, smoothing-epsilon PSI),
-    :func:`ks_drift` (ordered/continuous, CDF sup-distance),
-    :func:`auc_mann_whitney` (label separation), and TVD here for
-    unordered category domains where a CDF is meaningless and PSI's
-    equi-width grid does not apply.  ``TVD = ½·Σ_i |p1_i − p2_i|``
-    (half the L1 distance; 0 = identical mixtures, 1 = disjoint
-    support) — the standard categorical drift monitor for a corpus
-    mixture (language / source / license shares) before a retrain.
+    CATEGORICAL column — the drift leg for unordered category domains
+    where a CDF (:func:`ks_drift`) is meaningless and PSI's equi-width
+    grid does not apply.  ``TVD = ½·Σ_i |p1_i − p2_i|`` (0 = identical
+    mixtures, 1 = disjoint support) — the standard categorical drift
+    monitor for a corpus mixture (language / source / license shares)
+    before a retrain.
 
     EXACT cross-engine in pure BIGINTs (the ks_drift law): with
     per-category counts ``c1_i, c2_i`` and totals ``n1, n2``,
     ``TVD = Σ_i |c1_i·n2 − c2_i·n1| / (2·n1·n2)`` — no ratio ever
-    materializes.  Each term is ≤ n1·n2 and the sum is ≤ 2·n1·n2, so
-    the ENFORCED validity bound is ``2·n1·n2 < 2^63`` (driver-side
-    longs → a named ValueError, never an opaque ANSI overflow; the
-    auc_mann_whitney convention).  The reported ``tvd_ppm`` is one
-    terminal floored division under the shared piecewise overflow law:
-    below 9e12 pair-products ``(10⁶·num) div (2·n1·n2)`` exactly,
-    above it ``num div ((2·n1·n2) div 10⁶)``.
+    materializes.  Each term is ≤ n1·n2 and the sum ≤ 2·n1·n2, so the
+    validity bound is ``2·n1·n2 < 2^63`` (a named in-plan assert).
+    ``tvd_ppm`` is one terminal floored division branching on the
+    denominator: below 9e12 ``(10⁶·num) div (2·n1·n2)`` exactly, above
+    it ``num div ((2·n1·n2) div 10⁶)``.
 
     Plan shape: one map-side-combinable count aggregate per snapshot
-    (output = the CATEGORY DOMAIN, by definition small for a
-    categorical column), a full-outer join on the category, one scalar
-    aggregate.  NO window at all (unlike ks_drift, TVD needs no
-    cumulation — the absolute differences sum directly), and the only
-    driver action is a 1-row totals collect.  At 100 TB the shuffle
-    carries at most |domain| partial counters per task.
-
-    NULL categories are EXCLUDED on both sides (the ks_drift
-    convention) — pre-coalesce to a sentinel label to track them.
+    (output = the CATEGORY DOMAIN), a full-outer join on the category,
+    the totals as a 1-row aggregate broadcast back, and one scalar
+    aggregate.  No window, no driver action, no persist.
 
     Returns ONE row ``(n_old, n_new, tvd_num, tvd_ppm, top_category,
     top_num)`` where ``tvd_num = Σ|c1·n2 − c2·n1|`` and
-    ``top_category`` is the single category with the largest
-    per-category numerator (smallest category on ties — the drift
-    locus, the at_value convention); empty inputs yield the all-NULL
-    row.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
+    ``top_category`` is the category with the largest per-category
+    numerator (smallest category on ties).  Twin: :func:`tvd_drift_by`.
     """
-    spark = old.sparkSession
-    o = (
-        old.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).cast("string").alias("cat"))
-        .agg(F.count("*").alias("_c1"))
-    )
-    n = (
-        new.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).cast("string").alias("cat"))
-        .agg(F.count("*").alias("_c2"))
-    )
-    return _tvd_from_counts(spark, o, n)
+    cat = F.col(col).cast("string")
+    return _tvd(_two_sided_counts(old, new, [], cat), [], "tvd_drift")
 
 
-def _tvd_from_counts(spark, o: DataFrame, n: DataFrame) -> DataFrame:
-    """The TVD law from per-category COUNT frames ``o = (cat, _c1)``
-    and ``n = (cat, _c2)`` — one definition shared by
-    :func:`tvd_drift` (both sides counted live) and
-    :func:`tvd_drift_vs_baseline` (the old side read from a persisted
-    baseline store), so the stored-baseline path cannot drift from the
-    recompute-both-sides law."""
-    merged = o.join(n, "cat", "full_outer").select(
-        "cat",
-        F.coalesce(F.col("_c1"), F.lit(0)).alias("_c1"),
-        F.coalesce(F.col("_c2"), F.lit(0)).alias("_c2"),
-    )
-    merged = merged.cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
+def tvd_drift_by(
+    old: DataFrame,
+    new: DataFrame,
+    col: str,
+    group_cols: list[str],
+) -> DataFrame:
+    """Per-group :func:`tvd_drift` (twin contract in the module
+    docstring) — one TVD per language / source / experiment arm, not
+    one global number that averages a localized shift away.  Groups
+    present on one side only report ``tvd_ppm = NULL``.  The shuffle
+    carries at most |groups|·|domain| partial counters per task.
 
-    _PERSISTED.append(merged)
-    tot = merged.agg(
-        F.sum("_c1").alias("n1"), F.sum("_c2").alias("n2")
-    ).collect()[0]
-    if tot["n1"] is None:  # empty category domain on both sides
-        return spark.range(1).select(
-            F.lit(None).cast("long").alias("n_old"),
-            F.lit(None).cast("long").alias("n_new"),
-            F.lit(None).cast("long").alias("tvd_num"),
-            F.lit(None).cast("long").alias("tvd_ppm"),
-            F.lit(None).cast("string").alias("top_category"),
-            F.lit(None).cast("long").alias("top_num"),
-        )
-    n1, n2 = int(tot["n1"]), int(tot["n2"])
-    den = 2 * n1 * n2
-    if den >= (1 << 63):
-        raise ValueError(
-            f"tvd_drift: 2*n1*n2 = 2*{n1}*{n2} exceeds the BIGINT "
-            "cross-multiplication domain (2^63) — sample a side "
-            "(operators/profile.py)"
-        )
-    scored = merged.select(
-        "cat",
-        F.abs(
-            F.col("_c1") * F.lit(n2) - F.col("_c2") * F.lit(n1)
-        ).alias("_d"),
+    Returns ``(<group_cols>, n_old, n_new, tvd_num, tvd_ppm,
+    top_category, top_num)`` per group.
+    """
+    _require_keys(group_cols, "tvd_drift_by", "tvd_drift")
+    cat = F.col(col).cast("string")
+    counts = _two_sided_counts(old, new, group_cols, cat)
+    return _tvd(counts, group_cols, "tvd_drift_by")
+
+
+# ---------------------------------------------------------- wasserstein
+
+
+def _w1(
+    old: DataFrame,
+    new: DataFrame,
+    col: str,
+    keys: list[str],
+    op_name: str,
+    n_parts: int | None = None,
+) -> DataFrame:
+    counts = _two_sided_counts(old, new, keys, F.col(col).cast("long"))
+    m, t = _cumulate(counts, keys, "v_", ["_c1", "_c2"], n_parts, lead=True)
+    # one-sided keys short-circuit: every term is then provably 0 and
+    # the output NULL, so a wide range there must not raise
+    n2 = _bound(
+        F.col("_tot__c2"),
+        lambda g: (g("_tot__c1") == 0)
+        | (g("_tot__c2") == 0)
+        | (
+            (g("_tot_span") <= _EXACT)
+            & (
+                g("_tot__c2")
+                <= _div(
+                    _div(_BIGINT_MAX, _max1(g("_tot_span"))),
+                    _max1(g("_tot__c1")),
+                )
+            )
+        ),
+        t,
+        f"{op_name}: n1*n2*range exceeds the BIGINT integration domain "
+        "(2^63), or the value range exceeds the exact micro-unit output "
+        "domain (9e12) — pre-quantize the column to coarser units "
+        "(operators/profile.py)",
     )
-    if n1 == 0 or n2 == 0:
-        # one side empty: proportions undefined on that side
-        ppm = F.lit(None).cast("long")
-    elif den <= 9_000_000_000_000:
-        ppm = F.expr(f"(1000000 * tvd_num) div {den}")
-    else:
-        ppm = F.expr(f"tvd_num div {den // 1_000_000}")
-    return (
-        scored.groupBy()
-        .agg(
-            F.sum("_d").alias("tvd_num"),
-            # largest per-category numerator, smallest category on ties
-            # (string tie-law: max_by on (_d, reversed-rank-by-cat) is
-            # not expressible with -cat, so min_by over (-_d, cat))
-            F.min_by(
-                "cat",
-                F.struct((-F.col("_d")).alias("nd"), F.col("cat")),
-            ).alias("top_category"),
-            F.max("_d").alias("top_num"),
-        )
-        .select(
-            F.lit(n1).cast("long").alias("n_old"),
-            F.lit(n2).cast("long").alias("n_new"),
-            "tvd_num",
-            ppm.cast("long").alias("tvd_ppm"),
-            "top_category",
-            "top_num",
-        )
+    gap = F.coalesce(F.col("_next") - F.col("v_"), F.lit(0))
+    scored = m.select(
+        *keys,
+        (
+            F.abs(
+                F.col("_cum__c1") * n2 - F.col("_cum__c2") * F.col("_tot__c1")
+            )
+            * gap
+        ).alias("_term"),
+        "_tot__c1",
+        "_tot__c2",
+    )
+    out = scored.groupBy(*keys).agg(
+        F.max("_tot__c1").alias("n_old"),
+        F.max("_tot__c2").alias("n_new"),
+        F.sum("_term").alias("emd_num"),
+    )
+    # decomposed EXACT floor(10^6*e/d) below 9e12 pair-products: both
+    # addends fit (e div d <= range <= 9e12, e mod d < d <= 9e12); the
+    # naive 10^6*e scaling would overflow once e > 9e12.  Above it the
+    # floored-divisor law (divisor >= 9e6)
+    micro = F.expr(
+        "CASE WHEN n_old <= 0 OR n_new <= 0 THEN NULL"
+        f"     WHEN n_old * n_new <= {_EXACT}"
+        "     THEN 1000000 * (emd_num div (n_old * n_new))"
+        "          + (1000000 * (emd_num % (n_old * n_new)))"
+        "            div (n_old * n_new)"
+        "     ELSE emd_num div ((n_old * n_new) div 1000000) END"
+    )
+    return out.select(
+        *keys,
+        F.col("n_old").cast("long").alias("n_old"),
+        F.col("n_new").cast("long").alias("n_new"),
+        F.col("emd_num").cast("long").alias("emd_num"),
+        micro.cast("long").alias("emd_micro"),
     )
 
 
@@ -834,140 +1132,117 @@ def wasserstein_drift(
     n_parts: int | None = None,
 ) -> DataFrame:
     """Exact 1-Wasserstein (earth-mover) distance between two snapshots
-    of an integral numeric column — the FIFTH drift leg: where
-    :func:`ks_drift` reports the sup-norm CDF gap (insensitive to HOW
-    FAR the mass moved), W₁ integrates it over the value domain,
-    ``W₁ = ∫ |F_old − F_new| dv`` — the drift monitor that
-    distinguishes "1% of prices shifted one cent" from "1% of prices
-    shifted 10⁴×".
+    of an integral numeric column: where :func:`ks_drift` reports the
+    sup-norm CDF gap (insensitive to HOW FAR the mass moved), W₁
+    integrates it over the value domain, ``W₁ = ∫ |F_old − F_new| dv``
+    — the drift monitor that distinguishes "1% of prices shifted one
+    cent" from "1% of prices shifted 10⁴×".
 
     EXACT cross-engine in pure BIGINTs (the ks_drift law extended by
     the domain measure): with cumulative counts ``c1(v), c2(v)``,
     totals ``n1, n2`` and consecutive distinct values ``v_i``,
     ``emd_num = Σ_i |c1(v_i)·n2 − c2(v_i)·n1| · (v_{i+1} − v_i)`` and
     ``W₁ = emd_num / (n1·n2)`` — reported as ``emd_micro`` (micro
-    value-units) by the shared piecewise floored division.  The
-    ENFORCED validity bound is ``n1·n2·(v_max − v_min) < 2^63`` (every
-    term and the sum are ≤ it; totals and extent are driver-side longs
-    → a named ValueError — pre-quantize to coarser units past it).
+    value-units) by the decomposed exact division.  ``col`` is cast to
+    BIGINT (pre-quantize).  Validity: ``n1·n2·(v_max − v_min) < 2^63``
+    and a range ≤ 9e12 (so the micro-unit output fits), unless one side
+    is empty.
 
     Plan shape: the :func:`ks_drift` pipeline plus one per-range
     ``lead(v)`` whose partition-boundary default is the NEXT
-    partition's first value (carried by the same dimension-sized
-    subtotal collect — no extra corpus pass); the last global value's
-    term is provably zero (both CDFs are 1 there), so the missing lead
-    at the very end drops nothing.
+    partition's first value (one more dimension-sized collect of
+    per-partition extents); the last value's term is provably zero
+    (both CDFs are 1 there).
 
-    Returns ONE row ``(n_old, n_new, emd_num, emd_micro)``; empty
-    inputs yield the all-NULL row.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
+    Returns ONE row ``(n_old, n_new, emd_num, emd_micro)``.  Twin:
+    :func:`wasserstein_drift_by`.
     """
-    spark = old.sparkSession
-    if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    o = (
-        old.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).cast("long").alias("v"))
-        .agg(F.count("*").alias("_c1"))
+    return _w1(old, new, col, [], "wasserstein_drift", n_parts)
+
+
+def wasserstein_drift_by(
+    old: DataFrame,
+    new: DataFrame,
+    col: str,
+    group_cols: list[str],
+) -> DataFrame:
+    """Per-group :func:`wasserstein_drift` (twin contract in the module
+    docstring): the magnitude-sensitive drift monitor per segment, where
+    :func:`ks_drift_by` reports only the sup-norm gap.  One-sided groups
+    report ``emd_micro = NULL``.  One group's value domain must fit one
+    task's sort.
+
+    Returns ``(<group_cols>, n_old, n_new, emd_num, emd_micro)`` per
+    group.
+    """
+    _require_keys(group_cols, "wasserstein_drift_by", "wasserstein_drift")
+    return _w1(old, new, col, group_cols, "wasserstein_drift_by")
+
+
+# ----------------------------------------------------------------- gini
+
+
+def _gini(
+    df: DataFrame,
+    value_col: str,
+    keys: list[str],
+    op_name: str,
+    n_parts: int | None = None,
+) -> DataFrame:
+    x = F.col(value_col).cast("long")
+    checked = F.when(x >= 0, x).otherwise(
+        F.assert_true(
+            x >= 0,
+            F.lit(
+                f"{op_name}: {value_col} is negative — Gini is defined "
+                "for nonnegative values only (operators/profile.py)"
+            ),
+        ).cast("long")
     )
-    n = (
-        new.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).cast("long").alias("v"))
-        .agg(F.count("*").alias("_c2"))
+    counts = (
+        df.filter(_not_null(value_col, *keys))
+        .select(*keys, checked.alias("v_"))
+        .groupBy(*keys, "v_")
+        .agg(F.count("*").alias("_c"), F.sum("v_").alias("_s"))
     )
-    merged = o.join(n, "v", "full_outer").select(
-        "v",
-        F.coalesce(F.col("_c1"), F.lit(0)).alias("_c1"),
-        F.coalesce(F.col("_c2"), F.lit(0)).alias("_c2"),
+    m, t = _cumulate(counts, keys, "v_", ["_c", "_s"], n_parts)
+    # each trapezoid term 2*c*S is bounded by 2*n*T
+    c = _bound(
+        F.col("_c"),
+        lambda g: g("_tot__c") <= _div((1 << 62) - 1, _max1(g("_tot__s"))),
+        t,
+        f"{op_name}: 2*n*T exceeds the BIGINT Lorenz domain (2^63) — "
+        "pre-quantize the column to coarser units (operators/profile.py)",
     )
-    cum = _ranged_cumsums(merged, "v", ["_c1", "_c2"], n_parts)
-    if cum is None:
-        return spark.range(1).select(
-            F.lit(None).cast("long").alias("n_old"),
-            F.lit(None).cast("long").alias("n_new"),
-            F.lit(None).cast("long").alias("emd_num"),
-            F.lit(None).cast("long").alias("emd_micro"),
-        )
-    m, totals = cum
-    n1, n2 = totals["_c1"], totals["_c2"]
-    # per-partition value extents: one dimension-sized collect (the
-    # _ranged_cumsums convention) yields the boundary-stitch heads AND
-    # the global extent for the overflow contract
-    ext = sorted(
-        (r["_pid"], r["lo"], r["hi"])
-        for r in m.groupBy("_pid")
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .collect()
-    )
-    v_min, v_max = ext[0][1], ext[-1][2]
-    if n1 > 0 and n2 > 0 and n1 * n2 * max(v_max - v_min, 1) >= (1 << 63):
-        raise ValueError(
-            f"wasserstein_drift: n1*n2*(v_max-v_min) = {n1}*{n2}*"
-            f"{v_max - v_min} exceeds the BIGINT integration domain "
-            "(2^63) — pre-quantize the column to coarser units "
-            "(operators/profile.py)"
-        )
-    if v_max - v_min > 9_000_000_000_000:
-        # W1 <= range, and emd_micro must itself fit: 10^6 * range
-        # < 2^63 keeps every term of the decomposed division law exact
-        raise ValueError(
-            f"wasserstein_drift: value range {v_max - v_min} exceeds "
-            "the exact micro-unit output domain (9e12) — pre-quantize "
-            "the column to coarser units (operators/profile.py)"
-        )
-    next_head = {
-        pid: ext[i + 1][1] for i, (pid, _, _) in enumerate(ext[:-1])
-    }
-    if next_head:
-        head_map = F.create_map(
-            *[
-                F.lit(x)
-                for pid in sorted(next_head)
-                for x in (pid, next_head[pid])
-            ]
-        )
-        boundary = head_map[F.col("_pid")]
-    else:  # single populated range partition: no boundary to stitch
-        boundary = F.lit(None).cast("long")
-    wl = W.partitionBy("_pid").orderBy("v")
-    gap = F.coalesce(F.lead("v").over(wl), boundary) - F.col("v")
     scored = m.select(
-        F.abs(
-            F.col("_cum__c1") * F.lit(n2) - F.col("_cum__c2") * F.lit(n1)
-        ).alias("_d"),
-        gap.alias("_gap"),
+        *keys,
+        (
+            F.lit(2) * c * F.col("_cum__s")
+            - F.col("_c") * F.col("_c") * F.col("v_")
+        ).alias("_b"),
+        "_tot__c",
+        "_tot__s",
     )
-    if n1 <= 0 or n2 <= 0:
-        micro = F.lit(None).cast("long")
-    elif n1 * n2 <= 9_000_000_000_000:
-        # decomposed EXACT floor(10^6*e/d): 10^6*(e div d) +
-        # (10^6*(e mod d)) div d — valid for ANY numerator (the naive
-        # 10^6*e scaling dies once e > 9e12, and the old
-        # else-branch divisor (d div 10^6) was ZERO for d < 10^6: the
-        # r14 review's div-by-zero inside the documented contract).
-        # Both addends fit: e div d <= range <= 9e12 (enforced above),
-        # e mod d < d <= 9e12.
-        micro = F.expr(
-            f"1000000 * (emd_num div {n1 * n2})"
-            f" + (1000000 * (emd_num % {n1 * n2})) div {n1 * n2}"
-        )
-    else:
-        # d > 9e12: the shared floored-divisor law (divisor >= 9e6)
-        micro = F.expr(f"emd_num div {(n1 * n2) // 1_000_000}")
-    return (
-        scored.agg(
-            F.sum(
-                F.col("_d") * F.coalesce(F.col("_gap"), F.lit(0))
-            ).alias("emd_num")
-        )
-        .select(
-            F.lit(n1).cast("long").alias("n_old"),
-            F.lit(n2).cast("long").alias("n_new"),
-            F.col("emd_num").cast("long").alias("emd_num"),
-            micro.cast("long").alias("emd_micro"),
-        )
+    out = scored.groupBy(*keys).agg(
+        F.max("_tot__c").alias("n_rows"),
+        F.max("_tot__s").alias("total"),
+        F.sum("_b").alias("_B"),
+    )
+    return out.select(
+        *keys,
+        F.col("n_rows").cast("long").alias("n_rows"),
+        F.col("total").cast("long").alias("total"),
+        F.expr("CAST(n_rows * total - _B AS BIGINT)").alias("gini_num"),
+        # branch on the denominator n*T
+        F.expr(
+            "CAST(CASE WHEN n_rows * total <= 0 THEN NULL"
+            f"          WHEN n_rows * total <= {_EXACT}"
+            "          THEN (1000000 * (n_rows * total - _B))"
+            "               div (n_rows * total)"
+            "          ELSE (n_rows * total - _B)"
+            "               div ((n_rows * total) div 1000000)"
+            "     END AS BIGINT)"
+        ).alias("gini_ppm"),
     )
 
 
@@ -979,89 +1254,111 @@ def gini_coefficient(
     """Exact Gini concentration coefficient of a NONNEGATIVE integral
     column — the inequality/concentration monitor (how concentrated is
     revenue over customers, tokens over documents, traffic over keys):
-    0 = perfectly uniform, →1 = one row holds everything.  The
-    fourth consumer of the ``_ranged_cumsums`` machinery (ks / auc /
-    w1 / gini — one shared range-partition cumulation, no
-    single-partition sort at any domain size).
+    0 = perfectly uniform, →1 = one row holds everything.
 
     EXACT in pure BIGINTs via the grouped Lorenz trapezoid: with
     per-value counts ``c(v)``, value sums ``s(v) = c·v``, INCLUSIVE
     cumulative sum ``S(v)``, total count ``n`` and total sum ``T``,
     the Lorenz area term is ``B = Σ_v (2·c·S − c²·v)`` (the tied-group
     trapezoid collapses to inclusive cumulatives — no prev-row
-    needed) and ``gini_ppm = 10⁶·(n·T − B) div (n·T)`` under the
-    shared piecewise overflow law.  Validity ``n·T < 2^63`` raises the
-    named ValueError (driver-side longs); negative values raise the
-    named in-plan assert (Gini is undefined below zero).
+    needed) and ``gini_ppm = 10⁶·(n·T − B) div (n·T)``, branching on
+    the denominator ``n·T`` at 9e12.  Validity ``2·n·T < 2^63``;
+    negative values raise the named in-plan assert (Gini is undefined
+    below zero).
 
     Plan shape: one map-combinable per-value count/sum aggregate
     (output = the value domain), the range-partitioned cumulation, one
     scalar aggregate.
 
-    Returns ONE row ``(n_rows, total, gini_num, gini_ppm)``; empty
-    input yields the all-NULL row.
-
-    Reference analog: none — extends the stats family
-    (SURVEY §2 extension table).
+    Returns ONE row ``(n_rows, total, gini_num, gini_ppm)``.  Twin:
+    :func:`gini_by`.
     """
-    spark = df.sparkSession
-    if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    x = F.col(value_col).cast("long")
-    guard = x >= 0
-    checked = F.when(guard, x).otherwise(
-        F.assert_true(
-            guard,
-            F.lit(
-                f"gini_coefficient: {value_col} is negative — Gini is "
-                "defined for nonnegative values only "
-                "(operators/profile.py)"
-            ),
+    return _gini(df, value_col, [], "gini_coefficient", n_parts)
+
+
+def gini_by(
+    df: DataFrame,
+    value_col: str,
+    group_cols: list[str],
+) -> DataFrame:
+    """Per-group :func:`gini_coefficient` (twin contract in the module
+    docstring): revenue concentration per market segment, token
+    concentration per language.  One group's value domain must fit one
+    task's sort.
+
+    Returns ``(<group_cols>, n_rows, total, gini_num, gini_ppm)`` per
+    group.
+    """
+    _require_keys(group_cols, "gini_by", "gini_coefficient")
+    return _gini(df, value_col, group_cols, "gini_by")
+
+
+# ---------------------------------------------------------- calibration
+
+
+def _calibration(
+    df: DataFrame,
+    score_col: str,
+    label_col: str,
+    keys: list[str],
+    n_bins: int,
+    op_name: str,
+) -> DataFrame:
+    assert 2 <= n_bins <= 10_000
+    y = _label_01_checked(label_col, op_name)
+    rows = df.filter(_not_null(score_col, label_col, *keys)).select(
+        *keys, F.col(score_col).cast("long").alias("_s"), y.alias("_y")
+    )
+    ext = rows.groupBy(*keys).agg(
+        F.min("_s").alias("_lo"), F.max("_s").alias("_hi")
+    )
+    # every bin product (bin+1)*(hi-lo) <= n_bins*(hi-lo) stays in BIGINT
+    lo = _bound(
+        F.col("_lo"),
+        lambda g: g("_hi") - g("_lo") <= _BIGINT_MAX // n_bins,
+        None,
+        f"{op_name}: (hi-lo)*n_bins exceeds the BIGINT binning domain "
+        "(2^63) — pre-quantize the score (operators/profile.py)",
+    )
+    b = F.when(F.col("_hi") == F.col("_lo"), F.lit(0).cast("long")).otherwise(
+        F.least(
+            F.expr(f"((_s - _lo) * {n_bins}) div (_hi - _lo)"),
+            F.lit(n_bins - 1),
         ).cast("long")
     )
-    g = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(checked.alias("v"))
-        .groupBy("v")
-        .agg(F.count("*").alias("_c"), F.sum("v").alias("_s"))
-    )
-    cum = _ranged_cumsums(g, "v", ["_c", "_s"], n_parts)
-    if cum is None:
-        return spark.range(1).select(
-            F.lit(None).cast("long").alias("n_rows"),
-            F.lit(None).cast("long").alias("total"),
-            F.lit(None).cast("long").alias("gini_num"),
-            F.lit(None).cast("long").alias("gini_ppm"),
+    out = (
+        _with_key_rows(rows, ext, keys)
+        .withColumn("_lo", lo)
+        .select(*keys, b.alias("bin"), "_y", "_lo", "_hi")
+        .groupBy(*keys, "bin")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum("_y").alias("n_pos"),
+            F.max("_lo").alias("_lo"),
+            F.max("_hi").alias("_hi"),
         )
-    m, totals = cum
-    n_tot, t_tot = totals["_c"], totals["_s"]
-    nt = n_tot * t_tot
-    if 2 * nt >= (1 << 63):
-        # the per-group trapezoid term 2*c*S is bounded by 2*n*T, so
-        # THAT is the domain (nT < 2^63 alone still let 2cS overflow in
-        # the top half — r14 review)
-        raise ValueError(
-            f"gini_coefficient: 2*n*T = 2*{n_tot}*{t_tot} exceeds the "
-            "BIGINT Lorenz domain (2^63) — pre-quantize the column to "
-            "coarser units (operators/profile.py)"
-        )
-    b = m.agg(
-        F.sum(
-            F.lit(2) * F.col("_c") * F.col("_cum__s")
-            - F.col("_c") * F.col("_c") * F.col("v")
-        ).alias("b")
     )
-    if nt <= 0:
-        ppm = F.lit(None).cast("long")
-    elif nt <= 9_000_000_000_000:
-        ppm = F.expr(f"(1000000 * ({nt} - b)) div {nt}")
-    else:
-        ppm = F.expr(f"({nt} - b) div {nt // 1_000_000}")
-    return b.select(
-        F.lit(n_tot).cast("long").alias("n_rows"),
-        F.lit(t_tot).cast("long").alias("total"),
-        F.expr(f"CAST({nt} - b AS BIGINT)").alias("gini_num"),
-        ppm.cast("long").alias("gini_ppm"),
+    # bin bounds are the bucket law's TRUE integer preimage: bucket(s)
+    # >= k  <=>  (s-lo)*n_bins >= k*rng  <=>  s >= lo + ceil(k*rng/n),
+    # so lo_k uses CEIL; the last bin's hi is the true max (closed)
+    bin_lo = F.expr(f"_lo + (bin * (_hi - _lo) + {n_bins - 1}) div {n_bins}")
+    bin_hi = F.when(F.col("bin") == F.lit(n_bins - 1), F.col("_hi")).otherwise(
+        F.expr(f"_lo + ((bin + 1) * (_hi - _lo) + {n_bins - 1}) div {n_bins}")
+    )
+    return out.select(
+        *keys,
+        F.col("bin").cast("long").alias("bin"),
+        bin_lo.cast("long").alias("bin_lo"),
+        bin_hi.cast("long").alias("bin_hi"),
+        F.col("n").cast("long").alias("n"),
+        F.col("n_pos").cast("long").alias("n_pos"),
+        # branch on the numerator n_pos: n >= n_pos, so past 9e12
+        # positives the divisor (n div 10^6) is >= 9e6 — always valid
+        F.expr(
+            f"CAST(CASE WHEN n_pos <= {_EXACT}"
+            "          THEN (1000000 * n_pos) div n"
+            "          ELSE n_pos div (n div 1000000) END AS BIGINT)"
+        ).alias("pos_ppm"),
     )
 
 
@@ -1079,95 +1376,117 @@ def calibration_bins(
     calibration diagram (compare ``pos_ppm`` to the bin midpoint), for
     an arbitrary score the monotonicity/response curve.
 
-    EXACT cross-engine in pure BIGINTs: ``score_col`` must be integral
-    (the auc convention); the bin index is
-    ``min(((s − lo)·n_bins) div (hi − lo), n_bins−1)`` over
-    driver-side literal extents (one 1-row aggregate — the edges fold
-    into the plan as constants), and ``pos_ppm`` is one terminal
-    floored division under the family's shared piecewise overflow law
-    (below 9e12 positives ``(10⁶·n_pos) div n`` exactly, above it
-    ``n_pos div (n div 10⁶)`` — n ≥ n_pos > 9e12 makes the divisor
-    valid; r14 ADVICE closed the unguarded 10⁶·n_pos overflow).
-    ``label_col`` must be 0/1 — any other value silently inflated
-    pos_ppm past 10⁶, so it now raises the named in-plan
-    ``assert_true`` (r14 ADVICE).  A constant score (hi == lo)
-    collapses everything into bin 0; the ``(hi − lo)·n_bins < 2^63``
-    domain raises the named driver-side ValueError.
+    EXACT cross-engine in pure BIGINTs: ``score_col`` must be integral;
+    the bin index is ``min(((s − lo)·n_bins) div (hi − lo), n_bins−1)``
+    over the observed extent, and ``pos_ppm`` is one terminal floored
+    division branching on the numerator (below 9e12 positives
+    ``(10⁶·n_pos) div n`` exactly, above it ``n_pos div (n div 10⁶)``).
+    ``label_col`` must be 0/1 (named in-plan assert).  A constant score
+    (hi == lo) collapses everything into bin 0; the
+    ``(hi − lo)·n_bins < 2^63`` domain is a named in-plan assert.
 
-    Plan shape: one 1-row extent aggregate, then ONE map-side
-    combinable ``groupBy(bin)`` whose output is ≤ n_bins rows — at
-    100 TB the shuffle carries n_bins partial counters per task.
-    Empty bins do not appear (no rows — the SQL-oracle convention).
+    Plan shape: one 1-row extent aggregate broadcast back, then ONE
+    map-side combinable ``groupBy(bin)`` whose output is ≤ n_bins rows.
+    Empty bins do not appear (the SQL-oracle convention).
 
     Returns ``(bin, bin_lo, bin_hi, n, n_pos, pos_ppm)`` where
     ``[bin_lo, bin_hi)`` are the bin's value bounds (last bin closed).
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
+    Twin: :func:`calibration_bins_by`.
     """
-    assert 2 <= n_bins <= 10_000
-    y_checked = _label_01_checked(label_col, "calibration_bins")
-    rows = df.filter(
-        F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
-    ).select(
-        F.col(score_col).cast("long").alias("_s"),
-        y_checked.alias("_y"),
+    return _calibration(
+        df, score_col, label_col, [], n_bins, "calibration_bins"
     )
-    ext = rows.agg(F.min("_s").alias("lo"), F.max("_s").alias("hi")).collect()[0]
-    if ext["lo"] is None:
-        spark = df.sparkSession
-        return spark.range(0).select(
-            F.lit(0).cast("long").alias("bin"),
-            F.lit(0).cast("long").alias("bin_lo"),
-            F.lit(0).cast("long").alias("bin_hi"),
-            F.lit(0).cast("long").alias("n"),
-            F.lit(0).cast("long").alias("n_pos"),
-            F.lit(0).cast("long").alias("pos_ppm"),
-        )
-    lo, hi = int(ext["lo"]), int(ext["hi"])
-    rng = hi - lo
-    if rng * n_bins >= (1 << 63):
-        raise ValueError(
-            f"calibration_bins: (hi-lo)*n_bins = {rng}*{n_bins} exceeds "
-            "the BIGINT binning domain (2^63) — pre-quantize the score "
-            "(operators/profile.py)"
-        )
-    if rng == 0:
-        b = F.lit(0).cast("long")
-    else:
-        b = F.least(
-            F.expr(f"((_s - {lo}) * {n_bins}) div {rng}"),
-            F.lit(n_bins - 1),
-        ).cast("long")
-    out = (
-        rows.select(b.alias("bin"), "_y")
-        .groupBy("bin")
-        .agg(F.count("*").alias("n"), F.sum("_y").alias("n_pos"))
+
+
+def calibration_bins_by(
+    df: DataFrame,
+    score_col: str,
+    label_col: str,
+    group_cols: list[str],
+    n_bins: int = 10,
+) -> DataFrame:
+    """Per-group :func:`calibration_bins` (twin contract in the module
+    docstring): each group's bins span ITS observed ``[lo, hi]`` — the
+    slice where a globally-calibrated model breaks.  The per-group
+    extents (|groups| rows) are broadcast back; no row ever shuffles on
+    the group key.
+
+    Returns ``(<group_cols>, bin, bin_lo, bin_hi, n, n_pos, pos_ppm)``
+    per non-empty (group, bin).
+    """
+    _require_keys(group_cols, "calibration_bins_by", "calibration_bins")
+    return _calibration(
+        df, score_col, label_col, group_cols, n_bins, "calibration_bins_by"
     )
-    # bin bounds are the bucket law's TRUE integer preimage: bucket(s)
-    # >= k  <=>  (s-lo)*n_bins >= k*rng  <=>  s >= lo + ceil(k*rng/n),
-    # so lo_k uses CEIL, not floor (floor put every interior boundary
-    # value in the wrong bin — r14 review); the last bin's hi is the
-    # true max (closed)
-    bin_lo = F.expr(f"{lo} + (bin * {rng} + {n_bins - 1}) div {n_bins}")
-    bin_hi = F.when(
-        F.col("bin") == F.lit(n_bins - 1), F.lit(hi)
-    ).otherwise(
-        F.expr(f"{lo} + ((bin + 1) * {rng} + {n_bins - 1}) div {n_bins}")
+
+
+# ---------------------------------------------------------------- cusum
+
+
+def _cusum(
+    df: DataFrame,
+    order_col: str,
+    value_col: str,
+    keys: list[str],
+    op_name: str,
+    n_parts: int | None = None,
+) -> DataFrame:
+    x = F.col(value_col).cast("long")
+    counts = (
+        df.filter(_not_null(order_col, value_col, *keys))
+        .groupBy(*keys, F.col(order_col).alias("v_"))
+        .agg(
+            F.count("*").alias("_c"),
+            F.sum(x).alias("_s"),
+            F.sum(F.abs(x)).alias("_a"),
+        )
+    )
+    m, t = _cumulate(counts, keys, "v_", ["_c", "_s", "_a"], n_parts)
+    # each scan term |n*S - c*T| is bounded by 2*n*sum|x|
+    n = _bound(
+        F.col("_tot__c"),
+        lambda g: g("_tot__c") <= _div(_BIGINT_MAX // 2, _max1(g("_tot__a"))),
+        t,
+        f"{op_name}: 2*n*sum(|x|) exceeds the BIGINT scan domain (2^63) — "
+        "pre-quantize the value column to coarser units "
+        "(operators/profile.py)",
+    )
+    scored = m.select(
+        *keys,
+        "v_",
+        F.abs(
+            n * F.col("_cum__s") - F.col("_cum__c") * F.col("_tot__s")
+        ).alias("_d"),
+        "_tot__c",
+        "_tot__s",
+        "_tot__a",
+    )
+    out = scored.groupBy(*keys).agg(
+        F.max("_tot__c").alias("n_rows"),
+        F.max("_tot__s").alias("total"),
+        F.max("_tot__a").alias("_aa"),
+        F.max("_d").alias("cusum_num"),
+        # smallest boundary attaining the max: negate the score, never
+        # the order value (it may be a date/timestamp)
+        F.min_by(
+            "v_", F.struct((-F.col("_d")).alias("nd"), F.col("v_"))
+        ).alias("at_value"),
+    )
+    # branch on the numerator: cusum_num <= 2*n*sum|x| keeps the divisor
+    # past 9e12 at >= 4.5e6 — never zero
+    micro = F.expr(
+        "CASE WHEN n_rows * _aa = 0 THEN NULL"
+        f"     WHEN cusum_num <= {_EXACT}"
+        "     THEN (1000000 * cusum_num) div (n_rows * _aa)"
+        "     ELSE cusum_num div ((n_rows * _aa) div 1000000) END"
     )
     return out.select(
-        F.col("bin").cast("long").alias("bin"),
-        bin_lo.cast("long").alias("bin_lo"),
-        bin_hi.cast("long").alias("bin_hi"),
-        F.col("n").cast("long").alias("n"),
-        F.col("n_pos").cast("long").alias("n_pos"),
-        # the family's shared piecewise law: n >= n_pos, so past 9e12
-        # positives the divisor (n div 10^6) is >= 9e6 — always valid
-        F.expr(
-            "CAST(CASE WHEN n_pos <= 9000000000000"
-            "          THEN (1000000 * n_pos) div n"
-            "          ELSE n_pos div (n div 1000000) END AS BIGINT)"
-        ).alias("pos_ppm"),
+        *keys,
+        F.col("n_rows").cast("long").alias("n_rows"),
+        F.col("total").cast("long").alias("total"),
+        F.col("cusum_num").cast("long").alias("cusum_num"),
+        micro.cast("long").alias("cusum_micro"),
+        "at_value",
     )
 
 
@@ -1192,987 +1511,17 @@ def cusum_changepoint(
     and order-insensitive).  ``at_value`` is the smallest boundary
     attaining the max (the change location).  The normalized
     ``cusum_micro = 10⁶·cusum_num div (n·Σ|x|)`` (NULL when all values
-    are zero) normalizes by the scan's own bound — the ratio is ≤
-    2·10⁶ and, because ``cusum_num ≤ 2·n·Σ|x|``, the piecewise branch
-    KEYED ON THE NUMERATOR (the w1 lesson) can never divide by zero:
-    past 9e12 the divisor ``(n·Σ|x|) div 10⁶`` is ≥ 4.5e6 by
-    construction.  Validity ``2·n·(Σ|x|) < 2^63`` raises the named
-    driver-side ValueError (pre-quantize to coarser units — the
-    drift-family convention).
+    are zero) normalizes by the scan's own bound and branches on the
+    NUMERATOR.  Validity ``2·n·(Σ|x|) < 2^63``.
 
-    Plan shape: the FIFTH ``_ranged_cumsums`` consumer (ks/auc/w1/gini
-    and now cusum share the one range-partitioned cumulation — no
-    single-partition sort at any domain size): one per-boundary
-    count/sum aggregate (map-combinable, output = the order domain),
-    the range cumulation, one scalar aggregate.
+    Plan shape: one per-boundary count/sum aggregate (output = the
+    order domain), the range-partitioned cumulation, one scalar
+    aggregate.
 
     Returns ONE row ``(n_rows, total, cusum_num, cusum_micro,
-    at_value)``; empty input yields the all-NULL row.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
+    at_value)``.  Twin: :func:`cusum_by`.
     """
-    spark = df.sparkSession
-    if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    g = (
-        df.filter(
-            F.col(order_col).isNotNull() & F.col(value_col).isNotNull()
-        )
-        .groupBy(F.col(order_col).alias("v"))
-        .agg(
-            F.count("*").alias("_c"),
-            F.sum(F.col(value_col).cast("long")).alias("_s"),
-            F.sum(F.abs(F.col(value_col).cast("long"))).alias("_a"),
-        )
-    )
-    v_type = g.schema["v"].dataType
-    cum = _ranged_cumsums(g, "v", ["_c", "_s", "_a"], n_parts)
-    if cum is None:
-        return spark.range(1).select(
-            F.lit(None).cast("long").alias("n_rows"),
-            F.lit(None).cast("long").alias("total"),
-            F.lit(None).cast("long").alias("cusum_num"),
-            F.lit(None).cast("long").alias("cusum_micro"),
-            F.lit(None).cast(v_type).alias("at_value"),
-        )
-    m, totals = cum
-    n_tot, t_tot, a_tot = totals["_c"], totals["_s"], totals["_a"]
-    # the scan term |n·S − c·T| is bounded by 2·n·Σ|x| (each side by
-    # n·Σ|x|), so THAT is the domain — the gini-guard lesson applied
-    # up front
-    if 2 * n_tot * max(a_tot, 1) >= (1 << 63):
-        raise ValueError(
-            f"cusum_changepoint: 2*n*sum(|x|) = 2*{n_tot}*{a_tot} "
-            "exceeds the BIGINT scan domain (2^63) — pre-quantize the "
-            "value column to coarser units (operators/profile.py)"
-        )
-    scored = m.select(
-        "v",
-        F.abs(
-            F.lit(n_tot) * F.col("_cum__s") - F.col("_cum__c") * F.lit(t_tot)
-        ).alias("_d"),
-    )
-    den = n_tot * a_tot
-    if den == 0:
-        micro = F.lit(None).cast("long")
-    else:
-        micro = F.expr(
-            "CASE WHEN cusum_num <= 9000000000000"
-            f"     THEN (1000000 * cusum_num) div {den}"
-            f"     ELSE cusum_num div {den // 1_000_000} END"
-        )
-    # smallest boundary attaining the max — via broadcast-max +
-    # min(v), NOT the ks max_by(-v) trick: order columns here may be
-    # timestamps/dates, which cannot be negated (scored derives from
-    # the cached cumulation, so the second pass is in-memory)
-    mx = scored.agg(F.max("_d").alias("_mx"))
-    sel = scored.crossJoin(F.broadcast(mx)).filter(
-        F.col("_d") == F.col("_mx")
-    )
-    return sel.agg(
-        F.max("_d").alias("cusum_num"), F.min("v").alias("at_value")
-    ).select(
-        F.lit(n_tot).cast("long").alias("n_rows"),
-        F.lit(t_tot).cast("long").alias("total"),
-        F.col("cusum_num").cast("long").alias("cusum_num"),
-        micro.cast("long").alias("cusum_micro"),
-        "at_value",
-    )
-
-
-def tvd_drift_by(
-    old: DataFrame,
-    new: DataFrame,
-    col: str,
-    group_cols: list[str],
-) -> DataFrame:
-    """Per-GROUP exact total-variation drift — :func:`tvd_drift`'s
-    segmented form, the shape production drift monitoring actually
-    runs (one TVD per language / source / experiment arm, not one
-    global number that averages a localized shift away).  Same
-    pure-BIGINT cross-multiplication law per group: with per-(group,
-    category) counts ``c1, c2`` and per-group totals ``n1, n2``,
-    ``tvd_num = Σ_cat |c1·n2 − c2·n1|`` and ``tvd_ppm`` is the shared
-    piecewise floored division over ``2·n1·n2`` — computed IN-PLAN per
-    group (the totals are runtime values here, not driver-side longs),
-    with the ``2·n1·n2 < 2^63`` validity bound enforced by this
-    operator's named in-plan ``assert_true`` (the loud-contract
-    convention for runtime-known totals).
-
-    Rows whose GROUP KEY is NULL are EXCLUDED up front (the
-    poisson_bootstrap_ci_by contract — pre-coalesce to a sentinel to
-    track them); NULL categories are excluded per the global
-    convention.  Groups present on only one side report that side's
-    rows drifting at ``tvd_ppm = NULL`` (proportions are undefined on
-    an empty side — the global law).  Groups with no rows at all do
-    not appear (the per-group convention; the global form owns the
-    degenerate all-NULL row).
-
-    Plan shape: ONE union-tagged map-side-combinable count aggregate
-    over both snapshots (output = Σ_g |group g's category domain|
-    rows), one group-partitioned unordered window for the totals, one
-    final ``groupBy(group)`` that REUSES the window's hash
-    partitioning (no third exchange).  At 100 TB the shuffle carries
-    at most |groups|·|domain| partial counters per task — the global
-    operator's bound times the group fan-out, never rows.
-
-    Returns one row per group: ``(<group_cols>, n_old, n_new,
-    tvd_num, tvd_ppm, top_category, top_num)``.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    if not group_cols:
-        raise ValueError(
-            "tvd_drift_by: group_cols is empty — use tvd_drift for the "
-            "global form (operators/profile.py)"
-        )
-
-    def _side(df: DataFrame, s1: int, s2: int) -> DataFrame:
-        keep = F.col(col).isNotNull()
-        for g in group_cols:
-            keep = keep & F.col(g).isNotNull()
-        return df.filter(keep).select(
-            *group_cols,
-            F.col(col).cast("string").alias("_cat"),
-            F.lit(s1).alias("_s1"),
-            F.lit(s2).alias("_s2"),
-        )
-
-    counts = (
-        _side(old, 1, 0)
-        .unionByName(_side(new, 0, 1))
-        .groupBy(*group_cols, "_cat")
-        .agg(F.sum("_s1").alias("_c1"), F.sum("_s2").alias("_c2"))
-    )
-    wg = W.partitionBy(*group_cols)
-    base = counts.select(
-        *group_cols,
-        "_cat",
-        "_c1",
-        "_c2",
-        F.sum("_c1").over(wg).alias("_n1"),
-        F.sum("_c2").over(wg).alias("_n2"),
-    )
-    # overflow-safe in-plan validity bound: n1*n2 <= 2^62 - 1 checked
-    # DIVISIONALLY in exact BIGINT `div` (a float `/` check would be
-    # ulp-sloppy at the boundary), hence 2*n1*n2 < 2^63 and every term
-    # |c1*n2 - c2*n1| <= n1*n2 fits
-    guard = F.expr(f"_n1 = 0 OR _n2 <= ({(1 << 62) - 1} div _n1)")
-    checked_n2 = F.when(guard, F.col("_n2")).otherwise(
-        F.assert_true(
-            guard,
-            F.lit(
-                "tvd_drift_by: a group's 2*n1*n2 exceeds the BIGINT "
-                "cross-multiplication domain (2^63) — sample a side "
-                "(operators/profile.py)"
-            ),
-        ).cast("long")
-    )
-    scored = base.select(
-        *group_cols,
-        "_cat",
-        F.abs(
-            F.col("_c1") * checked_n2 - F.col("_c2") * F.col("_n1")
-        ).alias("_d"),
-        "_n1",
-        "_n2",
-    )
-    out = scored.groupBy(*group_cols).agg(
-        F.max("_n1").alias("n_old"),
-        F.max("_n2").alias("n_new"),
-        F.sum("_d").alias("tvd_num"),
-        F.min_by(
-            "_cat", F.struct((-F.col("_d")).alias("nd"), F.col("_cat"))
-        ).alias("top_category"),
-        F.max("_d").alias("top_num"),
-    )
-    ppm = F.expr(
-        "CASE WHEN n_old = 0 OR n_new = 0 THEN NULL"
-        "     WHEN 2 * n_old * n_new <= 9000000000000"
-        "     THEN (1000000 * tvd_num) div (2 * n_old * n_new)"
-        "     ELSE tvd_num div ((2 * n_old * n_new) div 1000000) END"
-    )
-    return out.select(
-        *group_cols,
-        F.col("n_old").cast("long").alias("n_old"),
-        F.col("n_new").cast("long").alias("n_new"),
-        F.col("tvd_num").cast("long").alias("tvd_num"),
-        ppm.cast("long").alias("tvd_ppm"),
-        "top_category",
-        F.col("top_num").cast("long").alias("top_num"),
-    )
-
-
-def ks_drift_by(
-    old: DataFrame,
-    new: DataFrame,
-    col: str,
-    group_cols: list[str],
-) -> DataFrame:
-    """Per-GROUP exact two-sample Kolmogorov–Smirnov drift —
-    :func:`ks_drift`'s segmented form (one D statistic per segment /
-    arm / source).  Same pure-BIGINT cross-multiplication law per
-    group: cumulative counts ``f1(v), f2(v)`` within the group compare
-    ``|f1·n2 − f2·n1|``; ``ks_ppm`` is the shared piecewise floored
-    division, computed IN-PLAN per group with the ``n1·n2 < 2^63``
-    validity bound enforced by a named in-plan ``assert_true``.
-
-    CONTRACT (vs the global form): the cumulation here is a
-    group-partitioned ordered window, so ONE GROUP'S value domain must
-    fit one task's sort — the right trade when segments are many and
-    individually bounded (the production case: |domain| per language /
-    arm ≪ total).  For a single segment with an unbounded
-    near-distinct domain, run the global :func:`ks_drift` (range-
-    partitioned cumulation, no per-task bound) on that segment's
-    filter instead.
-
-    NULL group keys and NULL values are EXCLUDED up front (the
-    tvd_drift_by conventions).  Groups on one side only report
-    ``ks_ppm = NULL``; absent groups do not appear.
-
-    Plan shape: ONE union-tagged count aggregate (output =
-    Σ_g |group g's value domain| rows), one group-key exchange shared
-    by the ordered cumulative window, the unordered totals window AND
-    the final ``groupBy(group)`` — three operators, one shuffle.
-
-    Returns one row per group: ``(<group_cols>, n_old, n_new, d_num,
-    ks_ppm, at_value)`` with ``at_value`` the smallest value attaining
-    the max (the global tie-law).
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    if not group_cols:
-        raise ValueError(
-            "ks_drift_by: group_cols is empty — use ks_drift for the "
-            "global form (operators/profile.py)"
-        )
-
-    def _side(df: DataFrame, s1: int, s2: int) -> DataFrame:
-        keep = F.col(col).isNotNull()
-        for g in group_cols:
-            keep = keep & F.col(g).isNotNull()
-        return df.filter(keep).select(
-            *group_cols,
-            F.col(col).alias("_v"),
-            F.lit(s1).alias("_s1"),
-            F.lit(s2).alias("_s2"),
-        )
-
-    counts = (
-        _side(old, 1, 0)
-        .unionByName(_side(new, 0, 1))
-        .groupBy(*group_cols, "_v")
-        .agg(F.sum("_s1").alias("_c1"), F.sum("_s2").alias("_c2"))
-    )
-    wg = W.partitionBy(*group_cols)
-    wcum = (
-        W.partitionBy(*group_cols)
-        .orderBy("_v")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    base = counts.select(
-        *group_cols,
-        "_v",
-        F.sum("_c1").over(wcum).alias("_f1"),
-        F.sum("_c2").over(wcum).alias("_f2"),
-        F.sum("_c1").over(wg).alias("_n1"),
-        F.sum("_c2").over(wg).alias("_n2"),
-    )
-    # exact BIGINT divisional bound (the tvd_drift_by convention):
-    # n1*n2 <= 2^63 - 1, so |f1*n2 - f2*n1| <= n1*n2 fits
-    guard = F.expr(f"_n1 = 0 OR _n2 <= ({(1 << 63) - 1} div _n1)")
-    checked_n2 = F.when(guard, F.col("_n2")).otherwise(
-        F.assert_true(
-            guard,
-            F.lit(
-                "ks_drift_by: a group's n1*n2 exceeds the BIGINT "
-                "cross-multiplication domain (2^63) — sample a side "
-                "or pre-quantize (operators/profile.py)"
-            ),
-        ).cast("long")
-    )
-    scored = base.select(
-        *group_cols,
-        "_v",
-        F.abs(
-            F.col("_f1") * checked_n2 - F.col("_f2") * F.col("_n1")
-        ).alias("_d"),
-        "_n1",
-        "_n2",
-    )
-    out = scored.groupBy(*group_cols).agg(
-        F.max("_n1").alias("n_old"),
-        F.max("_n2").alias("n_new"),
-        F.max("_d").alias("d_num"),
-        F.min_by(
-            "_v", F.struct((-F.col("_d")).alias("nd"), F.col("_v"))
-        ).alias("at_value"),
-    )
-    ppm = F.expr(
-        "CASE WHEN n_old <= 0 OR n_new <= 0 THEN NULL"
-        "     WHEN n_old * n_new <= 9000000000000"
-        "     THEN (1000000 * d_num) div (n_old * n_new)"
-        "     ELSE d_num div ((n_old * n_new) div 1000000) END"
-    )
-    return out.select(
-        *group_cols,
-        F.col("n_old").cast("long").alias("n_old"),
-        F.col("n_new").cast("long").alias("n_new"),
-        F.col("d_num").cast("long").alias("d_num"),
-        ppm.cast("long").alias("ks_ppm"),
-        "at_value",
-    )
-
-
-def gini_by(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-) -> DataFrame:
-    """Per-GROUP exact Gini concentration — :func:`gini_coefficient`'s
-    segmented form (revenue concentration per market segment, token
-    concentration per language, traffic concentration per region):
-    the third member of the r15 per-group suite next to
-    :func:`tvd_drift_by` and :func:`ks_drift_by`.
-
-    Same grouped Lorenz-trapezoid law per group in pure BIGINTs: with
-    per-(group, value) counts ``c`` and value sums ``s = c·v``,
-    INCLUSIVE cumulative sums ``S`` within the group, group totals
-    ``n, T``: ``B = Σ_v (2·c·S − c²·v)`` and
-    ``gini_ppm = 10⁶·(n·T − B) div (n·T)`` under the shared piecewise
-    overflow law — all IN-PLAN per group (totals are runtime values),
-    with the ``2·n·T < 2^63`` validity bound as this operator's named
-    in-plan ``assert_true`` (checked divisionally in exact BIGINT
-    `div`, the tvd_drift_by convention) and negative values raising
-    the global operator's named assert.
-
-    CONTRACT (vs the global form): the cumulation is a
-    group-partitioned ordered window, so ONE GROUP'S value domain must
-    fit one task's sort — the right trade for many bounded segments;
-    an unbounded single segment belongs on the global
-    ``_ranged_cumsums`` form.  NULL group keys are EXCLUDED up front.
-
-    Plan shape: one count/sum aggregate (output =
-    Σ_g |group g's value domain|), one group-key exchange shared by
-    the cumulative window, the totals window and the final aggregate.
-
-    Returns one row per group:
-    ``(<group_cols>, n_rows, total, gini_num, gini_ppm)``.
-
-    Reference analog: none — extends the stats family
-    (SURVEY §2 extension table).
-    """
-    if not group_cols:
-        raise ValueError(
-            "gini_by: group_cols is empty — use gini_coefficient for "
-            "the global form (operators/profile.py)"
-        )
-    x = F.col(value_col).cast("long")
-    neg_guard = x >= 0
-    checked = F.when(neg_guard, x).otherwise(
-        F.assert_true(
-            neg_guard,
-            F.lit(
-                f"gini_by: {value_col} is negative — Gini is defined "
-                "for nonnegative values only (operators/profile.py)"
-            ),
-        ).cast("long")
-    )
-    keep = F.col(value_col).isNotNull()
-    for g in group_cols:
-        keep = keep & F.col(g).isNotNull()
-    counts = (
-        df.filter(keep)
-        .select(*group_cols, checked.alias("_v"))
-        .groupBy(*group_cols, "_v")
-        .agg(F.count("*").alias("_c"), F.sum("_v").alias("_s"))
-    )
-    wg = W.partitionBy(*group_cols)
-    wcum = (
-        W.partitionBy(*group_cols)
-        .orderBy("_v")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    base = counts.select(
-        *group_cols,
-        "_v",
-        "_c",
-        F.sum("_s").over(wcum).alias("_S"),
-        F.sum("_c").over(wg).alias("_n"),
-        F.sum("_s").over(wg).alias("_T"),
-    )
-    # exact divisional bound: n*T <= (2^62 - 1), so 2nT < 2^63 and the
-    # per-row trapezoid term 2*c*S <= 2nT fits (the gini r14 lesson)
-    guard = F.expr(f"_T = 0 OR _n <= ({(1 << 62) - 1} div _T)")
-    checked_c = F.when(guard, F.col("_c")).otherwise(
-        F.assert_true(
-            guard,
-            F.lit(
-                "gini_by: a group's 2*n*T exceeds the BIGINT Lorenz "
-                "domain (2^63) — pre-quantize the column to coarser "
-                "units (operators/profile.py)"
-            ),
-        ).cast("long")
-    )
-    scored = base.select(
-        *group_cols,
-        (
-            F.lit(2) * checked_c * F.col("_S")
-            - F.col("_c") * F.col("_c") * F.col("_v")
-        ).alias("_b"),
-        "_n",
-        "_T",
-    )
-    out = scored.groupBy(*group_cols).agg(
-        F.max("_n").alias("n_rows"),
-        F.max("_T").alias("total"),
-        F.sum("_b").alias("_B"),
-    )
-    return out.select(
-        *group_cols,
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.col("total").cast("long").alias("total"),
-        F.expr("CAST(n_rows * total - _B AS BIGINT)").alias("gini_num"),
-        F.expr(
-            "CAST(CASE WHEN n_rows * total <= 0 THEN NULL"
-            "          WHEN n_rows * total <= 9000000000000"
-            "          THEN (1000000 * (n_rows * total - _B))"
-            "               div (n_rows * total)"
-            "          ELSE (n_rows * total - _B)"
-            "               div ((n_rows * total) div 1000000)"
-            "     END AS BIGINT)"
-        ).alias("gini_ppm"),
-    )
-
-
-def auc_by(
-    df: DataFrame,
-    score_col: str,
-    label_col: str,
-    group_cols: list[str],
-) -> DataFrame:
-    """Per-GROUP exact tie-corrected ROC-AUC —
-    :func:`auc_mann_whitney`'s segmented form (one AUC per segment /
-    source / model version), the fourth member of the r15 per-group
-    suite: production classifier evaluation is per-slice (a score that
-    ranks well globally can invert on a minority segment — exactly
-    what a single global AUC averages away).
-
-    Same pure-BIGINT tie-averaged rank law per group: with per-(group,
-    value) row counts ``c_tot`` and positive counts ``c_pos``,
-    exclusive cumulative counts ``C`` within the group, and group
-    totals ``n₊, n₋``: ``2·R⁺ = Σ_v c_pos·(2·C + c_tot + 1)`` and
-    ``auc_ppm = 10⁶·(2R⁺ − n₊(n₊+1)) div (2·n₊·n₋)`` under the shared
-    piecewise overflow law — all IN-PLAN per group, with the rank-sum
-    intermediate's own bound ``n₊·n_tot < 2^61`` enforced by this
-    operator's named in-plan ``assert_true`` (checked divisionally in
-    exact BIGINT `div`; it implies the global form's ``2·n₊·n₋ < 2^63``
-    denominator domain AND keeps 2·R⁺ itself in BIGINT — strictly
-    safer than guarding the denominator alone).
-
-    ``label_col`` must be 0/1 (the global contract: positives are
-    ``sum(label)``) — ENFORCED by a named in-plan ``assert_true`` (the
-    calibration_bins y_checked pattern, r15 ADVICE: a label of 2
-    silently corrupts the rank sum).  NULL group keys and NULL
-    scores/labels are
-    EXCLUDED up front; one-class groups report ``auc_ppm = NULL`` (the
-    global law); absent groups do not appear.  CONTRACT (vs the global
-    form): group-partitioned cumulative windows — one group's score
-    domain must fit one task's sort; an unbounded single segment
-    belongs on the global ``_ranged_cumsums`` form.
-
-    Plan shape: ONE count aggregate (output = Σ_g |group g's score
-    domain|), one group-key exchange shared by the cumulative window,
-    the totals window and the final aggregate.
-
-    Returns one row per group: ``(<group_cols>, n_pos, n_neg,
-    rank_sum_pos_x2, auc_ppm)``.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    if not group_cols:
-        raise ValueError(
-            "auc_by: group_cols is empty — use auc_mann_whitney for "
-            "the global form (operators/profile.py)"
-        )
-    keep = F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
-    for g in group_cols:
-        keep = keep & F.col(g).isNotNull()
-    # shared 0/1 label contract (raw-column check — r15 ADVICE +
-    # r16 review: a fractional label must not truncate past the guard)
-    y_checked = _label_01_checked(label_col, "auc_by")
-    counts = (
-        df.filter(keep)
-        .select(
-            *group_cols,
-            F.col(score_col).alias("_v"),
-            y_checked.alias("_y"),
-        )
-        .groupBy(*group_cols, "_v")
-        .agg(F.count("*").alias("_ct"), F.sum("_y").alias("_cp"))
-    )
-    wg = W.partitionBy(*group_cols)
-    wexc = (
-        W.partitionBy(*group_cols)
-        .orderBy("_v")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    base = counts.select(
-        *group_cols,
-        "_ct",
-        "_cp",
-        F.coalesce(F.sum("_ct").over(wexc), F.lit(0)).alias("_C"),
-        F.sum("_ct").over(wg).alias("_nt"),
-        F.sum("_cp").over(wg).alias("_np"),
-    )
-    # rank-sum intermediate bound: 2R+ <= n_pos*(2*n_tot+1), so demand
-    # n_pos*n_tot <= 2^61 - 1 (divisional exact check) — implies the
-    # global 2*n_pos*n_neg < 2^63 denominator domain as well
-    guard = F.expr(f"_np = 0 OR _nt <= ({(1 << 61) - 1} div _np)")
-    checked_cp = F.when(guard, F.col("_cp")).otherwise(
-        F.assert_true(
-            guard,
-            F.lit(
-                "auc_by: a group's n_pos*n_tot exceeds the BIGINT "
-                "rank-statistic domain (2^61) — sample a class or "
-                "pre-quantize the score (operators/profile.py)"
-            ),
-        ).cast("long")
-    )
-    scored = base.select(
-        *group_cols,
-        (
-            checked_cp
-            * (F.lit(2) * F.col("_C") + F.col("_ct") + F.lit(1))
-        ).alias("_term"),
-        "_nt",
-        "_np",
-    )
-    out = scored.groupBy(*group_cols).agg(
-        F.max("_np").alias("n_pos"),
-        (F.max("_nt") - F.max("_np")).alias("n_neg"),
-        F.sum("_term").alias("rank_sum_pos_x2"),
-    )
-    ppm = F.expr(
-        "CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL"
-        "     WHEN 2 * n_pos * n_neg <= 9000000000000"
-        "     THEN (1000000 * (rank_sum_pos_x2 - n_pos * (n_pos + 1)))"
-        "          div (2 * n_pos * n_neg)"
-        "     ELSE (rank_sum_pos_x2 - n_pos * (n_pos + 1))"
-        "          div ((2 * n_pos * n_neg) div 1000000) END"
-    )
-    return out.select(
-        *group_cols,
-        F.col("n_pos").cast("long").alias("n_pos"),
-        F.col("n_neg").cast("long").alias("n_neg"),
-        F.col("rank_sum_pos_x2").cast("long").alias("rank_sum_pos_x2"),
-        ppm.cast("long").alias("auc_ppm"),
-    )
-
-
-def wasserstein_drift_by(
-    old: DataFrame,
-    new: DataFrame,
-    col: str,
-    group_cols: list[str],
-) -> DataFrame:
-    """Per-GROUP exact 1-Wasserstein drift —
-    :func:`wasserstein_drift`'s segmented form, completing the r15
-    per-group suite (tvd_by / ks_by / gini_by / auc_by / w1_by): the
-    magnitude-sensitive drift monitor per segment, where
-    :func:`ks_drift_by` reports only the sup-norm gap.
-
-    Same pure-BIGINT integral law per group: with cumulative counts
-    ``f1(v), f2(v)`` within the group, group totals ``n1, n2`` and the
-    NEXT distinct value's gap ``Δv`` (a per-group ``lead`` — NO
-    partition-boundary stitch here, unlike the global form: the window
-    is already group-partitioned and the last value's term is provably
-    zero), ``emd_num = Σ_v |f1·n2 − f2·n1|·Δv`` and ``emd_micro`` by
-    the decomposed exact division law.  IN-PLAN per-group contracts
-    (named ``assert_true``, divisional exact checks): the integration
-    domain ``n1·n2·range < 2^63`` and the micro-unit output domain
-    ``range ≤ 9e12`` (both runtime values per group — the global form
-    checks them driver-side).
-
-    ``col`` is cast to BIGINT (the global contract — pre-quantize).
-    NULL group keys and values are EXCLUDED; one-sided groups report
-    ``emd_micro = NULL``; absent groups do not appear.  CONTRACT: one
-    group's value domain must fit one task's sort (the per-group
-    window trade); an unbounded single segment belongs on the global
-    ``_ranged_cumsums`` form.
-
-    Plan shape: ONE union-tagged count aggregate, one group-key
-    exchange shared by the cumulative window + lead window + totals
-    window and the final aggregate.
-
-    Returns one row per group: ``(<group_cols>, n_old, n_new,
-    emd_num, emd_micro)``.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    if not group_cols:
-        raise ValueError(
-            "wasserstein_drift_by: group_cols is empty — use "
-            "wasserstein_drift for the global form "
-            "(operators/profile.py)"
-        )
-
-    def _side(df: DataFrame, s1: int, s2: int) -> DataFrame:
-        keep = F.col(col).isNotNull()
-        for g in group_cols:
-            keep = keep & F.col(g).isNotNull()
-        return df.filter(keep).select(
-            *group_cols,
-            F.col(col).cast("long").alias("_v"),
-            F.lit(s1).alias("_s1"),
-            F.lit(s2).alias("_s2"),
-        )
-
-    counts = (
-        _side(old, 1, 0)
-        .unionByName(_side(new, 0, 1))
-        .groupBy(*group_cols, "_v")
-        .agg(F.sum("_s1").alias("_c1"), F.sum("_s2").alias("_c2"))
-    )
-    wg = W.partitionBy(*group_cols)
-    word = W.partitionBy(*group_cols).orderBy("_v")
-    wcum = word.rowsBetween(W.unboundedPreceding, W.currentRow)
-    base = counts.select(
-        *group_cols,
-        "_v",
-        F.sum("_c1").over(wcum).alias("_f1"),
-        F.sum("_c2").over(wcum).alias("_f2"),
-        F.coalesce(
-            F.lead("_v").over(word) - F.col("_v"), F.lit(0)
-        ).alias("_gap"),
-        F.sum("_c1").over(wg).alias("_n1"),
-        F.sum("_c2").over(wg).alias("_n2"),
-        (F.max("_v").over(wg) - F.min("_v").over(wg)).alias("_rng"),
-    )
-    # per-group integration-domain contract, checked divisionally in
-    # exact BIGINT div: n1*n2 <= (2^63-1) div max(range,1), and the
-    # exact micro-unit output needs range <= 9e12 (the global form's
-    # driver-side checks, moved in-plan for runtime-known totals).
-    # ONE-SIDED groups short-circuit the whole guard (r15 ADVICE):
-    # with n1 = 0 or n2 = 0 every |f1*n2 - f2*n1| term is provably 0
-    # (the present side's cumulative multiplies the absent side's zero
-    # total) and the documented output is emd_micro = NULL — a wide
-    # value range there must not raise
-    guard = F.expr(
-        f"_n1 = 0 OR _n2 = 0 OR (_rng <= 9000000000000 AND _n2 <= "
-        f"(({(1 << 63) - 1} div greatest(_rng, 1)) div _n1))"
-    )
-    checked_n2 = F.when(guard, F.col("_n2")).otherwise(
-        F.assert_true(
-            guard,
-            F.lit(
-                "wasserstein_drift_by: a group exceeds the BIGINT "
-                "integration domain (n1*n2*range < 2^63 and "
-                "range <= 9e12) — pre-quantize the column to coarser "
-                "units (operators/profile.py)"
-            ),
-        ).cast("long")
-    )
-    scored = base.select(
-        *group_cols,
-        (
-            F.abs(
-                F.col("_f1") * checked_n2 - F.col("_f2") * F.col("_n1")
-            )
-            * F.col("_gap")
-        ).alias("_term"),
-        "_n1",
-        "_n2",
-    )
-    out = scored.groupBy(*group_cols).agg(
-        F.max("_n1").alias("n_old"),
-        F.max("_n2").alias("n_new"),
-        F.sum("_term").alias("emd_num"),
-    )
-    # decomposed EXACT floor(10^6*e/d) below 9e12 pair-products (both
-    # addends bounded: e div d <= range <= 9e12, e mod d < d <= 9e12);
-    # above it the shared floored-divisor law (divisor >= 9e6)
-    micro = F.expr(
-        "CASE WHEN n_old <= 0 OR n_new <= 0 THEN NULL"
-        "     WHEN n_old * n_new <= 9000000000000"
-        "     THEN 1000000 * (emd_num div (n_old * n_new))"
-        "          + (1000000 * (emd_num % (n_old * n_new)))"
-        "            div (n_old * n_new)"
-        "     ELSE emd_num div ((n_old * n_new) div 1000000) END"
-    )
-    return out.select(
-        *group_cols,
-        F.col("n_old").cast("long").alias("n_old"),
-        F.col("n_new").cast("long").alias("n_new"),
-        F.col("emd_num").cast("long").alias("emd_num"),
-        micro.cast("long").alias("emd_micro"),
-    )
-
-
-def psi_drift_by(
-    old: DataFrame,
-    new: DataFrame,
-    col: str,
-    group_cols: list[str],
-    n_buckets: int = 10,
-    eps: float = 1e-6,
-) -> DataFrame:
-    """Per-GROUP Population Stability Index — :func:`psi_drift`'s
-    segmented form, the seventh member of the per-group suite
-    (tvd/ks/gini/auc/w1 landed r15; psi + calibration complete it):
-    one bucketed-PSI drift report per segment / source / arm, where a
-    single global PSI averages a localized shift away.
-
-    Same law as the global form PER GROUP: equi-width buckets span the
-    group's OLD-snapshot ``[min, max]`` (the reference grid — computed
-    per group IN-PLAN instead of the global's driver-side 1-row
-    aggregate), NEW values outside the range clamp into the edge
-    buckets, proportions floor at ``eps``, and each bucket reports
-    ``(p_old − p_new)·ln(p_old/p_new)`` rounded to 9 decimals — the
-    float expressions are IDENTICAL to the global form's, so a
-    single-constant-group run is row-identical to :func:`psi_drift`
-    (the per-group-twin pin law).  The lone extra branch: a group
-    whose old extent is CONSTANT (hi == lo) buckets everything into
-    bucket 0 (the calibration_bins convention; the global float law
-    divides by zero there).
-
-    NULL group keys and NULL values are EXCLUDED up front (the family
-    convention).  Groups with NO old rows do not appear — the
-    reference grid is undefined without a reference (document loudly:
-    a brand-new segment needs the global form on its own filter or an
-    explicit grid).  Groups with old rows but no new rows report
-    ``p_new`` and ``psi_contrib`` as NULL (proportions are undefined
-    on an empty side — the one-sided convention).
-
-    Plan shape: one map-side-combinable per-group extent aggregate
-    (|groups| rows, BROADCAST back onto both snapshots — the
-    zscore_outliers stats-join pattern; the group dimension must fit a
-    broadcast, the planner contract shared with that operator), one
-    union-tagged ``groupBy(group, bucket)`` count aggregate whose
-    shuffle carries ≤ |groups|·n_buckets partial counters per task,
-    and one group-partitioned totals window on that counter-sized
-    result.  No row ever shuffles on the group key.
-
-    Returns one row per (group, non-empty bucket):
-    ``(<group_cols>, bucket, n_old, n_new, p_old, p_new,
-    psi_contrib)``; callers sum ``psi_contrib`` per group for the
-    scalar PSI.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    if not group_cols:
-        raise ValueError(
-            "psi_drift_by: group_cols is empty — use psi_drift for the "
-            "global form (operators/profile.py)"
-        )
-    assert 2 <= n_buckets <= 10_000
-
-    keep = F.col(col).isNotNull()
-    for g in group_cols:
-        keep = keep & F.col(g).isNotNull()
-
-    ext = (
-        old.filter(keep)
-        .groupBy(*group_cols)
-        .agg(F.min(col).alias("_lo"), F.max(col).alias("_hi"))
-    )
-
-    def bucketize(df: DataFrame, s1: int, s2: int) -> DataFrame:
-        # the GLOBAL form's float bucket expression verbatim (the pin
-        # law), with the constant-extent group routed to bucket 0
-        b = F.when(
-            F.col("_hi") == F.col("_lo"), F.lit(0).cast("long")
-        ).otherwise(
-            F.greatest(
-                F.least(
-                    F.floor(
-                        (F.col(col) - F.col("_lo"))
-                        / (
-                            (F.col("_hi") - F.col("_lo"))
-                            / F.lit(float(n_buckets))
-                        )
-                    ),
-                    F.lit(n_buckets - 1),
-                ),
-                F.lit(0),
-            ).cast("long")
-        )
-        return (
-            df.filter(keep)
-            .join(F.broadcast(ext), group_cols)
-            .select(
-                *group_cols,
-                b.alias("bucket"),
-                F.lit(s1).alias("_s1"),
-                F.lit(s2).alias("_s2"),
-            )
-        )
-
-    counts = (
-        bucketize(old, 1, 0)
-        .unionByName(bucketize(new, 0, 1))
-        .groupBy(*group_cols, "bucket")
-        .agg(F.sum("_s1").alias("n_old"), F.sum("_s2").alias("n_new"))
-    )
-    wg = W.partitionBy(*group_cols)
-    base = counts.select(
-        *group_cols,
-        "bucket",
-        "n_old",
-        "n_new",
-        F.sum("n_old").over(wg).alias("_to"),
-        F.sum("n_new").over(wg).alias("_tn"),
-    )
-    p_old = F.greatest(F.col("n_old") / F.col("_to"), F.lit(eps))
-    p_new = F.greatest(F.col("n_new") / F.col("_tn"), F.lit(eps))
-    one_sided = F.col("_tn") == 0  # _to > 0 by construction (grid = old)
-    return base.select(
-        *group_cols,
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("n_old").cast("long").alias("n_old"),
-        F.col("n_new").cast("long").alias("n_new"),
-        F.round(p_old, 9).alias("p_old"),
-        F.when(one_sided, F.lit(None).cast("double"))
-        .otherwise(F.round(p_new, 9))
-        .alias("p_new"),
-        F.when(one_sided, F.lit(None).cast("double"))
-        .otherwise(
-            F.round((p_old - p_new) * F.log(p_old / p_new), 9)
-        )
-        .alias("psi_contrib"),
-    )
-
-
-def calibration_bins_by(
-    df: DataFrame,
-    score_col: str,
-    label_col: str,
-    group_cols: list[str],
-    n_bins: int = 10,
-) -> DataFrame:
-    """Per-GROUP reliability / response-rate table —
-    :func:`calibration_bins`' segmented form, :func:`auc_by`'s
-    diagnostic sibling (per-slice AUC says IF the score ranks within a
-    segment; this shows WHERE the segment's response curve is
-    miscalibrated — exactly the slice where a globally-calibrated
-    model breaks).
-
-    Same EXACT pure-BIGINT law as the global form PER GROUP:
-    ``score_col`` must be integral; each group's bins span ITS
-    observed ``[lo, hi]`` (per-group extents computed IN-PLAN — the
-    global collects them driver-side; integer arithmetic is identical
-    either way, so a single-constant-group run is row-identical to
-    :func:`calibration_bins` plus the group column), bin index
-    ``min(((s − lo)·n_bins) div (hi − lo), n_bins−1)``, constant-score
-    groups (hi == lo) collapse into bin 0, and ``pos_ppm`` is the
-    family's shared piecewise floored division.  ``label_col`` must be
-    0/1 — enforced by the named in-plan ``assert_true`` (the global's
-    y_checked contract).  The per-group binning domain
-    ``(hi − lo)·n_bins < 2^63`` is enforced by a named in-plan
-    ``assert_true`` checked DIVISIONALLY in exact BIGINT ``div`` (the
-    loud-contract convention for runtime-known extents; the global
-    form's driver-side ValueError moved in-plan).
-
-    NULL group keys and NULL scores/labels are EXCLUDED up front;
-    empty bins and absent groups do not appear (the SQL-oracle
-    convention).
-
-    Plan shape: one map-side-combinable per-group extent aggregate
-    (|groups| rows, BROADCAST back — the psi_drift_by / zscore
-    pattern), then ONE ``groupBy(group, bin)`` count aggregate whose
-    shuffle carries ≤ |groups|·n_bins partial counters per task.  No
-    row ever shuffles on the group key.
-
-    Returns one row per (group, non-empty bin): ``(<group_cols>, bin,
-    bin_lo, bin_hi, n, n_pos, pos_ppm)`` — ``[bin_lo, bin_hi)`` the
-    bin's true integer preimage (ceil law; last bin closed at the
-    group's max).
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    if not group_cols:
-        raise ValueError(
-            "calibration_bins_by: group_cols is empty — use "
-            "calibration_bins for the global form (operators/profile.py)"
-        )
-    assert 2 <= n_bins <= 10_000
-
-    keep = F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
-    for g in group_cols:
-        keep = keep & F.col(g).isNotNull()
-    y_checked = _label_01_checked(label_col, "calibration_bins_by")
-    rows = df.filter(keep).select(
-        *group_cols,
-        F.col(score_col).cast("long").alias("_s"),
-        y_checked.alias("_y"),
-    )
-    ext = rows.groupBy(*group_cols).agg(
-        F.min("_s").alias("_lo"), F.max("_s").alias("_hi")
-    )
-    joined = rows.join(F.broadcast(ext), group_cols)
-    # per-group binning-domain contract, checked divisionally in exact
-    # BIGINT div: (hi-lo) <= (2^63-1) div n_bins, so every bin product
-    # (bin+1)*(hi-lo) <= n_bins*(hi-lo) stays in BIGINT
-    guard = F.expr(f"(_hi - _lo) <= ({(1 << 63) - 1} div {n_bins})")
-    checked_lo = F.when(guard, F.col("_lo")).otherwise(
-        F.assert_true(
-            guard,
-            F.lit(
-                "calibration_bins_by: a group's (hi-lo)*n_bins exceeds "
-                "the BIGINT binning domain (2^63) — pre-quantize the "
-                "score (operators/profile.py)"
-            ),
-        ).cast("long")
-    )
-    b = F.when(
-        F.col("_hi") == F.col("_lo"), F.lit(0).cast("long")
-    ).otherwise(
-        F.least(
-            F.expr(f"((_s - _chk_lo) * {n_bins}) div (_hi - _lo)"),
-            F.lit(n_bins - 1),
-        ).cast("long")
-    )
-    out = (
-        joined.withColumn("_chk_lo", checked_lo)
-        .select(*group_cols, b.alias("bin"), "_y", "_lo", "_hi")
-        .groupBy(*group_cols, "bin")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("_y").alias("n_pos"),
-            F.max("_lo").alias("_lo"),
-            F.max("_hi").alias("_hi"),
-        )
-    )
-    # bin bounds: the bucket law's true integer preimage (ceil law —
-    # the global form's r14-reviewed expressions, on per-group columns)
-    bin_lo = F.expr(
-        f"_lo + (bin * (_hi - _lo) + {n_bins - 1}) div {n_bins}"
-    )
-    bin_hi = F.when(F.col("bin") == F.lit(n_bins - 1), F.col("_hi")).otherwise(
-        F.expr(f"_lo + ((bin + 1) * (_hi - _lo) + {n_bins - 1}) div {n_bins}")
-    )
-    return out.select(
-        *group_cols,
-        F.col("bin").cast("long").alias("bin"),
-        bin_lo.cast("long").alias("bin_lo"),
-        bin_hi.cast("long").alias("bin_hi"),
-        F.col("n").cast("long").alias("n"),
-        F.col("n_pos").cast("long").alias("n_pos"),
-        # the family's shared piecewise law: n >= n_pos, so past 9e12
-        # positives the divisor (n div 10^6) is >= 9e6 — always valid
-        F.expr(
-            "CAST(CASE WHEN n_pos <= 9000000000000"
-            "          THEN (1000000 * n_pos) div n"
-            "          ELSE n_pos div (n div 1000000) END AS BIGINT)"
-        ).alias("pos_ppm"),
-    )
+    return _cusum(df, order_col, value_col, [], "cusum_changepoint", n_parts)
 
 
 def cusum_by(
@@ -2181,131 +1530,332 @@ def cusum_by(
     value_col: str,
     group_cols: list[str],
 ) -> DataFrame:
-    """Per-KEY exact CUSUM change-point scan —
-    :func:`cusum_changepoint`'s segmented form, the production
-    monitoring shape (one change-point statistic per metric / series /
-    KPI in a single scan, instead of one job per series): per group,
-    ``cusum_num = max_t |n·S(t) − c(t)·T|`` over the group's distinct
-    order boundaries (Page 1954 at-most-one-change statistic), with
-    ``S/c`` the inclusive cumulative sum/count, ``n/T`` the group's
-    row count and total.
+    """Per-key :func:`cusum_changepoint` (twin contract in the module
+    docstring) — one change-point statistic per metric / series / KPI
+    in a single scan.  One group's order domain (the series length)
+    must fit one task's sort.
 
-    Same pure-BIGINT law as the global form per group, computed
-    IN-PLAN: the scan-domain contract ``2·n·Σ|x| < 2^63`` is enforced
-    by a named in-plan ``assert_true`` checked DIVISIONALLY in exact
-    BIGINT ``div`` (the global checks it driver-side);
-    ``cusum_micro = 10⁶·cusum_num div (n·Σ|x|)`` under the piecewise
-    law KEYED ON THE NUMERATOR (cusum_num ≤ 2·n·Σ|x| means past 9e12
-    the divisor ``(n·Σ|x|) div 10⁶`` is ≥ 4.5e6 — never zero), NULL
-    when the group's values are all zero.  ``at_value`` is the
-    smallest boundary attaining the max — via the negation-safe
-    ``min_by`` tie struct (negate the SCORE, never the order value:
-    order columns may be dates/timestamps).
-
-    NULL group keys, order values and values are EXCLUDED up front;
-    absent groups do not appear.  CONTRACT (vs the global form): the
-    cumulation is a group-partitioned ordered window, so one group's
-    ORDER domain (the series length) must fit one task's sort — the
-    per-series monitoring case by construction; a single unbounded
-    series belongs on the global form's ``_ranged_cumsums`` machinery.
-
-    Plan shape: ONE per-(group, boundary) count/sum aggregate
-    (map-side combinable, output = Σ_g |group g's order domain|), one
-    group-key exchange shared by the ordered cumulative window, the
-    unordered totals window AND the final ``groupBy(group)``.
-
-    Returns one row per group: ``(<group_cols>, n_rows, total,
-    cusum_num, cusum_micro, at_value)`` — a single-constant-group run
-    is value-identical to the global :func:`cusum_changepoint` row.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
+    Returns ``(<group_cols>, n_rows, total, cusum_num, cusum_micro,
+    at_value)`` per group.
     """
-    if not group_cols:
-        raise ValueError(
-            "cusum_by: group_cols is empty — use cusum_changepoint for "
-            "the global form (operators/profile.py)"
+    _require_keys(group_cols, "cusum_by", "cusum_changepoint")
+    return _cusum(df, order_col, value_col, group_cols, "cusum_by")
+
+
+# ----------------------------------------------------------------- chi2
+
+
+def _chi2(
+    old: DataFrame, new: DataFrame, col: str, keys: list[str], op_name: str
+) -> DataFrame:
+    counts = _two_sided_counts(old, new, keys, F.col(col).cast("string"))
+    m, _ = _cumulate(counts, keys, None, ["_c1", "_c2"])
+    n2 = _bound(
+        F.col("_tot__c2"),
+        lambda g: g("_tot__c2") <= _div(_BIGINT_MAX, _max1(g("_tot__c1"))),
+        None,
+        f"{op_name}: n1*n2 exceeds the BIGINT cross-multiplication domain "
+        "(2^63) — sample a side (operators/profile.py)",
+    )
+    d = F.abs(F.col("_c1") * n2 - F.col("_c2") * F.col("_tot__c1"))
+    # EXACT int64 numerator, then the float law: each operand is one
+    # correctly-rounded int64->double conversion and the expression
+    # tree is replicated verbatim in the oracle
+    contrib = F.when(
+        (F.col("_tot__c1") == 0) | (F.col("_tot__c2") == 0),
+        F.lit(None).cast("double"),
+    ).otherwise(
+        F.round(
+            (F.col("d") / F.col("_tot__c1"))
+            * (F.col("d") / F.col("_tot__c2"))
+            / (F.col("_c1") + F.col("_c2")),
+            9,
         )
-    keep = F.col(order_col).isNotNull() & F.col(value_col).isNotNull()
-    for g in group_cols:
-        keep = keep & F.col(g).isNotNull()
-    g = (
-        df.filter(keep)
-        .groupBy(*group_cols, F.col(order_col).alias("_v"))
-        .agg(
-            F.count("*").alias("_c"),
-            F.sum(F.col(value_col).cast("long")).alias("_s"),
-            F.sum(F.abs(F.col(value_col).cast("long"))).alias("_a"),
+    )
+    return m.withColumn("d", d.cast("long")).select(
+        *keys,
+        F.col("v_").alias("cat"),
+        F.col("_c1").cast("long").alias("n_old"),
+        F.col("_c2").cast("long").alias("n_new"),
+        "d",
+        contrib.alias("chi2_contrib"),
+    )
+
+
+def chi2_drift(
+    old: DataFrame,
+    new: DataFrame,
+    col: str,
+) -> DataFrame:
+    """Pearson chi-square homogeneity diagram between two snapshots of
+    a CATEGORICAL column — the SIGNIFICANCE leg of the categorical
+    drift pair: :func:`tvd_drift` reports effect SIZE, chi-square
+    reports whether the gap is explainable by sampling noise at the
+    observed counts (the classic 2×K contingency test; compare Σ
+    contributions against the chi-square critical value at K−1 dof).
+    A 0.1%-TVD shift is noise at n = 10³ and a five-sigma alarm at
+    n = 10⁹ — monitoring needs both numbers.
+
+    Law: with per-category counts ``c1, c2`` and totals ``n1, n2``,
+    the 2×K homogeneity statistic decomposes per category as
+    ``X² = Σ_cat D²/(s·n1·n2)`` where ``D = c1·n2 − c2·n1`` and
+    ``s = c1 + c2``.  ``D`` is EXACT BIGINT under the validity bound
+    ``n1·n2 < 2^63`` (a named in-plan assert); ``chi2_contrib =
+    (D/n1)·(D/n2)/s`` evaluates in doubles with that exact integer
+    numerator, the identical expression tree cross-engine, rounded to
+    9.  The scalar X² is the caller's sum, so no cross-partition float
+    summation happens inside the engine.
+
+    Plan shape: :func:`tvd_drift`'s — per-snapshot count aggregates
+    over the category domain, a full-outer join, the totals as a 1-row
+    aggregate broadcast back.
+
+    One side empty → ``chi2_contrib`` NULL (the test is undefined).
+    Returns per-category rows ``(cat, n_old, n_new, d, chi2_contrib)``
+    where ``d = |D|``.  Twin: :func:`chi2_drift_by`.
+    """
+    return _chi2(old, new, col, [], "chi2_drift")
+
+
+def chi2_drift_by(
+    old: DataFrame,
+    new: DataFrame,
+    col: str,
+    group_cols: list[str],
+) -> DataFrame:
+    """Per-group :func:`chi2_drift` (twin contract in the module
+    docstring): one significance test per language / source /
+    experiment arm.  Groups present on one side only report
+    ``chi2_contrib`` NULL.
+
+    Returns ``(<group_cols>, cat, n_old, n_new, d, chi2_contrib)`` per
+    (group, category).
+    """
+    _require_keys(group_cols, "chi2_drift_by", "chi2_drift")
+    return _chi2(old, new, col, group_cols, "chi2_drift_by")
+
+
+# ------------------------------------------------------------------ jsd
+
+
+def _jsd(
+    old: DataFrame, new: DataFrame, col: str, keys: list[str]
+) -> DataFrame:
+    counts = _two_sided_counts(old, new, keys, F.col(col).cast("string"))
+    m, _ = _cumulate(counts, keys, None, ["_c1", "_c2"])
+    p = F.col("_c1") / F.col("_tot__c1")
+    q = F.col("_c2") / F.col("_tot__c2")
+    t1 = F.when(F.col("_c1") == 0, F.lit(0.0)).otherwise(
+        p * F.log(F.lit(2.0) * p / (p + q))
+    )
+    t2 = F.when(F.col("_c2") == 0, F.lit(0.0)).otherwise(
+        q * F.log(F.lit(2.0) * q / (p + q))
+    )
+    undefined = (F.col("_tot__c1") == 0) | (F.col("_tot__c2") == 0)
+    return m.select(
+        *keys,
+        F.col("v_").alias("cat"),
+        F.col("_c1").cast("long").alias("n_old"),
+        F.col("_c2").cast("long").alias("n_new"),
+        F.when(undefined, F.lit(None).cast("double"))
+        .otherwise(F.round(p, 9))
+        .alias("p_old"),
+        F.when(undefined, F.lit(None).cast("double"))
+        .otherwise(F.round(q, 9))
+        .alias("p_new"),
+        F.when(undefined, F.lit(None).cast("double"))
+        .otherwise(F.round((t1 + t2) / F.lit(2.0), 9))
+        .alias("jsd_contrib"),
+    )
+
+
+def jsd_drift(
+    old: DataFrame,
+    new: DataFrame,
+    col: str,
+) -> DataFrame:
+    """Jensen–Shannon divergence diagram between two snapshots of a
+    CATEGORICAL column — the BOUNDED information-theoretic drift leg:
+    where :func:`psi_drift` needs a zero-bucket smoothing epsilon
+    (PSI's log-ratio diverges on any category one side lacks) and is
+    unbounded, JSD is finite BY CONSTRUCTION on disjoint supports
+    (``p·ln(2p/(p+q))`` vanishes where p = 0, no epsilon anywhere) and
+    lives in ``[0, ln 2]`` — the metric to alert on when new corpus
+    drops routinely introduce brand-new categories.
+
+    Law: with proportions ``p = c1/n1, q = c2/n2`` (doubles from EXACT
+    BIGINT counts), ``jsd_contrib = (p·ln(2p/(p+q)) +
+    q·ln(2q/(p+q)))/2`` with each term CASE-zeroed when its count is 0
+    (the 0·ln0 := 0 limit made explicit, never an epsilon).  The
+    expression tree is replicated verbatim in the oracle, rounded to
+    9.  Σ contribs = JSD; ``√JSD`` is a metric if a distance is needed.
+    No overflow contract: nothing cross-multiplies counts.
+
+    Plan shape: :func:`tvd_drift`'s.  One side empty → NULL
+    proportions and ``jsd_contrib``.
+
+    Returns per-category rows ``(cat, n_old, n_new, p_old, p_new,
+    jsd_contrib)``.  Twin: :func:`jsd_drift_by`.
+    """
+    return _jsd(old, new, col, [])
+
+
+def jsd_drift_by(
+    old: DataFrame,
+    new: DataFrame,
+    col: str,
+    group_cols: list[str],
+) -> DataFrame:
+    """Per-group :func:`jsd_drift` (twin contract in the module
+    docstring): one bounded, epsilon-free divergence per language /
+    source / experiment arm.
+
+    Returns ``(<group_cols>, cat, n_old, n_new, p_old, p_new,
+    jsd_contrib)`` per (group, category).
+    """
+    _require_keys(group_cols, "jsd_drift_by", "jsd_drift")
+    return _jsd(old, new, col, group_cols)
+
+
+# -------------------------------------------------------------- entropy
+
+
+def _entropy(df: DataFrame, col: str, keys: list[str]) -> DataFrame:
+    counts = (
+        df.filter(_not_null(col, *keys))
+        .groupBy(*keys, F.col(col).cast("string").alias("_cat"))
+        .agg(F.count("*").alias("_c"))
+    )
+    m, _ = _cumulate(counts, keys, None, ["_c"])
+    p = F.col("_c") / F.col("_tot__c")
+    return m.select(
+        *keys,
+        F.col("_cat").alias("cat"),
+        F.col("_c").cast("long").alias("n"),
+        F.round(p, 9).alias("p"),
+        F.round(-(p * F.log(p)), 9).alias("h_contrib"),
+    )
+
+
+def entropy_profile(df: DataFrame, col: str) -> DataFrame:
+    """Shannon-entropy diagram of a CATEGORICAL column — the diversity
+    profile a curation pipeline reads before mixing sources ("how
+    concentrated is the language / license / source mix?"): Σ
+    ``h_contrib`` is the entropy in nats, ``ln(n_categories)`` its
+    maximum, and the ratio the evenness score.  Complements the drift
+    family (tvd/chi2/jsd compare TWO snapshots; entropy scores ONE).
+
+    Law: ``p = c/n`` (doubles from EXACT BIGINT counts), ``h_contrib =
+    -(p·ln p)`` — the expression tree replicated verbatim in the
+    oracle, rounded to 9.  No epsilon anywhere: observed categories
+    have ``c >= 1``; a single-category column emits ``-(1·ln 1) =
+    -0.0``, which the oracle comparison canonicalises to ``0.0``
+    (``+0.0`` hash normalisation).
+
+    Plan shape: ONE map-side-combinable count aggregate over the
+    category domain, its total as a 1-row aggregate broadcast back.
+
+    Returns per-category rows ``(cat, n, p, h_contrib)``.  Twin:
+    :func:`entropy_by`.
+    """
+    return _entropy(df, col, [])
+
+
+def entropy_by(
+    df: DataFrame, col: str, group_cols: list[str]
+) -> DataFrame:
+    """Per-group :func:`entropy_profile` (twin contract in the module
+    docstring): "did any source's language mix collapse to a single
+    language?".
+
+    Returns ``(<group_cols>, cat, n, p, h_contrib)`` per (group,
+    category).
+    """
+    _require_keys(group_cols, "entropy_by", "entropy_profile")
+    return _entropy(df, col, group_cols)
+
+
+# ---------------------------------------------------------- mutual info
+
+
+def _mutual_info(
+    df: DataFrame, x_col: str, y_col: str, keys: list[str]
+) -> DataFrame:
+    cells = (
+        df.filter(_not_null(x_col, y_col, *keys))
+        .groupBy(
+            *keys,
+            F.col(x_col).cast("string").alias("x_cat"),
+            F.col(y_col).cast("string").alias("y_cat"),
         )
+        .agg(F.count("*").alias("_c"))
     )
-    wg = W.partitionBy(*group_cols)
-    wcum = (
-        W.partitionBy(*group_cols)
-        .orderBy("_v")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    m, _ = _cumulate(cells, keys, None, ["_c"])
+    nx = F.sum("_c").over(W.partitionBy(*keys, "x_cat"))
+    ny = F.sum("_c").over(W.partitionBy(*keys, "y_cat"))
+    base = m.select(
+        *keys,
+        "x_cat",
+        "y_cat",
+        "_c",
+        "_tot__c",
+        nx.alias("_nx"),
+        ny.alias("_ny"),
     )
-    base = g.select(
-        *group_cols,
-        "_v",
-        F.sum("_c").over(wcum).alias("_cc"),
-        F.sum("_s").over(wcum).alias("_cs"),
-        F.sum("_c").over(wg).alias("_n"),
-        F.sum("_s").over(wg).alias("_t"),
-        F.sum("_a").over(wg).alias("_aa"),
+    p_xy = F.col("_c") / F.col("_tot__c")
+    p_x = F.col("_nx") / F.col("_tot__c")
+    p_y = F.col("_ny") / F.col("_tot__c")
+    return base.select(
+        *keys,
+        "x_cat",
+        "y_cat",
+        F.col("_c").cast("long").alias("n_xy"),
+        F.col("_nx").cast("long").alias("n_x"),
+        F.col("_ny").cast("long").alias("n_y"),
+        F.round(p_xy / (p_x * p_y), 9).alias("lift"),
+        F.round(p_xy * F.log(p_xy / (p_x * p_y)), 9).alias("mi_contrib"),
     )
-    # per-group scan-domain contract, checked divisionally in exact
-    # BIGINT div: 2*n*sum|x| < 2^63  <=>  n <= ((2^63-1) div 2) div
-    # max(sum|x|, 1) — each scan term |n*S - c*T| is bounded by
-    # 2*n*sum|x| (each side by n*sum|x|), the global form's bound
-    guard = F.expr(
-        f"_n <= (({(1 << 63) - 1} div 2) div greatest(_aa, 1))"
-    )
-    checked_n = F.when(guard, F.col("_n")).otherwise(
-        F.assert_true(
-            guard,
-            F.lit(
-                "cusum_by: a group's 2*n*sum(|x|) exceeds the BIGINT "
-                "scan domain (2^63) — pre-quantize the value column to "
-                "coarser units (operators/profile.py)"
-            ),
-        ).cast("long")
-    )
-    scored = base.select(
-        *group_cols,
-        "_v",
-        F.abs(
-            checked_n * F.col("_cs") - F.col("_cc") * F.col("_t")
-        ).alias("_d"),
-        "_n",
-        "_t",
-        "_aa",
-    )
-    out = scored.groupBy(*group_cols).agg(
-        F.max("_n").alias("n_rows"),
-        F.max("_t").alias("total"),
-        F.max("_aa").alias("_aa"),
-        F.max("_d").alias("cusum_num"),
-        # smallest boundary attaining the max: negate the SCORE (a
-        # long — always negatable), never the order value (may be a
-        # date/timestamp) — the ks_drift_by tie-struct law
-        F.min_by(
-            "_v", F.struct((-F.col("_d")).alias("nd"), F.col("_v"))
-        ).alias("at_value"),
-    )
-    micro = F.expr(
-        "CASE WHEN n_rows * _aa = 0 THEN NULL"
-        "     WHEN cusum_num <= 9000000000000"
-        "     THEN (1000000 * cusum_num) div (n_rows * _aa)"
-        "     ELSE cusum_num div ((n_rows * _aa) div 1000000) END"
-    )
-    return out.select(
-        *group_cols,
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.col("total").cast("long").alias("total"),
-        F.col("cusum_num").cast("long").alias("cusum_num"),
-        micro.cast("long").alias("cusum_micro"),
-        "at_value",
-    )
+
+
+def mutual_info(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
+    """Mutual-information diagram between two CATEGORICAL columns —
+    the feature-association screen (label leakage, redundant
+    features, segment↔outcome dependence) that chi-square significance
+    alone does not give: Σ ``mi_contrib`` is I(X;Y) in nats, and the
+    per-cell ``lift = p_xy/(p_x·p_y)`` names WHICH (x, y) pair carries
+    the dependence (lift ≫ 1: co-occurring; ≪ 1: repelling).
+
+    Law: with EXACT BIGINT marginals ``n_x, n_y`` and cell counts
+    ``n_xy`` over total ``n``, proportions go straight to doubles
+    (nothing cross-multiplies counts, so no overflow contract) and
+    ``mi_contrib = p_xy·ln(p_xy/(p_x·p_y))`` — only OBSERVED cells
+    appear (n_xy >= 1), so the 0·ln0 limit never arises; absent cells
+    contribute exactly 0.  The expression tree is replicated verbatim
+    in the oracle, rounded to 9.
+
+    Plan shape: ONE map-side-combinable (x, y) count aggregate (output
+    = |observed cell domain| counter rows), two marginal windows over
+    those COUNTERS (per x, per y) and the total as a 1-row aggregate
+    broadcast back.
+
+    Returns per-cell rows ``(x_cat, y_cat, n_xy, n_x, n_y, lift,
+    mi_contrib)``.  Twin: :func:`mutual_info_by`.
+    """
+    return _mutual_info(df, x_col, y_col, [])
+
+
+def mutual_info_by(
+    df: DataFrame, x_col: str, y_col: str, group_cols: list[str]
+) -> DataFrame:
+    """Per-group :func:`mutual_info` (twin contract in the module
+    docstring): "is the return-flag↔ship-year dependence confined to
+    one line status?".
+
+    Returns ``(<group_cols>, x_cat, y_cat, n_xy, n_x, n_y, lift,
+    mi_contrib)`` per (group, cell).
+    """
+    _require_keys(group_cols, "mutual_info_by", "mutual_info")
+    return _mutual_info(df, x_col, y_col, group_cols)
 
 
 def quantiles_by(
@@ -2394,372 +1944,6 @@ def quantiles_by(
             ).alias(f"q{q}")
         )
     return base.groupBy(*group_cols).agg(*aggs)
-
-
-def chi2_drift(
-    old: DataFrame,
-    new: DataFrame,
-    col: str,
-) -> DataFrame:
-    """Pearson chi-square homogeneity diagram between two snapshots of
-    a CATEGORICAL column — the SIGNIFICANCE leg of the categorical
-    drift pair: :func:`tvd_drift` reports effect SIZE (how far apart
-    the mixtures are), chi-square reports whether the gap is
-    explainable by sampling noise at the observed counts (the classic
-    2×K contingency test; compare Σ contributions against the
-    chi-square critical value at K−1 dof).  A 0.1%-TVD shift is noise
-    at n = 10³ and a five-sigma alarm at n = 10⁹ — monitoring needs
-    both numbers.
-
-    Law: with per-category counts ``c1, c2`` and totals ``n1, n2``,
-    the 2×K homogeneity statistic decomposes per category as
-    ``X² = Σ_cat D²/(s·n1·n2)`` where ``D = c1·n2 − c2·n1`` and
-    ``s = c1 + c2`` (algebra of (O−E)²/E over both rows).  ``D`` is
-    EXACT BIGINT under the tvd_drift validity bound ``n1·n2 < 2^63``
-    (driver-side longs → a named ValueError); the reported
-    ``chi2_contrib = (D/n1)·(D/n2)/s`` evaluates in doubles with that
-    EXACT integer numerator, the identical expression tree
-    cross-engine (every operand is a correctly-rounded int64→double
-    conversion, the psi_drift float-law convention), rounded to 9.
-
-    Per-CATEGORY diagram rows (the psi_drift shape) — the scalar X²
-    is the caller's sum, so no cross-partition float summation ever
-    happens inside the engine and the oracle compares row-by-row.
-
-    Plan shape: identical to tvd_drift — one map-side-combinable count
-    aggregate per snapshot (output = the category domain), a
-    full-outer join of two domain-sized results, a 1-row totals
-    collect.  At 100 TB the shuffle carries |domain| counters.
-
-    NULL categories are EXCLUDED on both sides (the family
-    convention).  One side empty → ``chi2_contrib`` NULL (the test is
-    undefined); empty domain → zero rows (the diagram convention).
-
-    Returns per-category rows ``(cat, n_old, n_new, d, chi2_contrib)``
-    where ``d = |D|``.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    o = (
-        old.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).cast("string").alias("cat"))
-        .agg(F.count("*").alias("_c1"))
-    )
-    n = (
-        new.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).cast("string").alias("cat"))
-        .agg(F.count("*").alias("_c2"))
-    )
-    merged = o.join(n, "cat", "full_outer").select(
-        "cat",
-        F.coalesce(F.col("_c1"), F.lit(0)).alias("_c1"),
-        F.coalesce(F.col("_c2"), F.lit(0)).alias("_c2"),
-    )
-    merged = merged.cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(merged)
-    tot = merged.agg(
-        F.sum("_c1").alias("n1"), F.sum("_c2").alias("n2")
-    ).collect()[0]
-    n1 = int(tot["n1"] or 0)
-    n2 = int(tot["n2"] or 0)
-    if n1 * n2 >= (1 << 63):
-        raise ValueError(
-            f"chi2_drift: n1*n2 = {n1}*{n2} exceeds the BIGINT "
-            "cross-multiplication domain (2^63) — sample a side "
-            "(operators/profile.py)"
-        )
-    d = F.abs(F.col("_c1") * F.lit(n2) - F.col("_c2") * F.lit(n1))
-    if n1 == 0 or n2 == 0:
-        contrib = F.lit(None).cast("double")
-    else:
-        # EXACT int64 numerator, then the shared float law: each
-        # operand is one correctly-rounded int64->double conversion
-        # and the expression tree is replicated verbatim in the oracle
-        contrib = F.round(
-            (F.col("d") / F.lit(n1))
-            * (F.col("d") / F.lit(n2))
-            / (F.col("_c1") + F.col("_c2")),
-            9,
-        )
-    return (
-        merged.withColumn("d", d.cast("long"))
-        .select(
-            "cat",
-            F.col("_c1").cast("long").alias("n_old"),
-            F.col("_c2").cast("long").alias("n_new"),
-            "d",
-            contrib.alias("chi2_contrib"),
-        )
-    )
-
-
-def chi2_drift_by(
-    old: DataFrame,
-    new: DataFrame,
-    col: str,
-    group_cols: list[str],
-) -> DataFrame:
-    """Per-GROUP chi-square homogeneity diagram — :func:`chi2_drift`'s
-    segmented form (one significance test per language / source /
-    experiment arm), completing the categorical drift pair alongside
-    :func:`tvd_drift_by`.  Same per-category law with the totals
-    computed IN-PLAN per group and the ``n1·n2 < 2^63`` validity bound
-    enforced by a named in-plan ``assert_true`` (the tvd_drift_by
-    divisional-guard convention for runtime-known totals).
-
-    Rows whose GROUP KEY is NULL are EXCLUDED up front; NULL
-    categories are excluded per the family convention.  Groups present
-    on only one side report their categories at ``chi2_contrib`` NULL
-    (test undefined on an empty side); groups with no rows do not
-    appear (the global form owns the degenerate case).
-
-    Plan shape: ONE union-tagged map-side-combinable count aggregate
-    over both snapshots (output = Σ_g |group g's category domain|
-    rows) + one group-partitioned unordered totals window — at 100 TB
-    the shuffle carries |groups|·|domain| counters, never rows.
-
-    Returns per-(group, category) rows ``(<group_cols>, cat, n_old,
-    n_new, d, chi2_contrib)``.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    if not group_cols:
-        raise ValueError(
-            "chi2_drift_by: group_cols is empty — use chi2_drift for "
-            "the global form (operators/profile.py)"
-        )
-
-    def _side(df: DataFrame, s1: int, s2: int) -> DataFrame:
-        keep = F.col(col).isNotNull()
-        for g in group_cols:
-            keep = keep & F.col(g).isNotNull()
-        return df.filter(keep).select(
-            *group_cols,
-            F.col(col).cast("string").alias("_cat"),
-            F.lit(s1).alias("_s1"),
-            F.lit(s2).alias("_s2"),
-        )
-
-    counts = (
-        _side(old, 1, 0)
-        .unionByName(_side(new, 0, 1))
-        .groupBy(*group_cols, "_cat")
-        .agg(F.sum("_s1").alias("_c1"), F.sum("_s2").alias("_c2"))
-    )
-    wg = W.partitionBy(*group_cols)
-    base = counts.select(
-        *group_cols,
-        "_cat",
-        "_c1",
-        "_c2",
-        F.sum("_c1").over(wg).alias("_n1"),
-        F.sum("_c2").over(wg).alias("_n2"),
-    )
-    # in-plan validity bound, checked DIVISIONALLY in exact BIGINT
-    # `div` (the tvd_drift_by convention): n1*n2 < 2^63 keeps every
-    # D = c1*n2 - c2*n1 term exact
-    guard = F.expr(f"_n1 = 0 OR _n2 <= ({(1 << 63) - 1} div _n1)")
-    checked_n2 = F.when(guard, F.col("_n2")).otherwise(
-        F.assert_true(
-            guard,
-            F.lit(
-                "chi2_drift_by: a group's n1*n2 exceeds the BIGINT "
-                "cross-multiplication domain (2^63) — sample a side "
-                "(operators/profile.py)"
-            ),
-        ).cast("long")
-    )
-    d = F.abs(F.col("_c1") * checked_n2 - F.col("_c2") * F.col("_n1"))
-    contrib = F.when(
-        (F.col("_n1") == 0) | (F.col("_n2") == 0),
-        F.lit(None).cast("double"),
-    ).otherwise(
-        F.round(
-            (F.col("d") / F.col("_n1"))
-            * (F.col("d") / F.col("_n2"))
-            / (F.col("_c1") + F.col("_c2")),
-            9,
-        )
-    )
-    return (
-        base.withColumn("d", d.cast("long"))
-        .select(
-            *group_cols,
-            F.col("_cat").alias("cat"),
-            F.col("_c1").cast("long").alias("n_old"),
-            F.col("_c2").cast("long").alias("n_new"),
-            "d",
-            contrib.alias("chi2_contrib"),
-        )
-    )
-
-
-def jsd_drift(
-    old: DataFrame,
-    new: DataFrame,
-    col: str,
-) -> DataFrame:
-    """Jensen–Shannon divergence diagram between two snapshots of a
-    CATEGORICAL column — the BOUNDED information-theoretic drift leg:
-    where :func:`psi_drift` needs a zero-bucket smoothing epsilon
-    (PSI's log-ratio diverges on any category one side lacks) and is
-    unbounded, JSD is finite BY CONSTRUCTION on disjoint supports
-    (``p·ln(2p/(p+q))`` vanishes where p = 0, no epsilon anywhere) and
-    lives in ``[0, ln 2]`` — the metric to alert on when new corpus
-    drops routinely introduce brand-new categories (new languages /
-    licenses / sources), exactly where PSI's epsilon floor distorts.
-
-    Law: with proportions ``p = c1/n1, q = c2/n2`` (doubles from EXACT
-    BIGINT counts), ``jsd_contrib = (p·ln(2p/(p+q)) +
-    q·ln(2q/(p+q)))/2`` with each term CASE-zeroed when its count is 0
-    (the 0·ln0 := 0 limit made explicit, never an epsilon).  The
-    expression tree is replicated verbatim in the oracle (the
-    psi_drift float-law convention), rounded to 9.  Σ contribs = JSD;
-    ``√JSD`` is a metric if a distance is needed.
-
-    Per-CATEGORY diagram rows (the psi_drift shape) — no float
-    summation inside the engine; the oracle compares row-by-row.
-
-    Plan shape: identical to tvd_drift — one count aggregate per
-    snapshot over the category domain, a domain-sized full-outer
-    join, no totals collect at all (proportions divide by in-plan
-    window totals).  At 100 TB the shuffle carries |domain| counters.
-
-    NULL categories are EXCLUDED on both sides (the family
-    convention).  One side empty → ``jsd_contrib`` NULL (proportions
-    undefined on that side); empty domain → zero rows.
-
-    Returns per-category rows ``(cat, n_old, n_new, p_old, p_new,
-    jsd_contrib)``.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    o = (
-        old.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).cast("string").alias("cat"))
-        .agg(F.count("*").alias("_c1"))
-    )
-    n = (
-        new.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).cast("string").alias("cat"))
-        .agg(F.count("*").alias("_c2"))
-    )
-    merged = o.join(n, "cat", "full_outer").select(
-        "cat",
-        F.coalesce(F.col("_c1"), F.lit(0)).alias("_c1"),
-        F.coalesce(F.col("_c2"), F.lit(0)).alias("_c2"),
-    )
-    w = W.partitionBy()
-    return _jsd_rows(
-        merged.select(
-            "cat",
-            "_c1",
-            "_c2",
-            F.sum("_c1").over(w).alias("_n1"),
-            F.sum("_c2").over(w).alias("_n2"),
-        ),
-        [],
-    )
-
-
-def _jsd_rows(base: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Shared JSD per-category projection: ``base`` carries
-    ``(<group_cols>, _cat|cat, _c1, _c2, _n1, _n2)``; emits the diagram
-    rows under the exact float law shared by :func:`jsd_drift` and
-    :func:`jsd_drift_by` (one definition, one oracle transcription)."""
-    cat = "_cat" if "_cat" in base.columns else "cat"
-    p = F.col("_c1") / F.col("_n1")
-    q = F.col("_c2") / F.col("_n2")
-    t1 = F.when(F.col("_c1") == 0, F.lit(0.0)).otherwise(
-        p * F.log(F.lit(2.0) * p / (p + q))
-    )
-    t2 = F.when(F.col("_c2") == 0, F.lit(0.0)).otherwise(
-        q * F.log(F.lit(2.0) * q / (p + q))
-    )
-    undefined = (F.col("_n1") == 0) | (F.col("_n2") == 0)
-    return base.select(
-        *group_cols,
-        F.col(cat).alias("cat"),
-        F.col("_c1").cast("long").alias("n_old"),
-        F.col("_c2").cast("long").alias("n_new"),
-        F.when(undefined, F.lit(None).cast("double"))
-        .otherwise(F.round(p, 9))
-        .alias("p_old"),
-        F.when(undefined, F.lit(None).cast("double"))
-        .otherwise(F.round(q, 9))
-        .alias("p_new"),
-        F.when(undefined, F.lit(None).cast("double"))
-        .otherwise(F.round((t1 + t2) / F.lit(2.0), 9))
-        .alias("jsd_contrib"),
-    )
-
-
-def jsd_drift_by(
-    old: DataFrame,
-    new: DataFrame,
-    col: str,
-    group_cols: list[str],
-) -> DataFrame:
-    """Per-GROUP Jensen–Shannon drift diagram — :func:`jsd_drift`'s
-    segmented form (one bounded, epsilon-free divergence per language
-    / source / experiment arm).  Same per-category float law via the
-    shared :func:`_jsd_rows` projection, totals computed IN-PLAN per
-    group; no overflow contract is needed at all (the law never
-    cross-multiplies counts — proportions go straight to doubles).
-
-    Rows whose GROUP KEY is NULL are EXCLUDED up front; NULL
-    categories likewise.  Groups present on only one side report
-    their categories at NULL proportions/contrib (the family
-    convention); groups with no rows do not appear.
-
-    Plan shape: ONE union-tagged count aggregate (output = Σ_g
-    |group g's domain| rows) + one group-partitioned unordered totals
-    window — |groups|·|domain| counters on the wire, never rows.
-
-    Returns per-(group, category) rows ``(<group_cols>, cat, n_old,
-    n_new, p_old, p_new, jsd_contrib)``.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    if not group_cols:
-        raise ValueError(
-            "jsd_drift_by: group_cols is empty — use jsd_drift for "
-            "the global form (operators/profile.py)"
-        )
-
-    def _side(df: DataFrame, s1: int, s2: int) -> DataFrame:
-        keep = F.col(col).isNotNull()
-        for g in group_cols:
-            keep = keep & F.col(g).isNotNull()
-        return df.filter(keep).select(
-            *group_cols,
-            F.col(col).cast("string").alias("_cat"),
-            F.lit(s1).alias("_s1"),
-            F.lit(s2).alias("_s2"),
-        )
-
-    counts = (
-        _side(old, 1, 0)
-        .unionByName(_side(new, 0, 1))
-        .groupBy(*group_cols, "_cat")
-        .agg(F.sum("_s1").alias("_c1"), F.sum("_s2").alias("_c2"))
-    )
-    wg = W.partitionBy(*group_cols)
-    base = counts.select(
-        *group_cols,
-        "_cat",
-        "_c1",
-        "_c2",
-        F.sum("_c1").over(wg).alias("_n1"),
-        F.sum("_c2").over(wg).alias("_n2"),
-    )
-    return _jsd_rows(base, group_cols)
 
 
 def corr_by(
@@ -2871,167 +2055,6 @@ def corr_by(
     )
 
 
-def _entropy_rows(base: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Shared Shannon-entropy per-category projection: ``base`` carries
-    ``(<group_cols>, _cat, _c, _n)``; emits the diagram rows under the
-    exact float law shared by :func:`entropy_profile` and
-    :func:`entropy_by` (one definition, one oracle transcription).
-    Observed cells always have ``_c >= 1`` so there is no 0·ln0 case at
-    all; a single-category group emits ``-(1·ln 1) = -0.0`` which both
-    engines canonicalise to ``0.0`` under the driver's ``+0.0`` hash
-    normalisation."""
-    p = F.col("_c") / F.col("_n")
-    return base.select(
-        *group_cols,
-        F.col("_cat").alias("cat"),
-        F.col("_c").cast("long").alias("n"),
-        F.round(p, 9).alias("p"),
-        F.round(-(p * F.log(p)), 9).alias("h_contrib"),
-    )
-
-
-def entropy_profile(df: DataFrame, col: str) -> DataFrame:
-    """Shannon-entropy diagram of a CATEGORICAL column — the diversity
-    profile a curation pipeline reads before mixing sources ("how
-    concentrated is the language / license / source mix?"): Σ
-    ``h_contrib`` is the entropy in nats, ``ln(n_categories)`` its
-    maximum, and the ratio the evenness score.  Complements the drift
-    family (tvd/chi2/jsd compare TWO snapshots; entropy scores ONE).
-
-    Law: ``p = c/n`` (doubles from EXACT BIGINT counts), ``h_contrib =
-    -(p·ln p)`` — the expression tree replicated verbatim in the
-    oracle (the family's float-law convention), rounded to 9.  No
-    epsilon anywhere: observed categories have ``c >= 1``.
-
-    Per-CATEGORY diagram rows (no float summation inside the engine;
-    the oracle compares row-by-row).  NULL categories are EXCLUDED
-    (the family convention); empty input → zero rows.
-
-    Plan shape: ONE map-side-combinable count aggregate over the
-    category domain + one unordered totals window over |domain|
-    counter rows — at 100 TB the wire carries |domain| counters, never
-    rows.
-
-    Returns per-category rows ``(cat, n, p, h_contrib)``.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    counts = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).cast("string").alias("_cat"))
-        .agg(F.count("*").alias("_c"))
-    )
-    base = counts.select(
-        "_cat", "_c", F.sum("_c").over(W.partitionBy()).alias("_n")
-    )
-    return _entropy_rows(base, [])
-
-
-def entropy_by(
-    df: DataFrame, col: str, group_cols: list[str]
-) -> DataFrame:
-    """Per-GROUP Shannon-entropy diagram — :func:`entropy_profile`'s
-    segmented form (one diversity score per source / experiment arm /
-    time slice: "did any source's language mix collapse to a single
-    language?").  Same per-category float law via the shared
-    :func:`_entropy_rows` projection, totals computed IN-PLAN per
-    group; no overflow contract is needed (proportions go straight to
-    doubles, nothing cross-multiplies counts).
-
-    Rows whose GROUP KEY is NULL are EXCLUDED up front; NULL
-    categories likewise; groups with no rows do not appear.
-
-    Plan shape: ONE count aggregate (output = Σ_g |group g's domain|
-    counter rows) + one group-partitioned unordered totals window —
-    |groups|·|domain| counters on the wire, never rows.
-
-    Returns per-(group, category) rows ``(<group_cols>, cat, n, p,
-    h_contrib)``.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    if not group_cols:
-        raise ValueError(
-            "entropy_by: group_cols is empty — use entropy_profile "
-            "for the global form (operators/profile.py)"
-        )
-    keep = F.col(col).isNotNull()
-    for g in group_cols:
-        keep = keep & F.col(g).isNotNull()
-    counts = (
-        df.filter(keep)
-        .groupBy(*group_cols, F.col(col).cast("string").alias("_cat"))
-        .agg(F.count("*").alias("_c"))
-    )
-    wg = W.partitionBy(*group_cols)
-    base = counts.select(
-        *group_cols, "_cat", "_c", F.sum("_c").over(wg).alias("_n")
-    )
-    return _entropy_rows(base, group_cols)
-
-
-def mutual_info(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
-    """Mutual-information diagram between two CATEGORICAL columns —
-    the feature-association screen (label leakage, redundant
-    features, segment↔outcome dependence) that chi-square significance
-    alone does not give: Σ ``mi_contrib`` is I(X;Y) in nats, and the
-    per-cell ``lift = p_xy/(p_x·p_y)`` names WHICH (x, y) pair carries
-    the dependence (lift ≫ 1: co-occurring; ≪ 1: repelling).
-
-    Law: with EXACT BIGINT marginals ``n_x, n_y`` and cell counts
-    ``n_xy`` over total ``n``, proportions go straight to doubles
-    (``p_xy = n_xy/n`` etc. — nothing ever cross-multiplies counts, so
-    no overflow contract is needed) and ``mi_contrib =
-    p_xy·ln(p_xy/(p_x·p_y))`` — only OBSERVED cells appear (n_xy >= 1),
-    so the 0·ln0 limit never arises; absent cells contribute exactly 0
-    to I(X;Y) by that limit and are correctly not emitted.  The
-    expression tree is replicated verbatim in the oracle, rounded 9.
-
-    NULLs in either column are EXCLUDED (the family convention).
-
-    Plan shape: ONE map-side-combinable (x, y) count aggregate
-    (output = |observed cell domain| counter rows) + three window
-    exchanges over those COUNTERS (per-x, per-y, global totals) —
-    at 100 TB the wire carries |cells| counters, never rows.
-
-    Returns per-cell rows ``(x_cat, y_cat, n_xy, n_x, n_y, lift,
-    mi_contrib)``.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    cells = (
-        df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
-        .groupBy(
-            F.col(x_col).cast("string").alias("x_cat"),
-            F.col(y_col).cast("string").alias("y_cat"),
-        )
-        .agg(F.count("*").alias("_c"))
-    )
-    base = cells.select(
-        "x_cat",
-        "y_cat",
-        "_c",
-        F.sum("_c").over(W.partitionBy("x_cat")).alias("_nx"),
-        F.sum("_c").over(W.partitionBy("y_cat")).alias("_ny"),
-        F.sum("_c").over(W.partitionBy()).alias("_n"),
-    )
-    p_xy = F.col("_c") / F.col("_n")
-    p_x = F.col("_nx") / F.col("_n")
-    p_y = F.col("_ny") / F.col("_n")
-    return base.select(
-        "x_cat",
-        "y_cat",
-        F.col("_c").cast("long").alias("n_xy"),
-        F.col("_nx").cast("long").alias("n_x"),
-        F.col("_ny").cast("long").alias("n_y"),
-        F.round(p_xy / (p_x * p_y), 9).alias("lift"),
-        F.round(p_xy * F.log(p_xy / (p_x * p_y)), 9).alias("mi_contrib"),
-    )
-
-
 def psi_quantile_bins(
     old: DataFrame,
     new: DataFrame,
@@ -3088,13 +2111,13 @@ def psi_quantile_bins(
         )
     qs = [100 * i // n_bins for i in range(1, n_bins)]
     edges = _qbin_edges(old, col, qs)
-    o = _qbin_bucketize(old, col, edges, qs).select(
-        "bucket", F.col("n").alias("n_old")
+    o, n = (
+        _qbin_bucketize(df, col, edges, qs).select(
+            F.col("bucket").alias("v_"), F.col("n").alias(c)
+        )
+        for df, c in ((old, "_c1"), (new, "_c2"))
     )
-    n = _qbin_bucketize(new, col, edges, qs).select(
-        "bucket", F.col("n").alias("n_new")
-    )
-    return _psi_rows(o, n, eps)
+    return _psi_rows(_merge_counts(o, n), [], eps)
 
 
 def _qbin_edges(old: DataFrame, col: str, qs: list[int]) -> DataFrame:
@@ -3149,32 +2172,6 @@ def _qbin_bucketize(
         .select(b.cast("long").alias("bucket"))
         .groupBy("bucket")
         .agg(F.count("*").alias("n"))
-    )
-
-
-def _psi_rows(o: DataFrame, n: DataFrame, eps: float) -> DataFrame:
-    """The shared eps-floored PSI projection over per-bucket count
-    frames ``o = (bucket, n_old)`` / ``n = (bucket, n_new)`` — one
-    definition for the live and stored-baseline paths (the
-    :func:`psi_drift` float law verbatim)."""
-    j = o.join(n, "bucket", "full_outer").select(
-        "bucket",
-        F.coalesce("n_old", F.lit(0)).alias("n_old"),
-        F.coalesce("n_new", F.lit(0)).alias("n_new"),
-    )
-    tot_o = F.sum("n_old").over(W.partitionBy())
-    tot_n = F.sum("n_new").over(W.partitionBy())
-    p_old = F.greatest(F.col("n_old") / tot_o, F.lit(eps))
-    p_new = F.greatest(F.col("n_new") / tot_n, F.lit(eps))
-    return j.select(
-        "bucket",
-        "n_old",
-        "n_new",
-        F.round(p_old, 9).alias("p_old"),
-        F.round(p_new, 9).alias("p_new"),
-        F.round((p_old - p_new) * F.log(p_old / p_new), 9).alias(
-            "psi_contrib"
-        ),
     )
 
 
@@ -3238,72 +2235,6 @@ def benford_digits(df: DataFrame, col: str) -> DataFrame:
         F.round(F.col("_n") * (diff * diff) / p_ben, 9).alias(
             "chi2_contrib"
         ),
-    )
-
-
-def mutual_info_by(
-    df: DataFrame, x_col: str, y_col: str, group_cols: list[str]
-) -> DataFrame:
-    """Per-GROUP mutual-information diagram — :func:`mutual_info`'s
-    segmented form (one association verdict per segment: "is the
-    return-flag↔ship-year dependence confined to one line status?").
-    Same per-cell float law (proportions from exact BIGINT counts,
-    nothing cross-multiplies, so no overflow contract), totals and
-    marginals computed IN-PLAN per group.
-
-    Rows with a NULL group key, x, or y are EXCLUDED up front (the
-    family convention); groups with no rows do not appear.
-
-    Plan shape: ONE (group, x, y) count aggregate (output = Σ_g
-    |group g's observed cell domain| counters) + three
-    group-partitioned window exchanges over those COUNTERS
-    ((g, x) marginal, (g, y) marginal, g total) — |groups|·|cells|
-    counters on the wire, never rows.
-
-    Returns per-(group, cell) rows ``(<group_cols>, x_cat, y_cat,
-    n_xy, n_x, n_y, lift, mi_contrib)``.
-
-    Reference analog: none — extends the data-quality family
-    (SURVEY §2 extension table).
-    """
-    if not group_cols:
-        raise ValueError(
-            "mutual_info_by: group_cols is empty — use mutual_info "
-            "for the global form (operators/profile.py)"
-        )
-    keep = F.col(x_col).isNotNull() & F.col(y_col).isNotNull()
-    for g in group_cols:
-        keep = keep & F.col(g).isNotNull()
-    cells = (
-        df.filter(keep)
-        .groupBy(
-            *group_cols,
-            F.col(x_col).cast("string").alias("x_cat"),
-            F.col(y_col).cast("string").alias("y_cat"),
-        )
-        .agg(F.count("*").alias("_c"))
-    )
-    base = cells.select(
-        *group_cols,
-        "x_cat",
-        "y_cat",
-        "_c",
-        F.sum("_c").over(W.partitionBy(*group_cols, "x_cat")).alias("_nx"),
-        F.sum("_c").over(W.partitionBy(*group_cols, "y_cat")).alias("_ny"),
-        F.sum("_c").over(W.partitionBy(*group_cols)).alias("_n"),
-    )
-    p_xy = F.col("_c") / F.col("_n")
-    p_x = F.col("_nx") / F.col("_n")
-    p_y = F.col("_ny") / F.col("_n")
-    return base.select(
-        *group_cols,
-        "x_cat",
-        "y_cat",
-        F.col("_c").cast("long").alias("n_xy"),
-        F.col("_nx").cast("long").alias("n_x"),
-        F.col("_ny").cast("long").alias("n_y"),
-        F.round(p_xy / (p_x * p_y), 9).alias("lift"),
-        F.round(p_xy * F.log(p_xy / (p_x * p_y)), 9).alias("mi_contrib"),
     )
 
 
@@ -3763,8 +2694,8 @@ def tvd_drift_vs_baseline(
     baseline histogram (:func:`save_category_baseline`) — the
     production monitoring shape: one scan of the new drop, ZERO scans
     of the reference corpus, bit-identical to
-    :func:`tvd_drift` run on both raw sides (the shared
-    :func:`_tvd_from_counts` law; round-trip pinned).
+    :func:`tvd_drift` run on both raw sides (the same ``_tvd`` core;
+    round-trip pinned).
 
     Plan shape: one map-side-combinable count aggregate over the new
     side + a |domain|-row parquet read + the TVD scalar aggregate —
@@ -3783,13 +2714,15 @@ def tvd_drift_vs_baseline(
             "expected the save_category_baseline (cat, n) contract "
             "(operators/profile.py)"
         )
-    o = base.select("cat", F.col("n").cast("long").alias("_c1"))
+    o = base.select(
+        F.col("cat").alias("v_"), F.col("n").cast("long").alias("_c1")
+    )
     n = (
         new.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).cast("string").alias("cat"))
+        .groupBy(F.col(col).cast("string").alias("v_"))
         .agg(F.count("*").alias("_c2"))
     )
-    return _tvd_from_counts(spark, o, n)
+    return _tvd(_merge_counts(o, n), [], "tvd_drift_vs_baseline")
 
 
 def save_decile_baseline(
@@ -3861,8 +2794,10 @@ def psi_vs_baseline(
             "save_decile_baseline (bucket, n) contract "
             "(operators/profile.py)"
         )
-    o = buckets.select("bucket", F.col("n").cast("long").alias("n_old"))
-    n = _qbin_bucketize(new, col, edges, qs).select(
-        "bucket", F.col("n").alias("n_new")
+    o = buckets.select(
+        F.col("bucket").alias("v_"), F.col("n").cast("long").alias("_c1")
     )
-    return _psi_rows(o, n, eps)
+    n = _qbin_bucketize(new, col, edges, qs).select(
+        F.col("bucket").alias("v_"), F.col("n").alias("_c2")
+    )
+    return _psi_rows(_merge_counts(o, n), [], eps)

@@ -8,7 +8,6 @@ Usage: python scripts/time_queries.py [sf_dir] [reps] q1,q2,...
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 
@@ -16,8 +15,7 @@ sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
 
-from pyspark.sql import functions as F
-
+from perfbench.canary import canary_seconds
 from radohydro_spark import get_spark
 from radohydro_spark.plans.pipeline import release_persisted
 
@@ -29,24 +27,8 @@ QUERIES = sys.argv[3].split(",")
 def main() -> None:
     spark = get_spark("time_queries")
     qs = entrymod.queries()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    def canary_once() -> float:
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 10_000_000, 1, cpus)
-            .select(
-                (F.col("id") % 1000).alias("k"),
-                ((F.col("id") * 2654435761) % 104729).alias("v"),
-            )
-            .groupBy("k")
-            .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-            .agg(F.sum("s").alias("t"), F.sum("n").alias("m"))
-            .collect()
-        )
-        return time.perf_counter() - t0
-
-    can = [canary_once() for _ in range(3)]
+    can = [canary_seconds(spark) for _ in range(3)]
     print(f"canary: {min(can):.3f}  runs={[round(c, 3) for c in can]}", flush=True)
 
     for name in QUERIES:
@@ -68,7 +50,7 @@ def main() -> None:
             flush=True,
         )
 
-    can2 = [canary_once() for _ in range(2)]
+    can2 = [canary_seconds(spark) for _ in range(2)]
     print(f"canary(end): {min(can2):.3f}", flush=True)
 
 

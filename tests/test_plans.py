@@ -290,6 +290,33 @@ def test_concurrency_sweep_ranged_no_self_join(spark):
     assert "_pid" in plan  # window runs inside ranges, not per whole key
 
 
+def test_concurrency_sweep_keeps_null_key_rows(spark):
+    """A NULL partition key is a key of its own: every interval yields
+    its two sweep events, and the offsets join back stays a hash or
+    broadcast join (the key equality is NULL-safe)."""
+    from radohydro_spark.operators.intervals import concurrency_sweep
+
+    df = spark.createDataFrame(
+        [("a", 1, 5), (None, 3, 8), (None, 4, 6)], "k string, s long, e long"
+    )
+    out = concurrency_sweep(df, "s", "e", ["k"])
+    rows = sorted(
+        ((r.k or ""), r.t, r.delta, r.concurrency) for r in out.collect()
+    )
+    assert rows == [
+        ("", 3, 1, 1),
+        ("", 4, 1, 2),
+        ("", 6, -1, 1),
+        ("", 8, -1, 0),
+        ("a", 1, 1, 1),
+        ("a", 5, -1, 0),
+    ]
+    plan = _plan(out)
+    assert "HashJoin" in plan or "SortMergeJoin" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
 def test_triangle_count_no_cartesian(spark):
     from radohydro_spark.operators.graph import triangle_count
 

@@ -253,20 +253,69 @@ def _ks_by(spark, old_rows, new_rows):
     return ks_drift_by(o, n, "v", ["g"])
 
 
-def test_ks_by_single_group_matches_global(spark):
-    from radohydro_spark.operators.profile import ks_drift
+# every global/_by twin of operators.profile: (global, by, argument
+# columns after the frame(s), two snapshots?, scalar statistic?)
+_TWINS = {
+    "tvd": ("tvd_drift", "tvd_drift_by", ("c",), True, True),
+    "ks": ("ks_drift", "ks_drift_by", ("v",), True, True),
+    "gini": ("gini_coefficient", "gini_by", ("v",), False, True),
+    "auc": ("auc_mann_whitney", "auc_by", ("v", "y"), False, True),
+    "wasserstein": (
+        "wasserstein_drift", "wasserstein_drift_by", ("v",), True, True,
+    ),
+    "psi": ("psi_drift", "psi_drift_by", ("v",), True, False),
+    "calibration_bins": (
+        "calibration_bins", "calibration_bins_by", ("v", "y"), False, False,
+    ),
+    "cusum": ("cusum_changepoint", "cusum_by", ("t", "v"), False, True),
+    "chi2": ("chi2_drift", "chi2_drift_by", ("c",), True, False),
+    "jsd": ("jsd_drift", "jsd_drift_by", ("c",), True, False),
+    "entropy": ("entropy_profile", "entropy_by", ("c",), False, False),
+    "mutual_info": ("mutual_info", "mutual_info_by", ("c", "d"), False, False),
+}
 
-    old_v = [1, 2, 2, 3, 10]
-    new_v = [2, 3, 3, 9, 12]
-    o = spark.createDataFrame([(v,) for v in old_v], "v long")
-    n = spark.createDataFrame([(v,) for v in new_v], "v long")
-    g = ks_drift(o, n, "v").collect()[0]
-    r = _ks_by(
-        spark, [("k", v) for v in old_v], [("k", v) for v in new_v]
-    ).collect()[0]
-    assert (r.n_old, r.n_new, r.d_num, r.ks_ppm, r.at_value) == (
-        g.n_old, g.n_new, g.d_num, g.ks_ppm, g.at_value,
-    )
+
+@pytest.mark.parametrize("empty", [False, True], ids=["rows", "empty"])
+@pytest.mark.parametrize("twin", sorted(_TWINS))
+def test_by_single_group_matches_global(spark, twin, empty):
+    """The twin contract: the global form on a frame equals the _by form
+    on the same frame under one constant group key, column for column.
+    On empty input a scalar global gives one all-NULL row, a diagram
+    global zero rows, and every _by form zero rows."""
+    import random
+
+    from radohydro_spark.operators import profile as P
+
+    glob, by, cols, two_sided, scalar = _TWINS[twin]
+    rng = random.Random(15)
+
+    def frame(n, lo, hi):
+        rows = [
+            (
+                "k",
+                t,
+                None if t % 17 == 5 else rng.randrange(lo, hi),
+                rng.randrange(0, 2),
+                None if t % 13 == 7 else rng.choice("abcd"),
+                rng.choice("xy"),
+            )
+            for t in range(0 if empty else n)
+        ]
+        schema = "g string, t long, v long, y long, c string, d string"
+        return spark.createDataFrame(rows, schema)
+
+    frames = (frame(120, 0, 40), frame(100, 10, 55))[: 2 if two_sided else 1]
+    g = getattr(P, glob)(*frames, *cols)
+    b = getattr(P, by)(*frames, *cols, ["g"])
+    assert b.columns == ["g", *g.columns]
+    got_g = sorted((tuple(r) for r in g.collect()), key=repr)
+    got_b = b.collect()
+    if empty:
+        assert got_b == []
+        assert got_g == ([(None,) * len(g.columns)] if scalar else [])
+    else:
+        assert got_g and all(r.g == "k" for r in got_b)
+        assert sorted((tuple(r)[1:] for r in got_b), key=repr) == got_g
 
 
 def test_ks_by_hand_case_and_tie_law(spark):

@@ -5113,7 +5113,9 @@ def q_events_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     every event opens a 300-second half-open interval; peak simultaneous
     intervals per event_type plus the earliest instant the peak is hit.
     The O(n²) interval self-join is re-expressed as union(+1/-1 deltas) +
-    ONE running-sum window + one map-side-combinable max_by — no join.
+    one ranged running sum per event_type (plans.contracts.ranged_cumsum:
+    driver-fixed ranges, so a hot type splits) + one map-side-combinable
+    max_by — no interval self-join.
     Tie policy: ends sort before starts at the same instant (half-open
     semantics), identical ORDER BY (t, delta) in the oracle."""
     _utc(spark)
@@ -9629,11 +9631,12 @@ def q_dq_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from 1997 — the distribution-free sibling of dq_psi_drift (no
     binning, no smoothing).  Integer CROSS-MULTIPLICATION law:
     D compares |c1·n2 − c2·n1| in pure BIGINT, so no ratio (and no
-    float seam) exists anywhere; cumulative counts run on the
-    global_rank RANGE-PARTITION machinery (r14 — per-range local
-    windows + one n_parts-row subtotal collect), so a near-distinct
-    continuous column (this one: cents prices) never sorts on one
-    core and there is no row cap — the n1·n2 < 2^63 validity bound
+    float seam) exists anywhere; cumulative counts run on
+    plans.contracts.ranged_cumsum (one driver job fixes literal range
+    boundaries and the totals; per-range local windows; in-plan
+    offsets, no cache), so a near-distinct continuous column (this
+    one: cents prices) never sorts on one core and there is no row
+    cap — the n1·n2 < 2^63 validity bound
     raises a named contract instead (r13 ADVICE)."""
     from radohydro_spark.operators.profile import ks_drift
 
@@ -9653,10 +9656,10 @@ def q_dq_auc_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact tie-corrected ROC-AUC via the Mann–Whitney rank statistic
     (operators.profile.auc_mann_whitney): how well line-item price
     "predicts" the returned flag — the classifier-eval primitive next
-    to dq_ks_drift, on the SAME r14 range-partition cumulative
-    machinery (_ranged_cumsums: value-domain counts, per-range local
-    windows, one n_parts-row subtotal collect — no single-partition
-    sort, no row cap).  Pure-BIGINT law: doubled tie-averaged rank-sum
+    to dq_ks_drift, on the SAME ranged cumulation
+    (plans.contracts.ranged_cumsum over value-domain counts: driver-
+    fixed range boundaries, per-range local windows, in-plan offsets —
+    no single-partition sort, no row cap, no cache).  Pure-BIGINT law: doubled tie-averaged rank-sum
     2·R⁺ = Σ_v c_pos·(2·C(v) + c_tot + 1); auc_ppm by the ks_drift
     piecewise floored division."""
     from radohydro_spark.operators.profile import auc_mann_whitney
@@ -9917,7 +9920,7 @@ def q_dq_ks_drift_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs from 1997, one exact D per order priority — dq_ks_drift's
     segmented form.  Group-partitioned cumulative windows (the
     documented per-group-domain-fits-a-task contract; the global form
-    owns the unbounded-domain case via _ranged_cumsums), same BIGINT
+    owns the unbounded-domain case via ranged_cumsum), same BIGINT
     cross-multiplication + piecewise ppm law in-plan, smallest-value
     tie law for at_value."""
     from radohydro_spark.operators.profile import ks_drift_by
@@ -10420,7 +10423,7 @@ def q_dq_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.profile.cusum_changepoint): where did the order-value
     series' mean shift — max_t |n·S(t) − c(t)·T| over date boundaries,
     the WITHIN-series complement of the snapshot drift family, on the
-    shared _ranged_cumsums machinery (fifth consumer); smallest
+    shared ranged_cumsum cumulation (plans/contracts.py); smallest
     boundary on ties via the timestamp-safe broadcast-max + min(v)
     law; 2·n·Σ|x| < 2^63 named contract."""
     from radohydro_spark.operators.profile import cusum_changepoint
@@ -10468,9 +10471,10 @@ def q_dq_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 1-Wasserstein drift (operators.profile.wasserstein_drift):
     the same cents-price snapshot split as dq_ks_drift, under the
     magnitude-sensitive integral law — emd_num = Σ|c1·n2 − c2·n1|·Δv on
-    the shared _ranged_cumsums machinery (third consumer), the
-    partition-boundary lead(v) stitched from the same dimension-sized
-    subtotal collect, n1·n2·range < 2^63 as the named contract."""
+    the shared ranged_cumsum cumulation (plans/contracts.py), whose
+    lead(v) across range boundaries comes from the same in-plan
+    (range) offsets aggregate, n1·n2·range < 2^63 as the named
+    contract."""
     from radohydro_spark.operators.profile import wasserstein_drift
 
     o = _t(spark, sf_dir, "orders").select(
@@ -10712,8 +10716,8 @@ def q_stats_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Gini concentration of per-customer revenue
     (operators.profile.gini_coefficient): how concentrated order value
     is across customers — the grouped Lorenz-trapezoid law
-    B = Σ(2·c·S − c²·v) in pure BIGINTs on the _ranged_cumsums
-    machinery (fourth consumer), n·T < 2^63 named contract, negative
+    B = Σ(2·c·S − c²·v) in pure BIGINTs on the ranged_cumsum
+    cumulation (plans/contracts.py), n·T < 2^63 named contract, negative
     values rejected by the named in-plan assert."""
     from radohydro_spark.operators.profile import gini_coefficient
 

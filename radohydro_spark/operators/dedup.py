@@ -29,6 +29,7 @@ from radohydro_spark.functions.text import (
     portable_hash,
     tokens,
 )
+from radohydro_spark.plans.contracts import ranged_cumsum
 
 # fixed affine-hash parameters: h_i(x) = (A_i * x + B_i) mod p.  Small
 # primes chosen once; the oracle embeds the same constants.
@@ -1441,60 +1442,31 @@ def global_rank(
     n_parts: int | None = None,
 ) -> DataFrame:
     """Dense global 1-based rank by ``order_cols`` WITHOUT a single-task
-    window: range-partition on the order key, per-partition row_number,
-    then add per-partition offsets from ONE dimension-sized count
-    collect (n_parts rows — the usual dimension-sized-action contract).
+    window: the row count cumulated by
+    :func:`~radohydro_spark.plans.contracts.ranged_cumsum` — one driver
+    job fixes literal range boundaries, each range ranks its own rows,
+    and the earlier ranges' counts are added in-plan.
 
     ``n_parts`` defaults to the session's ``spark.sql.shuffle.partitions``
     (r12; a fixed 32 was a scale seam — a cluster sized for 100 TB sets
-    shuffle partitions in the tens of thousands, and each range
-    partition must hold in one task's sort).  The offset collect is one
-    long per partition, so raising it is free; pass an explicit value
-    only to pin a plan in tests.
+    shuffle partitions in the tens of thousands, and each range must
+    hold in one task's sort); pass an explicit value only to pin a plan
+    in tests.
 
     The rank is a pure function of the total (order_cols) order, so the
-    output is deterministic for ANY ``n_parts`` — the range
-    partitioner's sampled boundaries only decide WHERE the cumulative
-    offsets cut, never the cumulated order (property-tested against the
-    single-task window).  A bare
-    ``row_number().over(Window.orderBy(...))`` moves the WHOLE relation
-    to one task (the weighted_sample lesson) — this is the scalable
-    form.
+    output is the same for ANY ``n_parts`` and under any re-execution —
+    the boundaries only decide WHERE the cumulation cuts, never the
+    cumulated order (property-tested against the single-task window).
+    A bare ``row_number().over(Window.orderBy(...))`` moves the WHOLE
+    relation to one task (the weighted_sample lesson) — this is the
+    scalable form.
     """
-    if n_parts is None:
-        n_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    d = df.repartitionByRange(n_parts, *cols).withColumn(
-        "_pid", F.spark_partition_id()
+    ranked, _ = ranged_cumsum(
+        df.withColumn("_one", F.lit(1)), [], order_cols, ["_one"], n_parts
     )
-    wloc = W.partitionBy("_pid").orderBy(*cols)
-    d = d.withColumn("_lrn", F.row_number().over(wloc)).cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(d)
-    counts = sorted(
-        (r["_pid"], r["n"])
-        for r in d.groupBy("_pid").agg(F.count("*").alias("n")).collect()
+    return ranked.withColumn(rank_name, F.col("_cum__one").cast("long")).drop(
+        "_one", "_cum__one"
     )
-    if not counts:
-        # empty input: a zero-arg create_map types as map<void,void> and
-        # fails analysis (found by the r12 block-join property test) —
-        # the rank column is schema-only on zero rows
-        return d.withColumn(rank_name, F.col("_lrn").cast("long")).drop(
-            "_pid", "_lrn"
-        )
-    offsets, acc = {}, 0
-    for pid, n in counts:
-        offsets[pid] = acc
-        acc += n
-    off = F.create_map(
-        *[F.lit(x) for pid, o in sorted(offsets.items()) for x in (pid, o)]
-    )
-    return d.withColumn(
-        rank_name, (F.col("_lrn") + off.getItem(F.col("_pid"))).cast("long")
-    ).drop("_pid", "_lrn")
 
 
 def sorted_neighborhood_pairs(

@@ -25,8 +25,23 @@ long before the data does.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Spark's byte-size suffixes (binary multiples; no suffix is bytes)
+_BYTE_SHIFTS = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20}
+_BYTE_SHIFTS |= {"g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
+
+
+def _byte_string_as_bytes(s: str) -> int:
+    """``"10m"`` -> 10485760: the byte-size syntax of Spark configs
+    (``JavaUtils.byteStringAsBytes``), case-insensitive."""
+    m = re.fullmatch(r"([0-9]+)([a-z]*)", s.strip().lower())
+    if m is None or m[2] not in _BYTE_SHIFTS:
+        raise ValueError(f"invalid byte size: {s!r}")
+    return int(m[1]) << _BYTE_SHIFTS[m[2]]
 
 
 def connected_components(
@@ -180,11 +195,7 @@ def pagerank(
         try:
             thresh = int(thresh_raw)
         except ValueError:
-            thresh = int(
-                spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-                    thresh_raw
-                )
-            )
+            thresh = _byte_string_as_bytes(thresh_raw)
         # a (node BIGINT, rank DOUBLE) broadcast row is ~24 bytes framed;
         # a disabled threshold (-1: no broadcasts, every join shuffles)
         # falls back to the default 10 MB cut

@@ -8,8 +8,10 @@ key: every interval becomes a +1 event at its start and a -1 event at its
 end, and the running sum of deltas in time order IS the concurrency.
 
 Scale shape: the union doubles the row count but keeps rows tiny
-(key, t, delta); the only shuffle is the window's partition-by-key
-exchange, identical to any per-key rollup.  No join at all.
+(key, t, delta).  Per key, the running sum is ``ranged_cumsum``: one
+driver job fixes range boundaries over (key, t, delta), the window runs
+inside each (range, key) slice, and a dimension-sized offsets aggregate
+is broadcast back.  No interval self-join.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from radohydro_spark.plans.contracts import bounded_global
+from radohydro_spark.plans.contracts import bounded_global, ranged_cumsum
 
 
 def concurrency_sweep(
@@ -42,73 +44,30 @@ def concurrency_sweep(
     ends = df.select(*keys, F.col(end_col).alias("t"), F.lit(-1).alias("delta"))
     sweep = starts.unionByName(ends)
     if keys:
-        # RANGE-PARTITIONED per-key running sum (r17, guide §2.5): the
-        # plain ``partitionBy(keys)`` window serializes each key's ENTIRE
+        # RANGED per-key running sum (r17, guide §2.5): the plain
+        # ``partitionBy(keys)`` window serializes each key's ENTIRE
         # sweep onto one task — with a low-cardinality key (event_type:
         # a handful of values over the whole fact table) that is a
         # built-in straggler at any scale (measured: 20M events / 5 keys
-        # = 38 s, the whole wall in 5 window tasks).  Instead:
-        # range-partition on (keys, t, delta) — hot keys SPLIT across
-        # contiguous ranges — run the window inside each partition, and
-        # add per-(partition, key) prefix offsets (a dimension-sized
-        # aggregate: ~n_parts + n_distinct_keys rows; AQE broadcasts the
-        # join back).  The cumulation is a pure function of the per-key
-        # (t, delta) total order, so output rows are identical for any
-        # partition count (the _ranged_cumsums law, keyed).
-        n_parts = max(
-            2, df.sparkSession.sparkContext.defaultParallelism
+        # = 38 s, the whole wall in 5 window tasks).  ``ranged_cumsum``
+        # cuts the (keys, t, delta) order into driver-fixed ranges, so
+        # hot keys SPLIT, runs the window inside each (range, key) slice
+        # and adds the earlier ranges' per-key subtotals.  The output is
+        # a pure function of the per-key (t, delta) order: identical for
+        # any range count, with no cache to pin.
+        m, _ = ranged_cumsum(sweep, keys, ["t", "delta"], ["delta"])
+        return m.select(
+            *keys, "t", "delta", F.col("_cum_delta").alias("concurrency")
         )
-        m = sweep.repartitionByRange(
-            n_parts, *keys, F.col("t"), F.col("delta")
-        ).withColumn("_pid", F.spark_partition_id())
-        wloc = (
-            W.partitionBy("_pid", *keys)
-            .orderBy("t", "delta")
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        m = m.withColumn("_loc", F.sum("delta").over(wloc))
-        # the ranged relation feeds BOTH the offsets aggregate and the
-        # final join, and repartitionByRange SAMPLES its boundaries — two
-        # independent executions could disagree on _pid.  Pin ONE
-        # materialization (the _ranged_cumsums convention; session pool
-        # releases it).
-        m = m.cache()
-        from radohydro_spark.plans.pipeline import _PERSISTED
-
-        _PERSISTED.append(m)
-        sub = m.groupBy("_pid", *keys).agg(F.sum("delta").alias("_psum"))
-        woff = (
-            W.partitionBy(*keys)
-            .orderBy("_pid")
-            .rowsBetween(W.unboundedPreceding, -1)
-        )
-        offs = sub.select(
-            F.col("_pid").alias("_opid"),
-            *[F.col(k).alias(f"_okey{i}") for i, k in enumerate(keys)],
-            F.coalesce(F.sum("_psum").over(woff), F.lit(0)).alias("_off"),
-        )
-        # NULL is a key of its own here (the window and the offsets
-        # aggregate both group it), so the join back is NULL-safe
-        on = F.col("_pid") == F.col("_opid")
-        for i, k in enumerate(keys):
-            on = on & F.col(k).eqNullSafe(F.col(f"_okey{i}"))
-        return (
-            m.join(offs, on)
-            .withColumn("concurrency", F.col("_loc") + F.col("_off"))
-            .select(*keys, "t", "delta", "concurrency")
-        )
-    else:
-        # a keyless sweep is ONE global time-sorted pass by definition —
-        # declared-bounded and cap-asserted in-plan; at fact scale pass
-        # partition_cols (tenant/day) and sweep per key instead
-        conc = bounded_global(
-            F.sum("delta"),
-            lambda w: w.orderBy("t", "delta").rowsBetween(
-                W.unboundedPreceding, 0
-            ),
-            "bigint",
-            "concurrency_sweep",
-        )
+    # a keyless sweep is ONE global time-sorted pass by definition —
+    # declared-bounded and cap-asserted in-plan; at fact scale pass
+    # partition_cols (tenant/day) and sweep per key instead
+    conc = bounded_global(
+        F.sum("delta"),
+        lambda w: w.orderBy("t", "delta").rowsBetween(W.unboundedPreceding, 0),
+        "bigint",
+        "concurrency_sweep",
+    )
     return sweep.withColumn("concurrency", conc)
 
 

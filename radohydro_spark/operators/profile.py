@@ -33,8 +33,9 @@ contract:
   ``assert_true``;
 * cumulation goes through ``_cumulate``: a keyed form runs one
   group-partitioned window, so one group's domain must fit one task's
-  sort; a global form range-partitions its domain (``_ranged_cumsums``),
-  has no such bound, and its output does not depend on ``n_parts``.
+  sort; a global form cuts its domain into driver-fixed ranges
+  (``plans.contracts.ranged_cumsum``), has no such bound, and its
+  output depends neither on ``n_parts`` nor on any cache.
 
 A single-constant-group ``_by`` run therefore equals the global row(s)
 plus the group column.
@@ -48,6 +49,8 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from radohydro_spark.plans.contracts import ranged_cumsum
 
 
 def profile_columns(
@@ -398,70 +401,6 @@ def _two_sided_counts(
     )
 
 
-def _ranged_cumsums(
-    df: DataFrame,
-    order_col: str,
-    cols: list[str],
-    n_parts: int | None = None,
-) -> tuple[DataFrame, dict[str, int | None]]:
-    """Range-partitioned cumulative sums — the scale-safe replacement
-    for a single-partition global window (the :func:`~radohydro_spark.
-    operators.dedup.global_rank` machinery generalized to k measures):
-    range-partition on ``order_col``, per-partition running sums (each
-    task sorts only its own range), ONE dimension-sized driver collect
-    of per-partition subtotals (``n_parts`` rows × k longs) whose
-    prefix sums become literal offsets.  The cumulation is a pure
-    function of the total order, so the output is identical for ANY
-    ``n_parts`` (default: ``spark.sql.shuffle.partitions``).
-
-    Returns ``(df_with_cums, totals)`` where each input col ``c`` gains
-    ``_cum_<c>`` (INCLUSIVE cumulative) and ``totals[c]`` is the
-    driver-side grand total (``None`` on empty input)."""
-    if n_parts is None:
-        n_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    m = df.repartitionByRange(n_parts, F.col(order_col)).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    wloc = (
-        W.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    for c in cols:
-        m = m.withColumn(f"_loc_{c}", F.sum(c).over(wloc))
-    # the subtotal collect and the offset-stitched consumers must see
-    # the SAME range boundaries (repartitionByRange samples them), so
-    # pin one materialization; the session pool releases it
-    m = m.cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(m)
-    parts = sorted(
-        (r["_pid"], *[r[c] for c in cols])
-        for r in m.groupBy("_pid")
-        .agg(*[F.sum(c).alias(c) for c in cols])
-        .collect()
-    )
-    out = m
-    for i, c in enumerate(cols):
-        offs, acc = [], 0
-        for p in parts:
-            offs += [p[0], acc]
-            acc += p[i + 1]
-        offset = F.create_map(*map(F.lit, offs))[F.col("_pid")]
-        cum = (
-            F.col(f"_loc_{c}") + offset if parts else F.lit(None).cast("long")
-        )
-        out = out.withColumn(f"_cum_{c}", cum)
-    totals = {
-        c: sum(p[i + 1] for p in parts) if parts else None
-        for i, c in enumerate(cols)
-    }
-    return out.drop(*[f"_loc_{c}" for c in cols]), totals
-
-
 def _cumulate(
     df: DataFrame,
     keys: list[str],
@@ -479,8 +418,9 @@ def _cumulate(
     Keyed: ONE group-partitioned window (one group's domain must fit
     one task's sort).  Keyless without an order: a 1-row aggregate
     broadcast back — no window, no collect, no persist.  Keyless with
-    an order: :func:`_ranged_cumsums` — no single-partition sort, and
-    the totals are known on the driver.
+    an order: :func:`~radohydro_spark.plans.contracts.ranged_cumsum` —
+    no single-partition sort, no persist, and its one driver job
+    returns the totals.
 
     Returns ``(frame, totals)``: ``totals`` maps each ``_tot_*`` name
     to its driver-side value in the keyless ordered case (all ``None``
@@ -506,27 +446,10 @@ def _cumulate(
     if order is None:
         sums = df.agg(*[F.sum(c).alias(t) for c, t in tots.items()])
         return df.crossJoin(F.broadcast(sums)), None
-    m, sums = _ranged_cumsums(df, order, cols, n_parts)
+    m, sums = ranged_cumsum(df, [], [order], cols, n_parts, lead)
     totals = {tots[c]: sums[c] for c in cols}
     if lead:
-        # each range partition's last row leads into the NEXT
-        # partition's first value: per-partition extents (one more
-        # dimension-sized collect) give those heads and the span
-        ext = sorted(
-            (r["_pid"], r["lo"], r["hi"])
-            for r in m.groupBy("_pid")
-            .agg(F.min(order).alias("lo"), F.max(order).alias("hi"))
-            .collect()
-        )
-        heads = [x for a, b in zip(ext, ext[1:]) for x in (a[0], b[1])]
-        boundary = (
-            F.create_map(*map(F.lit, heads))[F.col("_pid")]
-            if heads
-            else F.lit(None)
-        ).cast(m.schema[order].dataType)
-        nxt = F.lead(order).over(W.partitionBy("_pid").orderBy(order))
-        m = m.withColumn("_next", F.coalesce(nxt, boundary))
-        totals["_tot_span"] = ext[-1][2] - ext[0][1] if ext else None
+        totals["_tot_span"] = sums["_span"]
     for t, v in totals.items():
         m = m.withColumn(t, F.lit(v).cast("long"))
     return m, totals

@@ -22,14 +22,19 @@ executable:
 At 100 TB any relation that trips the cap must be re-formed (pre-trim
 with a per-partition local pass, or partition the window) — the error
 message says so.
+
+Its sibling ``ranged_cumsum`` is for the relations that are NOT
+dimension-sized: a running sum in a global (or per-key) order with no
+task holding more than one range of it.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, Window as W, WindowSpec
+from pyspark.sql import Column, DataFrame, Window as W, WindowSpec
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, TimestampType
 
 # One partition must comfortably hold and sort the relation: 10M rows of
 # a slim projection is a few hundred MB on one core — well inside a
@@ -69,3 +74,145 @@ def bounded_global(
             ),
         ).cast(result_type)
     )
+
+
+# Distinct order tuples sampled per range: enough that each range's
+# share of the tuples is off by ~15% at most, typically
+_SAMPLES_PER_RANGE = 100
+
+
+def _wire(x: Column, t: DataType) -> Column:
+    # timestamps cross the driver as epoch micros: a Python datetime
+    # round trip goes through the driver's local zone
+    return F.unix_micros(x) if isinstance(t, TimestampType) else x
+
+
+def _unwire(v: object, t: DataType) -> Column:
+    if v is not None and isinstance(t, TimestampType):
+        return F.timestamp_micros(F.lit(v))
+    return F.lit(v).cast(t)
+
+
+def ranged_cumsum(
+    df: DataFrame,
+    keys: list[str],
+    order_cols: list,
+    sum_cols: list[str],
+    n_parts: int | None = None,
+    lead: bool = False,
+) -> tuple[DataFrame, dict[str, int | None]]:
+    """Per-key running sums of ``sum_cols`` in ascending ``order_cols``
+    order (NULLs first) without a single-task window: ``df`` gains
+    ``_cum_<c>``, the INCLUSIVE running sum within its key (within all
+    rows when ``keys`` is empty).  ``lead`` also adds ``_next``, the
+    next value of the (one) order column within the key, NULL at the
+    last.
+
+    One driver job fixes everything two executions could disagree on.
+    It returns the grand totals, the order extent (for ``lead``) and a
+    sorted sample of distinct (keys, order) tuples, of which up to
+    ``n_parts - 1`` become literal range boundaries.  Each row's bucket
+    ``_b`` is then a pure function of its tuple (a balanced ``when``
+    tree of struct comparisons, so equal tuples share a bucket), the
+    running sum is a window over ``(_b, keys)``, and the earlier
+    buckets' subtotals come from a (bucket × key) aggregate, windowed
+    over ``_b`` and broadcast back: a boundary splits at most one key,
+    so that aggregate has at most ``n_keys + n_parts`` rows (a key of
+    millions of values has no straggler to split; window it per key).
+    The result is the same for any ``n_parts``, any sample and any
+    re-execution, and nothing is persisted.  A key hotter than one
+    range splits across buckets.  ``n_parts`` defaults to
+    ``spark.sql.shuffle.partitions``.
+
+    Returns ``(frame, totals)``: ``totals[c]`` is the grand total of
+    ``c`` (``None`` on empty input) and, with ``lead``,
+    ``totals["_span"]`` is max − min of the order column."""
+    if n_parts is None:
+        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    cols = [F.col(c) if isinstance(c, str) else c for c in [*keys, *order_cols]]
+    names = [f"_o{i}" for i in range(len(cols))]
+    tup = F.struct(*[c.alias(n) for c, n in zip(cols, names)])
+    first = order_cols[0]
+    keyed = df.select(
+        F.pmod(F.xxhash64(*cols), F.lit(_SAMPLES_PER_RANGE * n_parts)).alias("_h"),
+        F.xxhash64(F.lit(0), *cols).alias("_g"),
+        tup.alias("_t"),
+        *sum_cols,
+        *([first] if lead else []),
+    )
+    types = [f.dataType for f in keyed.schema["_t"].dataType.fields]
+    # each hash bucket's sample is its min-hash tuple: a uniform draw
+    # over the distinct tuples
+    per = keyed.groupBy("_h").agg(
+        F.min_by("_t", "_g").alias("_t"),
+        *[F.sum(c).alias(c) for c in sum_cols],
+        *([F.min(first).alias("_lo"), F.max(first).alias("_hi")] if lead else []),
+    )
+    sample = F.transform(
+        F.sort_array(F.collect_list("_t")),
+        lambda t: F.struct(*[_wire(t[n], ty).alias(n) for n, ty in zip(names, types)]),
+    )
+    (row,) = per.agg(
+        sample.alias("_t"),
+        *[F.sum(c).alias(c) for c in sum_cols],
+        *([F.min("_lo").alias("_lo"), F.max("_hi").alias("_hi")] if lead else []),
+    ).collect()
+    totals = {c: row[c] for c in sum_cols}
+    if lead:
+        totals["_span"] = None if row["_lo"] is None else row["_hi"] - row["_lo"]
+    picked = sorted({i * len(row["_t"]) // n_parts for i in range(1, n_parts)} - {0})
+    bounds = [
+        F.struct(
+            *[_unwire(row["_t"][i][n], ty).alias(n) for n, ty in zip(names, types)]
+        )
+        for i in picked
+    ]
+
+    def bucket(lo: int, hi: int) -> Column:
+        # the number of boundaries <= the row's tuple, known in [lo, hi]
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(tup < bounds[mid], bucket(lo, mid)).otherwise(
+            bucket(mid + 1, hi)
+        )
+
+    # bucket i is shuffle partition i: no sampled placement at all
+    b = df.withColumn("_b", bucket(0, len(bounds)))
+    m = b.repartitionById(n_parts, "_b")
+    w = W.partitionBy("_b", *keys).orderBy(*order_cols)
+    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    m = m.select(
+        "*",
+        *[F.sum(c).over(run).alias(f"_loc_{c}") for c in sum_cols],
+        *([F.lead(first).over(w).alias("_nxt")] if lead else []),
+    )
+    sub = b.groupBy("_b", *keys).agg(
+        *[F.sum(c).alias(f"_s_{c}") for c in sum_cols],
+        *([F.min(first).alias("_head")] if lead else []),
+    )
+    # at most n_parts rows per key, so the keyless window is bounded
+    wo = W.partitionBy(*(keys or [F.lit(0)])).orderBy("_b")
+    before = wo.rowsBetween(W.unboundedPreceding, -1)
+    offs = sub.select(
+        F.col("_b").alias("_ob"),
+        *[F.col(k).alias(f"_ok{i}") for i, k in enumerate(keys)],
+        *[
+            F.coalesce(F.sum(f"_s_{c}").over(before), F.lit(0)).alias(f"_off_{c}")
+            for c in sum_cols
+        ],
+        *([F.lead("_head").over(wo).alias("_nhead")] if lead else []),
+    )
+    on = F.col("_b") == F.col("_ob")
+    for i, k in enumerate(keys):
+        # NULL is a key of its own: the window and the aggregate group it
+        on = on & F.col(k).eqNullSafe(F.col(f"_ok{i}"))
+    out = m.join(F.broadcast(offs), on).select(
+        *df.columns,
+        *[
+            (F.col(f"_loc_{c}") + F.col(f"_off_{c}")).alias(f"_cum_{c}")
+            for c in sum_cols
+        ],
+        *([F.coalesce("_nxt", "_nhead").alias("_next")] if lead else []),
+    )
+    return out, totals

@@ -15,16 +15,12 @@ array orientation; the cell-grid generator mirrors this with negative yres.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from radohydro_spark.functions.temporal import filename_to_ts
 from radohydro_spark.schemas import OBS_SCHEMA
+from radohydro_spark.sources.manifest import decode_members
 
 HEADER_KEYS = ("ncols", "nrows", "xllcorner", "yllcorner", "cellsize", "nodata_value")
 
@@ -72,37 +68,6 @@ def grid_meta(payload: bytes) -> dict:
     }
 
 
-def _decode_partition(
-    it: Iterator[pd.DataFrame], date_type: str, permissive: bool = False
-) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        for fname, payload in zip(pdf["fname"], pdf["payload"]):
-            try:
-                _, data = parse_ascii_grid(bytes(payload))
-            except (KeyError, ValueError) as exc:
-                if permissive:
-                    # corrupt member: skip instead of failing the task (the
-                    # engine form of the reference's warn-and-continue
-                    # prints, radohydro.py:141-142)
-                    import sys
-
-                    print(f"skipping undecodable member {fname}: {exc}", file=sys.stderr)
-                    continue
-                raise ValueError(f"undecodable ASCII grid member {fname}: {exc}") from exc
-            nrows, ncols = data.shape
-            flat = data.ravel()
-            yield pd.DataFrame(
-                {
-                    "fname": fname,
-                    "cell_row": np.repeat(
-                        np.arange(nrows, dtype="int32"), ncols
-                    ),
-                    "cell_col": np.tile(np.arange(ncols, dtype="int32"), nrows),
-                    "value": flat,
-                }
-            )
-
-
 def decode_ascii_grids(
     manifest: DataFrame, date_type: str = "hours", permissive: bool = False
 ) -> DataFrame:
@@ -114,15 +79,11 @@ def decode_ascii_grids(
     undecodable members instead of failing the job — at archive scale a
     handful of corrupt tar members must not kill a backfill.
     """
-    decoded = manifest.select("fname", "payload").mapInPandas(
-        lambda it: _decode_partition(it, date_type, permissive),
-        schema="fname string, cell_row int, cell_col int, value double",
-    )
-    return decoded.select(
-        filename_to_ts("fname", date_type).alias("ts"),
-        "cell_row",
-        "cell_col",
-        F.when(F.isnan("value"), F.lit(None).cast("double"))
-        .otherwise(F.col("value"))
-        .alias("value"),
+    return decode_members(
+        manifest,
+        lambda payload: parse_ascii_grid(payload)[1],
+        (KeyError, ValueError),
+        "ASCII grid",
+        date_type,
+        permissive,
     )

@@ -21,15 +21,11 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from radohydro_spark.functions.temporal import filename_to_ts
+from radohydro_spark.sources.manifest import decode_members
 
 # TIFF tag ids
 _T_WIDTH, _T_LENGTH, _T_BITS, _T_COMPRESSION, _T_PHOTOMETRIC = 256, 257, 258, 259, 262
@@ -308,31 +304,6 @@ def geotiff_meta(payload: bytes) -> dict:
     return meta
 
 
-def _decode_partition(
-    it: Iterator[pd.DataFrame], permissive: bool
-) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        for fname, payload in zip(pdf["fname"], pdf["payload"]):
-            try:
-                _, data = parse_geotiff(bytes(payload))
-            except (ValueError, struct.error, zlib.error) as exc:
-                if permissive:
-                    import sys
-
-                    print(f"skipping undecodable member {fname}: {exc}", file=sys.stderr)
-                    continue
-                raise ValueError(f"undecodable GeoTIFF member {fname}: {exc}") from exc
-            nrows, ncols = data.shape
-            yield pd.DataFrame(
-                {
-                    "fname": fname,
-                    "cell_row": np.repeat(np.arange(nrows, dtype="int32"), ncols),
-                    "cell_col": np.tile(np.arange(ncols, dtype="int32"), nrows),
-                    "value": data.ravel(),
-                }
-            )
-
-
 def decode_geotiffs(
     manifest: DataFrame, date_type: str = "hours", permissive: bool = False
 ) -> DataFrame:
@@ -340,15 +311,11 @@ def decode_geotiffs(
 
     Same contract as ``decode_ascii_grids`` — GeoTIFF mirrors plug into
     ``precip_timeseries`` unchanged."""
-    decoded = manifest.select("fname", "payload").mapInPandas(
-        lambda it: _decode_partition(it, permissive),
-        schema="fname string, cell_row int, cell_col int, value double",
-    )
-    return decoded.select(
-        filename_to_ts("fname", date_type).alias("ts"),
-        "cell_row",
-        "cell_col",
-        F.when(F.isnan("value"), F.lit(None).cast("double"))
-        .otherwise(F.col("value"))
-        .alias("value"),
+    return decode_members(
+        manifest,
+        lambda payload: parse_geotiff(payload)[1],
+        (ValueError, struct.error, zlib.error),
+        "GeoTIFF",
+        date_type,
+        permissive,
     )

@@ -8,16 +8,18 @@ synthetic tests are interchangeable (SURVEY.md §7.1):
     list → prune-by-name (S3, Catalyst filter BEFORE any fetch/decode UDF —
     Python UDFs are optimization barriers, SURVEY.md §4) → fetch payloads →
     expand tars (S4, one-to-many mapInPandas) → member date filter (S5) →
-    decode (ascii_grid.py / regnie.py)
+    decode (ascii_grid.py / regnie.py / geotiff.py, one ``decode_members``)
 """
 
 from __future__ import annotations
 
 import io
 import os
+import sys
 import tarfile
-from typing import Iterator
+from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -147,6 +149,58 @@ DWD_PATHS = {
     "historical": "/climate_environment/CDC/grids_germany/hourly/radolan/historical/asc/{year}/",
     "regnie": "/climate_environment/CDC/grids_germany/daily/regnie/",
 }
+
+
+def decode_members(
+    manifest: DataFrame,
+    parse: Callable[[bytes], np.ndarray],
+    errors: tuple[type[Exception], ...],
+    label: str,
+    date_type: str,
+    permissive: bool = False,
+) -> DataFrame:
+    """manifest(fname, payload) → obs(ts, cell_row, cell_col, value): one
+    long row per cell of each member raster (row 0 at the top), the
+    timestamp from the member filename (F8), NaN → NULL.
+
+    ``parse`` decodes one payload into its 2-D grid.  A parse failure of
+    a type in ``errors`` is re-raised as ``undecodable <label> member
+    <fname>``, or with ``permissive=True`` the member is skipped (the
+    engine form of the reference's warn-and-continue prints,
+    radohydro.py:141-142).
+    """
+
+    def rows(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            for fname, payload in zip(pdf["fname"], pdf["payload"]):
+                try:
+                    data = parse(bytes(payload))
+                except errors as exc:
+                    if permissive:
+                        print(f"skipping undecodable member {fname}: {exc}", file=sys.stderr)
+                        continue
+                    raise ValueError(f"undecodable {label} member {fname}: {exc}") from exc
+                nrows, ncols = data.shape
+                yield pd.DataFrame(
+                    {
+                        "fname": fname,
+                        "cell_row": np.repeat(np.arange(nrows, dtype="int32"), ncols),
+                        "cell_col": np.tile(np.arange(ncols, dtype="int32"), nrows),
+                        "value": data.ravel(),
+                    }
+                )
+
+    decoded = manifest.select("fname", "payload").mapInPandas(
+        rows, schema="fname string, cell_row int, cell_col int, value double"
+    )
+    return decoded.select(
+        filename_to_ts("fname", date_type).alias("ts"),
+        "cell_row",
+        "cell_col",
+        F.when(F.isnan("value"), F.lit(None).cast("double"))
+        .otherwise(F.col("value"))
+        .alias("value"),
+    )
 
 
 def ftp_list(kind: str = "recent", year: int | None = None, max_retries: int = 3) -> list[str]:

@@ -19,15 +19,11 @@ emitting long obs rows; -999 → NULL at ingest.
 from __future__ import annotations
 
 import gzip
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from radohydro_spark.functions.temporal import filename_to_ts
+from radohydro_spark.sources.manifest import decode_members
 
 REGNIE_COLS = 611
 REGNIE_ROWS = 971
@@ -120,25 +116,6 @@ def decode_regnie_day(
     return np.where(data == REGNIE_NAN, np.nan, data)
 
 
-def _decode_partition(
-    it: Iterator[pd.DataFrame], compat_heuristic: bool, no_per_line: int
-) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        for fname, payload in zip(pdf["fname"], pdf["payload"]):
-            data = decode_regnie_day(
-                bytes(payload), compat_heuristic=compat_heuristic, no_per_line=no_per_line
-            )
-            nrows, ncols = data.shape
-            yield pd.DataFrame(
-                {
-                    "fname": fname,
-                    "cell_row": np.repeat(np.arange(nrows, dtype="int32"), ncols),
-                    "cell_col": np.tile(np.arange(ncols, dtype="int32"), nrows),
-                    "value": data.ravel(),
-                }
-            )
-
-
 def decode_regnie(
     manifest: DataFrame,
     compat_heuristic: bool = False,
@@ -149,15 +126,12 @@ def decode_regnie(
     Day-file names are ``raYYMMDD...`` (two-digit year, reference
     radohydro.py:434).
     """
-    decoded = manifest.select("fname", "payload").mapInPandas(
-        lambda it: _decode_partition(it, compat_heuristic, no_per_line),
-        schema="fname string, cell_row int, cell_col int, value double",
-    )
-    return decoded.select(
-        filename_to_ts("fname", "days2").alias("ts"),
-        "cell_row",
-        "cell_col",
-        F.when(F.isnan("value"), F.lit(None).cast("double"))
-        .otherwise(F.col("value"))
-        .alias("value"),
+    return decode_members(
+        manifest,
+        lambda payload: decode_regnie_day(
+            payload, compat_heuristic=compat_heuristic, no_per_line=no_per_line
+        ),
+        (),
+        "REGNIE",
+        "days2",
     )

@@ -149,7 +149,7 @@ HEADLINE = [
     "sample_cluster_balanced",
     "corpus_temperature_mixture",
     "dq_ks_drift",
-    # r14: the two _ranged_cumsums consumers (no single-partition sort
+    # r14: the two ranged-cumulation consumers (no single-partition sort
     # on value-domain cumulatives) and the bounded-shuffle CMS
     "dq_auc_returns",
     "sketch_count_min",
@@ -160,7 +160,7 @@ HEADLINE = [
     "sketch_kmv_overlap",
     "stats_bootstrap_ci",
     # r14 third batch: single-Window EWMA and the two further
-    # _ranged_cumsums consumers (W1 integral, Lorenz/Gini).  The
+    # ranged-cumulation consumers (W1 integral, Lorenz/Gini).  The
     # streaming drift monitor drains to a memory table (its final frame
     # is a local scan, like the other stream queries — the informative
     # stateful-agg plan is documented in stream_category_drift)

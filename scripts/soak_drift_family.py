@@ -1,5 +1,5 @@
-"""Soak: the W1 / Gini / CUSUM `_ranged_cumsums` consumers at scale
-(r15, VERDICT r14 #6).
+"""Soak: the W1 / Gini / CUSUM ranged-cumulation consumers at scale
+(`plans.contracts.ranged_cumsum`; r15, VERDICT r14 #6).
 
 The shared range-partition cumulation was soaked at 10M/20M distinct
 values under ks_drift (r14); W1's partition-boundary ``lead(v)``

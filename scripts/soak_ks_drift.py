@@ -3,8 +3,8 @@ old implementation cumulated both CDFs on a SINGLE-PARTITION global
 window over the merged value domain, which on a continuous column
 (value domain ≈ row count) sorts the whole relation on one core and
 hard-fails past the 10M-row contract cap.  The r14 rework runs the
-cumulation on the global_rank range-partition machinery (per-range
-local windows + one n_parts-row subtotal collect).
+cumulation on value ranges (per-range local windows + offsets; since
+then ``plans.contracts.ranged_cumsum``, with driver-fixed boundaries).
 
 This soak drives the exact regime the verdict named: NEAR-DISTINCT
 BIGINT values (every row its own domain point), at and past the old

@@ -17,6 +17,23 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def cache_free_collect(spark):
+    """Collect a built frame with no cache left to lean on: its plan may
+    read no persisted intermediate, and every cache is dropped before
+    the rows are computed (so a re-execution must agree with itself)."""
+    from radohydro_spark.plans.pipeline import release_persisted
+
+    def collect(df):
+        plan = df.select("*")._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan
+        spark.catalog.clearCache()
+        release_persisted()
+        return df.collect()
+
+    return collect
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 

@@ -263,10 +263,13 @@ def test_update_lsh_index_rejects_mismatched_geometry(spark, tmp_path):
     )
 
 
-def test_global_rank_matches_single_task_window(spark):
-    """r11: the range-partition + offset-collect global rank must equal
-    the naive global row_number for any data and any partitioning."""
+def test_global_rank_matches_single_task_window(spark, cache_free_collect):
+    """The ranged global rank must equal the naive global row_number for
+    any data and any range count — including more ranges than distinct
+    order tuples, ties on the order key, and empty input — with every
+    cache dropped before the rows are computed."""
     import random
+    from collections import defaultdict
 
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
@@ -276,17 +279,29 @@ def test_global_rank_matches_single_task_window(spark):
     rng = random.Random(7)
     rows = [(i, f"k{rng.randrange(50)}") for i in range(1, 500)]
     df = spark.createDataFrame(rows, "doc_id long, k string").repartition(13)
-    got = {
-        r["doc_id"]: r["rank"]
-        for r in global_rank(df, ["k", "doc_id"], n_parts=7).collect()
-    }
     ref = {
         r["doc_id"]: r["rank"]
         for r in df.withColumn(
             "rank", F.row_number().over(W.orderBy("k", "doc_id"))
         ).collect()
     }
-    assert got == ref
+    for n_parts in (7, 512):
+        got = {
+            r["doc_id"]: r["rank"]
+            for r in cache_free_collect(global_rank(df, ["k", "doc_id"], n_parts=n_parts))
+        }
+        assert got == ref
+    # ranked by k alone, ~10 rows tie on each of 50 keys: each tie group
+    # holds exactly the reference's block of ranks
+    by_k = defaultdict(set)
+    for r in cache_free_collect(global_rank(df, ["k"], n_parts=64)):
+        by_k[r["k"]].add(r["rank"])
+    key_of, ref_k = dict(rows), defaultdict(set)
+    for d, rank in ref.items():
+        ref_k[key_of[d]].add(rank)
+    assert by_k == ref_k
+    empty = spark.createDataFrame([], "doc_id long, k string")
+    assert cache_free_collect(global_rank(empty, ["k"], n_parts=4)) == []
 
 
 def test_sorted_neighborhood_matches_bruteforce_definition(spark):

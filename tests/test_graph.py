@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from radohydro_spark.operators.graph import connected_components, dedup_canonical
 
 
@@ -177,3 +179,30 @@ def test_bfs_hops_cap(spark):
     df = spark.createDataFrame(chain, "src long, dst long")
     got = {r["node"]: r["hops"] for r in bfs_hops(df, 0, max_hops=3).collect()}
     assert got == {0: 0, 1: 1, 2: 2, 3: 3}
+
+
+@pytest.mark.parametrize(
+    "size",
+    ["0", "10485760", "7b", "7B", "10k", "2Kb", "10m", "10MB", " 1g ", "3gb", "3t", "1TB", "1p", "2pb"],
+)
+def test_byte_string_parser_matches_spark(spark, size):
+    """pagerank reads a suffixed autoBroadcastJoinThreshold without the
+    JVM; the parser must agree with Spark's own (checked here, on the
+    test side, through the classic gateway)."""
+    from radohydro_spark.operators.graph import _byte_string_as_bytes
+
+    jvm = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    assert _byte_string_as_bytes(size) == jvm.byteStringAsBytes(size)
+
+
+@pytest.mark.parametrize("size", ["1.5m", "10x", "-1", "", "mb", "1bb"])
+def test_byte_string_parser_rejects_what_spark_rejects(spark, size):
+    from pyspark.errors.exceptions.captured import NumberFormatException
+
+    from radohydro_spark.operators.graph import _byte_string_as_bytes
+
+    jvm = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    with pytest.raises(ValueError, match="invalid byte size"):
+        _byte_string_as_bytes(size)
+    with pytest.raises(NumberFormatException):
+        jvm.byteStringAsBytes(size)

@@ -275,9 +275,10 @@ def test_concurrency_sweep_ranged_no_self_join(spark):
     sum (guide §2.5 — a low-cardinality key serialized each key's whole
     sweep onto one task), which adds ONE dimension-sized offsets
     equi-join.  The contract now: no interval SELF-join (no cartesian,
-    no O(n²) — the only join key includes _pid, never an interval
-    overlap predicate), the window partitions by (_pid, key) so no
-    per-key single-tasking, and a range exchange is present."""
+    no O(n²) — the only join key includes the range bucket _b, never an
+    interval overlap predicate), the window partitions by (_b, key) so
+    no per-key single-tasking, and each bucket is its own shuffle
+    partition."""
     from radohydro_spark.operators.intervals import concurrency_sweep
 
     df = spark.createDataFrame(
@@ -286,14 +287,22 @@ def test_concurrency_sweep_ranged_no_self_join(spark):
     plan = _plan(concurrency_sweep(df, "s", "e", ["k"]))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "rangepartitioning" in plan
-    assert "_pid" in plan  # window runs inside ranges, not per whole key
+    assert "direct_shuffle_partition_id(_b" in plan
+    # window runs inside ranges, not per whole key
+    assert re.search(r"windowspecdefinition\(_b#\d+, k#\d+, t#", plan)
 
 
-def test_concurrency_sweep_keeps_null_key_rows(spark):
+def test_concurrency_sweep_keeps_null_key_rows(spark, cache_free_collect):
     """A NULL partition key is a key of its own: every interval yields
     its two sweep events, and the offsets join back stays a hash or
-    broadcast join (the key equality is NULL-safe)."""
+    broadcast join (the key equality is NULL-safe).  Next to a hot key
+    split over many ranges, the sweep equals the per-key single-task
+    window row for row, with every cache dropped before the rows are
+    computed."""
+    import random
+
+    from pyspark.sql import Window as W
+
     from radohydro_spark.operators.intervals import concurrency_sweep
 
     df = spark.createDataFrame(
@@ -315,6 +324,31 @@ def test_concurrency_sweep_keeps_null_key_rows(spark):
     assert "HashJoin" in plan or "SortMergeJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+    rng = random.Random(17)
+    rows = [
+        (k, s, s + rng.randrange(1, 20))
+        for k, n in (("hot", 400), (None, 40), ("cold", 5))
+        for s in (rng.randrange(0, 200) for _ in range(n))
+    ]
+    df = spark.createDataFrame(rows, "k string, s long, e long")
+    sweep = df.select("k", F.col("s").alias("t"), F.lit(1).alias("delta")).unionByName(
+        df.select("k", F.col("e").alias("t"), F.lit(-1).alias("delta"))
+    )
+    w = W.partitionBy("k").orderBy("t", "delta").rowsBetween(W.unboundedPreceding, 0)
+
+    def norm(rows):
+        return sorted((r.k or "", r.k is None, r.t, r.delta, r.concurrency) for r in rows)
+
+    ref = norm(sweep.withColumn("concurrency", F.sum("delta").over(w)).collect())
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        out = concurrency_sweep(df, "s", "e", ["k"])
+        assert norm(cache_free_collect(out)) == ref
+        assert cache_free_collect(concurrency_sweep(df.limit(0), "s", "e", ["k"])) == []
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_triangle_count_no_cartesian(spark):

@@ -588,11 +588,12 @@ def test_ks_drift_both_sides_empty_all_null_row(spark):
     )
 
 
-def test_ks_drift_output_invariant_to_n_parts(spark):
+def test_ks_drift_output_invariant_to_n_parts(spark, cache_free_collect):
     """The r14 range-partition rework: the cumulation is a pure function
     of the total v-order, so ANY n_parts (including the degenerate
-    single-partition form) yields the identical row — the global_rank
-    determinism argument, pinned."""
+    single-partition form, and more ranges than the 55 distinct values)
+    yields the identical row, with no cache to lean on — the
+    global_rank determinism argument, pinned."""
     import random
 
     from radohydro_spark.operators.profile import ks_drift
@@ -605,23 +606,31 @@ def test_ks_drift_output_invariant_to_n_parts(spark):
         [(rng.randrange(10, 55),) for _ in range(250)], "x long"
     )
     rows = {
-        p: tuple(ks_drift(old, new, "x", n_parts=p).collect()[0])
-        for p in (1, 3, 32)
+        p: tuple(cache_free_collect(ks_drift(old, new, "x", n_parts=p))[0])
+        for p in (1, 3, 32, 64)
     }
-    assert rows[1] == rows[3] == rows[32]
+    assert rows[1] == rows[3] == rows[32] == rows[64]
     assert rows[1][0] == 300 and rows[1][1] == 250
+    empty = old.limit(0)
+    assert [tuple(r) for r in cache_free_collect(ks_drift(empty, empty, "x", n_parts=64))] == [
+        (None,) * 5
+    ]
 
 
 def test_ks_drift_no_single_partition_window_in_plan(spark):
     """The r13 weak spot: the cumulative counts must NOT run on a
     constant-keyed (single-partition) window — the plan partitions the
-    window by the physical range-partition id."""
+    window by the driver-fixed range bucket, one bucket per shuffle
+    partition."""
+    import re
+
     from radohydro_spark.operators.profile import ks_drift
 
     old = spark.createDataFrame([(v,) for v in range(50)], "x long")
     new = spark.createDataFrame([(v,) for v in range(10, 60)], "x long")
     plan = ks_drift(old, new, "x")._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning(v" in plan
+    assert "direct_shuffle_partition_id(_b" in plan
+    assert re.search(r"windowspecdefinition\(_b#\d+, v_#\d+L? ASC", plan)
     assert "partitionbyexpression=[0]" not in plan.lower().replace(" ", "")
 
 
@@ -636,15 +645,16 @@ def test_ks_drift_cross_mult_domain_guard_raises_named(spark):
 
     old = spark.createDataFrame([(1,), (2,)], "x long")
     new = spark.createDataFrame([(2,), (3,)], "x long")
-    # the guard fires on the collected subtotals — fake one partition
-    # with 2^32 rows per side (n1*n2 = 2^64) without generating them
+    # the guard fires on the collected totals — fake the boundary job's
+    # one row with 2^32 rows per side (n1*n2 = 2^64) without generating
+    # them
     real_collect = None
 
     class _FakeRow(dict):
         def __getitem__(self, k):
             return dict.__getitem__(self, k)
 
-    fake = [_FakeRow(_pid=0, _c1=1 << 32, _c2=1 << 32)]
+    fake = [_FakeRow(_t=[], _c1=1 << 32, _c2=1 << 32)]
     with mock.patch(
         "pyspark.sql.classic.dataframe.DataFrame.collect",
         return_value=fake,

@@ -144,19 +144,23 @@ def test_auc_single_class_null_ppm_and_empty_row(spark):
     assert len(e) == 1 and tuple(e[0]) == (None, None, None, None)
 
 
-def test_auc_invariant_to_n_parts(spark):
+def test_auc_invariant_to_n_parts(spark, cache_free_collect):
     import random
 
     from radohydro_spark.operators.profile import auc_mann_whitney
 
     rng = random.Random(99)
-    rows = [(rng.randrange(0, 1000), rng.randrange(0, 2)) for _ in range(400)]
-    df = spark.createDataFrame(rows, "s long, y long")
-    got = {
-        p: tuple(auc_mann_whitney(df, "s", "y", n_parts=p).collect()[0])
-        for p in (1, 3, 32)
-    }
-    assert got[1] == got[3] == got[32]
+    for hi, parts in ((1000, (1, 3, 32)), (20, (1, 3, 32))):
+        # the second domain has fewer distinct scores than 32 ranges
+        rows = [(rng.randrange(0, hi), rng.randrange(0, 2)) for _ in range(400)]
+        df = spark.createDataFrame(rows, "s long, y long")
+        got = {
+            p: tuple(cache_free_collect(auc_mann_whitney(df, "s", "y", n_parts=p))[0])
+            for p in parts
+        }
+        assert len(set(got.values())) == 1
+    e = cache_free_collect(auc_mann_whitney(df.limit(0), "s", "y", n_parts=32))
+    assert [tuple(r) for r in e] == [(None, None, None, None)]
 
 
 def test_auc_domain_guard_raises_named(spark):
@@ -165,7 +169,7 @@ def test_auc_domain_guard_raises_named(spark):
     from radohydro_spark.operators import profile as P
 
     df = spark.createDataFrame([(1, 0), (2, 1)], "s long, y long")
-    fake = [dict(_pid=0, _ct=1 << 32, _cp=1 << 31)]
+    fake = [dict(_t=[], _ct=1 << 32, _cp=1 << 31)]
 
     class _R(dict):
         pass

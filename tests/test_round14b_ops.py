@@ -376,12 +376,12 @@ def test_stream_category_drift_matches_batch_law(spark, tmp_path):
 # ------------------------------------------- Wasserstein-1 drift
 
 
-def _w1(spark, old_vals, new_vals, n_parts=None):
+def _w1(spark, old_vals, new_vals, n_parts=None, collect=lambda df: df.collect()):
     from radohydro_spark.operators.profile import wasserstein_drift
 
     o = spark.createDataFrame([(v,) for v in old_vals], "v long")
     n = spark.createDataFrame([(v,) for v in new_vals], "v long")
-    return wasserstein_drift(o, n, "v", n_parts=n_parts).collect()[0]
+    return collect(wasserstein_drift(o, n, "v", n_parts=n_parts))[0]
 
 
 def test_w1_hand_case_and_shift_sensitivity(spark):
@@ -394,14 +394,21 @@ def test_w1_hand_case_and_shift_sensitivity(spark):
     assert far.emd_micro == 1_002_000_000  # moved 1002 units
 
 
-def test_w1_identical_and_n_parts_invariance(spark):
+def test_w1_identical_and_n_parts_invariance(spark, cache_free_collect):
     vals = [(i * 37) % 1000 for i in range(500)]
     assert _w1(spark, vals, vals).emd_num == 0
-    shifted = [v + 5 for v in vals]
-    rs = [_w1(spark, vals, shifted, n_parts=p) for p in (1, 3, 32)]
-    assert len({(r.emd_num, r.emd_micro) for r in rs}) == 1
-    # constant shift by 5: W1 = 5 exactly
-    assert rs[0].emd_micro == 5_000_000
+    # the second domain (35 values) has fewer values than 48 ranges
+    for vals, parts in ((vals, (1, 3, 32)), ([i % 30 for i in range(200)], (1, 3, 48))):
+        shifted = [v + 5 for v in vals]
+        rs = [
+            _w1(spark, vals, shifted, n_parts=p, collect=cache_free_collect)
+            for p in parts
+        ]
+        assert len({(r.emd_num, r.emd_micro) for r in rs}) == 1
+        # constant shift by 5: W1 = 5 exactly
+        assert rs[0].emd_micro == 5_000_000
+    r = _w1(spark, [], [], n_parts=48, collect=cache_free_collect)
+    assert all(v is None for v in r)
 
 
 def test_w1_matches_python_and_empty(spark):
@@ -433,11 +440,11 @@ def test_w1_matches_python_and_empty(spark):
 # ----------------------------------------------------- Gini
 
 
-def _gini(spark, vals, n_parts=None):
+def _gini(spark, vals, n_parts=None, collect=lambda df: df.collect()):
     from radohydro_spark.operators.profile import gini_coefficient
 
     df = spark.createDataFrame([(v,) for v in vals], "v long")
-    return gini_coefficient(df, "v", n_parts=n_parts).collect()[0]
+    return collect(gini_coefficient(df, "v", n_parts=n_parts))[0]
 
 
 def test_gini_hand_cases(spark):
@@ -452,18 +459,25 @@ def test_gini_hand_cases(spark):
     assert r.gini_ppm == 900_000
 
 
-def test_gini_matches_python_and_invariance(spark):
+def test_gini_matches_python_and_invariance(spark, cache_free_collect):
     import random
 
     rng = random.Random(13)
-    vals = [rng.randrange(0, 10_000) for _ in range(400)]
-    rs = [_gini(spark, vals, n_parts=p) for p in (1, 5, 32)]
-    assert len({(r.gini_num, r.gini_ppm) for r in rs}) == 1
-    xs = sorted(vals)
-    n, t = len(xs), sum(xs)
-    num = sum((2 * (i + 1) - n - 1) * x for i, x in enumerate(xs))
-    assert rs[0].gini_num == num
-    assert rs[0].gini_ppm == (1_000_000 * num) // (n * t)
+    # the second domain (40 values) has fewer values than 64 ranges
+    for hi, parts in ((10_000, (1, 5, 32)), (40, (1, 5, 64))):
+        vals = [rng.randrange(0, hi) for _ in range(400)]
+        rs = [
+            _gini(spark, vals, n_parts=p, collect=cache_free_collect)
+            for p in parts
+        ]
+        assert len({(r.gini_num, r.gini_ppm) for r in rs}) == 1
+        xs = sorted(vals)
+        n, t = len(xs), sum(xs)
+        num = sum((2 * (i + 1) - n - 1) * x for i, x in enumerate(xs))
+        assert rs[0].gini_num == num
+        assert rs[0].gini_ppm == (1_000_000 * num) // (n * t)
+    r = _gini(spark, [], n_parts=64, collect=cache_free_collect)
+    assert all(v is None for v in r)
 
 
 def test_gini_negative_asserts_and_empty(spark):
@@ -844,11 +858,11 @@ def test_gini_law_property(spark, vals):
 # ------------------------------------------------ CUSUM change-point
 
 
-def _cusum(spark, pairs, n_parts=None):
+def _cusum(spark, pairs, n_parts=None, collect=lambda df: df.collect()):
     from radohydro_spark.operators.profile import cusum_changepoint
 
     df = spark.createDataFrame(pairs, "t long, x long")
-    return cusum_changepoint(df, "t", "x", n_parts=n_parts).collect()[0]
+    return collect(cusum_changepoint(df, "t", "x", n_parts=n_parts))[0]
 
 
 def test_cusum_finds_the_step(spark):
@@ -861,28 +875,35 @@ def test_cusum_finds_the_step(spark):
     assert r.cusum_micro == (1_000_000 * 50_000) // (100 * 2000)
 
 
-def test_cusum_constant_series_and_invariance(spark):
+def test_cusum_constant_series_and_invariance(spark, cache_free_collect):
     pairs = [(t, 7) for t in range(60)]
     assert _cusum(spark, pairs).cusum_num == 0
     import random
 
     rng = random.Random(3)
-    data = [(t, rng.randrange(-50, 100)) for t in range(200)]
-    rs = [_cusum(spark, data, n_parts=p) for p in (1, 4, 32)]
-    assert len({(r.cusum_num, r.at_value, r.cusum_micro) for r in rs}) == 1
-    # python replay
-    data.sort()
-    n = len(data)
-    tot = sum(x for _, x in data)
-    s = c = best = 0
-    at = None
-    for t, x in data:
-        s += x
-        c += 1
-        d = abs(n * s - c * tot)
-        if d > best:
-            best, at = d, t
-    assert (rs[0].cusum_num, rs[0].at_value) == (best, at)
+    # the second series repeats each of its 40 instants 5 times, under
+    # more ranges than instants
+    for ts, parts in ((range(200), (1, 4, 32)), ([t % 40 for t in range(200)], (1, 4, 64))):
+        data = [(t, rng.randrange(-50, 100)) for t in ts]
+        rs = [
+            _cusum(spark, data, n_parts=p, collect=cache_free_collect)
+            for p in parts
+        ]
+        assert len({(r.cusum_num, r.at_value, r.cusum_micro) for r in rs}) == 1
+        # python replay: one scan boundary per distinct instant
+        n = len(data)
+        tot = sum(x for _, x in data)
+        s = c = best = 0
+        at = None
+        for t in sorted({t for t, _ in data}):
+            s += sum(x for u, x in data if u == t)
+            c += sum(1 for u, _ in data if u == t)
+            d = abs(n * s - c * tot)
+            if d > best:
+                best, at = d, t
+        assert (rs[0].cusum_num, rs[0].at_value) == (best, at)
+    r = _cusum(spark, [], n_parts=64, collect=cache_free_collect)
+    assert all(v is None for v in r)
 
 
 def test_cusum_mixed_sign_zero_total_and_contract(spark):

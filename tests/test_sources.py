@@ -209,20 +209,30 @@ class TestEndToEndDecode:
         assert obs.select("ts").distinct().count() == 2
 
 
-def test_decode_permissive_skips_corrupt_member(spark):
+def _geotiff_3x3() -> bytes:
+    from radohydro_spark.sources.geotiff import encode_geotiff
+
+    grid = np.arange(1.0, 10.0).reshape(3, 3)
+    return encode_geotiff(grid, 0.0, 3.0, 1.0, -1.0)
+
+
+@pytest.mark.parametrize("fmt", ["ascii", "geotiff"])
+def test_decode_permissive_skips_corrupt_member(spark, fmt):
+    from radohydro_spark.sources.ascii_grid import decode_ascii_grids
+    from radohydro_spark.sources.geotiff import decode_geotiffs
+
+    decode, good = {
+        "ascii": (decode_ascii_grids, ASC_3x3),
+        "geotiff": (decode_geotiffs, _geotiff_3x3()),
+    }[fmt]
     manifest = _manifest(
         spark,
-        [("RW-20240101-0000.asc", ASC_3x3), ("RW-20240101-0100.asc", b"not a grid")],
+        [(f"RW-20240101-0000.{fmt}", good), (f"RW-20240101-0100.{fmt}", b"not a grid")],
     )
-    from radohydro_spark.sources.ascii_grid import decode_ascii_grids
-
-    import pytest as _pytest
-    from py4j.protocol import Py4JJavaError  # noqa: F401
-
-    ok = decode_ascii_grids(manifest, "minutes", permissive=True)
+    ok = decode(manifest, "minutes", permissive=True)
     assert ok.count() == 9  # corrupt member skipped, good one decoded
-    strict = decode_ascii_grids(manifest, "minutes", permissive=False)
-    with _pytest.raises(Exception, match="undecodable"):
+    strict = decode(manifest, "minutes", permissive=False)
+    with pytest.raises(Exception, match="undecodable"):
         strict.count()
 
 

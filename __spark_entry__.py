@@ -36,6 +36,7 @@ from radohydro_spark.operators.aggregate import resample
 from radohydro_spark.operators.spatial import rasterize, spatial_intersect
 from radohydro_spark.operators.weights import apply_nan_policy, basin_weights
 from radohydro_spark.plans.pipeline import precip_timeseries
+from radohydro_spark.session import pin
 from radohydro_spark.sinks.sinks import write_basin_csvs
 from radohydro_spark.sources.synthetic import (
     GRID,
@@ -1626,21 +1627,19 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # All four stage caches register in the session pool (r17, VERDICT
     # r16 #7): a long session (the 286-query sweep) otherwise pins these
     # corpus-text caches until LRU while operator persists are released.
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    q = corpus.join(keep_q, "doc_id", "left_semi").cache()
-    e = DD.dedup_exact(q, "text", "doc_id").cache()
-    _PERSISTED.extend([q, e])
+    q = pin(corpus.join(keep_q, "doc_id", "left_semi").cache())
+    e = pin(DD.dedup_exact(q, "text", "doc_id").cache())
     pairs = DD.ngram_jaccard_pairs(
         e, "text", "doc_id", k=3, threshold=0.5, max_doc_freq=None
     )
-    nd = e.join(
-        pairs.select(F.col("id_b").alias("doc_id")).distinct(), "doc_id", "left_anti"
-    ).cache()
+    nd = pin(
+        e.join(
+            pairs.select(F.col("id_b").alias("doc_id")).distinct(), "doc_id", "left_anti"
+        ).cache()
+    )
     benchmark = d.filter(F.col("doc_id") % 50 == 0)
     flagged = DD.contamination_check(nd, benchmark, "text", "doc_id", k=3, min_shared=5)
-    clean = nd.join(flagged.select("doc_id"), "doc_id", "left_anti").cache()
-    _PERSISTED.extend([nd, clean])
+    clean = pin(nd.join(flagged.select("doc_id"), "doc_id", "left_anti").cache())
     splits = split_assign(clean, "doc_id", val_pct=10, test_pct=10)
 
     def cnt(df: DataFrame, name: str) -> DataFrame:
@@ -7651,10 +7650,7 @@ def q_dedup_overlap_pairs_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch; the fragment's %20 filter sits under the aggregate after
     # pushdown, so Spark cannot reuse the exchange — cache the baskets
     # once (order-count rows, released by the session pool)
-    base = base.cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(base)
+    base = pin(base.cache())
     docs = base.select(
         F.col("l_orderkey").alias("doc_id"),
         F.array_join("_parts", " ").alias("text"),

@@ -20,6 +20,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from radohydro_spark.session import pin
+
 HASH_MOD = 2147483647  # 2^31 - 1 (Mersenne prime)
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for")
@@ -935,8 +937,6 @@ def bpe_train_merges(
     (round, acceptance) order globally.
     """
     spark = df.sparkSession
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
     assert batch_top >= 1 and cand_factor >= 1
     words = (
         df.select(
@@ -955,8 +955,7 @@ def bpe_train_merges(
         )
     merges = []
     for r in range(1, n_merges + 1):
-        words = words.localCheckpoint(eager=False)
-        _PERSISTED.append(words)
+        words = pin(words.localCheckpoint(eager=False))
         s = F.split(F.col("sym"), " ")
         prs = words.select(
             F.explode(
@@ -1000,8 +999,6 @@ def _bpe_train_batched(
     driver-side over those ≤C rows (the same walk the oracle's
     recursive CTE replays), and rewrites the vocabulary with ≤B
     chained :func:`_bpe_merge_fold` projections."""
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
     cap_c = cand_factor * batch_top
     merges = []  # (merge_rank, round, pa, pb, n)
     # STATIC round structure (ceil(n_merges/B) rounds, per-round cap
@@ -1011,8 +1008,7 @@ def _bpe_train_batched(
     n_rounds = -(-n_merges // batch_top)
     for rnd in range(1, n_rounds + 1):
         b_r = min(batch_top, n_merges - (rnd - 1) * batch_top)
-        words = words.localCheckpoint(eager=False)
-        _PERSISTED.append(words)
+        words = pin(words.localCheckpoint(eager=False))
         s = F.split(F.col("sym"), " ")
         prs = words.select(
             F.explode(
@@ -1128,8 +1124,6 @@ def bpe_encode(
             (r["pa"], r["pb"])
             for r in merges.orderBy("merge_rank").collect()
         ]
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
     toks = F.filter(
         F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
         lambda w: w != F.lit(""),
@@ -1159,7 +1153,7 @@ def bpe_encode(
                 prev.unpersist()
             prev = cur
     if prev is not None:
-        _PERSISTED.append(prev)
+        pin(prev)
     enc = F.col("_enc")
     return cur.select(
         F.col(id_col),

@@ -15,6 +15,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from radohydro_spark.session import pin
+
 
 def weighted_basin_timeseries(
     obs: DataFrame,
@@ -616,11 +618,7 @@ def _poisson_replicate_means(
     # the (groups x B+1)-row replicate table feeds both the rank-pick
     # and the point rows — persist it so the corpus aggregate runs
     # ONCE (session pool)
-    reps = reps.cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(reps)
-    return reps
+    return pin(reps.cache())
 
 
 def poisson_bootstrap_ci(

@@ -20,7 +20,7 @@ reproduce signatures bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from radohydro_spark.functions.text import (
@@ -30,6 +30,7 @@ from radohydro_spark.functions.text import (
     tokens,
 )
 from radohydro_spark.plans.contracts import ranged_cumsum
+from radohydro_spark.session import pin
 
 # fixed affine-hash parameters: h_i(x) = (A_i * x + B_i) mod p.  Small
 # primes chosen once; the oracle embeds the same constants.
@@ -128,6 +129,28 @@ def ngram_jaccard_pairs(
     the per-doc sizes aggregation and its two back-joins — the whole
     operator is the self-join plus ONE pair-key shuffle.
     """
+    return (
+        _shared_shingle_counts(df, text_col, id_col, k, max_doc_freq)
+        .select(
+            "id_a",
+            "id_b",
+            F.round(
+                F.col("n_common") / (F.col("_na") + F.col("_nb") - F.col("n_common")),
+                6,
+            ).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _shared_shingle_counts(
+    df: DataFrame, text_col: str, id_col: str, k: int, max_doc_freq: int | None
+) -> DataFrame:
+    """``(id_a, id_b, n_common, _na, _nb)`` for every document pair
+    (``id_a < id_b``) sharing a hashed k-shingle: the hot-shingle guard,
+    hashed self-join and pair aggregate of :func:`ngram_jaccard_pairs`
+    and :func:`ngram_containment_pairs`, which differ only in the score
+    they project from it."""
     sh = word_shingles(df, text_col, id_col, k, with_count=True).select(
         "doc_id", "n_sh", F.xxhash64("shingle").alias("sid")
     )
@@ -141,10 +164,7 @@ def ngram_jaccard_pairs(
         sh = sh.join(F.broadcast(hot), "sid", "left_anti")
     # cache: the self-join consumes sh twice and the tokenize+shingle
     # projection is the expensive part of this operator
-    sh = sh.cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(sh)
+    sh = pin(sh.cache())
     a = sh.alias("a")
     b = sh.alias("b")
     return (
@@ -155,15 +175,6 @@ def ngram_jaccard_pairs(
             F.first(F.col("a.n_sh")).alias("_na"),
             F.first(F.col("b.n_sh")).alias("_nb"),
         )
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_common") / (F.col("_na") + F.col("_nb") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -227,10 +238,7 @@ def minhash_lsh_pairs(
     *arrays* element-wise (``zip_with``), so the scoring joins move one row
     per doc instead of one per (doc, hash)."""
     assert n_hashes % rows_per_band == 0
-    wide = minhash_signatures_wide(df, text_col, id_col, n_hashes, k).cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(wide)
+    wide = pin(minhash_signatures_wide(df, text_col, id_col, n_hashes, k).cache())
     n_bands = n_hashes // rows_per_band
     band_structs = _band_structs(n_hashes, rows_per_band)
     banded = wide.select(
@@ -422,8 +430,25 @@ def contamination_check(
 
     Returns (doc_id, n_shared) for flagged docs only.
     """
-    c_sh = word_shingles(corpus, text_col, id_col, k).select(
-        "doc_id", F.xxhash64("shingle").alias("sid")
+    return _benchmark_hits(
+        corpus, benchmark, text_col, id_col, k, F.count("*").alias("n_shared")
+    ).filter(F.col("n_shared") >= min_shared)
+
+
+def _benchmark_hits(
+    corpus: DataFrame,
+    benchmark: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    *aggs: Column,
+) -> DataFrame:
+    """``aggs`` per corpus ``doc_id`` over its ``(n_sh, sid)`` shingle
+    rows whose hash occurs in the benchmark: the broadcast semi-join and
+    doc aggregate of :func:`contamination_check` and
+    :func:`contamination_coverage`."""
+    c_sh = word_shingles(corpus, text_col, id_col, k, with_count=True).select(
+        "doc_id", "n_sh", F.xxhash64("shingle").alias("sid")
     )
     b_sh = (
         word_shingles(benchmark, text_col, id_col, k)
@@ -431,11 +456,7 @@ def contamination_check(
         .distinct()
     )
     hits = c_sh.join(F.broadcast(b_sh), "sid", "left_semi")
-    return (
-        hits.groupBy("doc_id")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+    return hits.groupBy("doc_id").agg(*aggs)
 
 
 def simhash_hamming_pairs(
@@ -460,10 +481,7 @@ def simhash_hamming_pairs(
     assert bits % n_bands == 0 and max_hamming < n_bands
     band_bits = bits // n_bands
     mask = (1 << band_bits) - 1
-    sims = simhash(df, text_col, id_col, bits).cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(sims)
+    sims = pin(simhash(df, text_col, id_col, bits).cache())
     banded = sims.select(
         "doc_id",
         "simhash",
@@ -540,8 +558,6 @@ def semdedup(
 
     from pyspark import StorageLevel
 
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
     centroids = (
         corpus.orderBy(id_col)
         .limit(n_clusters)
@@ -550,10 +566,11 @@ def semdedup(
     # the assignment feeds BOTH pair sides and the final anti-join: persist
     # it, or the plan recomputes the corpus scan + broadcast argmax three
     # times (registered with the session-wide release_persisted() pool)
-    assigned = ivf_assign(corpus, centroids, vec_col, id_col).join(
-        corpus, id_col
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(assigned)
+    assigned = pin(
+        ivf_assign(corpus, centroids, vec_col, id_col)
+        .join(corpus, id_col)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     a = assigned.select(
         "centroid_id",
         F.col(id_col).alias("_id_a"),
@@ -667,7 +684,12 @@ def build_lsh_index(
     # from banding (recall loss) and diverge from the in-memory operator
     # this index is pinned to reproduce
     assert n_hashes % rows_per_band == 0
-    wide = minhash_signatures_wide(df, text_col, id_col, n_hashes, k).cache()
+    # the signature cache stays alive after the writes below: the cache
+    # manager matches it by logical plan, so a rebuild over the same
+    # corpus — the bench/iterate loop — skips the md5-heavy signature
+    # aggregation entirely.  O(n_docs × 9 longs); freed by
+    # release_persisted()
+    wide = pin(minhash_signatures_wide(df, text_col, id_col, n_hashes, k).cache())
     n_bands = n_hashes // rows_per_band
     band_structs = _band_structs(n_hashes, rows_per_band)
     banded = wide.select(
@@ -693,14 +715,6 @@ def build_lsh_index(
     wide.select("doc_id", sig_arr.alias("sig_arr")).write.mode(
         "errorifexists"
     ).parquet(f"{path}/signatures")
-    # keep the signature cache alive in the session-wide pool (instead of
-    # unpersisting here): the cache manager matches it by logical plan,
-    # so a rebuild over the same corpus — the bench/iterate loop — skips
-    # the md5-heavy signature aggregation entirely.  O(n_docs × 9 longs);
-    # released by plans.pipeline.release_persisted()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(wide)
 
 
 def update_lsh_index(
@@ -772,7 +786,9 @@ def update_lsh_index(
             f"{path} — ids are content keys; re-ingesting changed text "
             "needs a fresh id (or rebuild the index)"
         )
-    wide = minhash_signatures_wide(new_docs, text_col, id_col, n_hashes, k).cache()
+    wide = pin(
+        minhash_signatures_wide(new_docs, text_col, id_col, n_hashes, k).cache()
+    )
     band_structs = _band_structs(n_hashes, rows_per_band)
     banded = wide.select(
         "doc_id", F.explode(F.array(*band_structs)).alias("b")
@@ -789,9 +805,6 @@ def update_lsh_index(
     wide.select("doc_id", sig_arr.alias("sig_arr")).write.mode("append").parquet(
         f"{path}/signatures"
     )
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(wide)
 
 
 def query_lsh_index(
@@ -852,8 +865,11 @@ def query_lsh_index(
     # shape — the whole MinHash subplan is dropped from the final plan,
     # which otherwise costs ~3s of whole-stage-codegen compilation even
     # with zero rows flowing through it
+    # the probe-batch cache is pinned so release_persisted() frees it —
+    # a probe-per-batch ingestion loop must not leak one cached frame
+    # per probe until LRU eviction
     if fresh_docs.isEmpty():
-        q_sigs = known.cache()
+        q_sigs = pin(known.cache())
     else:
         fresh_wide = minhash_signatures_wide(
             fresh_docs, text_col, id_col, n_hashes, k
@@ -864,13 +880,7 @@ def query_lsh_index(
                 *[F.col(f"sig_{i}") for i in range(n_hashes)]
             ).alias("sig_arr"),
         )
-        q_sigs = known.unionByName(fresh).cache()
-    # register the probe-batch cache in the session-wide pool so
-    # release_persisted() frees it — a probe-per-batch ingestion loop must
-    # not leak one cached frame per probe until LRU eviction
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(q_sigs)
+        q_sigs = pin(known.unionByName(fresh).cache())
     n_bands = n_hashes // rows_per_band
     band_structs = _band_structs(n_hashes, rows_per_band, sig_arr="sig_arr")
     q_banded = q_sigs.select(
@@ -1105,42 +1115,15 @@ def ngram_containment_pairs(
     grows, but containment of A stays ≈ 1 — the Broder (1997) resemblance
     vs containment distinction; dedup pipelines need both signals.
 
-    Identical plan shape and scale guards as the Jaccard operator (same
-    hot-shingle ``max_doc_freq`` cliff guard, same hashed-shingle
+    The Jaccard operator's plan and scale guards (one shared core: the
+    hot-shingle ``max_doc_freq`` cliff guard, the hashed-shingle
     self-join, denominators riding the exploded rows, ONE pair-key
     shuffle).  Emits both directions — ``cont_a = |A∩B|/|A|`` (how much
     of A is inside B) and ``cont_b`` — and keeps pairs where EITHER
     reaches the threshold; ids ordered ``id_a < id_b``.
     """
-    sh = word_shingles(df, text_col, id_col, k, with_count=True).select(
-        "doc_id", "n_sh", F.xxhash64("shingle").alias("sid")
-    )
-    if max_doc_freq is not None:
-        hot = (
-            sh.groupBy("sid")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_doc_freq)
-            .select("sid")
-        )
-        sh = sh.join(F.broadcast(hot), "sid", "left_anti")
-    sh = sh.cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(sh)
-    a = sh.alias("a")
-    b = sh.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.sid") == F.col("b.sid"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(
-            F.count("*").alias("n_common"),
-            F.first(F.col("a.n_sh")).alias("_na"),
-            F.first(F.col("b.n_sh")).alias("_nb"),
-        )
+        _shared_shingle_counts(df, text_col, id_col, k, max_doc_freq)
         .select(
             "id_a",
             "id_b",
@@ -1267,43 +1250,73 @@ def jaccard_prefix_pairs(
     there, MinHash-LSH is the right tool.
     """
     assert 0.0 < threshold <= 1.0
+    # length filter (the other standard ssjoin prune): J >= t forces
+    # t * max(|A|,|B|) <= |A cap B| <= min(|A|,|B|), so any candidate
+    # whose sizes violate it is dead on arrival — drop it inside the
+    # join before the pair ever reaches the distinct/verify stages
+    sizes_ok = (F.col("a.n_sh") * threshold <= F.col("b.n_sh")) & (
+        F.col("b.n_sh") * threshold <= F.col("a.n_sh")
+    )
+    return (
+        _prefix_verified_pairs(
+            df,
+            text_col,
+            id_col,
+            k,
+            F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")).cast("long") + 1,
+            sizes_ok=sizes_ok,
+        )
+        .select(
+            "id_a",
+            "id_b",
+            F.round(
+                F.col("n_common")
+                / (F.col("_na") + F.col("_nb") - F.col("n_common")),
+                6,
+            ).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _prefix_verified_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    prefix_len: Column,
+    min_n_sh: int | None = None,
+    sizes_ok: Column | None = None,
+) -> DataFrame:
+    """``(id_a, id_b, n_common, _na, _nb)`` (INT counts) for every
+    pair whose rarest-first shingle prefixes collide, verified exactly:
+    the prefix-filter machinery of :func:`jaccard_prefix_pairs` and
+    :func:`overlap_pairs`.  ``prefix_len`` is the per-doc prefix length
+    over ``n_sh``; ``min_n_sh`` drops smaller docs before the cache;
+    ``sizes_ok`` is a length filter over ``a.n_sh``/``b.n_sh`` applied
+    inside the prefix self-join."""
     sh = word_shingles(df, text_col, id_col, k, with_count=True).select(
         "doc_id", "n_sh", F.xxhash64("shingle").alias("sid")
     )
+    if min_n_sh is not None:
+        sh = sh.filter(F.col("n_sh") >= min_n_sh)
     # the full shingle relation is consumed three times (frequency agg,
     # prefix window, verification join) and tokenize+shingle is the
     # expensive projection — cache once, like ngram_jaccard_pairs
-    sh = sh.cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(sh)
+    sh = pin(sh.cache())
     freq = sh.groupBy("sid").agg(F.count("*").alias("_df"))
     ordered = sh.join(freq, "sid")
     w = W.partitionBy("doc_id").orderBy(F.col("_df").asc(), F.col("sid").asc())
     prefix = (
         ordered.withColumn("_rn", F.row_number().over(w))
-        .filter(
-            F.col("_rn")
-            <= F.col("n_sh")
-            - F.ceil(F.lit(threshold) * F.col("n_sh")).cast("long")
-            + 1
-        )
+        .filter(F.col("_rn") <= prefix_len)
         .select("doc_id", "n_sh", "sid")
     )
     a = prefix.alias("a")
     b = prefix.alias("b")
-    # length filter (the other standard ssjoin prune): J >= t forces
-    # t * max(|A|,|B|) <= |A cap B| <= min(|A|,|B|), so any candidate
-    # whose sizes violate it is dead on arrival — drop it inside the
-    # join before the pair ever reaches the distinct/verify stages
+    on = (F.col("a.sid") == F.col("b.sid")) & (F.col("a.doc_id") < F.col("b.doc_id"))
     cand = (
-        a.join(
-            b,
-            (F.col("a.sid") == F.col("b.sid"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("a.n_sh") * threshold <= F.col("b.n_sh"))
-            & (F.col("b.n_sh") * threshold <= F.col("a.n_sh")),
-        )
+        a.join(b, on if sizes_ok is None else on & sizes_ok)
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
@@ -1337,16 +1350,6 @@ def jaccard_prefix_pairs(
             F.size("_sa").alias("_na"),
             F.size("_sb").alias("_nb"),
         )
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_common")
-                / (F.col("_na") + F.col("_nb") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -1382,54 +1385,21 @@ def overlap_pairs(
     adversarial-case note).
     """
     assert min_overlap >= 1
-    sh = word_shingles(df, text_col, id_col, k, with_count=True).select(
-        "doc_id", "n_sh", F.xxhash64("shingle").alias("sid")
-    )
-    sh = sh.filter(F.col("n_sh") >= min_overlap).cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(sh)
-    freq = sh.groupBy("sid").agg(F.count("*").alias("_df"))
-    ordered = sh.join(freq, "sid")
-    w = W.partitionBy("doc_id").orderBy(F.col("_df").asc(), F.col("sid").asc())
-    prefix = (
-        ordered.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= F.col("n_sh") - min_overlap + 1)
-        .select("doc_id", "sid")
-    )
-    a = prefix.alias("a")
-    b = prefix.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.sid") == F.col("b.sid"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    # ARRAY VERIFY (r17): same rewrite as jaccard_prefix_pairs — one
-    # sorted distinct sid array per doc, |A ∩ B| per candidate via
-    # codegen array_intersect instead of re-joining the exploded shingle
-    # relation twice and shuffling one row per shared shingle per pair.
-    arrs = sh.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list("sid")).alias("_sids")
-    )
     return (
-        cand.join(
-            arrs.select(F.col("doc_id").alias("id_a"), F.col("_sids").alias("_sa")),
-            "id_a",
-        )
-        .join(
-            arrs.select(F.col("doc_id").alias("id_b"), F.col("_sids").alias("_sb")),
-            "id_b",
+        _prefix_verified_pairs(
+            df,
+            text_col,
+            id_col,
+            k,
+            F.col("n_sh") - min_overlap + 1,
+            min_n_sh=min_overlap,
         )
         .select(
             "id_a",
             "id_b",
             # cast: the former count(*) was BIGINT; size() is INT —
             # the output schema must not change
-            F.size(F.array_intersect("_sa", "_sb")).cast("long").alias("n_common"),
+            F.col("n_common").cast("long").alias("n_common"),
         )
         .filter(F.col("n_common") >= min_overlap)
     )
@@ -1568,14 +1538,11 @@ def sorted_neighborhood_pairs(
     # the true window·N candidates.  B = max(64, 8·window) keeps the
     # copy fraction <= 12.5% and the block fan-in thousands of keys.
     B = max(64, 8 * window)
-    home = (
+    home = pin(
         ranked.join(sets, "doc_id")
         .withColumn("_blk", F.expr(f"_rn div {B}"))
         .cache()
     )
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(home)
     tail = home.filter(
         F.col("_rn") >= (F.col("_blk") + 1) * B - window
     ).withColumn("_blk", F.col("_blk") + F.lit(1))
@@ -1760,10 +1727,7 @@ def winnow_pairs(
         fps = fps.join(F.broadcast(hot), "fp_hash", "left_anti")
     # the self-join consumes fps twice; cache the selected set (it is the
     # ~2/(w+1)-density reduction of the corpus, the cheap side to keep)
-    fps = fps.cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(fps)
+    fps = pin(fps.cache())
     a = fps.alias("a")
     b = fps.alias("b")
     return (
@@ -1803,23 +1767,15 @@ def contamination_coverage(
 
     Returns (doc_id, n_sh, n_shared, coverage_ppm), all BIGINT.
     """
-    c_sh = word_shingles(corpus, text_col, id_col, k, with_count=True).select(
-        "doc_id", "n_sh", F.xxhash64("shingle").alias("sid")
-    )
-    b_sh = (
-        word_shingles(benchmark, text_col, id_col, k)
-        .select(F.xxhash64("shingle").alias("sid"))
-        .distinct()
-    )
-    hits = c_sh.join(F.broadcast(b_sh), "sid", "left_semi")
-    return (
-        hits.groupBy("doc_id")
-        .agg(
-            F.first("n_sh").cast("long").alias("n_sh"),
-            F.count("*").alias("n_shared"),
-        )
-        .withColumn("coverage_ppm", F.expr("1000000 * n_shared div n_sh"))
-    )
+    return _benchmark_hits(
+        corpus,
+        benchmark,
+        text_col,
+        id_col,
+        k,
+        F.first("n_sh").cast("long").alias("n_sh"),
+        F.count("*").alias("n_shared"),
+    ).withColumn("coverage_ppm", F.expr("1000000 * n_shared div n_sh"))
 
 
 def dedup_paragraphs(

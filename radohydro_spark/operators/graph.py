@@ -30,6 +30,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from radohydro_spark.session import pin
+
 # Spark's byte-size suffixes (binary multiples; no suffix is bytes)
 _BYTE_SHIFTS = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20}
 _BYTE_SHIFTS |= {"g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
@@ -202,10 +204,7 @@ def pagerank(
         limit = thresh if thresh >= 0 else 10 << 20
         prepartition = n_nodes * 24 > limit
     if prepartition:
-        from radohydro_spark.plans.pipeline import _PERSISTED
-
-        e_deg = e_deg.repartition("src").sortWithinPartitions("src").persist()
-        _PERSISTED.append(e_deg)
+        e_deg = pin(e_deg.repartition("src").sortWithinPartitions("src").persist())
         e_deg.count()
     # the dangling-mass anti-join runs EVERY iteration: probe it against
     # the checkpointed e_deg's src column, not against outdeg — outdeg's
@@ -269,9 +268,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     """
     from pyspark import StorageLevel
 
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    e = (
+    e = pin(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(
@@ -284,7 +281,6 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         # (spillable, edge-list-sized; released via release_persisted())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED.append(e)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -299,13 +295,14 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         deg.select(F.col("node").alias("u"), F.col("deg").alias("du")), "u"
     ).join(deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")), "v")
     fwd = F.struct("du", "u") < F.struct("dv", "v")
-    directed = d.select(
-        F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
-        # both wedge sides read this frame — persist so the two degree
-        # joins above run once, not twice
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(directed)
+    # both wedge sides read this frame — persist so the two degree
+    # joins above run once, not twice
+    directed = pin(
+        d.select(
+            F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # wedges at apex a: pairs of out-neighbours (b, c); close with edge b->c
     w1 = directed.select(F.col("a"), F.col("b"))
     w2 = directed.select(F.col("a"), F.col("b").alias("c"))

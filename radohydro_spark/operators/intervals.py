@@ -79,18 +79,22 @@ def peak_concurrency(
 ) -> DataFrame:
     """Peak concurrency per partition key: the max of the sweep plus the
     EARLIEST instant it is reached — one extra map-side-combinable
-    aggregate over the sweep (``max_by`` on (concurrency, -epoch), so no
-    second shuffle and no self-join).  ``start_col``/``end_col`` must be
-    timestamps."""
+    aggregate over the sweep (no second shuffle, no self-join).
+    ``start_col``/``end_col`` must be timestamps.
+
+    ``peak_at`` is ``max_by`` on the fixed-point key ``concurrency·2^64 -
+    unix_micros(t)``: two instants differ by less than 2^64 µs, so the key
+    orders by concurrency first and then by the earlier instant — the
+    (concurrency, -epoch) order — as one DECIMAL(38,0) a hash aggregate
+    can carry (a struct key plans a sort aggregate over the whole sweep).
+    Exact while concurrency < 5·10^18.  A sweep row with a NULL ``t``
+    never names ``peak_at`` (``max_by`` skips a NULL key)."""
     keys = partition_cols or []
     sweep = concurrency_sweep(df, start_col, end_col, keys)
+    rank = F.col("concurrency").cast("decimal(19,0)") * F.expr(
+        "18446744073709551616BD"
+    ) - F.unix_micros(F.col("t")).cast("decimal(19,0)")
     return sweep.groupBy(*keys).agg(
         F.max("concurrency").alias("peak"),
-        F.max_by(
-            "t",
-            F.struct(
-                F.col("concurrency").alias("c"),
-                (-F.unix_micros(F.col("t"))).alias("nt"),
-            ),
-        ).alias("peak_at"),
+        F.max_by("t", rank).alias("peak_at"),
     )

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from radohydro_spark.functions.text import tokens
 from radohydro_spark.plans.contracts import bounded_global
+from radohydro_spark.session import pin
 
 
 def _bm25_term_rows(
@@ -63,10 +64,7 @@ def _bm25_term_rows(
         .groupBy("_doc", "_len", "_term")
         .agg(F.count("*").alias("_tf"))
     )
-    postings = postings.cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(postings)
+    postings = pin(postings.cache())
     stats = d.select(
         F.count("*").alias("n"), F.sum("_len").alias("total_len")
     ).first()

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from radohydro_spark.functions.text import gram_array, portable_hash, tokens
+from radohydro_spark.session import pin
 
 
 def hash_bucket(
@@ -275,14 +276,11 @@ def greedy_max_coverage(
             T.StructField("gain", T.LongType()),
         ]
     )
-    pairs = (
+    pairs = pin(
         word_shingles(df, text_col, id_col, k=shingle_k)
         .select("doc_id", F.xxhash64("shingle").alias("sid"))
         .persist()
     )
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(pairs)
 
     covered = None
     chosen: list[tuple[int, object, int]] = []
@@ -429,10 +427,7 @@ def mmr_select(
         nrm > 0,
         F.transform(v, lambda x: F.floor(x / nrm * scale + 0.5).cast("long")),
     ).otherwise(F.transform(v, lambda x: F.lit(0).cast("long")))
-    qdf = df.select(F.col(id_col).alias("_id"), qv.alias("_qv")).cache()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(qdf)
+    qdf = pin(df.select(F.col(id_col).alias("_id"), qv.alias("_qv")).cache())
 
     qrow = qdf.filter(F.col("_id") == query_id).collect()
     if not qrow:
@@ -796,17 +791,13 @@ def dsir_importance_weights(
     # below (r17).
     from pyspark import StorageLevel
 
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    src_grams = src_grams.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(src_grams)
+    src_grams = pin(src_grams.persist(StorageLevel.MEMORY_AND_DISK))
     cs = src_grams.groupBy("b").agg(F.count("*").alias("cs"))
     # the ct aggregate feeds BOTH the nt total and the lr join, and
     # exchange reuse does not dedupe the subtree (r16 ADVICE: the target
     # was tokenized+hashed twice) — persist the ≤ n_buckets-row aggregate
     # so the target side is read once
-    ct = tgt_grams.groupBy("b").agg(F.count("*").alias("ct")).cache()
-    _PERSISTED.append(ct)
+    ct = pin(tgt_grams.groupBy("b").agg(F.count("*").alias("ct")).cache())
     # totals are the bucket-table sums — deriving them from the
     # n_buckets-row aggregates (identical BIGINTs by definition, r16)
     # removes one full corpus replay and one full target replay that
@@ -1022,7 +1013,6 @@ def temperature_shares(
     """
     assert 0 <= alpha_exp2 <= 4 and total_mille >= 0
     from radohydro_spark.plans.contracts import bounded_global
-    from radohydro_spark.plans.pipeline import _PERSISTED
 
     _W_CAP = 1 << 53  # exact-double-cast bound; loud in-plan contract
     actual = (
@@ -1049,22 +1039,23 @@ def temperature_shares(
     guard = (F.col("actual") <= F.lit(_W_CAP)) & (
         s_long <= F.lit(min(_W_CAP, _NUM_CAP))
     )
-    scaled = actual.withColumn(
-        "scaled_micro",
-        F.when(guard, s_long).otherwise(
-            F.assert_true(
-                guard,
-                F.lit(
-                    "temperature_shares: per-stratum weight exceeds 2^53 "
-                    "or scaled_micro exceeds (2^63-1) div total_mille — "
-                    "the double cast or the total_mille*scaled_micro "
-                    "apportionment numerator is no longer exact; "
-                    "pre-scale the weight column (e.g. kilotokens)"
-                ),
-            ).cast("long")
-        ),
-    ).cache()
-    _PERSISTED.append(scaled)
+    scaled = pin(
+        actual.withColumn(
+            "scaled_micro",
+            F.when(guard, s_long).otherwise(
+                F.assert_true(
+                    guard,
+                    F.lit(
+                        "temperature_shares: per-stratum weight exceeds 2^53 "
+                        "or scaled_micro exceeds (2^63-1) div total_mille — "
+                        "the double cast or the total_mille*scaled_micro "
+                        "apportionment numerator is no longer exact; "
+                        "pre-scale the weight column (e.g. kilotokens)"
+                    ),
+                ).cast("long")
+            ),
+        ).cache()
+    )
     tot = scaled.agg(F.sum("scaled_micro").alias("_s_tot"))
     t = F.lit(int(total_mille)).cast("long")
     parts = (

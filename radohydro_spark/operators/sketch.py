@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from radohydro_spark.session import pin
+
 
 def _misra_gries_partitions(col: str, k: int):
     """mapInPandas body: one MG summary per partition.
@@ -106,12 +108,11 @@ def heavy_hitters(
 
     vals = df.select(F.col(col).alias("value")).filter(F.col("value").isNotNull())
     vtype = vals.schema["value"].dataType.simpleString()
-    summary = vals.mapInPandas(
-        _misra_gries_partitions("value", k), schema=f"value {vtype}, n long"
-    ).persist()
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
-    _PERSISTED.append(summary)
+    summary = pin(
+        vals.mapInPandas(
+            _misra_gries_partitions("value", k), schema=f"value {vtype}, n long"
+        ).persist()
+    )
 
     total = summary.agg(F.sum("n").alias("n_total"))
     cand = summary.filter(F.col("value").isNotNull()).select("value").distinct()

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 import pandas as pd
 
 from radohydro_spark.geometry.wkb import parse_wkb_polygons
+from radohydro_spark.session import pin
 
 
 def create_cell_grid(
@@ -269,10 +270,7 @@ def spatial_intersect(
         # the pricing aggregate below AND the candidate explode both
         # evaluate b — cache it so the WKB-parsing bbox UDF runs once
         # over the basin dimension, not once per consumer (r12 review)
-        b = b.cache()
-        from radohydro_spark.plans.pipeline import _PERSISTED
-
-        _PERSISTED.append(b)
+        b = pin(b.cache())
         ulx, uly, xres, yres = (float(v) for v in grid_meta)
         # inclusive index range of cells whose footprint overlaps the bbox:
         # open interval semantics match the theta-join's strict < / >.

@@ -25,23 +25,8 @@ from pyspark.sql import functions as F
 from radohydro_spark.operators.aggregate import weighted_basin_timeseries
 from radohydro_spark.operators.spatial import spatial_intersect, window_predicate
 from radohydro_spark.operators.weights import apply_nan_policy, basin_weights
-
-# Persisted intermediates registered by precip_timeseries.  The result
-# DataFrame is lazy, so the function itself cannot unpersist (the cache
-# would vanish before the caller's action runs); callers that execute many
-# queries in one session (bench, the self-check harness) call
-# release_persisted() after materializing to stop cached fact-table slices
-# accumulating until LRU eviction.
-_PERSISTED: list[DataFrame] = []
-
-
-def release_persisted() -> None:
-    """Unpersist every intermediate cached by prior precip_timeseries calls."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:
-            pass
+# release_persisted is re-exported: the bench and harnesses import it here
+from radohydro_spark.session import pin, release_persisted  # noqa: F401
 
 
 def radohydro_run(
@@ -185,8 +170,7 @@ def precip_timeseries(
     # fragments are dimension-sized (cells ∩ basins, never the fact table)
     # but feed three subtrees: the semi-join cell set, the dirty-flag join,
     # and the weight broadcast — cache so the clip join runs once, not 3×
-    fragments = spatial_intersect(cells, basins, grid_meta=grid_meta).cache()
-    _PERSISTED.append(fragments)
+    fragments = pin(spatial_intersect(cells, basins, grid_meta=grid_meta).cache())
     # one scan of the fact table: prune obs to the fragment-covered cells
     # (broadcast semi-join), persist the survivors — basin-covered cells are
     # a sliver of a full grid, so this is dimension-of-fact-sized — and feed
@@ -196,10 +180,11 @@ def precip_timeseries(
     from pyspark import StorageLevel
 
     frag_cells = fragments.select("cell_row", "cell_col").distinct()
-    obs_pruned = obs.join(
-        F.broadcast(frag_cells), ["cell_row", "cell_col"], "left_semi"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(obs_pruned)
+    obs_pruned = pin(
+        obs.join(
+            F.broadcast(frag_cells), ["cell_row", "cell_col"], "left_semi"
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     fragments = apply_nan_policy(fragments, obs_pruned, remove_nan=remove_nan, pruned=True)
     weighted = basin_weights(fragments)
     result = weighted_basin_timeseries(obs_pruned, weighted, numerator=numerator)

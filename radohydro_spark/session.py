@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory with scale-appropriate defaults, and the one
+registry of pinned intermediates.
 
 Local testing runs on local[N]; the same config block is what we would ship
 to a 1000-executor cluster (AQE on, Arrow on, explicit shuffle sizing).
@@ -8,7 +9,34 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+_PERSISTED: list[DataFrame] = []
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Record ``df``, which the caller has just cached, persisted or
+    ``localCheckpoint``ed, for :func:`release_persisted`; return it.
+
+    Operators return lazy DataFrames, so an operator cannot unpersist
+    what it pinned: the cache would vanish before the caller's action
+    runs.  Callers that execute many queries in one session (the bench,
+    the self-check harness) call :func:`release_persisted` after
+    materializing, so pinned slices of the fact tables do not
+    accumulate until LRU eviction.  Wrap the storage call itself, as in
+    ``sh = pin(sh.cache())``.
+    """
+    _PERSISTED.append(df)
+    return df
+
+
+def release_persisted() -> None:
+    """Unpersist every frame recorded by :func:`pin`."""
+    while _PERSISTED:
+        try:
+            _PERSISTED.pop().unpersist()
+        except Exception:
+            pass
 
 
 def get_spark(

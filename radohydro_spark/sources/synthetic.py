@@ -77,9 +77,12 @@ def synthetic_obs(spark: SparkSession, g: GridSpec = GRID) -> DataFrame:
     # bench grid: 32-way 1.37 s vs gated 1.26 s vs 1-way 1.16 s, all
     # inside one spread band; the 20M-row soak reads 1-way 16.8-22.2 s
     # vs gated 6.8-8.6 s).  Row-based, not core-based — at scale it
-    # saturates to defaultParallelism.
+    # saturates to the session's shuffle partition count (get_spark
+    # matches it to the core count; read from the conf, not the
+    # SparkContext, so the source also runs on Spark Connect).
     n_rows_out = g.n_rows * g.n_cols * g.n_ts
-    par = max(1, min(spark.sparkContext.defaultParallelism, -(-n_rows_out // 65536)))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    par = max(1, min(cap, -(-n_rows_out // 65536)))
     cells = spark.range(0, g.n_rows * g.n_cols, 1, par).select(
         (F.col("id") % g.n_rows).cast("int").alias("cell_row"),
         (F.col("id") / g.n_rows).cast("int").alias("cell_col"),

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from radohydro_spark import get_spark
 from radohydro_spark.operators.profile import mad_outliers
 from radohydro_spark.plans.pipeline import release_persisted
+from radohydro_spark.session import pin
 
 
 def mad_outliers_persist_candidate(df, group_col, value_col, k=3.0):
@@ -36,19 +37,16 @@ def mad_outliers_persist_candidate(df, group_col, value_col, k=3.0):
     relation so the base is scanned twice, not three times."""
     from pyspark import StorageLevel
 
-    from radohydro_spark.plans.pipeline import _PERSISTED
-
     med = df.groupBy(group_col).agg(
         F.percentile(value_col, F.lit(0.5)).alias("med"),
         F.count("*").alias("n_rows"),
     )
-    dev = (
+    dev = pin(
         df.join(F.broadcast(med.select(group_col, "med")), group_col)
         .withColumn("_absdev", F.abs(F.col(value_col) - F.col("med")))
         .select(group_col, "_absdev")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED.append(dev)
     mad = dev.groupBy(group_col).agg(F.percentile("_absdev", F.lit(0.5)).alias("mad"))
     counted = (
         dev.join(F.broadcast(mad), group_col)

@@ -26,7 +26,6 @@ ALLOWED = Counter(
         # repartition an under-parallel scan before the bootstrap fan
         ("operators/aggregate.py", "_poisson_replicate_means", "sparkContext"): 1,
         ("operators/aggregate.py", "_poisson_replicate_means", "rdd"): 1,
-        ("sources/synthetic.py", "synthetic_obs", "sparkContext"): 1,
         ("session.py", "get_spark", "sparkContext"): 1,
     }
 )

@@ -59,6 +59,20 @@ def test_concurrency_sweep_half_open(spark):
         # [15, 20) starts exactly when the previous ends: NO overlap
         ("a", "2024-01-01 00:00:15", "2024-01-01 00:00:20"),
         ("b", "2024-01-01 00:00:00", "2024-01-01 00:00:01"),
+        # two separate episodes reach the same peak 2: the earlier wins
+        ("c", "2024-01-01 01:00:00", "2024-01-01 01:00:10"),
+        ("c", "2024-01-01 01:00:05", "2024-01-01 01:00:15"),
+        ("c", "2024-01-01 00:00:00", "2024-01-01 00:00:10"),
+        ("c", "2024-01-01 00:00:07", "2024-01-01 00:00:15"),
+        # a pre-1970 peak (negative unix_micros) ties a later one: it wins
+        ("d", "2024-01-01 00:00:00", "2024-01-01 00:00:10"),
+        ("d", "2024-01-01 00:00:01", "2024-01-01 00:00:10"),
+        ("d", "1969-12-31 23:59:50", "1970-01-01 00:00:05"),
+        ("d", "1969-12-31 23:59:55", "1970-01-01 00:00:05"),
+        # a pre-1970 lower peak loses to a later, higher one
+        ("e", "1969-12-31 23:00:00", "1969-12-31 23:00:10"),
+        ("e", "2024-01-01 00:00:00", "2024-01-01 00:00:10"),
+        ("e", "2024-01-01 00:00:03", "2024-01-01 00:00:10"),
     ]
     df = spark.createDataFrame(rows, "key string, s string, e string").select(
         "key",
@@ -71,6 +85,9 @@ def test_concurrency_sweep_half_open(spark):
     }
     assert got["a"] == (2, "2024-01-01 00:00:05")
     assert got["b"] == (1, "2024-01-01 00:00:00")
+    assert got["c"] == (2, "2024-01-01 00:00:07")
+    assert got["d"] == (2, "1969-12-31 23:59:55")
+    assert got["e"] == (2, "2024-01-01 00:00:03")
 
 
 def test_concurrency_sweep_matches_bruteforce(spark):

@@ -775,7 +775,6 @@ def calibrate_perplexity_cuts(
     head_frac: float = 1 / 3,
     tail_frac: float = 1 / 3,
     scale: int = 1_000_000,
-    exact: bool = True,
 ) -> tuple[int, int]:
     """One-off CUTPOINT CALIBRATION for :func:`perplexity_buckets` —
     the CCNet recipe (Wenzek et al. LREC'20 derive their head/middle/
@@ -794,12 +793,9 @@ def calibrate_perplexity_cuts(
     batch-independent forever after — no production job ever sorts or
     quantiles the corpus.  Returns driver-side ints by design.
 
-    ``exact=True`` uses Spark's exact ``percentile`` (builds a
-    value→count map of the avg_lp_micro DOMAIN in one aggregate —
-    bounded by the score range, fine for calibration-sized corpora);
-    ``exact=False`` switches to ``percentile_approx`` (KLL-style
-    bounded-memory sketch, accuracy 10⁻⁴ of rank) for calibrating on a
-    full production corpus.
+    The quantiles are Spark's exact ``percentile`` (one aggregate that
+    builds a value→count map of the avg_lp_micro DOMAIN — bounded by the
+    score range, fine for calibration-sized corpora).
     """
     assert 0 < head_frac < 1 and 0 < tail_frac < 1
     assert head_frac + tail_frac < 1
@@ -813,14 +809,7 @@ def calibrate_perplexity_cuts(
         F.expr("sum(_lpm) div count(*)").alias("avg_lp_micro")
     )
     lo_q, hi_q = float(tail_frac), float(1.0 - head_frac)
-    if exact:
-        pct = F.expr(
-            f"percentile(avg_lp_micro, array({lo_q}, {hi_q}))"
-        )
-    else:
-        pct = F.expr(
-            f"percentile_approx(avg_lp_micro, array({lo_q}, {hi_q}), 10000)"
-        )
+    pct = F.expr(f"percentile(avg_lp_micro, array({lo_q}, {hi_q}))")
     lo, hi = agg.agg(pct.alias("p")).collect()[0]["p"]
     lo_i, hi_i = int(math.floor(lo)), int(math.floor(hi))
     if lo_i >= hi_i:

@@ -582,7 +582,7 @@ def _poisson_replicate_means(
         # domain — identical law shape and determinism, but NOT
         # SQL-replayable (no DuckDB twin), so no oracle.  The md5 form
         # is an ORACLE TAX, not a design cost: the soak measures the
-        # gap (scripts/soak_r14b.py bootstrap_fast leg: 104 -> 7.6 s).
+        # gap (scripts/soak_sketch.py bootstrap_fast leg: 104 -> 7.6 s).
         u = F.pmod(F.xxhash64(F.col("b"), F.col("_key")), F.lit(1 << 32))
     w = F.lit(len(_POISSON1_CUM_T32)).cast("long")
     for j in range(len(_POISSON1_CUM_T32) - 1, -1, -1):

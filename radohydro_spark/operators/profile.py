@@ -11,9 +11,7 @@ columns launching n scans (the anti-pattern this operator exists to
 replace).
 
 Distinct counts are exact (``count(distinct col)`` — Spark expands to
-expand+two-phase agg) so the DuckDB oracle matches bit-for-bit; at
-trillion-row scale swap in ``approx_count_distinct`` (HLL, one pass, ~2%
-error) — the ``exact=False`` flag does exactly that and drops the oracle.
+expand+two-phase agg) so the DuckDB oracle matches bit-for-bit.
 
 The drift and concentration statistics come as twins: a global form
 (``ks_drift``) and a per-group form (``ks_drift_by``).  Each pair
@@ -53,20 +51,12 @@ from pyspark.sql import functions as F
 from radohydro_spark.plans.contracts import ranged_cumsum
 
 
-def profile_columns(
-    df: DataFrame, cols: list[str] | None = None, exact: bool = True
-) -> DataFrame:
+def profile_columns(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     cols = cols or df.columns
     aggs = [F.count(F.lit(1)).alias("_n")]
     for c in cols:
         aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"_null_{c}"))
-        aggs.append(
-            (
-                F.countDistinct(F.col(c))
-                if exact
-                else F.approx_count_distinct(F.col(c))
-            ).alias(f"_dist_{c}")
-        )
+        aggs.append(F.countDistinct(F.col(c)).alias(f"_dist_{c}"))
         aggs.append(F.min(F.col(c)).cast("string").alias(f"_min_{c}"))
         aggs.append(F.max(F.col(c)).cast("string").alias(f"_max_{c}"))
     one = df.agg(*aggs)

@@ -22,6 +22,11 @@ from pyspark.sql import types as T
 from radohydro_spark.functions.text import gram_array, portable_hash, tokens
 from radohydro_spark.session import pin
 
+# mmr_select(scorer="auto") scores a round with the Arrow kernel past this
+# many corpus·(r+1)·dim elements: the measured knee of the interpreted SQL
+# forms (SOAK.md, "MMR scoring paths priced vs corpus size").
+_MMR_ARROW_BUDGET = 50_000_000
+
 
 def hash_bucket(
     id_col: Column | str, mod: int = 100, portable: bool = True
@@ -324,7 +329,6 @@ def mmr_select(
     scale: int = 10_000,
     lit_budget: int = 2_000,
     scorer: str = "auto",
-    arrow_budget: int = 50_000_000,
 ) -> DataFrame:
     """Maximal Marginal Relevance selection (Carbonell & Goldstein,
     SIGIR'98) over an embedding corpus: greedily pick ``k`` items
@@ -395,8 +399,8 @@ def mmr_select(
     and linear beyond (SOAK.md r16).  ``scorer="auto"`` (default)
     therefore prices each round as ``corpus·(len(selected)+1)·dim``
     elements (one rdd.count job over the cache at entry, auto mode
-    only) and, past ``arrow_budget``
-    (default 5e7 — the measured knee), scores the round in ONE
+    only) and, past ``_MMR_ARROW_BUDGET``
+    (5e7 — the measured knee), scores the round in ONE
     vectorized numpy int64 matmul inside ``mapInPandas`` — the SAME
     integer law (int64 arithmetic, exact within the documented
     quantization domain), property-pinned row-identical to both SQL
@@ -464,7 +468,7 @@ def mmr_select(
     # flat (~1.6 s/round fixed cost) to ~20k docs but 5.3 s/round at
     # 100k docs × (r+1)·dim ≈ 1.3e8 elements, i.e. the interpreted
     # arithmetic dominates past ~5e7 elements per round.  Past
-    # `arrow_budget` corpus·(r+1)·dim elements the round's scoring runs
+    # `_MMR_ARROW_BUDGET` corpus·(r+1)·dim elements the round's scoring runs
     # as ONE vectorized numpy int64 matmul inside mapInPandas — the
     # SAME integer law (int64 dot products, exact within the documented
     # quantization domain), property-pinned row-identical; the argmax
@@ -546,7 +550,7 @@ def mmr_select(
     for rnd in range(1, k + 1):
         elements = n_corpus * (len(sel_vecs) + 1) * len(qvec)
         if scorer == "arrow" or (
-            scorer == "auto" and elements > arrow_budget
+            scorer == "auto" and elements > _MMR_ARROW_BUDGET
         ):
             base = qdf.filter(F.col("_id") != query_id)
             if chosen:

@@ -1,109 +1,69 @@
-"""Interleaved A/B for precip_basin_timeseries' generator partitioning
-(VERDICT r16 #6): the r16 change took synthetic_obs from 1 range
-partition to defaultParallelism and PERF_r16 read the query 0.846 ->
-1.174 s (0.72x) at 32 cores while the 8-core run took 0.532 s — i.e.
-the 32-core run may be per-task-overhead-bound at sf0.1's ~1M generated
-rows.  This script interleaves generator partition counts {1, 8, 32,
-row-gated} through the FULL q_precip_timeseries pipeline in one session
-and asserts identical results.
+"""Interleaved A/B of the synthetic-obs generator's partitioning through
+the full ``precip_timeseries`` pipeline (the precip_basin_timeseries
+query).  A generator split across many range partitions can make a
+~1M-row query per-task-overhead-bound on a many-core host; this A/B
+interleaves generator partition counts {1, 8, all cores, row-gated} in
+one session and asserts identical results across them.
 
-Usage: python scripts/ab_basin_generator.py [reps]
+    python scripts/ab_basin_generator.py [reps]
 """
 
 from __future__ import annotations
 
 import sys
-import time
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-from radohydro_spark import get_spark
-from radohydro_spark.plans.pipeline import precip_timeseries, release_persisted
-from radohydro_spark.sources.synthetic import (
-    GRID,
-    NULL_COND,
-    VALUE_EXPR,
-    synthetic_basins,
-    synthetic_cells,
-)
-
-REPS = int(sys.argv[1]) if len(sys.argv) > 1 else 5
-
-
-def obs_with_par(spark, par: int):
-    g = GRID
-    cells = spark.range(0, g.n_rows * g.n_cols, 1, par).select(
-        (F.col("id") % g.n_rows).cast("int").alias("cell_row"),
-        (F.col("id") / g.n_rows).cast("int").alias("cell_col"),
-    )
-    hours = spark.range(0, g.n_ts, 1, 1).select(F.col("id").cast("int").alias("h"))
-    obs = cells.crossJoin(hours)
-    return obs.select(
-        (F.to_timestamp(F.lit(g.t0)) + F.make_interval(hours=F.col("h"))).alias("ts"),
-        "cell_row",
-        "cell_col",
-        F.when(F.expr(NULL_COND), F.lit(None).cast("double"))
-        .otherwise(F.expr(VALUE_EXPR))
-        .alias("value"),
-    )
+from soak import measure, noop, session
 
 
 def main() -> None:
-    spark = get_spark("ab_basin_generator")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    sc = spark.sparkContext
-    dp = sc.defaultParallelism
-    n_cells = GRID.n_rows * GRID.n_cols
-    # row-gated candidate: one partition per 64k generated OBS rows
-    # (cells x hours), capped at the session parallelism
-    gated = max(1, min(dp, (n_cells * GRID.n_ts + 65535) // 65536))
-    variants = {"p1": 1, "p8": 8, f"p{dp}": dp, f"gated{gated}": gated}
+    reps = int(sys.argv[1]) if len(sys.argv) > 1 else 5
+    from radohydro_spark.plans.pipeline import precip_timeseries
+    from radohydro_spark.sources.synthetic import GRID as g
+    from radohydro_spark.sources.synthetic import (
+        NULL_COND,
+        VALUE_EXPR,
+        synthetic_basins,
+        synthetic_cells,
+    )
 
-    def run(par: int, tag: str) -> float:
-        sc.setJobDescription(f"basin_ts gen={tag}")
-        t0 = time.perf_counter()
-        res = precip_timeseries(
-            obs_with_par(spark, par), synthetic_cells(spark), synthetic_basins(spark)
-        ).select(
-            "basin_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-            "rainfall_mm",
+    spark, tr = session("ab_basin_generator")
+
+    def result(par: int):
+        cells = spark.range(0, g.n_rows * g.n_cols, 1, par).select(
+            (F.col("id") % g.n_rows).cast("int").alias("cell_row"),
+            (F.col("id") / g.n_rows).cast("int").alias("cell_col"),
         )
-        res.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        release_persisted()
-        sc.setJobDescription(None)
-        return dt
+        hours = spark.range(0, g.n_ts, 1, 1).select(F.col("id").cast("int").alias("h"))
+        obs = cells.crossJoin(hours).select(
+            (F.to_timestamp(F.lit(g.t0)) + F.make_interval(hours=F.col("h"))).alias("ts"),
+            "cell_row",
+            "cell_col",
+            F.when(F.expr(NULL_COND), F.lit(None).cast("double"))
+            .otherwise(F.expr(VALUE_EXPR))
+            .alias("value"),
+        )
+        return precip_timeseries(obs, synthetic_cells(spark), synthetic_basins(spark)).select(
+            "basin_id", F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"), "rainfall_mm"
+        )
 
-    for tag, par in variants.items():  # codegen warmup
-        run(par, tag)
-
-    results: dict[str, list[float]] = {t: [] for t in variants}
-    for rep in range(REPS):
+    dp = spark.sparkContext.defaultParallelism
+    # the row-gated candidate: one partition per 64k generated obs rows
+    # (cells x hours), capped at the session parallelism
+    gated = max(1, min(dp, (g.n_rows * g.n_cols * g.n_ts + 65535) // 65536))
+    variants = {"p1": 1, "p8": 8, f"p{dp}": dp, f"gated{gated}": gated}
+    walls = {t: [] for t in variants}
+    for rep in range(reps + 1):  # rep0 is the codegen warm-up
         for tag, par in variants.items():
-            dt = run(par, tag)
-            results[tag].append(dt)
-            print(f"rep{rep} {tag:8s}: {dt:.3f}s", flush=True)
-
-    print("\n=== minima ===")
-    for tag, runs in results.items():
+            _, m = measure(tr, f"basin_ts gen={tag} rep{rep}", lambda par=par: noop(result(par)))
+            if rep:
+                walls[tag].append(m["s"])
+    for tag, runs in walls.items():
         print(f"{tag:8s}: min {min(runs):.3f}s  runs {[round(r, 3) for r in runs]}")
-
-    # equivalence: identical rows for all variants
-    base = None
-    for tag, par in variants.items():
-        res = precip_timeseries(
-            obs_with_par(spark, par), synthetic_cells(spark), synthetic_basins(spark)
-        ).select("basin_id", "ts", "rainfall_mm")
-        rows = sorted(map(tuple, res.collect()))
-        release_persisted()
-        if base is None:
-            base = rows
-        else:
-            assert rows == base, f"variant {tag} diverged!"
-    print(f"equivalence: all variants identical over {len(base)} rows")
+    rows = {tag: sorted(map(tuple, result(par).collect())) for tag, par in variants.items()}
+    assert all(r == rows["p1"] for r in rows.values()), "a generator variant diverged"
+    print(f"equivalence: all variants identical over {len(rows['p1'])} rows")
 
 
 if __name__ == "__main__":

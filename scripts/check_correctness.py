@@ -23,13 +23,15 @@ Usage: python scripts/check_correctness.py [--strict] [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
 STRICT = "--strict" in sys.argv
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 from radohydro_spark import get_spark

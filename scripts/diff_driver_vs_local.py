@@ -17,21 +17,22 @@ Usage: python scripts/diff_driver_vs_local.py CORRECTNESS_r07.json
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
-    path = sys.argv[1] if len(sys.argv) > 1 else "CORRECTNESS_r07.json"
+    path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, "CORRECTNESS_r07.json")
     driver = json.load(open(path))
     names = sorted(driver)
     proc = subprocess.run(
-        [sys.executable, "scripts/check_correctness.py", "--strict", *names],
+        [sys.executable, os.path.join(ROOT, "scripts", "check_correctness.py"), "--strict", *names],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     local_ok = {
         line.split()[1].rstrip(":")

@@ -16,7 +16,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import HEADLINE  # noqa: E402
@@ -31,7 +32,7 @@ def main() -> None:
     names = only or HEADLINE
 
     outdir = os.path.join(
-        "/root/repo/plans", os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r17")
+        os.path.join(ROOT, "plans"), os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r17")
     )
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("dump_bench_plans")

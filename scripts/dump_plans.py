@@ -10,10 +10,12 @@ spans for each bench query.  Regenerate after plan-affecting changes:
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 from radohydro_spark import get_spark
@@ -242,7 +244,7 @@ def main() -> None:
         with redirect_stdout(buf):
             df.explain("formatted")
         out += [f"## {name}", "", "```", buf.getvalue().rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote PLANS.md ({len(HEADLINE)} plans)")
 

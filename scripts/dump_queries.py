@@ -9,9 +9,11 @@ from the callable's docstring (or synthesized for shared-SQL closures).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 
@@ -47,7 +49,7 @@ def main() -> None:
         oracle = "exact" if name in oracles else "rows-only (weak)"
         desc = desc.replace("|", "\\|")
         lines.append(f"| {i} | `{name}` | {oracle} | `{entry}` | {desc} |")
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md ({len(qs)} queries)")
 

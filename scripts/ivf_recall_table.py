@@ -21,11 +21,9 @@ import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.1"
+from soak import SF_DIR
 
 
 def main() -> None:

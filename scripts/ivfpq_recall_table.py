@@ -29,11 +29,9 @@ from __future__ import annotations
 import json
 import sys
 
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.1"
+from soak import SF_DIR
 K = 5
 RERANK = 50  # ADC shortlist size for the exact re-rank measurement
 N_CENTROIDS = 16

@@ -16,11 +16,11 @@ from __future__ import annotations
 import json
 import sys
 
-sys.path.insert(0, "/root/repo")
+from soak import SF_DIR
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else SF_DIR
     from radohydro_spark import get_spark
     import __spark_entry__ as entry
     from radohydro_spark.operators.dedup import (

@@ -1,10 +1,10 @@
-"""Measure the events_stream_kmv drain's per-batch cost breakdown
-(VERDICT r16 #3): run the availableNow drain and print every
-StreamingQueryProgress — batch durations (addBatch, getBatch,
-walCommit, stateOperators metrics), input rows, state rows — plus the
-wall split between stream build, drain, and the post-drain reduction.
+"""Break down the events_stream_kmv drain: run the availableNow drain
+``reps`` times (drain and the declared query's post-drain reduction
+measured separately), then once more with a handle on the query, and
+print every StreamingQueryProgress: batch durations (addBatch,
+getBatch, walCommit), input rows and the state operators' metrics.
 
-Usage: python scripts/probe_stream_kmv.py [sf_dir] [reps]
+    python scripts/probe_stream_kmv.py [sf_dir] [reps]
 """
 
 from __future__ import annotations
@@ -12,45 +12,49 @@ from __future__ import annotations
 import json
 import sys
 import tempfile
-import time
 import uuid
 
-sys.path.insert(0, "/root/repo")
-
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from radohydro_spark import get_spark
+from soak import SF_DIR, measure, noop, session
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-REPS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+STATE_KEYS = (
+    "operatorName",
+    "numRowsTotal",
+    "numRowsUpdated",
+    "numRowsRemoved",
+    "commitTimeMs",
+    "stateMemory",
+)
 
 
 def main() -> None:
-    spark = get_spark("probe_stream_kmv")
-    import __spark_entry__ as entrymod
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else SF_DIR
+    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+    import __spark_entry__ as entry
     from radohydro_spark.streaming import run_available_now, stream_kmv
 
-    raw_schema = entrymod._probe_schema(spark, SF_DIR, "events")
+    spark, tr = session("probe_stream_kmv")
+    raw_schema = entry._probe_schema(spark, sf_dir, "events")
 
-    for rep in range(REPS):
-        t0 = time.perf_counter()
-        stream = (
+    def sketch():
+        events = (
             spark.readStream.format("parquet")
             .schema(raw_schema)
             .option("pathGlobFilter", "events.parquet")
-            .load(SF_DIR)
+            .load(sf_dir)
         )
-        stream = entrymod._normalize_ts(stream)
-        sk = stream_kmv(stream, "ts", "user_id", "1 day", k=64, watermark="1 hour")
-        name = "kmv_probe_" + uuid.uuid4().hex[:8]
-        t1 = time.perf_counter()
-        out = run_available_now(
-            sk, name, tempfile.mkdtemp(prefix="ck_"), "update", state_partitions=8
-        )
-        t2 = time.perf_counter()
-        # the declared query's post-drain reduction
-        from pyspark.sql import Window as W
+        events = entry._normalize_ts(events)
+        return stream_kmv(events, "ts", "user_id", "1 day", k=64, watermark="1 hour")
 
+    for rep in range(reps):
+        name, checkpoint = "kmv_probe_" + uuid.uuid4().hex[:8], tempfile.mkdtemp(prefix="ck_")
+        drain = lambda: run_available_now(  # noqa: E731
+            sketch(), name, checkpoint, "update", state_partitions=8
+        )
+        out, _ = measure(tr, f"rep{rep} drain", drain)
+        # the declared query's post-drain reduction
         w = W.partitionBy("ts").orderBy("hv")
         red = (
             out.distinct()
@@ -59,35 +63,16 @@ def main() -> None:
             .select(F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("day"), "hv")
             .orderBy("day", "hv")
         )
-        red.write.format("noop").mode("overwrite").save()
-        t3 = time.perf_counter()
-        print(
-            f"\nrep{rep}: build {t1 - t0:.3f}s  drain {t2 - t1:.3f}s  "
-            f"reduce {t3 - t2:.3f}s  total {t3 - t0:.3f}s"
-        )
-        for q in spark.streams.active:
-            q.stop()
-        # progress of the just-finished drain: the query object is gone
-        # (run_available_now awaits termination), so fish it from the
-        # last query via the manager is not possible — instead re-run
-        # once with a handle below.
+        measure(tr, f"rep{rep} reduce", lambda: noop(red))
 
-    # one instrumented drain with full progress JSON
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .load(SF_DIR)
-    )
-    stream = entrymod._normalize_ts(stream)
-    sk = stream_kmv(stream, "ts", "user_id", "1 day", k=64, watermark="1 hour")
-    name = "kmv_probe_" + uuid.uuid4().hex[:8]
+    # run_available_now awaits termination and drops the query handle, so
+    # one more drain keeps the handle for its progress log
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         q = (
-            sk.writeStream.format("memory")
-            .queryName(name)
+            sketch().writeStream.format("memory")
+            .queryName("kmv_probe_" + uuid.uuid4().hex[:8])
             .outputMode("update")
             .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
             .trigger(availableNow=True)
@@ -96,26 +81,9 @@ def main() -> None:
         q.awaitTermination()
         print("\n=== per-batch progress ===")
         for p in q.recentProgress:
-            keep = {
-                "batchId": p.get("batchId"),
-                "numInputRows": p.get("numInputRows"),
-                "durationMs": p.get("durationMs"),
-                "stateOperators": [
-                    {
-                        k: so.get(k)
-                        for k in (
-                            "operatorName",
-                            "numRowsTotal",
-                            "numRowsUpdated",
-                            "numRowsRemoved",
-                            "commitTimeMs",
-                            "stateMemory",
-                        )
-                    }
-                    for so in p.get("stateOperators", [])
-                ],
-            }
-            print(json.dumps(keep))
+            ops = [{k: so.get(k) for k in STATE_KEYS} for so in p.get("stateOperators", [])]
+            keep = {k: p.get(k) for k in ("batchId", "numInputRows", "durationMs")}
+            print(json.dumps({**keep, "stateOperators": ops}))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 

@@ -1,97 +1,50 @@
 """Basin-cardinality soak: the reference's >10k-polygon cliff, measured.
 
-The reference README documents "considerable performance decrease" beyond
-~10k polygons (README.md:18) because ``gp.overlay`` sweeps |cells| x
-|basins| candidate pairs.  The engine's ``spatial_intersect`` grid_meta
-path replaces that sweep with an exploded candidate-key equi-join whose
-work is O(sum of per-basin bbox cells) — LINEAR in basins for a fixed
-basin-size distribution.  After the r10 keys-only-explode change, the
-candidate exchange carries three ints per row (geometry re-joins on
-basin_id after the probe) and NO side is force-broadcast: AQE picks
-broadcast for the 20-basin case and a shuffled hash join for the 25k+
-regime.
+The reference README documents "considerable performance decrease"
+beyond ~10k polygons (README.md:18) because ``gp.overlay`` sweeps
+|cells| × |basins| candidate pairs.  The engine's ``spatial_intersect``
+grid_meta path replaces that sweep with an exploded candidate-key
+equi-join whose work is O(sum of per-basin bbox cells): LINEAR in
+basins for a fixed basin-size distribution.  The candidate exchange
+carries three ints per row (geometry re-joins on basin_id after the
+probe) and NO side is force-broadcast: AQE picks broadcast for the
+20-basin case and a shuffled hash join for the 25k+ regime.
 
-This script sweeps n_basins over the full 900x900 RADOLAN-scale cell
-grid and prints wall + executor-truth shuffle/spill deltas per step, one
-JSON line at the end for SOAK.md:
+Sweeps n_basins over the full 900x900 RADOLAN-scale cell grid; each
+step also runs the exact-area UDF and the weights-shaped reduction
+downstream consumers run.
 
     python scripts/soak_basins.py [n_basins ...]   # default 1000 5000 25000
 """
 
 from __future__ import annotations
 
-import json
 import sys
-import time
-import urllib.request
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-
-def _stage_totals(spark) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {
-        "shuffle_read_mb": 0.0,
-        "shuffle_write_mb": 0.0,
-        "mem_spill_mb": 0.0,
-        "disk_spill_mb": 0.0,
-    }
-    for s in stages:
-        tot["shuffle_read_mb"] += s.get("shuffleReadBytes", 0) / 1e6
-        tot["shuffle_write_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-        tot["mem_spill_mb"] += s.get("memoryBytesSpilled", 0) / 1e6
-        tot["disk_spill_mb"] += s.get("diskBytesSpilled", 0) / 1e6
-    return tot
+from soak import measure, session
 
 
 def main() -> None:
     basin_counts = [int(a) for a in sys.argv[1:]] or [1000, 5000, 25000]
-
-    from radohydro_spark import get_spark
     from radohydro_spark.operators.spatial import create_cell_grid, spatial_intersect
-    from radohydro_spark.sources.synthetic import RADOLAN_SCALE, radolan_scale_basins
+    from radohydro_spark.sources.synthetic import RADOLAN_SCALE as g, radolan_scale_basins
 
-    spark = get_spark(
-        "soak_basins",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "5000",
-        },
-    )
-    g = RADOLAN_SCALE
+    spark, tr = session("soak_basins")
     uly = g.y0 + g.n_rows * g.cell
-    cells = create_cell_grid(
-        spark, g.n_rows, g.n_cols, g.x0, uly, g.cell, -g.cell
-    ).persist()
+    cells = create_cell_grid(spark, g.n_rows, g.n_cols, g.x0, uly, g.cell, -g.cell).persist()
     print("cells:", cells.count(), flush=True)
-
-    results = {}
     for n in basin_counts:
         basins = radolan_scale_basins(spark, g, n_basins=n)
-        before = _stage_totals(spark)
-        t0 = time.time()
-        frags = spatial_intersect(
-            cells, basins, grid_meta=(g.x0, uly, g.cell, -g.cell)
-        )
-        # force full evaluation incl. the exact-area UDF and the weights-
-        # shaped reduction downstream consumers run
-        agg = frags.groupBy("basin_id").agg(
-            F.count("*").alias("n_frags"), F.sum("frag_area").alias("area")
-        )
-        n_rows = agg.count()
-        wall = time.time() - t0
-        after = _stage_totals(spark)
-        delta = {k: round(after[k] - before[k], 1) for k in after}
-        results[str(n)] = {"wall_s": round(wall, 2), "basins_out": n_rows, **delta}
-        print(n, results[str(n)], flush=True)
 
-    print(json.dumps({"grid": "900x900", "sweep": results}))
+        def run():
+            frags = spatial_intersect(cells, basins, grid_meta=(g.x0, uly, g.cell, -g.cell))
+            return frags.groupBy("basin_id").agg(
+                F.count("*").alias("n_frags"), F.sum("frag_area").alias("area")
+            ).count()
+
+        measure(tr, f"{n} basins", run, lambda k: {"basins_out": k})
 
 
 if __name__ == "__main__":

@@ -1,128 +1,50 @@
-"""Blocking-family soak (r11): overlap join + sorted-neighborhood at
+"""Blocking-family soak: overlap join + sorted-neighborhood at
 replicated corpus volume.
 
 * overlap_pairs shares jaccard_prefix_pairs' machinery, but its prefix
   bound is ABSOLUTE (n_sh - c + 1): on long documents the indexed
-  fraction approaches 1, so the interesting scale question is whether
-  the verify stage (bounded by true-overlap candidates) stays the cost
-  center rather than the prefix join.
-* sorted_neighborhood_pairs' claims: global_rank is range-partition +
-  dimension-sized offset collect (never a single-task window), and the
-  candidate budget is EXACTLY window*N rows regardless of token
-  statistics.
+  fraction approaches 1, so the scale question is whether the verify
+  stage (bounded by true-overlap candidates) stays the cost center.
+  On this uniform-vocabulary corpus its candidate join inherits the
+  prefix family's adversarial case (every shingle hot, f² candidates),
+  so the leg runs only up to 60k docs; the operator's design-regime
+  evidence is soak_overlap_zipf.py, and at 500k docs the right tool is
+  LSH banding (soak_corpus.py).
+* sorted_neighborhood_pairs: global_rank is driver-fixed ranges (never
+  a single-task window), and the candidate budget is EXACTLY window·N
+  rows regardless of token statistics.
 
-Corpus: sf0.1 documents replicated with the soak_corpus.py salt scheme
-(every doc_id % 37 == 0 keeps ORIGINAL text -> exact-dup families that
-sort adjacent and share all shingles; the rest get a replica salt).
+Corpus: sf0.1 documents replicated with the ``salted`` dup-planting
+law (exact-dup families sort adjacent and share all shingles).
 
     python scripts/soak_blocking.py [replicas ...]   # default 10 100
 """
 
 from __future__ import annotations
 
-import json
 import sys
-import time
-import urllib.request
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import functions as F
-
-SF_DIR = "/root/testdata/sf0.1"
-
-
-def _stage_totals(spark) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {"shuffle_mb": 0.0, "spill_mem_mb": 0.0, "spill_disk_mb": 0.0}
-    for s in stages:
-        tot["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-        tot["spill_mem_mb"] += s.get("memoryBytesSpilled", 0) / 1e6
-        tot["spill_disk_mb"] += s.get("diskBytesSpilled", 0) / 1e6
-    return tot
+from soak import measure, replicate, salted, session, table
 
 
 def main() -> None:
     replica_counts = [int(a) for a in sys.argv[1:]] or [10, 100]
-    from radohydro_spark import get_spark
-    from radohydro_spark.operators.dedup import (
-        overlap_pairs,
-        sorted_neighborhood_pairs,
-    )
-    from radohydro_spark.plans.pipeline import release_persisted
+    from radohydro_spark.operators.dedup import overlap_pairs, sorted_neighborhood_pairs
 
-    spark = get_spark(
-        "soak_blocking",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.retainedStages": "5000"},
-    )
-    results = {}
+    spark, tr = session("soak_blocking")
+    base = table(spark, "documents").select("doc_id", "text")
     for reps in replica_counts:
-        rep = spark.range(0, reps).select(F.col("id").alias("rep"))
-        docs = (
-            spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            .select("doc_id", "text")
-            .crossJoin(rep)
-            .select(
-                (F.col("doc_id") * reps + F.col("rep")).alias("doc_id"),
-                F.when(F.col("doc_id") % 37 == 0, F.col("text"))
-                .otherwise(
-                    F.concat(
-                        F.lit("u"), F.col("rep").cast("string"), F.lit(" "), "text"
-                    )
-                )
-                .alias("text"),
-            )
-            .repartition(64)
-            .persist()
-        )
+        docs = replicate(base, reps, ["doc_id"], text=salted()).repartition(64).persist()
         n = docs.count()
-        row = {"n_docs": n}
-        legs = [
-            (
-                "sorted_neighborhood_w8",
-                lambda: sorted_neighborhood_pairs(
-                    docs, "text", "doc_id", window=8, k=3, threshold=0.5
-                ).count(),
-            ),
-        ]
-        # the overlap leg's candidate join inherits the prefix family's
-        # uniform-vocabulary adversarial case (every shingle hot, f^2
-        # candidates) — on THIS corpus it is only meaningful at the
-        # sf1-soak scale where the naive jaccard leg also runs; at 500k
-        # docs the right tool is LSH banding (soak_corpus.py), so the
-        # leg is skipped rather than pretending the regime fits.  The
-        # operator's 500k-doc DESIGN-REGIME evidence (rare-token basket
-        # corpus) lives in scripts/soak_overlap_zipf.py (r12)
+        pairs = lambda out: {"n_docs": n, "pairs": out}  # noqa: E731
+        snp = lambda: sorted_neighborhood_pairs(  # noqa: E731
+            docs, "text", "doc_id", window=8, k=3, threshold=0.5
+        ).count()
+        measure(tr, f"x{reps} sorted_neighborhood_w8", snp, pairs)
         if n <= 60_000:
-            legs.append(
-                (
-                    "overlap_c60",
-                    lambda: overlap_pairs(
-                        docs, "text", "doc_id", k=3, min_overlap=60
-                    ).count(),
-                )
-            )
-        for name, fn in legs:
-            release_persisted()
-            before = _stage_totals(spark)
-            t0 = time.time()
-            out = fn()
-            wall = time.time() - t0
-            after = _stage_totals(spark)
-            row[name] = {
-                "wall_s": round(wall, 2),
-                "pairs": out,
-                **{k: round(after[k] - before[k], 1) for k in after},
-            }
-            print(reps, name, row[name], flush=True)
-        release_persisted()
+            c60 = lambda: overlap_pairs(docs, "text", "doc_id", k=3, min_overlap=60)  # noqa: E731
+            measure(tr, f"x{reps} overlap_c60", lambda: c60().count(), pairs)
         docs.unpersist()
-        results[str(reps)] = row
-    print(json.dumps({"base": "sf0.1 documents", "sweep": results}))
 
 
 if __name__ == "__main__":

@@ -1,93 +1,43 @@
-"""BM25 retrieval soak (r11): posting-list-join scaling at replicated
-corpus volume.
+"""BM25 retrieval soak: posting-list-join scaling at replicated corpus
+volume.
 
-bm25_topk's scale claims: (a) the tokenize -> (doc,term) tf aggregate
+bm25_topk's scale claims: (a) the tokenize → (doc, term) tf aggregate
 and the term-df aggregate are the only corpus-sized exchanges, both
 map-side combined, so shuffle tracks the token volume linearly; (b) the
-query-term join BROADCASTS (queries are human-sized) so only matching
-postings flow into scoring.  This soak replicates the sf0.1 documents
-table (salted replicas widen the vocabulary, as in soak_corpus.py) and
-runs the driver query's two fixed lexical queries with executor-truth
-shuffle/spill deltas:
+query-term join BROADCASTS (queries are human-sized), so only matching
+postings flow into scoring.  The sf0.1 documents are replicated with a
+replica salt token on EVERY doc (``salted`` with nothing planted: the
+salts widen the vocabulary), and the driver query's two fixed lexical
+queries run against them.
 
     python scripts/soak_bm25.py [replicas ...]   # default 10 100
 """
 
 from __future__ import annotations
 
-import json
 import sys
-import time
-import urllib.request
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.1"
-
-
-def _stage_totals(spark) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {"shuffle_mb": 0.0, "spill_mem_mb": 0.0, "spill_disk_mb": 0.0}
-    for s in stages:
-        tot["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-        tot["spill_mem_mb"] += s.get("memoryBytesSpilled", 0) / 1e6
-        tot["spill_disk_mb"] += s.get("diskBytesSpilled", 0) / 1e6
-    return tot
+from soak import measure, replicate, salted, session, table
 
 
 def main() -> None:
     replica_counts = [int(a) for a in sys.argv[1:]] or [10, 100]
-    from radohydro_spark import get_spark
     from radohydro_spark.operators.retrieval import bm25_topk
-    from radohydro_spark.plans.pipeline import release_persisted
 
-    spark = get_spark(
-        "soak_bm25",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.retainedStages": "5000"},
-    )
+    spark, tr = session("soak_bm25")
     qdf = spark.createDataFrame(
-        [(0, "spark join table"), (1, "scan filter row batch")],
-        "query_id long, text string",
+        [(0, "spark join table"), (1, "scan filter row batch")], "query_id long, text string"
     )
-    results = {}
+    base = table(spark, "documents").select("doc_id", "text")
     for reps in replica_counts:
-        rep = spark.range(0, reps).select(F.col("id").alias("rep"))
-        docs = (
-            spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            .select("doc_id", "text")
-            .crossJoin(rep)
-            .select(
-                (F.col("doc_id") * reps + F.col("rep")).alias("doc_id"),
-                F.concat(
-                    F.lit("u"), F.col("rep").cast("string"), F.lit(" "), "text"
-                ).alias("text"),
-            )
-            .repartition(64)
-            .persist()
-        )
+        docs = replicate(base, reps, ["doc_id"], text=salted(planted=F.lit(False)))
+        docs = docs.repartition(64).persist()
         n = docs.count()
-        release_persisted()
-        before = _stage_totals(spark)
-        t0 = time.time()
-        out = bm25_topk(docs, qdf, k=10).collect()
-        wall = time.time() - t0
-        after = _stage_totals(spark)
-        results[str(reps)] = {
-            "n_docs": n,
-            "wall_s": round(wall, 2),
-            "rows_out": len(out),
-            **{k: round(after[k] - before[k], 1) for k in after},
-        }
-        print(reps, results[str(reps)], flush=True)
-        release_persisted()
+        measure(tr, f"x{reps} bm25_topk", lambda: bm25_topk(docs, qdf, k=10).collect(),
+                lambda out: {"n_docs": n, "rows_out": len(out)})
         docs.unpersist()
-    print(json.dumps({"base": "sf0.1 documents", "sweep": results}))
 
 
 if __name__ == "__main__":

@@ -1,17 +1,16 @@
-"""Batched-selection BPE soak (VERDICT r13 #4): serial BPE's wall is
-inherently round-serial — ~0.15-0.25 s/round at the 1M-doc corpus
-(soak_bpe_deep) extrapolates to hours for a production 30k-merge
-vocabulary.  ``bpe_train_merges(batch_top=B)`` accepts up to B mutually
+"""Batched-selection BPE soak: serial BPE's wall is round-serial (~0.15-
+0.25 s/round at the 1M-doc corpus, hours for a 30k-merge vocabulary).
+``bpe_train_merges(batch_top=B)`` accepts up to B mutually
 symbol-disjoint pairs per round; this soak measures rounds and wall for
-the SAME learned-vocabulary size, serial vs batched, on the
-soak_bpe_deep corpus (sf0.1 documents ×reps with per-replica token
-remapping).
+the SAME target vocabulary size, serial vs batched, on the sf0.1
+documents replicated with the ``suffixed`` law.
 
 Reported: rounds used, merges learned, wall, and the rounds-per-merge
-ratio — the verdict's bar is ≥10× fewer rounds for equal vocabulary.
-Batched rounds can under-fill when top candidates share symbols
-(conflict starvation), so the batched leg targets `serial_merges` and
-reports the ACHIEVED count; the comparison normalizes per merge.
+ratio (the bar is ≥10× fewer rounds for equal vocabulary).  Batched
+rounds can under-fill when top candidates share symbols, so the batched
+leg targets ``serial_merges`` and reports the ACHIEVED count; the
+comparison normalizes per merge.  The table overlap with the serial
+run quantifies the exactness caveat.
 
     python scripts/soak_bpe_batched.py [reps] [serial_merges] [batch_top]
     # defaults: 200 replicas (1M docs), 60 merges, B=16
@@ -20,84 +19,36 @@ reports the ACHIEVED count; the comparison normalizes per merge.
 from __future__ import annotations
 
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import functions as F
-
-
-def _corpus(spark, reps: int):
-    from radohydro_spark.functions.text import tokens
-
-    base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").select(
-        "doc_id", "text"
-    )
-    r = spark.range(0, reps).select(F.col("id").alias("rep"))
-    remapped = F.array_join(
-        F.transform(
-            tokens("text"),
-            lambda t: F.concat(t, F.lit("_"), F.col("rep").cast("string")),
-        ),
-        " ",
-    )
-    return base.crossJoin(r).select(
-        (F.col("doc_id") * reps + F.col("rep")).alias("doc_id"),
-        remapped.alias("text"),
-    )
+from soak import measure, replicate, session, suffixed, table
 
 
 def main() -> None:
-    from radohydro_spark import get_spark
     from radohydro_spark.functions.text import bpe_train_merges
 
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 200
     n_merges = int(sys.argv[2]) if len(sys.argv) > 2 else 60
     batch_top = int(sys.argv[3]) if len(sys.argv) > 3 else 16
-    spark = get_spark("soak_bpe_batched")
-    corpus = _corpus(spark, reps).cache()
-    n_docs = corpus.count()
-    print(f"corpus: {n_docs:,} docs; target {n_merges} merges", flush=True)
+    spark, tr = session("soak_bpe_batched")
+    docs = table(spark, "documents").select("doc_id", "text")
+    corpus = replicate(docs, reps, ["doc_id"], text=suffixed()).cache()
+    print(f"corpus: {corpus.count():,} docs; target {n_merges} merges", flush=True)
 
-    t0 = time.perf_counter()
-    serial = bpe_train_merges(corpus, "text", n_merges).collect()
-    w_serial = time.perf_counter() - t0
-    print(
-        f"serial : {len(serial)} merges in {n_merges} rounds, "
-        f"{w_serial:6.1f}s ({w_serial / max(len(serial), 1):.3f}s/merge)",
-        flush=True,
-    )
+    serial, _ = measure(tr, "serial", lambda: bpe_train_merges(corpus, "text", n_merges).collect(),
+                        lambda t: {"merges": len(t), "rounds": n_merges})
+    rounds = lambda t: max((r["round"] for r in t), default=0)  # noqa: E731
+    def fit():
+        return bpe_train_merges(corpus, "text", n_merges, batch_top=batch_top).collect()
 
-    t0 = time.perf_counter()
-    batched = bpe_train_merges(
-        corpus, "text", n_merges, batch_top=batch_top
-    ).collect()
-    w_batched = time.perf_counter() - t0
-    rounds_used = max((r["round"] for r in batched), default=0)
-    print(
-        f"batched: {len(batched)} merges in {rounds_used} rounds "
-        f"(B={batch_top}), {w_batched:6.1f}s "
-        f"({w_batched / max(len(batched), 1):.3f}s/merge)",
-        flush=True,
-    )
-    rounds_per_merge_serial = n_merges / max(len(serial), 1)
-    rounds_per_merge_batched = rounds_used / max(len(batched), 1)
-    print(
-        f"rounds/merge: serial {rounds_per_merge_serial:.2f} vs batched "
-        f"{rounds_per_merge_batched:.3f} -> "
-        f"{rounds_per_merge_serial / rounds_per_merge_batched:.1f}x fewer "
-        "rounds per learned merge",
-        flush=True,
-    )
-    # overlap report (the exactness caveat, quantified): how much of the
-    # serial table the batched one reproduces, order-insensitive
-    s_pairs = {(r["pa"], r["pb"]) for r in serial}
-    b_pairs = {(r["pa"], r["pb"]) for r in batched}
-    inter = len(s_pairs & b_pairs)
-    print(
-        f"table overlap vs serial: {inter}/{len(serial)} shared pairs "
-        f"({100.0 * inter / max(len(serial), 1):.0f}%)"
-    )
+    batched, _ = measure(tr, f"batched B={batch_top}", fit,
+                         lambda t: {"merges": len(t), "rounds": rounds(t)})
+    per_serial = n_merges / max(len(serial), 1)
+    per_batched = rounds(batched) / max(len(batched), 1)
+    print(f"rounds/merge: serial {per_serial:.2f} vs batched {per_batched:.3f} -> "
+          f"{per_serial / per_batched:.1f}x fewer rounds per learned merge")
+    shared = {(r["pa"], r["pb"]) for r in serial} & {(r["pa"], r["pb"]) for r in batched}
+    print(f"table overlap vs serial: {len(shared)}/{len(serial)} shared pairs "
+          f"({100.0 * len(shared) / max(len(serial), 1):.0f}%)")
 
 
 if __name__ == "__main__":

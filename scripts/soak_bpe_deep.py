@@ -1,92 +1,49 @@
-"""Deep-round BPE training soak (VERDICT r12 task 6): show the
-per-merge-round cost stays FLAT at large round counts on the 1M-doc
-corpus — the trainer is a serial argmax-collect + fold-rewrite loop, so
-the scale risk is lineage growth making round r pay for rounds 1..r-1;
-``bpe_train_merges`` localCheckpoints the vocabulary every round
-precisely to bound that.
+"""Deep-round BPE training soak: the per-merge-round cost must stay FLAT
+at large round counts.  The trainer is a serial argmax-collect +
+fold-rewrite loop, so the scale risk is lineage growth making round r
+pay for rounds 1..r-1; ``bpe_train_merges`` localCheckpoints the
+vocabulary every round precisely to bound that.
 
-Method: train fresh at n_merges ∈ SEGMENTS on the same corpus and
-compare MARGINAL per-round cost between segments — if lineage leaked,
-rounds 121-180 would cost far more per round than rounds 31-60.  Also
-asserts merge-table PREFIX STABILITY (the first k merges of a deeper
-run equal the k-merge run bit-for-bit — determinism under depth).
+Trains fresh at each ``n_merges`` in the segments on the same corpus and
+compares the MARGINAL per-round cost between segments: if lineage
+leaked, rounds 121-180 would cost far more per round than rounds 31-60.
+Asserts merge-table PREFIX STABILITY: the first k merges of a deeper run
+equal the k-merge run exactly.
 
-Corpus: sf0.1 documents ×200 replicas with per-replica token remapping
-(the soak_r12_text scheme) = 1,000,000 documents, vocabulary ~6k words.
+Corpus: sf0.1 documents × ``reps`` with the ``suffixed`` law (200
+replicas = 1,000,000 documents, vocabulary ~6k words).
 
-    python scripts/soak_bpe_deep.py [reps] [segments ...]
+    python scripts/soak_bpe_deep.py [reps] [segments ...]   # default 200 30 60 120 180
 """
 
 from __future__ import annotations
 
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import functions as F
-
-SEGMENTS = (30, 60, 120, 180)
-
-
-def _corpus(spark, reps: int):
-    from radohydro_spark.functions.text import tokens
-
-    base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").select(
-        "doc_id", "text"
-    )
-    r = spark.range(0, reps).select(F.col("id").alias("rep"))
-    remapped = F.array_join(
-        F.transform(
-            tokens("text"),
-            lambda t: F.concat(t, F.lit("_"), F.col("rep").cast("string")),
-        ),
-        " ",
-    )
-    return base.crossJoin(r).select(
-        (F.col("doc_id") * reps + F.col("rep")).alias("doc_id"),
-        remapped.alias("text"),
-    )
+from soak import measure, replicate, session, suffixed, table
 
 
 def main() -> None:
-    from radohydro_spark import get_spark
     from radohydro_spark.functions.text import bpe_train_merges
 
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 200
-    segments = (
-        tuple(int(x) for x in sys.argv[2:]) if len(sys.argv) > 2 else SEGMENTS
-    )
-    spark = get_spark("soak_bpe_deep")
-    corpus = _corpus(spark, reps).cache()
-    n_docs = corpus.count()
-    print(f"corpus: {n_docs:,} docs, segments={segments}", flush=True)
+    segments = sorted(int(x) for x in sys.argv[2:]) or [30, 60, 120, 180]
+    spark, tr = session("soak_bpe_deep")
+    docs = table(spark, "documents").select("doc_id", "text")
+    corpus = replicate(docs, reps, ["doc_id"], text=suffixed()).cache()
+    print(f"corpus: {corpus.count():,} docs, segments={segments}", flush=True)
 
     tables, walls = {}, {}
     for n in segments:
-        t0 = time.perf_counter()
-        tables[n] = [
-            (r["merge_rank"], r["pa"], r["pb"], r["n"])
-            for r in bpe_train_merges(corpus, "text", n).collect()
-        ]
-        walls[n] = time.perf_counter() - t0
-        print(f"n_merges={n:4d}: wall {walls[n]:6.1f}s "
-              f"({walls[n] / n:5.3f}s/round incl. the one-off vocab agg)",
-              flush=True)
-
-    # prefix stability: deeper runs reproduce shallower ones exactly
-    for a in segments:
-        for b in segments:
-            if a < b:
-                assert tables[b][: len(tables[a])] == tables[a], (a, b)
+        train = lambda n=n: bpe_train_merges(corpus, "text", n).collect()  # noqa: E731
+        rows, m = measure(tr, f"n_merges={n}", train, lambda t: {"merges": len(t)})
+        tables[n] = [(r["merge_rank"], r["pa"], r["pb"], r["n"]) for r in rows]
+        walls[n] = m["s"]
+    for lo, hi in zip(segments, segments[1:]):
+        assert tables[hi][: len(tables[lo])] == tables[lo], (lo, hi)
+        marginal = (walls[hi] - walls[lo]) / (hi - lo)
+        print(f"rounds {lo + 1:4d}-{hi:4d}: marginal {marginal:5.3f}s/round")
     print("prefix stability: OK (every deeper run extends the shallower)")
-
-    # marginal per-round cost between consecutive segments — the
-    # lineage-leak detector (flat = bounded plan depth)
-    seg = sorted(segments)
-    for lo, hi in zip(seg, seg[1:]):
-        marg = (walls[hi] - walls[lo]) / (hi - lo)
-        print(f"rounds {lo + 1:4d}-{hi:4d}: marginal {marg:5.3f}s/round")
 
 
 if __name__ == "__main__":

@@ -1,207 +1,109 @@
-"""Production-shape BPE soak (r15, VERDICT r14 #8): one 1,000-merge
-vocabulary trained END-TO-END at the 1M-doc corpus with batch_top=32,
-plus the encode round-trip — pinning that marginal round cost stays
-bounded at REAL vocabulary scale (the prior soaks stopped at 60-180
-merges) and that the merge table is prefix-stable at depth.
+"""Production-shape BPE soak: a 1,000-merge vocabulary trained end to
+end at the 1M-doc corpus with batch_top=32, plus the encode round-trip,
+pinning that the marginal round cost stays bounded at real vocabulary
+scale and that the merge table is prefix-stable at depth.
 
-Method:
-* train fresh at 500 and at 1000 merges (batch_top=32) on the same
-  corpus; marginal wall per ACCEPTED merge between the segments vs
-  within the first segment pins "no superlinear round cost".
-* prefix stability: the first 500 merges of the 1000-merge run equal
-  the 500-merge run bit-for-bit (determinism under depth).
-* encode round-trip: bpe_encode with the 1k table over a corpus
-  sample; concatenating each word's emitted symbols reproduces the
-  word exactly (losslessness at production vocabulary size).
+* Train fresh at ``half`` and ``2·half`` merges on the same corpus; the
+  marginal wall per ACCEPTED merge between the segments against the
+  first segment's rate pins "no superlinear round cost".
+* Prefix stability: the first ``half`` merges of the deeper run equal
+  the shallower run exactly (asserted).
+* Encode round-trip: ``bpe_encode`` with the full table over a 2,000-doc
+  sample; concatenating each word's symbols must reproduce the
+  (whitespace-stripped) document exactly (asserted).
+* The real corpus's pair space runs dry well short of 1,000 merges (the
+  trainer's documented early stop), so a synthetic leg repeats the two
+  trainings on 1M docs × 12 words drawn from 50k random-looking 12-char
+  md5-hex words, then trains to a 3,000-merge target: rounds are static
+  (ceil(n_merges/B), the oracle-replayable walk), so crossing 1,000
+  LEARNED merges (asserted) needs a higher target when per-round
+  acceptance is ~13.
 
-Corpus: sf0.1 documents ×200 replicas with per-replica token
-remapping (the soak_bpe_deep scheme) = 1,000,000 documents.
+Corpus: sf0.1 documents × ``reps`` with the ``suffixed`` law.
 
-    python scripts/soak_bpe_vocab1k.py [reps] [half] [batch_top]
+    python scripts/soak_bpe_vocab1k.py [reps] [half] [batch_top]   # default 200 500 32
 """
 
 from __future__ import annotations
 
 import sys
-import time
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-
-def _corpus(spark, reps: int):
-    from radohydro_spark.functions.text import tokens
-
-    base = spark.read.parquet(
-        "/root/testdata/sf0.1/documents.parquet"
-    ).select("doc_id", "text")
-    r = spark.range(0, reps).select(F.col("id").alias("rep"))
-    remapped = F.array_join(
-        F.transform(
-            tokens("text"),
-            lambda t: F.concat(t, F.lit("_"), F.col("rep").cast("string")),
-        ),
-        " ",
-    )
-    return base.crossJoin(r).select(
-        (F.col("doc_id") * reps + F.col("rep")).alias("doc_id"),
-        remapped.alias("text"),
-    )
+from soak import measure, replicate, session, suffixed, table
 
 
 def main() -> None:
-    from radohydro_spark import get_spark
     from radohydro_spark.functions.text import bpe_encode, bpe_train_merges
 
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 200
     half = int(sys.argv[2]) if len(sys.argv) > 2 else 500
     b = int(sys.argv[3]) if len(sys.argv) > 3 else 32
+    spark, tr = session("soak_bpe_vocab1k")
+    merges = lambda t: {"merges": len(t)}  # noqa: E731
 
-    spark = get_spark("soak_bpe_vocab1k")
-    corpus = _corpus(spark, reps).cache()
-    n_docs = corpus.count()
-    print(f"corpus: {n_docs} docs, batch_top={b}", flush=True)
+    def train(label, corpus, n):
+        fit = lambda: bpe_train_merges(corpus, "text", n_merges=n, batch_top=b)  # noqa: E731
+        rows, m = measure(tr, f"{label} target={n}", lambda: fit().collect(), merges)
+        return rows, m["s"]
 
-    t0 = time.time()
-    m_half = bpe_train_merges(
-        corpus, "text", n_merges=half, batch_top=b
-    ).collect()
-    w_half = time.time() - t0
-    print(
-        f"merges={len(m_half)}/{half} wall={w_half:.0f}s "
-        f"({w_half / max(len(m_half), 1):.2f}s/merge)",
-        flush=True,
-    )
+    def prefix_stable(label, short, deep):
+        head = [(r["pa"], r["pb"]) for r in deep[: len(short)]]
+        assert head == [(r["pa"], r["pb"]) for r in short], f"{label}: NOT prefix-stable"
+        print(f"{label}: first {len(short)} merges of the {len(deep)}-merge run identical",
+              flush=True)
 
-    t0 = time.time()
-    m_full = bpe_train_merges(
-        corpus, "text", n_merges=2 * half, batch_top=b
-    ).collect()
-    w_full = time.time() - t0
-    marg = (w_full - w_half) / max(len(m_full) - len(m_half), 1)
-    print(
-        f"merges={len(m_full)}/{2 * half} wall={w_full:.0f}s; marginal "
-        f"{marg:.2f}s/merge for merges {len(m_half) + 1}..{len(m_full)} "
-        f"vs {w_half / max(len(m_half), 1):.2f}s/merge for 1..{len(m_half)}",
-        flush=True,
-    )
+    def two_segments(label, corpus):
+        m_half, w_half = train(label, corpus, half)
+        m_full, w_full = train(label, corpus, 2 * half)
+        marg = (w_full - w_half) / max(len(m_full) - len(m_half), 1)
+        print(f"{label}: marginal {marg:.2f}s/merge for merges {len(m_half) + 1}..{len(m_full)} vs "
+              f"{w_half / max(len(m_half), 1):.2f}s/merge for 1..{len(m_half)}", flush=True)
+        prefix_stable(label, m_half, m_full)
+        return m_full
 
-    # prefix stability at depth: identical first-half table
-    head = [(r["pa"], r["pb"]) for r in m_full[: len(m_half)]]
-    want = [(r["pa"], r["pb"]) for r in m_half]
-    assert head == want, "merge table is NOT prefix-stable at 1k merges"
-    print("prefix-stable: first "
-          f"{len(m_half)} merges of the {len(m_full)}-run identical", flush=True)
+    docs = table(spark, "documents").select("doc_id", "text")
+    corpus = replicate(docs, reps, ["doc_id"], text=suffixed()).cache()
+    print(f"corpus: {corpus.count()} docs, batch_top={b}", flush=True)
+    m_full = two_segments("corpus", corpus)
 
-    # encode round-trip with the production-size table on a sample
-    merges = spark.createDataFrame(
+    table_df = spark.createDataFrame(
         [(r["merge_rank"], r["pa"], r["pb"]) for r in m_full],
         "merge_rank long, pa string, pb string",
     )
     sample = corpus.limit(2_000).cache()
-    t0 = time.time()
-    enc = bpe_encode(sample, merges, "text")
-    # losslessness: stripping delimiters, the encoded symbols reproduce
-    # the (lowercased, whitespace-normalized) document exactly
-    rt = enc.join(sample, "doc_id").select(
-        "doc_id",
+    # losslessness: with delimiters stripped, the encoded symbols
+    # reproduce the whitespace-normalized document exactly
+    rt = bpe_encode(sample, table_df, "text").join(sample, "doc_id").select(
         "n_tokens",
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", "").alias(
-            "orig"
-        ),
+        F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", "").alias("orig"),
         F.regexp_replace(F.col("encoded"), " ", "").alias("rebuilt"),
     )
-    n_bad = rt.filter(F.col("orig") != F.col("rebuilt")).count()
+    bad = F.sum((F.col("orig") != F.col("rebuilt")).cast("int"))
+    agg = lambda: rt.agg(bad, F.sum("n_tokens")).first()  # noqa: E731
+    (n_bad, n_tok), _ = measure(tr, f"encode 2000 docs with the {len(m_full)}-merge table", agg)
     assert n_bad == 0, f"encode round-trip broke on {n_bad} docs"
-    n_tok = rt.agg(F.sum("n_tokens")).collect()[0][0]
-    print(
-        f"encode round-trip lossless on 2000 docs ({n_tok} tokens, "
-        f"{len(m_full)}-merge table, wall={time.time() - t0:.0f}s)",
-        flush=True,
-    )
-
-    # ---- synthetic richer-vocabulary leg: the real corpus's pair
-    # space runs DRY well short of 1000 merges (the trainer's
-    # documented early stop), so the true-1k datapoint needs a corpus
-    # whose vocabulary supports it: 50k distinct 12-char hex words,
-    # 1M docs x 12 words each.
-    from radohydro_spark.plans.pipeline import release_persisted
-
-    release_persisted()
+    print(f"encode round-trip lossless ({n_tok} tokens)", flush=True)
     corpus.unpersist()
-    # words are 12-char prefixes of md5(word_index): RANDOM-looking hex
-    # — a structured (multiples-of-a-constant base36) first cut shared
-    # so many patterns the pair space exhausted at 632 merges; random
-    # text keeps distinct pairs available far past 1000 (measured)
+
     vocab_n = 50_000
     words = F.transform(
         F.sequence(F.lit(0), F.lit(11)),
         lambda j: F.substring(
-            F.md5(
-                F.pmod(F.xxhash64(F.col("id") * 12 + j), F.lit(vocab_n))
-                .cast("string")
-            ),
-            1,
-            12,
+            F.md5(F.pmod(F.xxhash64(F.col("id") * 12 + j), F.lit(vocab_n)).cast("string")), 1, 12
         ),
     )
-    syn = (
-        spark.range(1_000_000)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.lower(F.array_join(words, " ")).alias("text"),
-        )
-        .cache()
-    )
-    n_syn = syn.count()
-    t0 = time.time()
-    s_half = bpe_train_merges(
-        syn, "text", n_merges=half, batch_top=b
-    ).collect()
-    w_s_half = time.time() - t0
-    t0 = time.time()
-    s_full = bpe_train_merges(
-        syn, "text", n_merges=2 * half, batch_top=b
-    ).collect()
-    w_s_full = time.time() - t0
-    marg = (w_s_full - w_s_half) / max(len(s_full) - len(s_half), 1)
-    print(
-        f"synthetic({n_syn} docs, {vocab_n} words, md5-hex): "
-        f"merges={len(s_half)}/{half} wall={w_s_half:.0f}s "
-        f"({w_s_half / max(len(s_half), 1):.2f}s/merge); "
-        f"merges={len(s_full)}/{2 * half} wall={w_s_full:.0f}s; "
-        f"marginal {marg:.2f}s/merge for the second half",
-        flush=True,
-    )
-    head = [(r["pa"], r["pb"]) for r in s_full[: len(s_half)]]
-    want = [(r["pa"], r["pb"]) for r in s_half]
-    assert head == want, "synthetic merge table NOT prefix-stable"
-    print(f"synthetic prefix-stable at {len(s_full)} merges", flush=True)
-
-    # ---- the TRUE 1000-learned-merge leg: rounds are STATIC
-    # ceil(n_merges/B) by design (the oracle-replayable walk), so when
-    # per-round acceptance is ~13 the caller requests a higher target
-    # to reach a 1000-merge vocabulary — acceptance is a corpus
-    # property, not a cost blowup (per-round wall stays flat).
-    t0 = time.time()
-    s_deep = bpe_train_merges(
-        syn, "text", n_merges=3_000, batch_top=b
-    ).collect()
-    w_deep = time.time() - t0
+    syn = spark.range(1_000_000).select(
+        F.col("id").alias("doc_id"), F.lower(F.array_join(words, " ")).alias("text")
+    ).cache()
+    print(f"synthetic: {syn.count()} docs, {vocab_n} md5-hex words", flush=True)
+    s_full = two_segments("synthetic", syn)
+    s_deep, w_deep = train("synthetic deep", syn, 3_000)
     rounds = -(-3_000 // b)
-    print(
-        f"synthetic deep: target=3000 learned={len(s_deep)} "
-        f"rounds={rounds} wall={w_deep:.0f}s "
-        f"({w_deep / rounds:.2f}s/round, "
-        f"{w_deep / max(len(s_deep), 1):.3f}s/merge)",
-        flush=True,
-    )
+    print(f"synthetic deep: learned={len(s_deep)} rounds={rounds} ({w_deep / rounds:.2f}s/round)",
+          flush=True)
     assert len(s_deep) >= 1_000, "deep leg did not cross 1000 merges"
-    head = [(r["pa"], r["pb"]) for r in s_deep[: len(s_full)]]
-    want = [(r["pa"], r["pb"]) for r in s_full]
-    assert head == want, "deep merge table NOT prefix-stable"
-    print(f"deep prefix-stable at {len(s_deep)} merges", flush=True)
+    prefix_stable("synthetic deep", s_full, s_deep)
 
 
 if __name__ == "__main__":

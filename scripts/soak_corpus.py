@@ -1,23 +1,18 @@
 """Corpus-scale soak: the curation funnel + SemDeDup at replicated volume.
 
 Scales the sf0.1 documents table by ``replicas`` (default 100 → ~500k
-docs) with a deterministic id remap, PLANTING duplicates on purpose:
+docs) with ``soak.replicate`` and the ``salted`` dup-planting law: every
+replica of a ``doc_id % 37 == 0`` document keeps the original text
+(exact-duplicate groups that collapse at the exact-dedup stage), every
+other replica is a near-duplicate that survives exact dedup and
+collapses at the LSH stage.  The funnel therefore shrinks ~replicas×
+back toward the base corpus; the soak measures the THROUGHPUT of each
+stage at volume (the selectivity story is the driver-verified
+corpus_curation_pipeline query).
 
-* every replica of a ``doc_id % 37 == 0`` document keeps the ORIGINAL
-  text → exact-duplicate groups of size ``replicas`` (collapse at the
-  exact-dedup stage);
-* all other replicas get a replica-specific salt token → they survive
-  exact dedup but are near-duplicates by construction (3-gram Jaccard
-  ~0.9+) and collapse at the LSH stage.
-
-The funnel therefore shrinks ~replicas x back toward the base corpus —
-the soak measures THROUGHPUT of each stage at volume (the selectivity
-story is the driver-verified corpus_curation_pipeline query).
-
-Then drives, with per-stage wall times and survivor counts:
-quality gate → exact dedup → MinHash-LSH near-dedup → decontamination
-(every 997th doc plays the benchmark) → train/val/test split, and
-finally SemDeDup over replicated embeddings (replica vectors of a
+Stages: quality gate → exact dedup → MinHash-LSH near-dedup →
+decontamination (every 997th doc plays the benchmark) → train/val/test
+split, then SemDeDup over replicated embeddings (replicas of a
 ``vec_id % 13 == 0`` embedding are exact duplicates → cosine 1.0).
 
     python scripts/soak_corpus.py [replicas]
@@ -26,121 +21,62 @@ finally SemDeDup over replicated embeddings (replica vectors of a
 from __future__ import annotations
 
 import sys
-import time
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
+
+from soak import measure, replicate, salted, session, table
 
 
 def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    from radohydro_spark import get_spark
+    from radohydro_spark.functions import text as TX
     from radohydro_spark.operators import dedup as DD
     from radohydro_spark.operators.sampling import split_assign
-    from radohydro_spark.functions import text as TX
 
-    spark = get_spark("soak_corpus")
-    base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").select(
-        "doc_id", "text"
-    )
-    n_base = base.count()
-    r = spark.range(0, replicas).select(F.col("id").alias("rep"))
-    corpus = (
-        base.crossJoin(r)
-        .select(
-            (F.col("doc_id") * replicas + F.col("rep")).alias("doc_id"),
-            F.when(F.col("doc_id") % 37 == 0, F.col("text"))  # exact dups
-            .otherwise(  # near dups: replica salt, shingles mostly shared
-                F.concat(F.lit("u"), F.col("rep").cast("string"), F.lit(" "), "text")
-            )
-            .alias("text"),
-        )
-        .repartition(64)
-        .persist()
-    )
-    n_corpus = corpus.count()
-    print(f"corpus: {n_base} base docs x {replicas} = {n_corpus} rows")
-
-    def stage(name, df):
-        t0 = time.perf_counter()
-        n = df.count()
-        print(f"{name:24s} {n:>9,} survivors   {time.perf_counter() - t0:6.1f}s")
-        return n
+    spark, tr = session("soak_corpus")
+    base = table(spark, "documents").select("doc_id", "text")
+    corpus = replicate(base, replicas, ["doc_id"], text=salted()).repartition(64).persist()
+    print(f"corpus: {base.count()} base docs x {replicas} = {corpus.count()} rows", flush=True)
+    survivors = lambda n: {"survivors": n}  # noqa: E731
 
     stats = TX.text_stats(corpus, "text", ("doc_id",))
     keep_q = stats.filter(
-        (F.col("n_tokens") >= 40) & (F.col("n_tokens") <= 5000)
-        & (F.col("distinct_ratio") >= 0.3)
+        (F.col("n_tokens") >= 40) & (F.col("n_tokens") <= 5000) & (F.col("distinct_ratio") >= 0.3)
     ).select("doc_id")
     q = corpus.join(keep_q, "doc_id", "left_semi").persist()
-    stage("quality gate", q)
-
+    measure(tr, "quality gate", q.count, survivors)
     e = DD.dedup_exact(q, "text", "doc_id").persist()
-    stage("exact dedup", e)
-
+    measure(tr, "exact dedup", e.count, survivors)
     pairs = DD.minhash_lsh_pairs(e, "text", "doc_id", n_hashes=8, rows_per_band=2)
-    nd = e.join(
-        pairs.select(F.col("id_b").alias("doc_id")).distinct(),
-        "doc_id",
-        "left_anti",
-    ).persist()
-    stage("minhash-LSH near-dedup", nd)
-
-    benchmark = corpus.filter(F.col("doc_id") % 997 == 0)
+    dup_ids = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    nd = e.join(dup_ids, "doc_id", "left_anti").persist()
+    measure(tr, "minhash-LSH near-dedup", nd.count, survivors)
     # min_shared=25: the synthetic generator reuses a small vocabulary, so
-    # casual 3-gram overlap across UNRELATED docs is common; 25 shared
+    # casual 3-gram overlap across unrelated docs is common; 25 shared
     # shingles pins "same underlying document" without flagging the world
-    flagged = DD.contamination_check(
-        nd, benchmark, "text", "doc_id", k=3, min_shared=25
-    )
-    clean = nd.join(
-        flagged.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
-    stage("decontamination", clean)
+    benchmark = corpus.filter(F.col("doc_id") % 997 == 0)
+    flagged = DD.contamination_check(nd, benchmark, "text", "doc_id", k=3, min_shared=25)
+    clean = nd.join(flagged.select("doc_id").distinct(), "doc_id", "left_anti")
+    measure(tr, "decontamination", clean.count, survivors)
+    split = split_assign(clean, "doc_id").groupBy("split").agg(F.count("*").alias("n"))
+    measure(tr, "split", split.collect, lambda rows: {r["split"]: r["n"] for r in rows})
 
-    split = split_assign(clean, "doc_id")
-    t0 = time.perf_counter()
-    dist = {r["split"]: r["n"] for r in
-            split.groupBy("split").agg(F.count("*").alias("n")).collect()}
-    print(f"{'split':24s} {dist}   {time.perf_counter() - t0:6.1f}s")
-
-    emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet").withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
     # cap the replica factor: SemDeDup's within-cluster stage is O(sum c^2)
-    # by design — 10k vectors in 32 clusters is the honest volume for a
-    # soak; also perturb ONE rep-dependent dimension (+5.0) instead of an
-    # additive shift, which would make every replica near-parallel to the
-    # all-ones direction and explode the above-threshold pair count
-    emb_reps = min(replicas, 20)
-    re_ = spark.range(0, emb_reps).select(F.col("id").alias("rep"))
-    emb_rep = (
-        emb.crossJoin(re_)
-        .select(
-            (F.col("vec_id") * emb_reps + F.col("rep")).alias("vec_id"),
-            F.when(
-                F.col("vec_id") % 13 == 0, F.col("embedding")  # exact dup vectors
-            )
-            .otherwise(
-                F.transform(
-                    "embedding",
-                    lambda x, i: F.when(
-                        i == F.col("rep") % 64, x + F.lit(5.0)
-                    ).otherwise(x),
-                )
-            )
-            .alias("embedding"),
-        )
-        .persist()
+    # by design, so 40k vectors in 32 clusters is the honest soak volume;
+    # non-duplicate replicas get ONE rep-dependent dimension bumped (+5.0)
+    # instead of an additive shift, which would make every replica
+    # near-parallel to the all-ones direction and explode the pair count
+    emb = table(spark, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
+    bump = F.transform(
+        "embedding", lambda x, i: F.when(i == F.col("rep") % 64, x + 5.0).otherwise(x)
+    )
+    dup = F.when(F.col("vec_id") % 13 == 0, F.col("embedding")).otherwise(bump)
+    emb_rep = replicate(emb, min(replicas, 20), ["vec_id"], embedding=dup).persist()
     n_emb = emb_rep.count()
-    t0 = time.perf_counter()
-    kept = DD.semdedup(emb_rep, n_clusters=32, threshold=0.999).count()
-    print(
-        f"{'semdedup':24s} {kept:>9,} of {n_emb:,} vectors   "
-        f"{time.perf_counter() - t0:6.1f}s"
-    )
+    sem = lambda: DD.semdedup(emb_rep, n_clusters=32, threshold=0.999).count()  # noqa: E731
+    measure(tr, "semdedup", sem, lambda kept: {"kept": kept, "of": n_emb})
 
 
 if __name__ == "__main__":

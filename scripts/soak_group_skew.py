@@ -1,205 +1,93 @@
-"""Soak: the per-group twins under GROUP SKEW (r16, VERDICT r15 #3).
+"""Soak: the per-group twins under GROUP SKEW.
 
 The uniform-group legs (soak_group_twins.py) pin linear shuffle in the
 group count; the realistic hazard for the group-partitioned-window
 contract ("one group's domain must fit a task's sort",
-operators/profile.py ks_drift_by/auc_by docstrings) is SKEW: one giant
-group — its domain at or past a task's memory — among 10k small ones.
-This leg pins what actually happens at the contract edge:
+``ks_drift_by``/``auc_by`` docstrings) is SKEW: one giant group, its
+domain at or past a task's memory, among 10k small ones:
 
-* 10_000 small groups (domain 2k values) PLUS one giant group whose
+* 10,000 small groups (domain 2k values) PLUS one giant group whose
   distinct-value domain ramps 2M → 8M → 24M per side, all in the same
-  ks_drift_by / auc_by call;
-* closed-form correctness for BOTH populations (the small groups'
-  uniform-shift KS law and the giant group's; the giant auc group is a
-  perfectly-separated half/half labeling → auc_ppm == 1_000_000
-  exactly, with the exact integer rank-sum replayed);
+  ``ks_drift_by`` / ``auc_by`` call;
+* closed-form correctness for BOTH populations: the uniform-shift KS
+  law at either domain; the giant auc group is a perfectly-separated
+  half/half labeling → auc_ppm == 1_000_000 exactly, with the exact
+  integer rank sum replayed;
 * the failure mode: the giant group lands in ONE window task whose
-  sorter SPILLS GRACEFULLY (Spark's ExternalAppendOnlyUnsafeRowArray /
-  UnsafeExternalSorter) — wall grows ~linearly in the giant domain and
-  the job COMPLETES with disk spill recorded, no OOM, no wrong answer.
-  That graceful-spill behavior (not a crash) is why the contract is
-  documented as a PERFORMANCE cliff, not a correctness one.
+  sorter spills gracefully: wall grows ~linearly in the giant domain
+  and the job completes with disk spill recorded, no OOM and no wrong
+  answer, which is why the contract is a PERFORMANCE cliff, not a
+  correctness one.
 
     python scripts/soak_group_skew.py
 """
 
 from __future__ import annotations
 
-import json
-import sys
-import time
-import urllib.request
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
-
-def _stage_totals(spark) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {"shuffle_mb": 0.0, "spill_disk_mb": 0.0}
-    for s in stages:
-        tot["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-        tot["spill_disk_mb"] += s.get("diskBytesSpilled", 0) / 1e6
-    return tot
-
-
-def _leg(spark, name, fn, check):
-    from radohydro_spark.plans.pipeline import release_persisted
-
-    before = _stage_totals(spark)
-    t0 = time.time()
-    rows = fn().collect()
-    wall = time.time() - t0
-    after = _stage_totals(spark)
-    out = {
-        "leg": name,
-        "groups": len(rows),
-        "wall_s": round(wall, 2),
-        "shuffle_mb": round(
-            after["shuffle_mb"] - before["shuffle_mb"], 1
-        ),
-        "spill_disk_mb": round(
-            after["spill_disk_mb"] - before["spill_disk_mb"], 1
-        ),
-    }
-    check(rows)
-    print(json.dumps(out), flush=True)
-    release_persisted()
-
+from soak import grow, session
 
 SMALL_G, SMALL_D, SHIFT = 10_000, 2_000, 200
+GIANT = (2_000_000, 8_000_000, 24_000_000)
 
 
 def main() -> None:
-    from radohydro_spark import get_spark
     from radohydro_spark.operators.profile import auc_by, ks_drift_by
 
-    spark = get_spark(
-        "soak_group_skew",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "5000",
-        },
-    )
+    spark, tr = session("soak_group_skew")
+    # a uniform domain of D values against the same shifted by SHIFT has
+    # its largest CDF gap SHIFT rows wide, first reached at value SHIFT-1
+    ks_law = lambda d: (SHIFT * d, SHIFT - 1, (1_000_000 * SHIFT * d) // (d * d))  # noqa: E731
 
-    # ---------- closed forms ----------
-    # small groups: uniform D values (1 copy each), new side shifted
-    # by S.  f1-f2 gap is SHIFT for v in [S-1 .. D-1] region; replay:
-    from collections import Counter
-
-    c1 = Counter({v: 1 for v in range(SMALL_D)})
-    c2 = Counter({v + SHIFT: 1 for v in range(SMALL_D)})
-    sm_n = SMALL_D
-    f1 = f2 = 0
-    best = (-1, None)
-    for v in sorted(set(c1) | set(c2)):
-        f1 += c1.get(v, 0)
-        f2 += c2.get(v, 0)
-        d = abs(f1 * sm_n - f2 * sm_n)
-        if d > best[0]:
-            best = (d, v)
-    sm_d, sm_at = best
-    sm_ppm = (1_000_000 * sm_d) // (sm_n * sm_n)
-
-    # ---------- ks_drift_by under skew ----------
-    def _ks_skewed(giant_d: int):
-        # small population: id in [0, SMALL_G*SMALL_D); group = id %
-        # SMALL_G, v = id div SMALL_G (each value once per group)
+    def population(giant_d, *cols):
+        """SMALL_G groups × SMALL_D values (v = id div SMALL_G, each value
+        once per group) plus the "GIANT" group with values 0..giant_d-1."""
         small = spark.range(SMALL_G * SMALL_D).select(
             F.expr(f"CAST(id % {SMALL_G} AS STRING)").alias("g"),
-            F.expr(f"CAST(id div {SMALL_G} AS BIGINT)").alias("v"),
+            F.expr(f"id div {SMALL_G}").alias("v"),
         )
-        giant = spark.range(giant_d).select(
-            F.lit("GIANT").alias("g"), F.col("id").alias("v")
-        )
-        old = small.unionByName(giant)
-        new = small.select(
-            "g", (F.col("v") + SHIFT).alias("v")
-        ).unionByName(
-            giant.select("g", (F.col("v") + SHIFT).alias("v"))
-        )
-        return ks_drift_by(old, new, "v", ["g"])
+        giant = spark.range(giant_d).select(F.lit("GIANT").alias("g"), F.col("id").alias("v"))
+        return small.unionByName(giant).select("g", *cols)
 
-    def _ks_check(giant_d: int):
-        def check(rows):
+    def check(field_law):
+        def run(rows, giant_d):
             assert len(rows) == SMALL_G + 1, len(rows)
-            giant = [r for r in rows if r.g == "GIANT"][0]
-            # giant group: same uniform-shift law at domain giant_d —
-            # max gap is SHIFT rows on either flank
-            want_d = SHIFT * giant_d
-            assert (giant.n_old, giant.n_new) == (giant_d, giant_d)
-            assert giant.d_num == want_d, (giant.d_num, want_d)
-            assert giant.ks_ppm == (1_000_000 * want_d) // (
-                giant_d * giant_d
-            ), giant
+            giant = [r for r in rows if r.g == "GIANT"]
+            field_law(giant[0], giant_d)
             for r in rows[:: SMALL_G // 5]:
-                if r.g == "GIANT":
-                    continue
-                assert (r.n_old, r.n_new) == (sm_n, sm_n), r
-                assert r.d_num == sm_d and r.at_value == sm_at, r
-                assert r.ks_ppm == sm_ppm, r
+                if r.g != "GIANT":
+                    field_law(r, SMALL_D)
+            return {"groups": len(rows)}
 
-        return check
+        return run
 
-    for giant_d in (2_000_000, 8_000_000, 24_000_000):
-        _leg(
-            spark,
-            f"ks_by_skew_10k_small_plus_giant_{giant_d}",
-            lambda d=giant_d: _ks_skewed(d),
-            _ks_check(giant_d),
-        )
+    def ks_fields(r, d):
+        assert (r.n_old, r.n_new) == (d, d), r
+        want_d, at, ppm = ks_law(d)
+        assert r.d_num == want_d and r.ks_ppm == ppm and (d != SMALL_D or r.at_value == at), r
 
-    # ---------- auc_by under skew ----------
-    # giant group: distinct scores 0..D-1, label = (score >= D/2) —
-    # perfect separation, tie-free: 2R+ = 2 * sum_{r=D/2+1..D} r,
-    # auc_ppm == 1_000_000 exactly.  small groups: same shape at D=2k.
-    def _auc_skewed(giant_d: int):
-        small = spark.range(SMALL_G * SMALL_D).select(
-            F.expr(f"CAST(id % {SMALL_G} AS STRING)").alias("g"),
-            F.expr(f"CAST(id div {SMALL_G} AS BIGINT)").alias("s"),
-            F.expr(
-                f"CAST((id div {SMALL_G}) >= {SMALL_D // 2} AS LONG)"
-            ).alias("y"),
-        )
-        giant = spark.range(giant_d).select(
-            F.lit("GIANT").alias("g"),
-            F.col("id").alias("s"),
-            (F.col("id") >= giant_d // 2).cast("long").alias("y"),
-        )
-        return auc_by(small.unionByName(giant), "s", "y", ["g"])
+    def ks(d):
+        shifted = population(d, (F.col("v") + SHIFT).alias("v"))
+        return ks_drift_by(population(d, "v"), shifted, "v", ["g"])
 
-    def _r2_perfect(d: int) -> int:
-        np = d // 2
-        return 2 * (np * d + np * (np + 1) // 2 - np * np)  # ranks np+1..d
+    grow(tr, "ks_by_skew_10k_small_plus_giant_{}", ks, check(ks_fields), GIANT)
 
-    def _auc_check(giant_d: int):
-        def check(rows):
-            assert len(rows) == SMALL_G + 1, len(rows)
-            giant = [r for r in rows if r.g == "GIANT"][0]
-            np = giant_d // 2
-            assert (giant.n_pos, giant.n_neg) == (np, giant_d - np)
-            assert giant.rank_sum_pos_x2 == _r2_perfect(giant_d), giant
-            assert giant.auc_ppm == 1_000_000, giant
-            for r in rows[:: SMALL_G // 5]:
-                if r.g == "GIANT":
-                    continue
-                assert r.auc_ppm == 1_000_000, r
+    def auc_fields(r, d):
+        # scores 0..d-1, label = score >= d/2: perfect separation, tie-free,
+        # so the positives hold ranks np+1..d and auc_ppm == 1_000_000
+        np_ = d // 2
+        assert (r.n_pos, r.n_neg) == (np_, d - np_), r
+        r2_perfect = 2 * (np_ * d + np_ * (np_ + 1) // 2 - np_ * np_)
+        assert d == SMALL_D or r.rank_sum_pos_x2 == r2_perfect, r
+        assert r.auc_ppm == 1_000_000, r
 
-        return check
+    def auc(d):
+        half = F.when(F.col("g") == "GIANT", d // 2).otherwise(SMALL_D // 2)
+        scored = population(d, F.col("v").alias("s"), (F.col("v") >= half).cast("long").alias("y"))
+        return auc_by(scored, "s", "y", ["g"])
 
-    for giant_d in (2_000_000, 8_000_000, 24_000_000):
-        _leg(
-            spark,
-            f"auc_by_skew_10k_small_plus_giant_{giant_d}",
-            lambda d=giant_d: _auc_skewed(d),
-            _auc_check(giant_d),
-        )
+    grow(tr, "auc_by_skew_10k_small_plus_giant_{}", auc, check(auc_fields), GIANT)
 
 
 if __name__ == "__main__":

@@ -1,130 +1,78 @@
 """IVF-PQ serving soak: the persisted composite index at replicated
-vector volume (r12 second wave).
+vector volume.
 
-Replicates the sf0.1 embeddings (2,000 × 64-d) by ``replicas`` with a
-deterministic per-replica rotation of the id space and a small
-per-replica component nudge (keeps vectors distinct so lists stay
-balanced), builds the PERSISTED IVF-PQ index (codes parquet partitioned
-by centroid_id, 32 lists), then measures the two levers the layout
-exists for, against the exact brute-force baseline on the same corpus:
+Replicates the sf0.1 embeddings (2,000 × 64-d) by ``replicas`` with
+remapped ids and a small per-replica component nudge (vectors stay
+distinct so lists stay balanced), builds the PERSISTED IVF-PQ index
+(codes parquet partitioned by centroid_id, 32 lists), then prices the
+probe against the exact brute-force baseline on the same corpus:
 
-* PRUNING — bytes READ by the probe (stage-API inputBytes delta) vs the
-  exact scan: nprobe/n_lists of the code bytes, not the raw corpus;
-* COMPRESSION — the code column is m=8 bytes/vector vs 64 float64s.
-
-Also reports recall@5 of IVF-PQ vs the exact cosine top-5 (approximate
-by design — deterministic first-by-id quantizers, the driver-verified
-configuration; production uses the trained quantizers, same plan).
+* COMPRESSION: the code column is m=8 bytes/vector vs 64 float64s
+  (corpus vs codes bytes on disk);
+* PRUNING: the probe reads nprobe/n_lists of the code lists, not the raw
+  corpus (probe wall vs exact wall);
+* recall@5 of IVF-PQ vs the exact cosine top-5 (approximate by design:
+  deterministic first-by-id quantizers, the driver-verified
+  configuration).
 
     python scripts/soak_ivfpq.py [replicas ...]   # default 50 250
 """
 
 from __future__ import annotations
 
-import json
+import os
+import shutil
 import sys
 import tempfile
-import time
-import urllib.request
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
+from soak import measure, replicate, session, table
 
-def _stage_totals(spark) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {"input_mb": 0.0, "shuffle_mb": 0.0}
-    for s in stages:
-        tot["input_mb"] += s.get("inputBytes", 0) / 1e6
-        tot["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-    return tot
+
+def _du(d: str) -> float:
+    return sum(os.path.getsize(os.path.join(r, f)) for r, _, fs in os.walk(d) for f in fs) / 1e6
 
 
 def main() -> None:
     reps = [int(a) for a in sys.argv[1:]] or [50, 250]
-    from radohydro_spark import get_spark
     from radohydro_spark.operators.similarity import (
         build_ivfpq_index,
         cosine_topk,
         query_ivfpq_index,
     )
 
-    spark = get_spark(
-        "soak_ivfpq",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.retainedStages": "5000"},
-    )
-    base = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet").select(
+    spark, tr = session("soak_ivfpq")
+    base = table(spark, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
     queries = base.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+    nudge = F.transform(
+        "embedding", lambda x, i: x + (F.col("rep") % 17).cast("double") * 1e-4 * (i + 1)
+    )
     for R in reps:
-        r = spark.range(0, R).select(F.col("id").alias("rep"))
-        corpus = (
-            base.crossJoin(r)
-            .select(
-                (F.col("vec_id") * R + F.col("rep")).alias("vec_id"),
-                F.transform(
-                    "embedding",
-                    lambda x, i: x + (F.col("rep") % 17).cast("double") * 1e-4 * (i + 1),
-                ).alias("embedding"),
-                )
-            .repartition(64)
-        )
-        # persist the REPLICATED corpus as parquet so both paths read
+        root = tempfile.mkdtemp(prefix="soak_ivfpq_")
+        # the replicated corpus is written as parquet so both paths read
         # comparable bytes from storage
-        cdir = tempfile.mkdtemp(prefix="ivfpq_corpus_") + "/corpus"
-        corpus.write.parquet(cdir)
+        cdir, idx = f"{root}/corpus", f"{root}/index"
+        replicate(base, R, ["vec_id"], embedding=nudge).repartition(64).write.parquet(cdir)
         corpus = spark.read.parquet(cdir)
         n = corpus.count()
-
-        idx = tempfile.mkdtemp(prefix="ivfpq_soak_") + "/index"
-        t0 = time.perf_counter()
-        build_ivfpq_index(corpus, idx, n_centroids=32, m=8, n_codes=16)
-        t_build = time.perf_counter() - t0
-
-        before = _stage_totals(spark)
-        t0 = time.perf_counter()
-        approx = {
-            (r["query_id"], r["vec_id"])
-            for r in query_ivfpq_index(spark, idx, queries, nprobe=4, k=5).collect()
-        }
-        t_probe = time.perf_counter() - t0
-        mid = _stage_totals(spark)
-
-        t0 = time.perf_counter()
-        exact_rows = cosine_topk(corpus, queries, k=5).collect()
-        t_exact = time.perf_counter() - t0
-        after = _stage_totals(spark)
-
-        exact = {(r["query_id"], r["vec_id"]) for r in exact_rows}
-        # recall vs the exact ids (vec_id remap makes exact ids replica-
-        # specific; count overlap of (query, vec) pairs)
-        recall = len(approx & exact) / len(exact)
-
-        import os
-
-        def _du(d):
-            return sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(d)
-                for f in fs
-            ) / 1e6
-
-        probed_mb = mid["input_mb"] - before["input_mb"]
-        print(
-            f"R={R:4d} vectors={n:>9,} build {t_build:6.1f}s | "
-            f"corpus {_du(cdir):7.1f}MB codes {_du(idx + '/codes'):6.1f}MB "
-            f"probe-read {probed_mb:5.2f}MB | "
-            f"probe {t_probe:5.1f}s exact {t_exact:5.1f}s | "
-            f"recall@5 {recall:.2f}"
+        build = lambda: build_ivfpq_index(  # noqa: E731
+            corpus, idx, n_centroids=32, m=8, n_codes=16
         )
+        measure(tr, f"R={R} build", build)
+        pairs = lambda df: {(r["query_id"], r["vec_id"]) for r in df.collect()}  # noqa: E731
+        probe = lambda: pairs(query_ivfpq_index(spark, idx, queries, nprobe=4, k=5))  # noqa: E731
+        approx, _ = measure(tr, f"R={R} probe", probe)
+        exact, _ = measure(tr, f"R={R} exact", lambda: pairs(cosine_topk(corpus, queries, k=5)))
+        # recall counts the overlap of (query, vec) pairs: the id remap
+        # makes the exact ids replica-specific
+        print(f"R={R} vectors={n:,} corpus {_du(cdir):.1f}MB codes {_du(idx + '/codes'):.1f}MB "
+              f"recall@5 {len(approx & exact) / len(exact):.2f}", flush=True)
+        shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":

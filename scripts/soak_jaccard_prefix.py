@@ -1,148 +1,70 @@
 """Exact-Jaccard soak: naive shingle self-join vs prefix filtering.
 
-The repo has carried two exact all-pairs Jaccard shapes:
-
-* ``ngram_jaccard_pairs(max_doc_freq=None)`` — textbook self-join on
-  EVERY shingle; the quadratic f^2-per-shingle term is the documented
-  scale cliff (SOAK.md: 32 GB spill at sf1-equivalent).
-* ``jaccard_prefix_pairs`` (r10) — the same exact result, but only the
+* ``ngram_jaccard_pairs(max_doc_freq=None)`` is the textbook self-join on
+  EVERY shingle; its f²-per-shingle term is the documented scale cliff.
+* ``jaccard_prefix_pairs`` returns the same exact result, but only the
   ``n - ceil(t*n) + 1`` globally-rarest shingles of each doc enter the
   self-join (prefix filtering, Chaudhuri ICDE'06 / Xiao WWW'08), plus
   the length filter; candidates are then verified exactly.
 
-Two corpus regimes, both derived deterministically from the sf0.1
-documents table with the soak_corpus.py planted-duplicate construction
-(every base doc becomes a replica family; families are near-dup cliques
-at Jaccard >= 0.9):
+Two corpus regimes, both the sf0.1 documents replicated with the
+``salted`` dup-planting law (replica families are near-dup cliques at
+Jaccard >= 0.9):
 
-* ``uniform``: the raw synthetic text — a ~31-token vocabulary, so
-  EVERY shingle is hot and there is no rare tail.  This is prefix
-  filtering's documented adversarial case: the prefixes stop
-  discriminating and candidates approach the naive pair space.  Run at
-  small replica counts to keep it bounded; the point is to MEASURE the
-  precondition, not to pretend it away.
-* ``zipf-tail``: each base doc additionally carries 8 doc-specific rare
-  tokens (derived from the BASE doc id, so replica families share their
-  tail — exactly like the names / numbers / typos that give every real
-  corpus its Zipf tail).  Rare shingles make the global-frequency
-  ordering selective: each doc's prefix is family-specific and the
-  candidate set collapses to ~the true pairs.
+* ``uniform``: the raw synthetic text, a ~31-token vocabulary, so EVERY
+  shingle is hot and there is no rare tail: prefix filtering's
+  adversarial case.  Run once, at 5 replicas, to measure the
+  precondition rather than pretend it away.
+* ``zipf-tail``: each base doc also carries 8 rare tokens derived from
+  its BASE id, so replica families share their tail, like the names,
+  numbers and typos that give a real corpus its Zipf tail; each doc's
+  prefix is family-specific and the candidates collapse to ~the true
+  pairs.
 
-Both operators are asserted to return the SAME pair count (they are
-exact algorithms for the same query); the soak prints wall +
-executor-truth shuffle/spill per (regime, replicas, algorithm).
+Both operators must return the SAME pair count (they are exact
+algorithms for the same query).
 
     python scripts/soak_jaccard_prefix.py [replicas ...]   # default 5 20
 """
 
 from __future__ import annotations
 
-import json
 import sys
-import time
-import urllib.request
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-
-def _stage_totals(spark) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {"shuffle_mb": 0.0, "spill_mem_mb": 0.0, "spill_disk_mb": 0.0}
-    for s in stages:
-        tot["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-        tot["spill_mem_mb"] += s.get("memoryBytesSpilled", 0) / 1e6
-        tot["spill_disk_mb"] += s.get("diskBytesSpilled", 0) / 1e6
-    return tot
-
-
-def _corpus(spark, base, reps: int, zipf_tail: bool):
-    r = spark.range(0, reps).select(F.col("id").alias("rep"))
-    text = F.col("text")
-    if zipf_tail:
-        # 8 rare tokens derived from the BASE doc id: replica families
-        # share them (they are near-dups of one another), distinct
-        # families never collide on them — the Zipf tail every real
-        # corpus has and the uniform synthetic vocabulary lacks
-        tail = F.concat_ws(
-            " ",
-            *[
-                F.concat(F.lit(f"r{j}_"), F.col("doc_id").cast("string"))
-                for j in range(8)
-            ],
-        )
-        text = F.concat(text, F.lit(" "), tail)
-    return (
-        base.crossJoin(r)
-        .select(
-            (F.col("doc_id") * reps + F.col("rep")).alias("doc_id"),
-            F.when(F.col("doc_id") % 37 == 0, text)
-            .otherwise(
-                F.concat(F.lit("u"), F.col("rep").cast("string"), F.lit(" "), text)
-            )
-            .alias("text"),
-        )
-        .repartition(64)
-    )
+from soak import measure, replicate, salted, session, table
 
 
 def main() -> None:
     replica_counts = [int(a) for a in sys.argv[1:]] or [5, 20]
-    from radohydro_spark import get_spark
     from radohydro_spark.operators import dedup as DD
-    from radohydro_spark.plans.pipeline import release_persisted
 
-    spark = get_spark(
-        "soak_jaccard_prefix",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.retainedStages": "5000"},
+    spark, tr = session("soak_jaccard_prefix")
+    base = table(spark, "documents").select("doc_id", "text")
+    tail = F.concat_ws(
+        " ", *[F.concat(F.lit(f"r{j}_"), F.col("doc_id").cast("string")) for j in range(8)]
     )
-    base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").select(
-        "doc_id", "text"
-    )
-    algos = [
-        (
-            "prefix",
-            lambda c: DD.jaccard_prefix_pairs(c, "text", "doc_id", k=3, threshold=0.8),
+    algos = {
+        "prefix": lambda c: DD.jaccard_prefix_pairs(c, "text", "doc_id", k=3, threshold=0.8),
+        "naive": lambda c: DD.ngram_jaccard_pairs(
+            c, "text", "doc_id", k=3, threshold=0.8, max_doc_freq=None
         ),
-        (
-            "naive",
-            lambda c: DD.ngram_jaccard_pairs(
-                c, "text", "doc_id", k=3, threshold=0.8, max_doc_freq=None
-            ),
-        ),
-    ]
-    results = {}
-    for regime, zipf in [("zipf-tail", True), ("uniform", False)]:
+    }
+    zipf = base.select("doc_id", F.concat("text", F.lit(" "), tail).alias("text"))
+    for regime, docs in (("zipf-tail", zipf), ("uniform", base)):
         for reps in replica_counts:
             if regime == "uniform" and reps > 5:
-                continue  # adversarial case measured once, at bounded size
-            corpus = _corpus(spark, base, reps, zipf).persist()
+                continue  # the adversarial case, measured once at bounded size
+            corpus = replicate(docs, reps, ["doc_id"], text=salted()).repartition(64).persist()
             n_docs = corpus.count()
-            row = {"n_docs": n_docs}
-            for name, fn in algos:
-                before = _stage_totals(spark)
-                t0 = time.time()
-                n_pairs = fn(corpus).count()
-                wall = time.time() - t0
-                after = _stage_totals(spark)
-                row[name] = {
-                    "wall_s": round(wall, 1),
-                    "pairs": n_pairs,
-                    **{k: round(after[k] - before[k], 1) for k in after},
-                }
-                release_persisted()
-                spark.catalog.clearCache()
-                corpus.persist()
-                print(regime, reps, name, row[name], flush=True)
-            assert row["prefix"]["pairs"] == row["naive"]["pairs"], row
+            pairs = {
+                name: measure(tr, f"{regime} x{reps} {name}", lambda f=fn: f(corpus).count(),
+                              lambda n: {"n_docs": n_docs, "pairs": n})[0]
+                for name, fn in algos.items()
+            }
+            assert pairs["prefix"] == pairs["naive"], (regime, reps, pairs)
             corpus.unpersist()
-            results[f"{regime}/{reps}"] = row
-    print(json.dumps({"sf": 0.1, "threshold": 0.8, "sweep": results}))
 
 
 if __name__ == "__main__":

@@ -1,123 +1,51 @@
-"""Incremental LSH-index maintenance soak (r11): update-vs-rebuild at
-500k docs.
+"""Incremental LSH-index maintenance soak: update vs rebuild at 500k
+docs.
 
-The claim `update_lsh_index` carries: folding a new batch into a
-persisted index costs BATCH-sized work (sign the batch, append band/
-signature files) while a from-scratch rebuild re-signs the accumulated
-corpus — so maintenance cost tracks the batch, not the corpus.  This
-soak builds the index on 99% of the replicated sf0.1 corpus (same
-corpus construction as scripts/soak_sf1.py's dedup_lsh_index mode),
-folds the remaining 1% in with update_lsh_index, and compares against
-the full rebuild, with executor-truth shuffle deltas.  A final probe
-equivalence count pins that the updated index answers exactly like the
-rebuilt one.
+``update_lsh_index`` claims that folding a new batch into a persisted
+index costs BATCH-sized work (sign the batch, append band/signature
+files) while a rebuild re-signs the accumulated corpus.  The soak
+builds the index on 99% of the replicated sf0.1 corpus (the ``salted``
+dup-planting law), folds the remaining 1% in with ``update_lsh_index``,
+compares against the full rebuild, and asserts that the updated index
+answers a full probe exactly like the rebuilt one.
 
     python scripts/soak_lsh_update.py [replicas]   # default 100 (~500k)
 """
 
 from __future__ import annotations
 
-import json
+import shutil
 import sys
 import tempfile
-import time
-import urllib.request
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.1"
-
-
-def _stage_totals(spark) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {"shuffle_mb": 0.0, "spill_mem_mb": 0.0, "spill_disk_mb": 0.0}
-    for s in stages:
-        tot["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-        tot["spill_mem_mb"] += s.get("memoryBytesSpilled", 0) / 1e6
-        tot["spill_disk_mb"] += s.get("diskBytesSpilled", 0) / 1e6
-    return tot
+from soak import measure, replicate, salted, session, table
 
 
 def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    from radohydro_spark import get_spark
-    from radohydro_spark.operators.dedup import (
-        build_lsh_index,
-        query_lsh_index,
-        update_lsh_index,
-    )
-    from radohydro_spark.plans.pipeline import release_persisted
+    from radohydro_spark.operators.dedup import build_lsh_index, query_lsh_index, update_lsh_index
 
-    spark = get_spark(
-        "soak_lsh_update",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.retainedStages": "5000"},
-    )
-    rep = spark.range(0, replicas).select(F.col("id").alias("rep"))
-    docs = (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        .select("doc_id", "text")
-        .crossJoin(rep)
-        .select(
-            (F.col("doc_id") * replicas + F.col("rep")).alias("doc_id"),
-            F.when(F.col("doc_id") % 37 == 0, F.col("text"))
-            .otherwise(
-                F.concat(F.lit("u"), F.col("rep").cast("string"), F.lit(" "), "text")
-            )
-            .alias("text"),
-        )
-        .repartition(64)
-        .persist()
-    )
-    n = docs.count()
-    base = docs.filter(F.col("doc_id") % 100 != 0)
-    batch = docs.filter(F.col("doc_id") % 100 == 0)
-    print(f"corpus {n} rows; batch {batch.count()} (1%)", flush=True)
+    spark, tr = session("soak_lsh_update")
+    base = table(spark, "documents").select("doc_id", "text")
+    docs = replicate(base, replicas, ["doc_id"], text=salted()).repartition(64).persist()
+    older, batch = docs.filter(F.col("doc_id") % 100 != 0), docs.filter(F.col("doc_id") % 100 == 0)
+    print(f"corpus {docs.count()} rows; batch {batch.count()} (1%)", flush=True)
     root = tempfile.mkdtemp(prefix="soak_lshu_")
-
-    results = {}
-
-    def run(name, fn):
-        release_persisted()
-        before = _stage_totals(spark)
-        t0 = time.time()
-        out = fn()
-        wall = time.time() - t0
-        after = _stage_totals(spark)
-        results[name] = {
-            "wall_s": round(wall, 2),
-            "result": out,
-            **{k: round(after[k] - before[k], 1) for k in after},
-        }
-        print(name, results[name], flush=True)
-
-    run("build_99pct", lambda: build_lsh_index(base, f"{root}/inc", "text", "doc_id") or 0)
-    run(
-        "update_1pct_batch",
-        lambda: update_lsh_index(spark, f"{root}/inc", batch, "text", "doc_id") or 0,
-    )
-    run(
-        "rebuild_full_for_comparison",
-        lambda: build_lsh_index(docs, f"{root}/full", "text", "doc_id") or 0,
-    )
-    run(
-        "probe_equivalence_updated",
-        lambda: query_lsh_index(spark, f"{root}/inc", docs, "text", "doc_id").count(),
-    )
-    run(
-        "probe_equivalence_rebuilt",
-        lambda: query_lsh_index(spark, f"{root}/full", docs, "text", "doc_id").count(),
-    )
-    assert (
-        results["probe_equivalence_updated"]["result"]
-        == results["probe_equivalence_rebuilt"]["result"]
-    ), "updated and rebuilt indexes answered differently"
-    print(json.dumps({"replicas": replicas, "rows": n, "results": results}))
+    inc, full = f"{root}/inc", f"{root}/full"
+    measure(tr, "build_99pct", lambda: build_lsh_index(older, inc, "text", "doc_id"))
+    measure(tr, "update_1pct_batch", lambda: update_lsh_index(spark, inc, batch, "text", "doc_id"))
+    rebuild = lambda: build_lsh_index(docs, full, "text", "doc_id")  # noqa: E731
+    measure(tr, "rebuild_full_for_comparison", rebuild)
+    probe = {
+        ix: measure(tr, f"probe_equivalence_{label}",
+                    lambda ix=ix: query_lsh_index(spark, ix, docs, "text", "doc_id").count(),
+                    lambda n: {"rows": n})[0]
+        for label, ix in (("updated", inc), ("rebuilt", full))
+    }
+    assert len(set(probe.values())) == 1, f"updated and rebuilt indexes disagree: {probe}"
+    shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":

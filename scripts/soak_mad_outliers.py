@@ -20,15 +20,12 @@ Usage: python scripts/soak_mad_outliers.py [n_rows] [n_groups]
 from __future__ import annotations
 
 import sys
-import time
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-from radohydro_spark import get_spark
+from soak import measure, session
+
 from radohydro_spark.operators.profile import mad_outliers
-from radohydro_spark.plans.pipeline import release_persisted
 from radohydro_spark.session import pin
 
 
@@ -64,7 +61,7 @@ def mad_outliers_persist_candidate(df, group_col, value_col, k=3.0):
 def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000_000
     n_groups = int(sys.argv[2]) if len(sys.argv) > 2 else 25
-    spark = get_spark("soak_mad")
+    spark, tr = session("soak_mad")
     base = spark.range(n_rows).select(
         (F.col("id") % n_groups).alias("g"),
         # heavy-tailed integer values: mostly small, occasional 1e6 spikes
@@ -73,35 +70,18 @@ def main() -> None:
         .cast("long")
         .alias("v"),
     )
-
-    def run(fn, tag):
-        t0 = time.perf_counter()
-        out = fn(base, "g", "v")
-        rows = sorted(tuple(r) for r in out.collect())
-        dt = time.perf_counter() - t0
-        release_persisted()
-        print(f"{tag}: {dt:.2f}s rows={len(rows)}")
-        return rows, dt
-
-    # interleave A/B, 3 reps each
-    results = {"3pass": [], "persist": []}
+    # interleaved A/B, 3 reps each; the outputs must be row-identical
+    walls = {"3pass": [], "persist": []}
     ref = None
     for rep in range(3):
-        for tag, fn in (
-            ("3pass", mad_outliers),
-            ("persist", mad_outliers_persist_candidate),
-        ):
-            rows, dt = run(fn, f"{tag} rep{rep}")
-            results[tag].append(dt)
-            if ref is None:
-                ref = rows
+        for tag, fn in (("3pass", mad_outliers), ("persist", mad_outliers_persist_candidate)):
+            run = lambda fn=fn: sorted(tuple(r) for r in fn(base, "g", "v").collect())  # noqa: E731
+            rows, m = measure(tr, f"{tag} rep{rep}", run, lambda rows: {"rows": len(rows)})
+            walls[tag].append(m["s"])
+            ref = rows if ref is None else ref
             assert rows == ref, f"{tag} rep{rep}: output diverged"
-    print(
-        f"n_rows={n_rows} n_groups={n_groups} "
-        f"3pass_min={min(results['3pass']):.2f}s "
-        f"persist_min={min(results['persist']):.2f}s"
-    )
-    spark.stop()
+    print(f"n_rows={n_rows} n_groups={n_groups} 3pass_min={min(walls['3pass']):.2f}s "
+          f"persist_min={min(walls['persist']):.2f}s")
 
 
 if __name__ == "__main__":

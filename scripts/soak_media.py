@@ -16,22 +16,19 @@ this is the volume smoke).
 from __future__ import annotations
 
 import sys
-import time
-
-sys.path.insert(0, "/root/repo")
 
 import numpy as np
 import pandas as pd
-
 from pyspark.sql import functions as F
 
-from radohydro_spark import get_spark
-from radohydro_spark.operators.multimodal import decode_media, decode_video
+from soak import measure, session
 
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000
-    spark = get_spark("soak_media")
+    from radohydro_spark.operators.multimodal import decode_media, decode_video
+
+    spark, tr = session("soak_media")
 
     def run_format(fmt: str) -> None:
         ids = spark.range(0, n, 1, 32).select(F.col("id").alias("media_id"))
@@ -75,9 +72,7 @@ def main() -> None:
                 yield pd.DataFrame({"media_id": out_ids, "payload": payloads})
 
         media = ids.mapInPandas(gen, schema="media_id long, payload binary")
-        t0 = time.time()
-        rows = decode_media(media).collect()
-        dt = time.time() - t0
+        rows, m = measure(tr, f"{fmt} {n} images", lambda: decode_media(media).collect())
         bad = 0
         for r in rows:
             mid = r["media_id"]
@@ -88,10 +83,8 @@ def main() -> None:
             if (r["width"], r["height"]) != (w, h):
                 bad += 1
         assert len(rows) == n and bad == 0, f"{fmt}: {bad} dim mismatches"
-        print(f"  {fmt:<11s} {n} images encode+decode in {dt:5.1f}s "
-              f"({n / dt:,.0f} img/s)")
+        print(f"  {fmt:<11s} {n / m['s']:,.0f} img/s encode+decode", flush=True)
 
-    print(f"media soak: {n} images per format on local[32]")
     for fmt in ("bmp", "png", "gif", "jpeg", "jpeg_color"):
         run_format(fmt)
 
@@ -118,13 +111,11 @@ def main() -> None:
             yield pd.DataFrame({"media_id": out_ids, "payload": payloads})
 
     clips = ids.mapInPandas(gen_avi, schema="media_id long, payload binary")
-    t0 = time.time()
-    rows = decode_video(clips, sample_every=2).collect()
-    dt = time.time() - t0
+    leg = f"avi_mjpeg {nv} clips (6 frames, sample 3)"
+    rows, m = measure(tr, leg, lambda: decode_video(clips, sample_every=2).collect())
     assert len(rows) == nv
     assert all(r["n_frames"] == 6 and r["n_sampled"] == 3 for r in rows)
-    print(f"  {'avi_mjpeg':<11s} {nv} clips (6 frames, sample 3) in {dt:5.1f}s "
-          f"({nv / dt:,.0f} clips/s)")
+    print(f"  {'avi_mjpeg':<11s} {nv / m['s']:,.0f} clips/s", flush=True)
     print("soak_media: ALL OK")
 
 

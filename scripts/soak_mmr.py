@@ -1,99 +1,46 @@
-"""MMR selection soak (r11): per-round linearity at replicated
-embedding volume.
+"""MMR selection soak: per-round linearity at replicated embedding
+volume.
 
 mmr_select's scale claim: each greedy round is ONE narrow pass over the
-quantized corpus against a BROADCAST of the <=k selected vectors plus a
-TakeOrderedAndProject argmax — no pair materialization, no corpus-sized
-state.  So k rounds over N vectors cost ~k linear scans, and shuffle
-stays dimension-sized (the argmax rows).  Replicates the sf0.1
-embeddings table with replica-salted ids and a component nudge so
-replicas are not byte-identical:
+quantized corpus against a BROADCAST of the ≤k selected vectors plus a
+TakeOrderedAndProject argmax: no pair materialization, no corpus-sized
+state.  So k rounds over N vectors cost ~k linear scans, shuffle stays
+dimension-sized, and the job count is 1 query fetch + 1 per round.
+The sf0.1 embeddings are replicated with remapped ids and a per-replica
+component nudge, so replicas are not byte-identical.
 
     python scripts/soak_mmr.py [replicas ...]   # default 10 100
 """
 
 from __future__ import annotations
 
-import json
 import sys
-import time
-import urllib.request
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.1"
-
-
-def _stage_totals(spark) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {"shuffle_mb": 0.0, "spill_mem_mb": 0.0, "spill_disk_mb": 0.0}
-    for s in stages:
-        tot["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-        tot["spill_mem_mb"] += s.get("memoryBytesSpilled", 0) / 1e6
-        tot["spill_disk_mb"] += s.get("diskBytesSpilled", 0) / 1e6
-    return tot
+from soak import measure, replicate, session, table
 
 
 def main() -> None:
     replica_counts = [int(a) for a in sys.argv[1:]] or [10, 100]
-    from radohydro_spark import get_spark
     from radohydro_spark.operators.sampling import mmr_select
-    from radohydro_spark.plans.pipeline import release_persisted
 
-    spark = get_spark(
-        "soak_mmr",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.retainedStages": "5000"},
+    spark, tr = session("soak_mmr")
+    base = table(spark, "embeddings").select("vec_id", "embedding")
+    nudge = F.transform(
+        "embedding", lambda x: x.cast("double") + F.col("rep").cast("double") / F.lit(1e4)
     )
-    results = {}
     for reps in replica_counts:
-        rep = spark.range(0, reps).select(F.col("id").alias("rep"))
-        emb = (
-            spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-            .select("vec_id", "embedding")
-            .crossJoin(rep)
-            .select(
-                (F.col("vec_id") * reps + F.col("rep")).alias("vec_id"),
-                F.transform(
-                    "embedding",
-                    lambda x: x.cast("double")
-                    + F.col("rep").cast("double") / F.lit(1e4),
-                ).alias("embedding"),
-            )
-            .repartition(64)
-            .persist()
-        )
+        emb = replicate(base, reps, ["vec_id"], embedding=nudge).repartition(64).persist()
         n = emb.count()
-        release_persisted()
-        before = _stage_totals(spark)
-        sc = spark.sparkContext
-        group = f"soak_mmr_{reps}"  # per-leg group: the tracker
-        # accumulates job ids per group across the whole session
-        sc.setJobGroup(group, "job-count contract")
-        t0 = time.time()
-        try:
-            out = mmr_select(emb, "embedding", "vec_id", query_id=0, k=5).collect()
-        finally:
-            sc.setJobGroup(None, None)
-        wall = time.time() - t0
-        after = _stage_totals(spark)
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        results[str(reps)] = {
-            "n_vecs": n,
-            "wall_s": round(wall, 2),
-            "rows_out": len(out),
-            "jobs": n_jobs,  # r13 contract: 1 query fetch + 1 per round
-            **{k: round(after[k] - before[k], 1) for k in after},
-        }
-        print(reps, results[str(reps)], flush=True)
-        release_persisted()
+        label = f"x{reps} mmr_select k=5"
+        # the measured group is the tracer's latest, "<label>#<n>"; the
+        # contract is 1 query fetch + 1 job per round
+        jobs = lambda: len(tr.jobs(f"{label}#{tr.groups}"))  # noqa: E731
+        sel = lambda: mmr_select(emb, "embedding", "vec_id", query_id=0, k=5)  # noqa: E731
+        measure(tr, label, lambda: sel().collect(),
+                lambda out: {"n_vecs": n, "rows_out": len(out), "jobs": jobs()})
         emb.unpersist()
-    print(json.dumps({"base": "sf0.1 embeddings", "sweep": results}))
 
 
 if __name__ == "__main__":

@@ -1,107 +1,58 @@
-"""Soak: mmr_select scoring-path pricing vs corpus size (r16,
-VERDICT r15 #4).
+"""Soak: mmr_select's scoring paths priced against corpus size.
 
-The r15 broadcast figure (2.16 s/round FLAT at dim=5100) was measured
-on a 2k-doc corpus — the fixed per-round job cost, not the arithmetic.
 Both SQL redundancy forms evaluate the dot products as INTERPRETED
 higher-order lambdas, so the per-round wall is
-``fixed + corpus·(r+1)·dim·c_interp``; this leg measures the rows ×
-k·dim scaling and prices the r16 Arrow scorer against it.
-
-Measured on this host (dim=256, lit_budget=0 so SQL = broadcast form):
-
-* SQL   2k/20k docs, k=8:  ~1.6 s/round (fixed-cost bound — flat)
-* SQL   100k docs,  k=8:   5.3 s/round; k=24: 4.0 s/round
-* SQL   400k docs,  k=8:   27.5 s/round   (linear in corpus·r·dim)
-* Arrow 100k docs,  k=24:  2.2 s/round    (transfer-bound, ~flat in r)
-* Arrow 400k docs,  k=8:   19.3 s/round
-
-The Arrow kernel's cost is ~corpus·dim TRANSFER (the quantized vectors
-cross to Python each round) + a sub-ns int64 matmul — independent of
-the selected-set size r, where the interpreted SQL cost multiplies by
-(r+1).  First Arrow cut returned every row's vector and measured
-7.2→44.6 s/round at 100k→400k (output transfer dominated) — fixed by
-the per-batch local top-1 prune (≤1 row crosses back per Arrow batch).
-``scorer="auto"``'s element budget (corpus·(r+1)·dim > 5e7) encodes
-the measured knee.
+``fixed + corpus·(r+1)·dim·c_interp``; this soak measures that rows ×
+k·dim scaling (``lit_budget=0``, so SQL = the broadcast form) and prices
+the Arrow scorer against it at dim=256, after asserting the two paths
+row-identical on a 500-doc corpus.  The Arrow kernel's cost is
+~corpus·dim TRANSFER (the quantized vectors cross to Python each round)
+plus a sub-ns int64 matmul, independent of the selected-set size r,
+where the interpreted SQL cost multiplies by (r+1).  A first Arrow cut
+returned every row's vector and measured 7.2→44.6 s/round at 100k→400k
+(output transfer dominated); the per-batch local top-1 prune (≤1 row
+crosses back per Arrow batch) fixed it.  ``scorer="auto"``'s element
+budget (corpus·(r+1)·dim > 5e7) encodes the measured knee.
 
     python scripts/soak_mmr_pricing.py
 """
 
 from __future__ import annotations
 
-import sys
-import time
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
+from soak import measure, session
 
 DIM = 256
 
 
 def main() -> None:
-    from radohydro_spark import get_spark
     from radohydro_spark.operators.sampling import mmr_select
-    from radohydro_spark.plans.pipeline import release_persisted
 
-    spark = get_spark("soak_mmr_pricing")
+    spark, tr = session("soak_mmr_pricing")
 
     def corpus(n):
-        ids = spark.range(n).select(F.col("id").alias("vid"))
         vec = F.transform(
             F.sequence(F.lit(0), F.lit(DIM - 1)),
-            lambda j: (
-                F.pmod(F.xxhash64(F.col("vid"), j), F.lit(1000)).cast(
-                    "double"
-                )
-                - 500.0
-            )
+            lambda j: (F.pmod(F.xxhash64(F.col("vid"), j), F.lit(1000)).cast("double") - 500.0)
             / 37.0,
         )
-        return ids.select("vid", vec.alias("emb"))
+        return spark.range(n).select(F.col("id").alias("vid")).select("vid", vec.alias("emb"))
 
-    # row-identity gate before pricing (the property test covers random
-    # corpora; this is the large-dim spot pin)
-    df = corpus(500)
-    a = [
-        tuple(r)
-        for r in mmr_select(
-            df, "emb", "vid", query_id=0, k=6, scorer="arrow"
-        ).collect()
-    ]
-    b = [
-        tuple(r)
-        for r in mmr_select(
-            df, "emb", "vid", query_id=0, k=6, scorer="sql", lit_budget=0
-        ).collect()
-    ]
-    assert a == b, "arrow/sql divergence"
-    release_persisted()
+    def select(df, k, scorer):
+        return mmr_select(df, "emb", "vid", query_id=0, k=k, lit_budget=0, scorer=scorer)
+
+    small = corpus(500)
+    arrow = mmr_select(small, "emb", "vid", query_id=0, k=6, scorer="arrow").collect()
+    sql = select(small, 6, "sql").collect()
+    assert [tuple(r) for r in arrow] == [tuple(r) for r in sql], "arrow/sql divergence"
     print("row-identity arrow==sql at dim=256: ok", flush=True)
-
-    for n, k, sc in (
-        (20_000, 8, "sql"),
-        (100_000, 24, "sql"),
-        (100_000, 24, "arrow"),
-        (400_000, 8, "sql"),
-        (400_000, 8, "arrow"),
-    ):
-        df = corpus(n)
-        t0 = time.perf_counter()
-        out = mmr_select(
-            df, "emb", "vid", query_id=0, k=k, lit_budget=0, scorer=sc
-        )
-        cnt = out.count()
-        wall = time.perf_counter() - t0
+    for n, k, sc in ((20_000, 8, "sql"), (100_000, 24, "sql"), (100_000, 24, "arrow"),
+                     (400_000, 8, "sql"), (400_000, 8, "arrow")):
+        run = lambda: select(corpus(n), k, sc).count()  # noqa: E731
+        cnt, m = measure(tr, f"{sc} n={n} k={k} dim={DIM}", run)
         assert cnt == k
-        print(
-            f"{sc} n={n} k={k} dim={DIM} wall={wall:.1f}s "
-            f"per_round={wall / k:.2f}s",
-            flush=True,
-        )
-        release_persisted()
+        print(f"{sc} n={n} k={k}: per_round={m['s'] / k:.2f}s", flush=True)
 
 
 if __name__ == "__main__":

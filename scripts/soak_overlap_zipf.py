@@ -1,95 +1,35 @@
-"""Design-regime soak for overlap_pairs (r12, VERDICT task 3).
+"""Design-regime soak for overlap_pairs: a rare-token basket corpus at
+replicated volume (its uniform-vocabulary adversarial case is
+soak_blocking.py's).
 
-Until r12 the t-overlap join's only committed numbers were its
-uniform-vocab ADVERSARIAL case (soak_blocking.py honestly skips the
-500k-doc leg there, naming the regime mismatch).  This soak runs the
-operator in the regime it exists for — a rare-token basket corpus —
-at replicated volume:
+* Corpus: sf0.1 order → basket-of-part-key documents (k=1 tokens; every
+  part key appears in ~30 orders, so EVERY token is rare), replicated R
+  times.  Non-planted replicas follow the ``suffixed`` law (rarity kept,
+  token spaces disjoint); orders with l_orderkey % 37 == 0 keep their
+  ORIGINAL tokens in all replicas: planted cross-replica exact-basket
+  families, C(R,2) true-overlap pairs each.
+* min_overlap=4 drops baskets with fewer than 4 distinct parts BEFORE
+  the prefix window (the operator's own bound).
 
-* Corpus: sf0.1 order -> basket-of-part-key documents (k=1 tokens;
-  every part key appears in ~30 orders, so EVERY token is rare),
-  replicated R times.  Non-planted replicas remap tokens with a
-  per-replica suffix (rarity preserved, token spaces disjoint);
-  orders with l_orderkey % 37 == 0 keep ORIGINAL tokens in all
-  replicas -> planted cross-replica exact-basket families, C(R,2)
-  true-overlap pairs each (the soak_corpus.py salt scheme).
-* min_overlap=4 drops baskets with fewer than 4 distinct parts
-  BEFORE the prefix window (the operator's own bound), leaving
-  ~0.57 * 900k ~= 500k participating documents at R=6.
-
-Reported per leg: wall, verified pairs, shuffle/spill deltas, plus the
-DISCRIMINATION diagnostic the design-regime claim rests on: candidate
-pairs out of the prefix self-join vs the full pair space N*(N-1)/2
-(reconstructed with the operator's own prefix law — rarest n_sh-c+1
-tokens by (global df, token-hash) order).
+Reported per replica count: verified pairs, plus the DISCRIMINATION
+diagnostic the design-regime claim rests on: candidate pairs out of the
+prefix self-join against the full pair space N·(N-1)/2, reconstructed
+with the operator's own prefix law (rarest n_sh-c+1 tokens by (global
+df, token hash) order).
 
     python scripts/soak_overlap_zipf.py [replicas ...]   # default 1 6
 """
 
 from __future__ import annotations
 
-import json
 import sys
-import time
-import urllib.request
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.1"
+from soak import measure, replicate, session, suffixed, table
+
 MIN_OVERLAP = 4
-
-
-def _stage_totals(spark) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {"shuffle_mb": 0.0, "spill_mem_mb": 0.0, "spill_disk_mb": 0.0}
-    for s in stages:
-        tot["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-        tot["spill_mem_mb"] += s.get("memoryBytesSpilled", 0) / 1e6
-        tot["spill_disk_mb"] += s.get("diskBytesSpilled", 0) / 1e6
-    return tot
-
-
-def _corpus(spark, reps: int):
-    base = (
-        spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        .groupBy("l_orderkey")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.col("l_partkey").cast("string"))
-            ).alias("parts")
-        )
-    )
-    rep = spark.range(0, reps).select(F.col("id").alias("rep"))
-    return (
-        base.crossJoin(rep)
-        .select(
-            (F.col("l_orderkey") * reps + F.col("rep")).alias("doc_id"),
-            F.when(
-                F.col("l_orderkey") % 37 == 0, F.array_join("parts", " ")
-            )
-            .otherwise(
-                F.array_join(
-                    F.transform(
-                        "parts",
-                        lambda p: F.concat(
-                            p, F.lit("_"), F.col("rep").cast("string")
-                        ),
-                    ),
-                    " ",
-                )
-            )
-            .alias("text"),
-        )
-        .repartition(64)
-        .persist()
-    )
 
 
 def _candidate_count(docs) -> tuple[int, int]:
@@ -103,76 +43,41 @@ def _candidate_count(docs) -> tuple[int, int]:
     )
     sh = sh.filter(F.col("n_sh") >= MIN_OVERLAP).persist()
     n_docs = sh.select("doc_id").distinct().count()
-    freq = sh.groupBy("sid").agg(F.count("*").alias("_df"))
     w = W.partitionBy("doc_id").orderBy(F.col("_df").asc(), F.col("sid").asc())
     prefix = (
-        sh.join(freq, "sid")
+        sh.join(sh.groupBy("sid").agg(F.count("*").alias("_df")), "sid")
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= F.col("n_sh") - MIN_OVERLAP + 1)
         .select("doc_id", "sid")
     )
     a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.sid") == F.col("b.sid"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id"), F.col("b.doc_id"))
-        .distinct()
-        .count()
-    )
+    on = (F.col("a.sid") == F.col("b.sid")) & (F.col("a.doc_id") < F.col("b.doc_id"))
+    cand = a.join(b, on).select(F.col("a.doc_id"), F.col("b.doc_id")).distinct().count()
     sh.unpersist()
     return n_docs, cand
 
 
 def main() -> None:
     replica_counts = [int(a) for a in sys.argv[1:]] or [1, 6]
-    from radohydro_spark import get_spark
     from radohydro_spark.operators.dedup import overlap_pairs
-    from radohydro_spark.plans.pipeline import release_persisted
 
-    spark = get_spark(
-        "soak_overlap_zipf",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.retainedStages": "5000"},
+    spark, tr = session("soak_overlap_zipf")
+    parts = F.sort_array(F.collect_set(F.col("l_partkey").cast("string")))
+    baskets = table(spark, "lineitem").groupBy(F.col("l_orderkey").alias("doc_id")).agg(
+        F.array_join(parts, " ").alias("text")
     )
-    results = {}
+    planted = F.col("doc_id") % 37 == 0
     for reps in replica_counts:
-        docs = _corpus(spark, reps)
+        text = F.when(planted, F.col("text")).otherwise(suffixed())
+        docs = replicate(baskets, reps, ["doc_id"], text=text).repartition(64).persist()
         n = docs.count()
-        release_persisted()
-        before = _stage_totals(spark)
-        t0 = time.time()
-        pairs = overlap_pairs(
-            docs, "text", "doc_id", k=1, min_overlap=MIN_OVERLAP
-        ).count()
-        wall = time.time() - t0
-        after = _stage_totals(spark)
-        release_persisted()
+        pairs, _ = measure(tr, f"x{reps} overlap_pairs", lambda: overlap_pairs(
+            docs, "text", "doc_id", k=1, min_overlap=MIN_OVERLAP).count())
         n_part, cand = _candidate_count(docs)
-        row = {
-            "n_docs": n,
-            "n_participating": n_part,
-            "wall_s": round(wall, 2),
-            "pairs": pairs,
-            "candidates": cand,
-            "pair_space": n_part * (n_part - 1) // 2,
-            "cand_pct_of_pair_space": round(
-                100.0 * cand / max(n_part * (n_part - 1) // 2, 1), 4
-            ),
-            **{k: round(after[k] - before[k], 1) for k in after},
-        }
-        print(reps, row, flush=True)
+        space = n_part * (n_part - 1) // 2
+        print(f"x{reps}: n_docs={n} participating={n_part} pairs={pairs} candidates={cand} "
+              f"pair_space={space} ({100.0 * cand / max(space, 1):.4f}% of it)", flush=True)
         docs.unpersist()
-        results[str(reps)] = row
-    print(
-        json.dumps(
-            {
-                "base": "sf0.1 lineitem baskets (k=1, min_overlap=4)",
-                "sweep": results,
-            }
-        )
-    )
 
 
 if __name__ == "__main__":

@@ -1,91 +1,86 @@
-"""Soak A/B for pagerank edge pre-partitioning (r17, VERDICT r16 #8).
+"""Graph-family soak: pagerank edge pre-partitioning A/B, and label
+propagation against its closed form.
 
-The bench graph is 5 nodes — every per-round join broadcasts the rank
-relation and the edge list is never shuffled, so the docstring's promise
+The bench graph is 5 nodes: every per-round join broadcasts the rank
+relation and the edge list is never shuffled, so pagerank's promise
 ("at 100 TB the edge list is pre-partitioned on src once and every round
-reuses that layout") has no local evidence.  This soak builds a graph
-big enough that the rank relation exceeds the broadcast threshold, so
-the per-round contribution join becomes a shuffle join — the regime the
-pre-partition exists for — and interleaves the two variants in ONE
-session (tenancy-controlled), asserting identical results.
+reuses that layout") has no local evidence there.  This soak builds a
+graph big enough that the rank relation exceeds the broadcast
+threshold, so the per-round contribution join becomes a shuffle join,
+and interleaves the prepartition variants (off / on / auto) in ONE
+session, then counts the nodes whose ranks differ between the layouts.
 
-Usage: python scripts/soak_pagerank.py [n_nodes] [edges_per_node] [reps]
-Defaults: 2_000_000 nodes x 10 edges = 20M edges, 3 reps each.
+Then label_propagation on disjoint 4-cliques (25k and 50k cliques):
+after 2 rounds every node must carry its clique's min id (LPA's closed
+form on cliques); one candidate-vote shuffle per round, linear in
+|edges|.
+
+    python scripts/soak_pagerank.py [n_nodes] [edges_per_node] [reps]
+    # defaults: 2_000_000 nodes x 10 edges = 20M edges, 3 reps each
 """
 
 from __future__ import annotations
 
+import shutil
 import sys
-import time
-
-sys.path.insert(0, "/root/repo")
+import tempfile
+from functools import reduce
 
 from pyspark.sql import functions as F
 
-from radohydro_spark import get_spark
-from radohydro_spark.operators.graph import pagerank
-
-N_NODES = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
-DEG = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-REPS = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+from soak import grow, measure, noop, session
 
 
 def main() -> None:
-    spark = get_spark("soak_pagerank")
-    sc = spark.sparkContext
+    n_nodes = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
+    deg = int(sys.argv[2]) if len(sys.argv) > 2 else 10
+    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+    from radohydro_spark.operators.graph import label_propagation, pagerank
 
-    # deterministic multigraph -> distinct() inside pagerank dedupes;
-    # dst spread via xxhash so in/out degrees are irregular but fixed
-    edges = (
-        spark.range(0, N_NODES * DEG, 1, sc.defaultParallelism)
-        .select(
-            (F.col("id") % N_NODES).alias("src"),
-            F.pmod(F.xxhash64(F.col("id")), F.lit(N_NODES)).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-    )
-    edges.write.mode("overwrite").parquet("/tmp/soak_pr_edges")
-    e = spark.read.parquet("/tmp/soak_pr_edges")
+    spark, tr = session("soak_pagerank")
+    # a deterministic multigraph (pagerank's distinct() dedupes); dst spread
+    # via xxhash, so in/out degrees are irregular but fixed
+    root = tempfile.mkdtemp(prefix="soak_pr_edges_")
+    spark.range(0, n_nodes * deg, 1, spark.sparkContext.defaultParallelism).select(
+        (F.col("id") % n_nodes).alias("src"),
+        F.pmod(F.xxhash64(F.col("id")), F.lit(n_nodes)).alias("dst"),
+    ).filter(F.col("src") != F.col("dst")).write.parquet(root + "/edges")
+    e = spark.read.parquet(root + "/edges")
 
-    def run(tag: str, prepartition) -> float:
-        sc.setJobDescription(f"pagerank soak {tag}")
-        t0 = time.perf_counter()
-        r = pagerank(e, iterations=5, prepartition=prepartition)
-        r.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        sc.setJobDescription(None)
-        return dt
+    def run(tag, prepartition):
+        sink = lambda: noop(pagerank(e, iterations=5, prepartition=prepartition))  # noqa: E731
+        return measure(tr, f"pagerank {tag}", sink)[1]["s"]
 
-    # warmup (codegen) once with the default path
     run("warmup", None)
-
-    results: dict[str, list[float]] = {"auto": [], "off": [], "on": []}
-    for rep in range(REPS):
+    walls = {"off": [], "on": [], "auto": []}
+    for rep in range(reps):
         for tag, pp in (("off", False), ("on", True), ("auto", None)):
-            dt = run(f"{tag} rep{rep}", pp)
-            results[tag].append(dt)
-            print(f"rep{rep} {tag:4s}: {dt:.3f}s", flush=True)
-
-    # equivalence: identical ranks row-for-row (rounded at 1e-12 to
-    # absorb nothing — pagerank arithmetic is identical per plan, assert
-    # exact)
-    a = pagerank(e, iterations=3, prepartition=False)
-    b = pagerank(e, iterations=3, prepartition=True)
-    diff = (
-        a.withColumnRenamed("rank", "ra")
-        .join(b.withColumnRenamed("rank", "rb"), "node", "full")
-        .filter(
-            F.col("ra").isNull()
-            | F.col("rb").isNull()
-            | (F.col("ra") != F.col("rb"))
-        )
-        .count()
-    )
+            walls[tag].append(run(f"{tag} rep{rep}", pp))
+    # ranks compared row for row between the two layouts
+    a = pagerank(e, iterations=3, prepartition=False).withColumnRenamed("rank", "ra")
+    b = pagerank(e, iterations=3, prepartition=True).withColumnRenamed("rank", "rb")
+    diff = a.join(b, "node", "full").filter(
+        F.col("ra").isNull() | F.col("rb").isNull() | (F.col("ra") != F.col("rb"))
+    ).count()
     print(f"rank mismatches (must be 0): {diff}")
-    for tag, runs in results.items():
-        print(
-            f"{tag:4s}: min {min(runs):.3f}s  runs {[round(r, 3) for r in runs]}"
-        )
+    for tag, runs in walls.items():
+        print(f"{tag:4s}: min {min(runs):.3f}s  runs {[round(r, 3) for r in runs]}")
+    shutil.rmtree(root, ignore_errors=True)
+
+    def cliques(n):  # clique c = nodes {4c .. 4c+3}, all 6 edges
+        base = spark.range(n)
+        pairs = [(i, j) for i in range(4) for j in range(4) if i < j]
+        edges = [
+            base.select((F.col("id") * 4 + i).alias("src"), (F.col("id") * 4 + j).alias("dst"))
+            for i, j in pairs
+        ]
+        return label_propagation(reduce(lambda x, y: x.unionAll(y), edges), iters=2)
+
+    def lpa_check(rows, n):
+        assert len(rows) == 4 * n and all(r.label == (r.node // 4) * 4 for r in rows), rows[:3]
+        return {"nodes": len(rows)}
+
+    grow(tr, "label_propagation {} cliques", cliques, lpa_check, (25_000, 50_000))
 
 
 if __name__ == "__main__":

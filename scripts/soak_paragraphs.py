@@ -1,124 +1,64 @@
-"""Paragraph-dedup soak (r13): shuffle linearity of `dedup_paragraphs`'
-two exchanges (paragraph-key window + doc-key reassembly) at replicated
-corpus volume.
+"""Paragraph-dedup soak: shuffle linearity of ``dedup_paragraphs``' two
+exchanges (paragraph-key window + doc-key reassembly) at replicated
+corpus volume, under both exchange-key laws: raw paragraph text and the
+xxhash64 fingerprint (exact tie law), whose survivor counts must agree.
 
 Corpus: sf0.1 documents paged into 12-token '\\n\\n' paragraphs, then
-replicated R× with salted doc ids and UNCHANGED text — every replica's
+replicated R× with remapped doc ids and UNCHANGED text: every replica's
 paragraphs exactly duplicate the base corpus's, the boilerplate-heavy
 worst case where almost everything dedups away (survivor fraction
-~1/R).  The operator's claim: both shuffles carry rows linear in the
-input (paragraph occurrences resp. surviving docs), never pair-shaped
-state.
+~1/R).  Both shuffles must carry rows linear in the input (paragraph
+occurrences resp. surviving docs), never pair-shaped state.  With
+``--long`` each document is its text repeated 12× and paged at 120
+tokens (~0.8 KB paragraphs): the regime where the fingerprint key pays
+(hashing and window-sort comparisons on full paragraph bytes vs 8-byte
+longs).
 
-    python scripts/soak_paragraphs.py [replicas ...]   # default 20 200
+    python scripts/soak_paragraphs.py [--long] [replicas ...]   # default 20 200
 """
 
 from __future__ import annotations
 
-import json
 import sys
-import time
-import urllib.request
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.1"
-
-
-def _stage_totals(spark) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {"shuffle_mb": 0.0, "spill_mem_mb": 0.0, "spill_disk_mb": 0.0}
-    for s in stages:
-        tot["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-        tot["spill_mem_mb"] += s.get("memoryBytesSpilled", 0) / 1e6
-        tot["spill_disk_mb"] += s.get("diskBytesSpilled", 0) / 1e6
-    return tot
+from soak import measure, replicate, session, table
 
 
 def main() -> None:
     long_paras = "--long" in sys.argv[1:]
-    replica_counts = [
-        int(a) for a in sys.argv[1:] if not a.startswith("--")
-    ] or [20, 200]
-    from radohydro_spark import get_spark
+    replica_counts = [int(a) for a in sys.argv[1:] if not a.startswith("--")] or [20, 200]
     from radohydro_spark.functions.text import tokens
     from radohydro_spark.operators.dedup import dedup_paragraphs
 
-    spark = get_spark(
-        "soak_paragraphs",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.retainedStages": "5000"},
-    )
-    src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    spark, tr = session("soak_paragraphs")
+    src = table(spark, "documents").select("doc_id", "text")
     if long_paras:
-        # --long (r14): ~0.8 KB paragraphs — the regime where the
-        # fingerprint key law pays (partitioner hashing + window-sort
-        # comparisons on full paragraph bytes vs 8-byte longs)
         src = src.select(
-            "doc_id",
-            F.concat_ws(
-                " ", F.array_repeat(F.trim(F.col("text")), 12)
-            ).alias("text"),
+            "doc_id", F.concat_ws(" ", F.array_repeat(F.trim("text"), 12)).alias("text")
         )
-        page = 120.0
-    else:
-        page = 12.0
+    p = 120 if long_paras else 12
     toks = tokens("text")
-    nch = F.ceil(F.size(toks) / F.lit(page)).cast("int")
-    p = int(page)
+    n_paras = F.greatest(F.ceil(F.size(toks) / F.lit(float(p))).cast("int"), F.lit(1))
     paras = F.transform(
-        F.sequence(F.lit(1), F.greatest(nch, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, (i - 1) * p + 1, p)),
+        F.sequence(F.lit(1), n_paras), lambda i: F.concat_ws(" ", F.slice(toks, (i - 1) * p + 1, p))
     )
     base = src.select("doc_id", F.array_join(paras, "\n\n").alias("text"))
-    results = {}
     for reps in replica_counts:
-        rep = spark.range(0, reps).select(F.col("id").alias("rep"))
-        corpus = base.crossJoin(rep).select(
-            (F.col("doc_id") * reps + F.col("rep")).alias("doc_id"), "text"
-        ).persist()
+        corpus = replicate(base, reps, ["doc_id"]).persist()
         n = corpus.count()
-        # r14: measure BOTH exchange-key laws — raw paragraph text vs
-        # the xxhash64 fingerprint (exact tie-law) — and assert the
-        # survivor aggregate identical
+        kept = {}
         for mode, fp in (("raw", False), ("fingerprint", True)):
-            before = _stage_totals(spark)
-            t0 = time.time()
-            out = dedup_paragraphs(corpus, fingerprint=fp)
-            agg = out.agg(
+            agg = lambda fp=fp: dedup_paragraphs(corpus, fingerprint=fp).agg(  # noqa: E731
                 F.sum("n_paras").alias("paras"),
                 F.sum("n_kept").alias("kept"),
                 F.count("*").alias("docs"),
-            ).collect()[0]
-            wall = time.time() - t0
-            after = _stage_totals(spark)
-            results[f"{reps}_{mode}"] = {
-                "n_docs": n,
-                "paras": int(agg["paras"]),
-                "kept": int(agg["kept"]),
-                "wall_s": round(wall, 2),
-                **{k: round(after[k] - before[k], 1) for k in after},
-            }
-            print(reps, mode, results[f"{reps}_{mode}"], flush=True)
-        assert (
-            results[f"{reps}_raw"]["kept"]
-            == results[f"{reps}_fingerprint"]["kept"]
-        )
+            ).first()
+            row, _ = measure(tr, f"x{reps} {mode}", agg, lambda r: {"n_docs": n, **r.asDict()})
+            kept[mode] = row["kept"]
+        assert kept["raw"] == kept["fingerprint"], kept
         corpus.unpersist()
-    print(
-        json.dumps(
-            {
-                "base": f"sf0.1 documents paged @{p} tokens"
-                + (" (x12 repeated text)" if long_paras else ""),
-                "sweep": results,
-            }
-        )
-    )
 
 
 if __name__ == "__main__":

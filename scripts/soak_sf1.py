@@ -1,258 +1,104 @@
 """sf1-equivalent soak of the three most shuffle-heavy queries.
 
-The driver's bench runs at sf0.1; the 100-TB design claims (one-shuffle
-basket grouping, hot-shingle-guarded near-dedup, lineage-truncated
-PageRank) have so far been argued from plan shapes only.  This soak is
-the empirical datapoint: replicate the sf0.1 tables ``replicas``-fold
-(default 10 → sf1-equivalent row volumes: 1M events, 6M lineitem, 50k
-documents) with DETERMINISTIC id remaps that preserve each query's
-hardness profile rather than dilute it:
+Replicates the sf0.1 tables ``replicas``-fold (default 10: 1M events,
+6M lineitem, 50k documents) with ``soak.replicate``'s deterministic id
+remaps, which keep each query's hardness profile rather than dilute it:
 
-* ``events`` ×R: users remapped ``user_id*R + rep`` — per-user event
-  sequences (the window + transition structure PageRank feeds on) are
-  preserved verbatim while user cardinality grows R×, exactly how real
-  traffic scales.
-* ``lineitem`` ×R: orders remapped ``l_orderkey*R + rep`` — basket-size
-  distribution is invariant, basket count grows R×, so pair_lift's
-  C(n,2) fan-out per basket is unchanged and total work scales linearly
-  (the design claim under test).
-* ``documents`` ×R: replicas of every 37th doc keep the original text
-  (exact-dup pressure), all others get a replica salt token (planted
-  near-dups at 3-gram Jaccard ~0.9) — the same duplicate-planting scheme
-  as soak_corpus.py, so the shingle join faces R× docs AND denser
-  collision structure, the worst realistic case for LSH-free Jaccard.
-
-Per query the soak records wall time plus executor-truth metrics from
-the Spark status REST API (shuffle read/write bytes, memory/disk spill)
-deltas, and prints one JSON line at the end for a committed SOAK note.
+* ``events``: ``user_id``/``event_id`` remapped, so per-user event
+  sequences (the transition structure PageRank feeds on) are kept
+  verbatim while user cardinality grows R×;
+* ``lineitem``: ``l_orderkey`` remapped, so the basket-size distribution
+  and pair_lift's C(n,2) fan-out per basket are unchanged and total work
+  scales linearly (the design claim under test);
+* ``documents``: the ``salted`` dup-planting law, so the shingle join
+  faces R× docs AND denser collision structure.
 
     python scripts/soak_sf1.py [replicas] [query ...]
 
 With query names (events_pagerank / dedup_ngram_jaccard /
-orders_market_basket) only those legs run — used for the 100x
-(sf10-equivalent) datapoint, where the exact-Jaccard leg is out of scope
-by design: its shingle-join intermediate grows with planted-dup density
-squared (that operator exists for the textbook oracle; the corpus-scale
-near-dedup path is MinHash-LSH banding, soaked by soak_corpus.py at the
-same volume).
+orders_market_basket) only those legs run; the sf10-equivalent datapoint
+leaves out the exact-Jaccard leg by design (its shingle-join
+intermediate grows with planted-dup density squared; the corpus-scale
+near-dedup path is MinHash-LSH banding, soaked by soak_corpus.py).  The
+opt-in leg ``dedup_lsh_index`` (not in the default set) prices the
+persisted LSH index lifecycle: build once, probe all, probe a 1% batch
+of brand-new ids.
 """
 
 from __future__ import annotations
 
-import json
+import shutil
 import sys
-import time
-import urllib.request
+import tempfile
 
-sys.path.insert(0, "/root/repo")
-
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.1"
-
-
-def _stage_totals(spark) -> dict:
-    """Sum shuffle/spill bytes over all completed stages via the UI REST
-    API (the same numbers the Spark UI shows — executor truth, not
-    driver guesses)."""
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {
-        "shuffle_read_mb": 0.0,
-        "shuffle_write_mb": 0.0,
-        "mem_spill_mb": 0.0,
-        "disk_spill_mb": 0.0,
-    }
-    for s in stages:
-        tot["shuffle_read_mb"] += s.get("shuffleReadBytes", 0) / 1e6
-        tot["shuffle_write_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-        tot["mem_spill_mb"] += s.get("memoryBytesSpilled", 0) / 1e6
-        tot["disk_spill_mb"] += s.get("diskBytesSpilled", 0) / 1e6
-    return tot
+from soak import measure, replicate, salted, session, table
 
 
 def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     only = set(sys.argv[2:])
-
-    def wanted(name: str) -> bool:
-        return not only or name in only
-
-    from radohydro_spark import get_spark
     from radohydro_spark.operators import dedup as DD
     from radohydro_spark.operators.basket import pair_lift
     from radohydro_spark.operators.graph import pagerank
-    from pyspark.sql import Window as W
 
-    spark = get_spark(
-        "soak_sf1",
-        extra_conf={
-            "spark.ui.enabled": "true",  # status REST API for metrics
-            "spark.ui.retainedStages": "5000",
-        },
-    )
-    rep = spark.range(0, replicas).select(F.col("id").alias("rep"))
-    results = {"replicas": replicas}
+    spark, tr = session("soak_sf1")
+    rows = lambda n: {"rows": n}  # noqa: E731
 
-    def run(name, fn):
-        before = _stage_totals(spark)
-        t0 = time.time()
-        n = fn()
-        wall = time.time() - t0
-        after = _stage_totals(spark)
-        delta = {k: round(after[k] - before[k], 1) for k in after}
-        results[name] = {"wall_s": round(wall, 2), "rows": n, **delta}
-        print(name, results[name], flush=True)
+    def fact(name, ids, cols, **text):
+        df = replicate(table(spark, name).select(*cols), replicas, ids, **text)
+        df = df.repartition(64).persist()
+        print(f"{name} rows: {df.count()}", flush=True)
+        return df
 
-    # --- events_pagerank at R x 100k events ---
-    if wanted("events_pagerank"):
-        ev = (
-            spark.read.parquet(f"{SF_DIR}/events.parquet")
-            .crossJoin(rep)
-            .select(
-                (F.col("user_id") * replicas + F.col("rep")).alias("user_id"),
-                "event_type",
-                "ts",
-                "event_id",
-            )
-            .repartition(64)
-            .persist()
-        )
-        print("events rows:", ev.count(), flush=True)
+    if not only or "events_pagerank" in only:
+        ev = fact("events", ["user_id", "event_id"], ["user_id", "event_type", "ts", "event_id"])
 
         def _pagerank():
             w = W.partitionBy("user_id").orderBy("ts", "event_id")
-            seq = ev.select(
-                "user_id", "event_type", F.lead("event_type").over(w).alias("nxt")
-            )
-            edges = (
-                seq.filter(F.col("nxt").isNotNull())
-                .select(F.col("event_type").alias("src"), F.col("nxt").alias("dst"))
-                .distinct()
-            )
+            seq = ev.select("event_type", F.lead("event_type").over(w).alias("nxt"))
+            edges = seq.filter(F.col("nxt").isNotNull()).select(
+                F.col("event_type").alias("src"), F.col("nxt").alias("dst")
+            ).distinct()
             nodes = ev.select(F.col("event_type").alias("node")).distinct()
             return pagerank(edges, nodes, damping=0.85, iterations=5).count()
 
-        run("events_pagerank", _pagerank)
+        measure(tr, "events_pagerank", _pagerank, rows)
         ev.unpersist()
 
-    # --- dedup_ngram_jaccard at R x 5k documents with planted dups ---
-    if wanted("dedup_ngram_jaccard"):
-        docs = (
-            spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            .select("doc_id", "text")
-            .crossJoin(rep)
-            .select(
-                (F.col("doc_id") * replicas + F.col("rep")).alias("doc_id"),
-                F.when(F.col("doc_id") % 37 == 0, F.col("text"))
-                .otherwise(
-                    F.concat(F.lit("u"), F.col("rep").cast("string"), F.lit(" "), "text")
-                )
-                .alias("text"),
-            )
-            .repartition(64)
-            .persist()
-        )
-        print("documents rows:", docs.count(), flush=True)
-
-        def _jaccard():
-            # production configuration: hot-shingle guard ON (the scale-safe
-            # default the driver query disables only for its textbook oracle)
-            return DD.ngram_jaccard_pairs(
+    if not only or "dedup_ngram_jaccard" in only or "dedup_lsh_index" in only:
+        docs = fact("documents", ["doc_id"], ["doc_id", "text"], text=salted())
+        if not only or "dedup_ngram_jaccard" in only:
+            # the hot-shingle guard is on: the scale-safe default, which the
+            # driver query turns off only for its textbook oracle
+            jac = lambda: DD.ngram_jaccard_pairs(  # noqa: E731
                 docs, "text", "doc_id", k=3, threshold=0.5
             ).count()
-
-        run("dedup_ngram_jaccard", _jaccard)
+            measure(tr, "dedup_ngram_jaccard", jac, rows)
+        if "dedup_lsh_index" in only:
+            root = tempfile.mkdtemp(prefix="soak_lsh_")
+            new = docs.filter(F.col("doc_id") % 100 == 0).select(
+                (F.col("doc_id") + 1_000_000_000).alias("doc_id"), "text"
+            )
+            ix = f"{root}/ix"
+            measure(tr, "lsh_index_build", lambda: DD.build_lsh_index(docs, ix, "text", "doc_id"))
+            for label, probe in (("lsh_index_probe_all", docs), ("lsh_index_probe_new_batch", new)):
+                q = lambda p=probe: DD.query_lsh_index(spark, ix, p, "text", "doc_id")  # noqa: E731
+                measure(tr, label, lambda: q().count(), rows)
+            shutil.rmtree(root, ignore_errors=True)
         docs.unpersist()
 
-    # --- orders_market_basket at R x 600k lineitem ---
-    if wanted("orders_market_basket"):
-        li = (
-            spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-            .select("l_orderkey", "l_partkey")
-            .crossJoin(rep)
-            .select(
-                (F.col("l_orderkey") * replicas + F.col("rep")).alias("l_orderkey"),
-                "l_partkey",
-            )
-            .repartition(64)
-            .persist()
-        )
-        print("lineitem rows:", li.count(), flush=True)
+    if not only or "orders_market_basket" in only:
+        li = fact("lineitem", ["l_orderkey"], ["l_orderkey", "l_partkey"])
 
         def _basket():
             out = pair_lift(li, "l_orderkey", "l_partkey", max_basket_size=100)
             return out.orderBy(F.desc("pair_count"), "item_a", "item_b").limit(25).count()
 
-        run("orders_market_basket", _basket)
+        measure(tr, "orders_market_basket", _basket, rows)
         li.unpersist()
-
-    # --- opt-in leg: persisted LSH index lifecycle at R x 5k documents
-    # (not in the default set, which keeps the three committed legs
-    # comparable across rounds; run as
-    #   python scripts/soak_sf1.py 100 dedup_lsh_index
-    # for the build-once/probe-many scale datapoint) ---
-    if "dedup_lsh_index" in only:
-        import shutil
-        import tempfile
-
-        from radohydro_spark.operators.dedup import (
-            build_lsh_index,
-            query_lsh_index,
-        )
-
-        docs = (
-            spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            .select("doc_id", "text")
-            .crossJoin(rep)
-            .select(
-                (F.col("doc_id") * replicas + F.col("rep")).alias("doc_id"),
-                F.when(F.col("doc_id") % 37 == 0, F.col("text"))
-                .otherwise(
-                    F.concat(
-                        F.lit("u"), F.col("rep").cast("string"), F.lit(" "), "text"
-                    )
-                )
-                .alias("text"),
-            )
-            .repartition(64)
-            .persist()
-        )
-        print("documents rows:", docs.count(), flush=True)
-        root = tempfile.mkdtemp(prefix="soak_lsh_")
-
-        def _build():
-            build_lsh_index(docs, f"{root}/ix", "text", "doc_id")
-            return 0
-
-        run("lsh_index_build", _build)
-
-        def _probe():
-            return query_lsh_index(
-                spark, f"{root}/ix", docs, "text", "doc_id"
-            ).count()
-
-        run("lsh_index_probe_all", _probe)
-
-        # realistic incremental batch: 1% brand-new ids probed against
-        # the full index (fresh-MinHash path + candidate join)
-        newdocs = docs.filter(F.col("doc_id") % 100 == 0).select(
-            (F.col("doc_id") + 1_000_000_000).alias("doc_id"), "text"
-        )
-
-        def _probe_new():
-            return query_lsh_index(
-                spark, f"{root}/ix", newdocs, "text", "doc_id"
-            ).count()
-
-        run("lsh_index_probe_new_batch", _probe_new)
-        docs.unpersist()
-        shutil.rmtree(root, ignore_errors=True)
-
-    print(json.dumps(results))
 
 
 if __name__ == "__main__":

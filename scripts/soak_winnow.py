@@ -1,161 +1,74 @@
 """Winnowing soak: fingerprint selection + MOSS pair join at replicated
-volume (r12 second wave).
+volume.
 
-Scales the sf0.1 documents table (5,000 docs) by ``replicas`` (default
-10, 100 → 50k / 500k docs) with the soak_overlap_zipf plant scheme:
-non-planted replicas remap EVERY token with a per-replica suffix
-(fingerprint spaces disjoint across replicas — no cross-replica pairs,
-so the pair volume stays linear in R instead of the quadratic blow-up a
-shared-token salt scheme produces), while every replica of a
-``doc_id % 37 == 0`` document keeps the ORIGINAL text → planted
-exact-duplicate families whose C(R,2) pairs MUST all surface (identical
+Scales the sf0.1 documents (5,000 docs) by ``replicas`` (default 1 10)
+with the ``suffixed`` law: non-planted replicas carry per-replica
+token suffixes, so fingerprint spaces are disjoint across replicas and
+the pair volume stays linear in R; every replica of a
+``doc_id % 37 == 0`` document keeps the ORIGINAL text, so planted
+exact-duplicate families whose C(R,2) pairs must all surface (identical
 text ⇒ identical fingerprint sets ≫ min_shared).
 
-Measured per leg:
+Per replica count:
 
-* selection — wall, fingerprints kept, DENSITY vs the positional
-  shingle count (theory: ~2/(window+1) ≈ 0.40 at window=4; this ratio
-  is the join-input reduction winnowing buys over the full shingle
-  join at the same k+w-1 guarantee threshold);
-* pair join — wall, pairs out, planted recall (every planted C(R,2)
-  family pair must surface), natural-pair volume (within-replica
-  near-dups, which scale ~linearly with R);
-* shuffle/spill deltas from the stage API, per leg.
+* selection: fingerprints kept and their DENSITY against the positional
+  shingle count (theory ~2/(window+1) ≈ 0.40 at window=4: the join-input
+  reduction winnowing buys over the full shingle join);
+* pair join: pairs out, planted recall (every planted family pair must
+  surface, asserted) and the natural within-replica near-dup volume.
 
     python scripts/soak_winnow.py [replicas ...]   # default 1 10
+
+``R:p`` caps the planted replicas at ``p`` (planted pairs then grow
+linearly in the corpus while recall stays exactly checkable; the big-R
+form).
 """
 
 from __future__ import annotations
 
-import json
 import sys
-import time
-import urllib.request
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
+
+from soak import measure, replicate, session, suffixed, table
 
 K, WIN = 3, 4
 
 
-def _stage_totals(spark) -> dict:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {"shuffle_mb": 0.0, "spill_mem_mb": 0.0, "spill_disk_mb": 0.0}
-    for s in stages:
-        tot["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-        tot["spill_mem_mb"] += s.get("memoryBytesSpilled", 0) / 1e6
-        tot["spill_disk_mb"] += s.get("diskBytesSpilled", 0) / 1e6
-    return tot
-
-
-def _corpus(spark, reps: int, plant_reps: int | None = None):
-    """``plant_reps`` caps how many replicas of a planted doc keep the
-    original text (default: all of them — family pair volume grows as
-    C(R,2) per planted doc, the f² fan-out by construction).  Pass a
-    small constant (e.g. 2) for big-R legs so the planted pair volume
-    stays LINEAR in the corpus while recall stays exactly checkable."""
-    base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").select(
-        "doc_id", "text"
-    )
-    r = spark.range(0, reps).select(F.col("id").alias("rep"))
-    from radohydro_spark.functions.text import tokens
-
-    remapped = F.array_join(
-        F.transform(
-            tokens("text"),
-            lambda t: F.concat(t, F.lit("_"), F.col("rep").cast("string")),
-        ),
-        " ",
-    )
-    keep = F.col("doc_id") % 37 == 0
-    if plant_reps is not None:
-        keep = keep & (F.col("rep") < plant_reps)
-    return (
-        base.crossJoin(r)
-        .select(
-            (F.col("doc_id") * reps + F.col("rep")).alias("doc_id"),
-            F.when(keep, F.col("text")).otherwise(remapped).alias("text"),
-        )
-        .repartition(64)
-        .persist()
-    )
-
-
 def main() -> None:
-    # "R" runs the full C(R,2) plant; "R:p" caps planted replicas at p
-    # (linear pair volume — the big-R form)
-    args = sys.argv[1:] or ["1", "10"]
-    reps = []
-    for a in args:
-        if ":" in a:
-            rr, pp = a.split(":")
-            reps.append((int(rr), int(pp)))
-        else:
-            reps.append((int(a), None))
-    from radohydro_spark import get_spark
+    args = [a.split(":") for a in sys.argv[1:]] or [["1"], ["10"]]
     from radohydro_spark.functions.text import tokens
     from radohydro_spark.operators.dedup import winnow_fingerprints, winnow_pairs
 
-    spark = get_spark(
-        "soak_winnow",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.retainedStages": "5000"},
-    )
-    for R, plant_reps in reps:
-        corpus = _corpus(spark, R, plant_reps)
+    spark, tr = session("soak_winnow")
+    base = table(spark, "documents").select("doc_id", "text")
+    n_planted = base.filter(F.col("doc_id") % 37 == 0).count()
+    for a in args:
+        R, plant = int(a[0]), int(a[1]) if len(a) > 1 else int(a[0])
+        keep = (F.col("doc_id") % 37 == 0) & (F.col("rep") < plant)
+        text = F.when(keep, F.col("text")).otherwise(suffixed())
+        corpus = replicate(base, R, ["doc_id"], text=text).repartition(64).persist()
         n_docs = corpus.count()
-        n_pos = corpus.select(
-            F.sum(
-                F.greatest(F.size(tokens("text")) - K, F.lit(0)) + F.lit(1)
-            ).alias("n")
-        ).first()["n"]
-
-        before = _stage_totals(spark)
-        t0 = time.perf_counter()
-        n_fp = winnow_fingerprints(corpus, "text", "doc_id", k=K, window=WIN).count()
-        t_sel = time.perf_counter() - t0
-        mid = _stage_totals(spark)
-
-        t0 = time.perf_counter()
+        positions = F.greatest(F.size(tokens("text")) - K, F.lit(0)) + 1
+        n_pos = corpus.select(F.sum(positions)).first()[0]
+        fp = lambda: winnow_fingerprints(corpus, "text", "doc_id", k=K, window=WIN)  # noqa: E731
+        density = lambda n: {  # noqa: E731
+            "docs": n_docs, "positions": n_pos, "fingerprints": n, "density": round(n / n_pos, 3)
+        }
+        measure(tr, f"R={R} selection", lambda: fp().count(), density)
+        # winnow_pairs builds lazily (no eager job): the count is the pair join
         pairs = winnow_pairs(
-            corpus, "text", "doc_id", k=K, window=WIN, min_shared=2,
-            max_fp_freq=1000,
+            corpus, "text", "doc_id", k=K, window=WIN, min_shared=2, max_fp_freq=1000
         ).persist()
-        n_pairs = pairs.count()
-        t_pair = time.perf_counter() - t0
-        after = _stage_totals(spark)
-
-        fam = pairs.filter(
-            F.expr(f"id_a div {R}") == F.expr(f"id_b div {R}")
-        ).count()
-        n_planted = (
-            corpus.sparkSession.read.parquet(
-                "/root/testdata/sf0.1/documents.parquet"
-            )
-            .filter(F.col("doc_id") % 37 == 0)
-            .count()
-        )
-        fam_size = R if plant_reps is None else min(plant_reps, R)
-        expected_fam = n_planted * (fam_size * (fam_size - 1) // 2)
+        n_pairs, _ = measure(tr, f"R={R} pairs", pairs.count)
+        fam = pairs.filter(F.expr(f"id_a div {R}") == F.expr(f"id_b div {R}")).count()
+        fam_size = min(plant, R)
+        expected = n_planted * (fam_size * (fam_size - 1) // 2)
+        print(f"      pairs={n_pairs:,} same-family={fam:,} (planted {expected:,}) "
+              f"cross-family={n_pairs - fam:,}")
+        # every planted family pair surfaces: identical texts share every fingerprint
+        assert fam == expected, (fam, expected)
         pairs.unpersist()
-
-        print(
-            f"R={R:3d} docs={n_docs:>9,} positions={n_pos:>12,} "
-            f"fingerprints={n_fp:>11,} density={n_fp / n_pos:.3f}"
-        )
-        print(
-            f"      selection {t_sel:6.1f}s shuffle {mid['shuffle_mb'] - before['shuffle_mb']:8.1f}MB | "
-            f"pairs {t_pair:6.1f}s shuffle {after['shuffle_mb'] - mid['shuffle_mb']:8.1f}MB "
-            f"spill {after['spill_disk_mb'] - before['spill_disk_mb']:.0f}MB"
-        )
-        print(
-            f"      pairs={n_pairs:>9,} same-family={fam:>9,} "
-            f"(expected {expected_fam:,}) cross-family={n_pairs - fam:,}"
-        )
         corpus.unpersist()
 
 

@@ -7,7 +7,7 @@ holds only what the scripts need around the tracer:
 
 * ``ROOT``, the checkout this file lives in (on ``sys.path`` once
   imported), and ``SF_DIR``, the sf0.1 tables (``$SPARK_GRAFT_SF_DIR``,
-  as for ``bench.py``);
+  else ``testdata/sf0.1`` beside the checkout);
 * ``session``, a UI-on session and its tracer; ``noop``, the bench's
   sink;
 * ``measure``, one measured call, printed as one JSON line with the
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from perfbench.tracing import GENERIC, LayerTracer, timed  # noqa: E402
 from radohydro_spark.plans.pipeline import release_persisted  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", os.path.join(os.path.dirname(ROOT), "testdata", "sf0.1"))
 
 
 def table(spark, name: str):

@@ -37,7 +37,7 @@ def test_script_measures_through_the_harness(path):
     assert "_stage_totals" not in defined, "stage totals come from perfbench.tracing via scripts/soak.py"
     for needle in ("uiWebUrl", "/api/v1"):
         assert needle not in src, f"{needle}: read stage totals through scripts/soak.py"
-    assert "/root/repo" not in src, "derive the repo root from __file__"
+    assert str(REPO) not in src, "derive the repo root from __file__"
 
 
 def test_no_script_is_named_after_a_round():

@@ -7,19 +7,23 @@ holds only what the scripts need around the tracer:
 
 * ``ROOT``, the checkout this file lives in (on ``sys.path`` once
   imported), and ``SF_DIR``, the sf0.1 tables (``$SPARK_GRAFT_SF_DIR``,
-  else ``testdata/sf0.1`` beside the checkout);
+  else bench.py's default);
 * ``session``, a UI-on session and its tracer; ``noop``, the bench's
   sink;
 * ``measure``, one measured call, printed as one JSON line with the
   tracer's generic fields: ``s``, ``tasks``, ``failed_tasks``,
-  ``core_util``, ``shuffle_bytes`` (written) and ``spill_bytes`` (disk);
-  ``grow`` measures one closed-form leg at growing sizes;
+  ``core_util``, ``shuffle_bytes`` (written) and ``spill_bytes`` (disk),
+  summed over the call's job group and the group of every stream the
+  call started (a micro-batch runs on its stream's own thread, under a
+  job group named by the stream's run id); ``grow`` measures one
+  closed-form leg at growing sizes;
 * the two corpus-replication laws, ``salted`` and ``suffixed``, which
   ``replicate`` applies.
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import sys
@@ -29,11 +33,13 @@ if ROOT not in sys.path:
     sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
 
 from perfbench.tracing import GENERIC, LayerTracer, timed  # noqa: E402
 from radohydro_spark.plans.pipeline import release_persisted  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", os.path.join(os.path.dirname(ROOT), "testdata", "sf0.1"))
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+STREAM_RUNS: list[str] = []  # run ids of the streams started, in order
 
 
 def table(spark, name: str):
@@ -57,7 +63,26 @@ def session(name: str):
             "spark.ui.retainedJobs": "5000",
         },
     )
+    spark.streams.addListener(_StreamRuns())
+    # a stream's last progress and end events reach the listener after
+    # its drain returns; stopping drains the event queues while the
+    # listener is still there to take them
+    atexit.register(spark.stop)
     return spark, LayerTracer(spark, spark.sparkContext.defaultParallelism)
+
+
+class _StreamRuns(StreamingQueryListener):
+    """Records each stream's run id as it starts (before ``start()``
+    returns), which is the job group of its micro-batches."""
+
+    def onQueryStarted(self, event):
+        STREAM_RUNS.append(str(event.runId))
+
+    def onQueryProgress(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
 
 
 def measure(tracer: LayerTracer, label: str, fn, note=None):
@@ -65,9 +90,10 @@ def measure(tracer: LayerTracer, label: str, fn, note=None):
     frame.  Prints ``label``, the generic totals and the dict
     ``note(result)`` (if any) as one JSON line; returns
     ``(result, totals)``."""
+    started = len(STREAM_RUNS)
     with tracer.group(label) as gid:
         out, wall = timed(fn)
-    totals = tracer.stage_totals([gid], wall)
+    totals = tracer.stage_totals([gid, *STREAM_RUNS[started:]], wall)
     release_persisted()
     line = {k: round(totals[k], 3) if k in ("s", "core_util") else int(totals[k]) for k in GENERIC}
     line.update((note(out) if note else None) or {})
@@ -89,24 +115,25 @@ def replicate(df, reps: int, ids, **cols):
     return df.crossJoin(rep).select(*[exprs.get(c, F.col(c)).alias(c) for c in df.columns])
 
 
-def salted(text: str = "text", planted=None):
-    """The dup-planting text law: a planted row (by default every 37th
-    ``doc_id``) keeps its text in every replica, so each forms an
-    exact-duplicate family; every other replica gets a ``u<rep>`` salt
-    token, a near-duplicate (3-gram Jaccard ~0.9) of its siblings."""
+def salted(planted=None):
+    """The dup-planting law for the ``text`` column: a planted row (by
+    default every 37th ``doc_id``) keeps its text in every replica, so
+    each forms an exact-duplicate family; every other replica gets a
+    ``u<rep>`` salt token, a near-duplicate (3-gram Jaccard ~0.9) of its
+    siblings."""
     planted = F.col("doc_id") % 37 == 0 if planted is None else planted
-    salt = F.concat(F.lit("u"), F.col("rep").cast("string"), F.lit(" "), F.col(text))
-    return F.when(planted, F.col(text)).otherwise(salt)
+    salt = F.concat(F.lit("u"), F.col("rep").cast("string"), F.lit(" "), F.col("text"))
+    return F.when(planted, F.col("text")).otherwise(salt)
 
 
-def suffixed(text: str = "text"):
-    """The vocabulary-disjoint text law: every token carries its
-    replica's ``_<rep>`` suffix, so replicas share no token and the
-    vocabulary grows with the replica count."""
+def suffixed():
+    """The vocabulary-disjoint law for the ``text`` column: every token
+    carries its replica's ``_<rep>`` suffix, so replicas share no token
+    and the vocabulary grows with the replica count."""
     from radohydro_spark.functions.text import tokens
 
     tag = lambda t: F.concat(t, F.lit("_"), F.col("rep").cast("string"))  # noqa: E731
-    return F.array_join(F.transform(tokens(text), tag), " ")
+    return F.array_join(F.transform(tokens("text"), tag), " ")
 
 
 def grow(tracer: LayerTracer, label: str, build, check, sizes):

@@ -9,8 +9,9 @@ probe against the exact brute-force baseline on the same corpus:
 
 * COMPRESSION: the code column is m=8 bytes/vector vs 64 float64s
   (corpus vs codes bytes on disk);
-* PRUNING: the probe reads nprobe/n_lists of the code lists, not the raw
-  corpus (probe wall vs exact wall);
+* PRUNING: the probe reads only its queries' nprobe nearest code lists,
+  not the raw corpus (on-disk bytes of the probed lists vs all codes vs
+  the corpus; probe wall vs exact wall);
 * recall@5 of IVF-PQ vs the exact cosine top-5 (approximate by design:
   deterministic first-by-id quantizers, the driver-verified
   configuration).
@@ -37,6 +38,7 @@ def _du(d: str) -> float:
 def main() -> None:
     reps = [int(a) for a in sys.argv[1:]] or [50, 250]
     from radohydro_spark.operators.similarity import (
+        _probe_lists,
         build_ivfpq_index,
         cosine_topk,
         query_ivfpq_index,
@@ -68,9 +70,14 @@ def main() -> None:
         probe = lambda: pairs(query_ivfpq_index(spark, idx, queries, nprobe=4, k=5))  # noqa: E731
         approx, _ = measure(tr, f"R={R} probe", probe)
         exact, _ = measure(tr, f"R={R} exact", lambda: pairs(cosine_topk(corpus, queries, k=5)))
+        # the lists the probe reads: its own selection, over the persisted centroids
+        lists = _probe_lists(queries, spark.read.parquet(f"{idx}/centroids"), 4, "embedding",
+                             "query_id").select("centroid_id").distinct().collect()
+        probed = sum(_du(f"{idx}/codes/centroid_id={r['centroid_id']}") for r in lists)
         # recall counts the overlap of (query, vec) pairs: the id remap
         # makes the exact ids replica-specific
         print(f"R={R} vectors={n:,} corpus {_du(cdir):.1f}MB codes {_du(idx + '/codes'):.1f}MB "
+              f"probed {len(lists)} lists {probed:.2f}MB "
               f"recall@5 {len(approx & exact) / len(exact):.2f}", flush=True)
         shutil.rmtree(root, ignore_errors=True)
 

@@ -22,6 +22,9 @@ REPO = Path(__file__).resolve().parents[1]
 SCRIPTS = sorted((REPO / "scripts").glob("*.py"))
 ROUND_NAME = re.compile(r"(^|_)r\d+[a-z]?(_|\.py$)")
 SCRIPT_REF = re.compile(r"scripts/(\w+\.py)")
+# the checkout path the scripts once pinned; a copy of the repo elsewhere
+# must not import or overwrite that checkout either
+PINNED_CHECKOUT = "/root/repo"
 
 
 def test_scripts_exist():
@@ -37,7 +40,8 @@ def test_script_measures_through_the_harness(path):
     assert "_stage_totals" not in defined, "stage totals come from perfbench.tracing via scripts/soak.py"
     for needle in ("uiWebUrl", "/api/v1"):
         assert needle not in src, f"{needle}: read stage totals through scripts/soak.py"
-    assert str(REPO) not in src, "derive the repo root from __file__"
+    for checkout in (PINNED_CHECKOUT, str(REPO)):
+        assert checkout not in src, "derive the repo root from __file__"
 
 
 def test_no_script_is_named_after_a_round():

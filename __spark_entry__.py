@@ -35,7 +35,7 @@ from radohydro_spark.operators import similarity as SIM
 from radohydro_spark.operators.aggregate import resample
 from radohydro_spark.operators.spatial import rasterize, spatial_intersect
 from radohydro_spark.operators.weights import apply_nan_policy, basin_weights
-from radohydro_spark.plans.pipeline import precip_timeseries
+from radohydro_spark.plans.pipeline import precip_from_members, precip_timeseries
 from radohydro_spark.session import pin
 from radohydro_spark.sinks.sinks import write_basin_csvs
 from radohydro_spark.sources.synthetic import (
@@ -235,6 +235,34 @@ def q_precip_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # obs_zorder_archive pattern).
 
 
+def _north_up_meta(g) -> dict:
+    """The synthetic grid ``g`` as its north-up rasters see it: the same
+    cell footprints as ``synthetic_cells(g)``, numbered from the top row
+    (raster row 0), so members need no row flip."""
+    return {
+        "n_rows": g.n_rows,
+        "n_cols": g.n_cols,
+        "ulx": g.x0,
+        "uly": g.y0 + g.n_rows * g.cell,
+        "xres": g.cell,
+        "yres": -g.cell,
+    }
+
+
+def _member_precip(manifest, codec, g, basins, date_type: str) -> DataFrame:
+    """The fused member kernel over north-up members of grid ``g``, in
+    the precip queries' (basin_id, ts string, rainfall_mm) shape."""
+    res = precip_from_members(
+        manifest, codec.parse, _north_up_meta(g), basins, date_type,
+        errors=codec.errors, label=codec.label,
+    )
+    return res.select(
+        "basin_id",
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
+        "rainfall_mm",
+    )
+
+
 def _ascii_member(h: int, g) -> bytes:
     """One ESRI-ASCII member encoding the synthetic grid at hour ``h``:
     NODATA -1 where the closed-form NULL condition holds, else the
@@ -262,18 +290,18 @@ def _ascii_member(h: int, g) -> bytes:
 def q_precip_ascii_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4→S5→S6 end-to-end: ONE tar archive of 25 ASCII-grid members (24
     in-range hours + 1 out-of-range decoy) → tar expansion (mapInPandas) →
-    member date filter (BEFORE decode) → real ESRI-ASCII decoder → north-up
-    row flip → the full precip pipeline.  Decoded obs reproduce the
-    synthetic closed form exactly, so the oracle is the SAME
-    oracle_pipeline_sql as precip_basin_timeseries — any decode divergence
-    (header parse, NODATA→NULL, filename→ts) breaks the hash.
+    member date filter (BEFORE decode) → the fused member kernel with the
+    real ESRI-ASCII decoder, on the grid numbered north-up.  Decoded
+    members reproduce the synthetic closed form exactly, so the oracle is
+    the SAME oracle_pipeline_sql as precip_basin_timeseries — any decode
+    divergence (header parse, NODATA→NULL, filename→ts) breaks the hash.
 
     Reference parity: tar drive loop radohydro.py:291-306, ASCII decode
     radohydro.py:211-222, date filter radohydro.py:294-297."""
     import io
     import tarfile
 
-    from radohydro_spark.sources.ascii_grid import decode_ascii_grids
+    from radohydro_spark.sources.ascii_grid import CODEC
     from radohydro_spark.sources.manifest import expand_tars, filter_members_by_range
 
     _utc(spark)
@@ -295,31 +323,18 @@ def q_precip_ascii_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest = filter_members_by_range(
         expand_tars(archive), "2024-01-01 00:00:00", "2024-01-01 23:00:00", "hours"
     )
-    obs = decode_ascii_grids(manifest, date_type="hours")
-    # ASCII raster row 0 = TOP row; the synthetic cell grid is south-up
-    obs = obs.select(
-        "ts",
-        (F.lit(g.n_rows - 1) - F.col("cell_row")).cast("int").alias("cell_row"),
-        "cell_col",
-        "value",
-    )
-    res = precip_timeseries(obs, synthetic_cells(spark), synthetic_basins(spark))
-    return res.select(
-        "basin_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-        "rainfall_mm",
-    )
+    return _member_precip(manifest, CODEC, g, synthetic_basins(spark), "hours")
 
 
 def q_precip_geotiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 end-to-end: 24 in-query-encoded GeoTIFFs (int16, DEFLATE strips,
-    GDAL nodata tag -1) through the real GeoTIFF decoder → north-up flip →
-    precip pipeline; byte-level codec divergence breaks the closed-form
+    GDAL nodata tag -1) through the fused member kernel with the real
+    GeoTIFF decoder; byte-level codec divergence breaks the closed-form
     oracle hash.  Reference parity: rasterio GTiff read radohydro.py:
     211-222 via the dependency-free codec in sources/geotiff.py."""
     import numpy as np
 
-    from radohydro_spark.sources.geotiff import decode_geotiffs, encode_geotiff
+    from radohydro_spark.sources.geotiff import CODEC, encode_geotiff
 
     _utc(spark)
     g = GRID
@@ -350,19 +365,7 @@ def q_precip_geotiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     manifest = spark.createDataFrame(payloads, "fname string, payload binary")
-    obs = decode_geotiffs(manifest, date_type="hours")
-    obs = obs.select(
-        "ts",
-        (F.lit(g.n_rows - 1) - F.col("cell_row")).cast("int").alias("cell_row"),
-        "cell_col",
-        "value",
-    )
-    res = precip_timeseries(obs, synthetic_cells(spark), synthetic_basins(spark))
-    return res.select(
-        "basin_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-        "rainfall_mm",
-    )
+    return _member_precip(manifest, CODEC, g, synthetic_basins(spark), "hours")
 
 
 # REGNIE variant of the synthetic grid: same geometry, 4 DAILY steps
@@ -375,8 +378,8 @@ def _regnie_grid():
 
 def q_precip_regnie_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7 end-to-end: 5 gzipped fixed-width REGNIE day files (4 in-range +
-    1 decoy) → member date filter → the real 4-char-stride REGNIE decoder
-    (-999 → NULL, trailer line dropped) → north-up flip → precip pipeline.
+    1 decoy) → member date filter → the fused member kernel with the real
+    4-char-stride REGNIE decoder (-999 → NULL, trailer line dropped).
     Values encode the synthetic closed form with h = day index, so the
     oracle is oracle_base_ctes with DAY-stepped timestamps.
 
@@ -386,7 +389,7 @@ def q_precip_regnie_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import gzip
 
     from radohydro_spark.sources.manifest import filter_members_by_range
-    from radohydro_spark.sources.regnie import decode_regnie
+    from radohydro_spark.sources.regnie import regnie_codec
 
     _utc(spark)
     g = _regnie_grid()
@@ -414,21 +417,8 @@ def q_precip_regnie_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"2024-01-{g.n_ts:02d}",
         "days2",
     )
-    obs = decode_regnie(manifest, no_per_line=g.n_cols)
-    obs = obs.select(
-        "ts",
-        (F.lit(g.n_rows - 1) - F.col("cell_row")).cast("int").alias("cell_row"),
-        "cell_col",
-        "value",
-    )
-    res = precip_timeseries(
-        obs, synthetic_cells(spark, g), synthetic_basins(spark, g)
-    )
-    return res.select(
-        "basin_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-        "rainfall_mm",
-    )
+    codec = regnie_codec(no_per_line=g.n_cols)
+    return _member_precip(manifest, codec, g, synthetic_basins(spark, g), "days2")
 
 
 def _regnie_decode_oracle() -> str:
@@ -2822,9 +2812,9 @@ def q_precip_regnie_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-width day files at the true 971x611 REGNIE shape
     (reference radohydro.py:95,392-395) are synthesized DISTRIBUTED (one
     Arrow task per day, numpy-formatted), then run the production path:
-    filename-date pruning → gunzip + 4-char-stride decode (S7, -999 →
-    NULL, trailer dropped) → north-up flip → the precip spatial pipeline
-    with 20 basins.  ~18.4M obs rows — within 6% of the RADOLAN-day
+    filename-date pruning → the fused member kernel: gunzip +
+    4-char-stride decode (S7, -999 → NULL, trailer dropped) read only at
+    the 20 basins' fragment cells.  ~18.4M obs rows — within 6% of the RADOLAN-day
     bench, so both reference workload shapes carry comparable per-cell
     wall-time evidence (r6 verdict item 6).  Values follow the standard
     synthetic closed form with h = day index, so the exact DuckDB oracle
@@ -2835,11 +2825,10 @@ def q_precip_regnie_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from radohydro_spark.sources.manifest import filter_members_by_range
-    from radohydro_spark.sources.regnie import decode_regnie
+    from radohydro_spark.sources.regnie import regnie_codec
     from radohydro_spark.sources.synthetic import (
         REGNIE_SCALE as _RG,
         radolan_scale_basins,
-        radolan_scale_rects,
     )
 
     _utc(spark)
@@ -2873,22 +2862,8 @@ def q_precip_regnie_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_days, "fname string, payload binary"
     )
     manifest = filter_members_by_range(files, "2024-01-01", "2024-01-31", "days2")
-    obs = decode_regnie(manifest, no_per_line=g.n_cols)
-    obs = obs.select(
-        "ts",
-        (F.lit(g.n_rows - 1) - F.col("cell_row")).cast("int").alias("cell_row"),
-        "cell_col",
-        "value",
-    )
-    res = precip_timeseries(
-        obs,
-        synthetic_cells(spark, g),
-        radolan_scale_basins(spark, g, 20),
-        grid_meta=(g.x0, g.y0, g.cell, g.cell),
-    )
-    return res.select(
-        "basin_id", F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"), "rainfall_mm"
-    )
+    codec = regnie_codec(no_per_line=g.n_cols)
+    return _member_precip(manifest, codec, g, radolan_scale_basins(spark, g, 20), "days2")
 
 
 def _regnie_scale_oracle() -> str:

@@ -1,16 +1,30 @@
 """End-to-end pipeline composition — the Spark lifecycle equivalent of
 ``radohydro(...)`` (reference radohydro.py:503-546, SURVEY.md §3.1).
 
-One lazy DataFrame DAG:
+Two plans compute the same product, one area-weighted mean per basin per
+timestep:
 
-    obs ──────────────┐ (fact, arbitrarily large)
-    cells ─ bbox ─ J1 ─ fragments ─ A5 NULL policy ─ A3 weights ─┐
-                                                                  ├ broadcast join
-    obs ──────────────────────────────────────────────────────────┘
-                               │
-                 groupBy(basin_id, ts) weighted agg (A4)   ← the only shuffle
-                               │
-                          result (long)
+* ``precip_timeseries(obs, …)`` — the generic plan over any long obs
+  DataFrame, one lazy DAG:
+
+      obs ──────────────┐ (fact, arbitrarily large)
+      cells ─ bbox ─ J1 ─ fragments ─ A5 NULL policy ─ A3 weights ─┐
+                                                                    ├ broadcast join
+      obs ──────────────────────────────────────────────────────────┘
+                                 │
+                   groupBy(basin_id, ts) weighted agg (A4)   ← the only shuffle
+                                 │
+                            result (long)
+
+* ``precip_from_members(manifest, …)`` — the fused plan over raster
+  members (what ``radohydro_run`` uses): J1 on the cell dimension, then
+  two ``mapInPandas`` passes over the manifest that each parse a member
+  and read only its fragment cells.  Pass 1 reports which fragment cells
+  are ever NaN; the driver applies A5 and A3 to the collected fragments;
+  pass 2 turns each member into its n_basins weighted means with one
+  ``np.bincount``.  No per-cell row, persist or shuffle exists at any
+  point: at tiny group cardinality a direct-indexed array aggregate beats
+  a hash aggregate (EDBT'19, PAPERS.md).
 
 The reference's explicit IR hand-offs (dense stack → wide GDF → fragment GDF
 → ndarray) become logical-plan nodes; ``del stack`` (radohydro.py:531)
@@ -19,14 +33,42 @@ becomes lazy evaluation.
 
 from __future__ import annotations
 
+from typing import Callable
+
+import numpy as np
+import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from radohydro_spark.operators.aggregate import weighted_basin_timeseries
-from radohydro_spark.operators.spatial import spatial_intersect, window_predicate
-from radohydro_spark.operators.weights import apply_nan_policy, basin_weights
+from radohydro_spark.operators.spatial import (
+    create_cell_grid,
+    spatial_intersect,
+    window_predicate,
+)
+from radohydro_spark.operators.weights import (
+    apply_nan_policy,
+    basin_weights,
+    nan_policy_weights,
+)
 # release_persisted is re-exported: the bench and harnesses import it here
 from radohydro_spark.session import pin, release_persisted  # noqa: F401
+from radohydro_spark.sources.manifest import (
+    decode_members,
+    filter_members_by_range,
+    local_manifest,
+    parsed_members,
+    repeat_ts,
+    with_member_ts,
+)
+
+# Fragment count above which precip_from_members hands a run to the
+# decode_members -> precip_timeseries plan.  The fused kernel ships each
+# kept fragment's cell index, basin index and weight (24 B) to every task
+# in its UDF closure; the cap holds that near the 64 MB
+# autoBroadcastJoinThreshold get_spark sets.
+FUSED_MAX_FRAGMENTS = 2_500_000
 
 
 def radohydro_run(
@@ -47,61 +89,43 @@ def radohydro_run(
     """The reference's primary entry (``radohydro(...)``, radohydro.py:
     503-546) as one Spark job against a local/object-store mirror:
 
-        manifest(mirror) → date filter (S5, BEFORE decode) → decode (S6/S7)
+        manifest(mirror) → date filter (S5, BEFORE decode)
         → cell grid from a sample member (compute-once, broadcast)
-        → J1/A5/A3/A4 pipeline → K1 per-basin CSVs [+ K2 wide GeoParquet]
+        → fused member kernel (S6/S7 decode + J1/A5/A3/A4)
+        → K1 per-basin CSVs [+ K2 wide GeoParquet]
 
-    Returns the long result DataFrame (sinks are side effects, but unlike
-    the reference the result is also a first-class value).
+    Returns the long result DataFrame, cached: the sinks read it instead
+    of re-running the pipeline, and unlike the reference the result is
+    also a first-class value.
     """
-    from radohydro_spark.operators.spatial import (
-        basin_bounds,
-        buffered_clip_window,
-        create_cell_grid,
-    )
     from radohydro_spark.sinks import write_basin_csvs, write_wide_geoparquet
-    from radohydro_spark.sources.ascii_grid import decode_ascii_grids, grid_meta
-    from radohydro_spark.sources.manifest import filter_members_by_range, local_manifest
-    from radohydro_spark.sources.regnie import decode_regnie
     from radohydro_spark.sources.shapefile import basins_from_shapefile
 
     if source == "regnie":
+        from radohydro_spark.sources.regnie import REGNIE_TRANSFORM, regnie_codec
+
         date_type = "days2"  # raYYMMDD member names, reference radohydro.py:434
+        codec = regnie_codec()
+    elif source == "geotiff":
+        from radohydro_spark.sources.geotiff import CODEC as codec, geotiff_meta as probe
+    elif source == "radolan":
+        from radohydro_spark.sources.ascii_grid import CODEC as codec, grid_meta as probe
+    else:
+        raise ValueError(f"unknown source: {source}")
     manifest = filter_members_by_range(
         local_manifest(spark, mirror_dir), start, end, date_type
     )
-    if source in ("radolan", "geotiff"):
+    if source == "regnie":
+        # REGNIE's grid is fixed by spec — the reference hard-codes the
+        # transform (radohydro.py:392-395)
+        meta = dict(REGNIE_TRANSFORM)
+    else:
         # compute-once grid geometry from one member (reference initDf
         # branch, radohydro.py:216-248) — driver-side probe of one payload
         sample = manifest.select("payload").first()
         if sample is None:
             raise ValueError(f"no members in [{start}, {end}] under {mirror_dir}")
-        if source == "geotiff":
-            from radohydro_spark.sources.geotiff import decode_geotiffs, geotiff_meta
-
-            obs = decode_geotiffs(manifest, date_type)
-            meta = geotiff_meta(bytes(sample["payload"]))
-        else:
-            obs = decode_ascii_grids(manifest, date_type)
-            meta = grid_meta(bytes(sample["payload"]))
-    elif source == "regnie":
-        from radohydro_spark.sources.regnie import REGNIE_TRANSFORM
-
-        obs = decode_regnie(manifest)
-        # REGNIE's grid is fixed by spec — the reference hard-codes the
-        # transform (radohydro.py:392-395)
-        meta = dict(REGNIE_TRANSFORM)
-    else:
-        raise ValueError(f"unknown source: {source}")
-    cells = create_cell_grid(
-        spark,
-        meta["n_rows"],
-        meta["n_cols"],
-        meta["ulx"],
-        meta["uly"],
-        meta["xres"],
-        meta["yres"],
-    )
+        meta = probe(bytes(sample["payload"]))
     if isinstance(shapefile_path, DataFrame):
         basins = shapefile_path  # pre-built basins(basin_id, geom, ...)
     else:
@@ -113,22 +137,18 @@ def radohydro_run(
 
         basins = reproject_wkb(basins, shape_crs, grid_crs)
 
-    window = buffered_clip_window(
-        basin_bounds(basins),
-        meta["ulx"],
-        meta["uly"],
-        meta["xres"],
-        meta["yres"],
-        meta["n_rows"],
-        meta["n_cols"],
-    )
-    result = precip_timeseries(
-        obs,
-        cells,
+    # no buffered clip window (F3): the kernel reads only fragment cells,
+    # a tighter clip than any bbox window, and J1 derives each basin's
+    # candidate cells from its own bbox
+    result = precip_from_members(
+        manifest,
+        codec.parse,
+        meta,
         basins,
-        clip_window=window,
+        date_type,
+        errors=codec.errors,
+        label=codec.label,
         numerator=numerator,
-        grid_meta=(meta["ulx"], meta["uly"], meta["xres"], meta["yres"]),
     )
     write_basin_csvs(result, basins, out_dir)
     if write_wide:
@@ -153,7 +173,8 @@ def precip_timeseries(
     round_decimals: int | None = 3,
     grid_meta: tuple[float, float, float, float] | None = None,
 ) -> DataFrame:
-    """Area-weighted mean precipitation per basin per timestep.
+    """Area-weighted mean precipitation per basin per timestep, from any
+    long ``obs(ts, cell_row, cell_col, value)`` table.
 
     The product of ``compute_polyg_values`` (reference
     geotools/geotools.py:224-334) as one declarative plan.  ``clip_window``
@@ -171,6 +192,17 @@ def precip_timeseries(
     # but feed three subtrees: the semi-join cell set, the dirty-flag join,
     # and the weight broadcast — cache so the clip join runs once, not 3×
     fragments = pin(spatial_intersect(cells, basins, grid_meta=grid_meta).cache())
+    return _timeseries_from_fragments(obs, fragments, remove_nan, numerator, round_decimals)
+
+
+def _timeseries_from_fragments(
+    obs: DataFrame,
+    fragments: DataFrame,
+    remove_nan: bool,
+    numerator: float,
+    round_decimals: int | None,
+) -> DataFrame:
+    """A5 → A3 → A4 of ``precip_timeseries`` over cached fragments."""
     # one scan of the fact table: prune obs to the fragment-covered cells
     # (broadcast semi-join), persist the survivors — basin-covered cells are
     # a sliver of a full grid, so this is dimension-of-fact-sized — and feed
@@ -193,3 +225,98 @@ def precip_timeseries(
             "rainfall_mm", F.round("rainfall_mm", round_decimals)
         )
     return result
+
+
+def precip_from_members(
+    manifest: DataFrame,
+    parse: Callable[[bytes], np.ndarray],
+    meta: dict,
+    basins: DataFrame,
+    date_type: str = "hours",
+    errors: tuple[type[Exception], ...] = (),
+    label: str = "raster",
+    permissive: bool = False,
+    remove_nan: bool = False,
+    numerator: float = 10.0,
+    round_decimals: int | None = 3,
+) -> DataFrame:
+    """``precip_timeseries(decode_members(manifest, …), …)`` without the
+    long obs table: the same rows, straight from raster members.
+
+    ``manifest(fname, payload)`` holds the members; ``parse``/``errors``/
+    ``label``/``permissive`` are ``decode_members``' and ``date_type``
+    stamps each member from its filename (F8).  ``meta`` is the members'
+    grid (``n_rows``, ``n_cols``, ``ulx``, ``uly``, ``xres``, ``yres``,
+    row 0 = the parsed grid's row 0); a member of another shape is
+    undecodable.  ``remove_nan``, ``numerator`` and ``round_decimals``
+    mean what they mean in ``precip_timeseries``.
+
+    Passes (see the module docstring): J1 builds the cached fragments;
+    pass 1 collects the fragment cells that are NaN in any member; the
+    driver applies A5/A3 (``nan_policy_weights``); pass 2 emits per member
+    ``Σ w·v / numerator`` for each basin with kept cells — a NaN kept
+    value poisons its basin's sum, which becomes NULL (the A4 rule).  The
+    result is cached, so its sinks read it once.  Above
+    ``FUSED_MAX_FRAGMENTS`` fragments it runs the generic plan instead.
+    """
+    spark = manifest.sparkSession
+    n_rows, n_cols = int(meta["n_rows"]), int(meta["n_cols"])
+    grid_meta = (meta["ulx"], meta["uly"], meta["xres"], meta["yres"])
+    cells = create_cell_grid(spark, n_rows, n_cols, *grid_meta)
+    fragments = pin(spatial_intersect(cells, basins, grid_meta=grid_meta).cache())
+    if fragments.count() > FUSED_MAX_FRAGMENTS:
+        obs = decode_members(manifest, parse, errors, label, date_type, permissive)
+        return _timeseries_from_fragments(obs, fragments, remove_nan, numerator, round_decimals)
+
+    frags = fragments.select(
+        "basin_id", "cell_row", "cell_col", "frag_area", "cell_area"
+    ).toPandas()
+    flat = frags["cell_row"].to_numpy("int64") * n_cols + frags["cell_col"].to_numpy("int64")
+    frag_cells, cell_idx = np.unique(flat, return_inverse=True)
+    basin_ids, basin_idx = np.unique(frags["basin_id"].to_numpy(), return_inverse=True)
+    members = with_member_ts(manifest, date_type)
+    shape = (n_rows, n_cols)
+
+    def nan_cells(it):
+        seen = np.zeros(len(frag_cells), dtype=bool)
+        for _, grid in parsed_members(it, parse, errors, label, permissive, shape):
+            seen |= np.isnan(grid.ravel()[frag_cells])
+        yield pd.DataFrame({"pos": np.flatnonzero(seen).astype("int32")})
+
+    dirty = np.zeros(len(frag_cells), dtype=bool)
+    dirty[members.mapInPandas(nan_cells, "pos int").toPandas()["pos"].to_numpy()] = True
+
+    raw = frags["frag_area"].to_numpy() / frags["cell_area"].to_numpy()
+    keep, weight = nan_policy_weights(basin_idx, dirty[cell_idx], raw, remove_nan)
+    kept_cells, kept_basins = frag_cells[cell_idx[keep]], basin_idx[keep]
+    n_basins = len(basin_ids)
+    present = np.bincount(kept_basins, minlength=n_basins) > 0
+    out_ids = basin_ids[present]
+
+    def basin_means(it):
+        for ts_us, grid in parsed_members(it, parse, errors, label, permissive, shape):
+            sums = np.bincount(
+                kept_basins, weights=weight * grid.ravel()[kept_cells], minlength=n_basins
+            )
+            yield pd.DataFrame(
+                {
+                    "basin_id": out_ids,
+                    "ts_us": repeat_ts(ts_us, len(out_ids)),
+                    "rainfall_mm": sums[present] / float(numerator),
+                }
+            )
+
+    per_member = members.mapInPandas(
+        basin_means,
+        f"basin_id {fragments.schema['basin_id'].dataType.simpleString()}, "
+        "ts_us long, rainfall_mm double",
+    )
+    rain = F.when(F.isnan("rainfall_mm"), F.lit(None).cast("double")).otherwise(
+        F.col("rainfall_mm")
+    )
+    if round_decimals is not None:
+        rain = F.round(rain, round_decimals)
+    result = per_member.select(
+        "basin_id", F.timestamp_micros("ts_us").alias("ts"), rain.alias("rainfall_mm")
+    )
+    return pin(result.cache())

@@ -20,7 +20,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from radohydro_spark.schemas import OBS_SCHEMA
-from radohydro_spark.sources.manifest import decode_members
+from radohydro_spark.sources.manifest import MemberCodec, decode_members
 
 HEADER_KEYS = ("ncols", "nrows", "xllcorner", "yllcorner", "cellsize", "nodata_value")
 
@@ -68,22 +68,22 @@ def grid_meta(payload: bytes) -> dict:
     }
 
 
+def parse_member(payload: bytes) -> np.ndarray:
+    """One member payload → its 2-D grid (NaN nodata)."""
+    return parse_ascii_grid(payload)[1]
+
+
+CODEC = MemberCodec(parse_member, (KeyError, ValueError), "ASCII grid")
+
+
 def decode_ascii_grids(
     manifest: DataFrame, date_type: str = "hours", permissive: bool = False
 ) -> DataFrame:
     """manifest(fname, payload) → obs(ts, cell_row, cell_col, value).
 
     One-to-many decode; the timestamp comes from the member filename (F8).
-    NaN → NULL happens in the Arrow transfer (NaN in a float column maps to
-    null after the explicit cast below).  ``permissive=True`` skips
-    undecodable members instead of failing the job — at archive scale a
-    handful of corrupt tar members must not kill a backfill.
+    NaN → NULL after the decode.  ``permissive=True`` skips undecodable
+    members instead of failing the job — at archive scale a handful of
+    corrupt tar members must not kill a backfill.
     """
-    return decode_members(
-        manifest,
-        lambda payload: parse_ascii_grid(payload)[1],
-        (KeyError, ValueError),
-        "ASCII grid",
-        date_type,
-        permissive,
-    )
+    return decode_members(manifest, *CODEC, date_type, permissive)

@@ -25,7 +25,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
-from radohydro_spark.sources.manifest import decode_members
+from radohydro_spark.sources.manifest import MemberCodec, decode_members
 
 # TIFF tag ids
 _T_WIDTH, _T_LENGTH, _T_BITS, _T_COMPRESSION, _T_PHOTOMETRIC = 256, 257, 258, 259, 262
@@ -304,6 +304,14 @@ def geotiff_meta(payload: bytes) -> dict:
     return meta
 
 
+def parse_member(payload: bytes) -> np.ndarray:
+    """One member payload → its 2-D grid (NaN nodata)."""
+    return parse_geotiff(payload)[1]
+
+
+CODEC = MemberCodec(parse_member, (ValueError, struct.error, zlib.error), "GeoTIFF")
+
+
 def decode_geotiffs(
     manifest: DataFrame, date_type: str = "hours", permissive: bool = False
 ) -> DataFrame:
@@ -311,11 +319,4 @@ def decode_geotiffs(
 
     Same contract as ``decode_ascii_grids`` — GeoTIFF mirrors plug into
     ``precip_timeseries`` unchanged."""
-    return decode_members(
-        manifest,
-        lambda payload: parse_geotiff(payload)[1],
-        (ValueError, struct.error, zlib.error),
-        "GeoTIFF",
-        date_type,
-        permissive,
-    )
+    return decode_members(manifest, *CODEC, date_type, permissive)

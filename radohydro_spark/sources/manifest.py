@@ -17,7 +17,7 @@ import io
 import os
 import sys
 import tarfile
-from typing import Callable, Iterator
+from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -151,6 +151,70 @@ DWD_PATHS = {
 }
 
 
+def with_member_ts(manifest: DataFrame, date_type: str) -> DataFrame:
+    """manifest(fname, payload) → (fname, ts_us, payload): each member's
+    timestamp (F8) parsed ONCE on its manifest row, as epoch microseconds
+    a member UDF repeats instead of re-deriving per emitted row."""
+    return manifest.select(
+        "fname",
+        F.unix_micros(filename_to_ts("fname", date_type)).alias("ts_us"),
+        "payload",
+    )
+
+
+class MemberCodec(NamedTuple):
+    """How one raster source decodes a member: ``parse`` turns a payload
+    into its 2-D grid (row 0 at the top, NaN nodata), ``errors`` are the
+    failures that mean a corrupt member, ``label`` names the format in
+    error messages."""
+
+    parse: Callable[[bytes], np.ndarray]
+    errors: tuple[type[Exception], ...]
+    label: str
+
+
+class MemberShapeError(ValueError):
+    """A member grid whose shape differs from the run's grid."""
+
+
+def parsed_members(
+    batches: Iterator[pd.DataFrame],
+    parse: Callable[[bytes], np.ndarray],
+    errors: tuple[type[Exception], ...],
+    label: str,
+    permissive: bool,
+    shape: tuple[int, int] | None = None,
+) -> Iterator[tuple[object, np.ndarray]]:
+    """(ts_us, grid) per decodable member of ``with_member_ts``
+    batches — the one member loop of every raster UDF.
+
+    A parse failure of a type in ``errors``, or a grid whose shape is not
+    ``shape``, is re-raised as ``undecodable <label> member <fname>``, or
+    with ``permissive=True`` the member is skipped (the engine form of the
+    reference's warn-and-continue prints, radohydro.py:141-142).
+    """
+    for pdf in batches:
+        for fname, ts_us, payload in zip(pdf["fname"], pdf["ts_us"], pdf["payload"]):
+            try:
+                data = parse(bytes(payload))
+                if shape is not None and data.shape != shape:
+                    raise MemberShapeError(f"grid shape {data.shape}, expected {shape}")
+            except errors + (MemberShapeError,) as exc:
+                if permissive:
+                    print(f"skipping undecodable member {fname}: {exc}", file=sys.stderr)
+                    continue
+                raise ValueError(f"undecodable {label} member {fname}: {exc}") from exc
+            yield ts_us, data
+
+
+def repeat_ts(ts_us, n: int):
+    """One member's epoch-microsecond stamp as an ``n``-row column (NULL
+    when its filename carries no timestamp)."""
+    if pd.isna(ts_us):
+        return pd.array([None] * n, dtype="Int64")
+    return np.full(n, int(ts_us), dtype="int64")
+
+
 def decode_members(
     manifest: DataFrame,
     parse: Callable[[bytes], np.ndarray],
@@ -163,38 +227,29 @@ def decode_members(
     long row per cell of each member raster (row 0 at the top), the
     timestamp from the member filename (F8), NaN → NULL.
 
-    ``parse`` decodes one payload into its 2-D grid.  A parse failure of
-    a type in ``errors`` is re-raised as ``undecodable <label> member
-    <fname>``, or with ``permissive=True`` the member is skipped (the
-    engine form of the reference's warn-and-continue prints,
-    radohydro.py:141-142).
+    ``parse`` decodes one payload into its 2-D grid; failures follow
+    :func:`parsed_members`.  The timestamp is parsed once per member on
+    its manifest row and repeated as one int64 column, so no per-cell
+    string or per-cell ``filename_to_ts`` is ever built.
     """
 
     def rows(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for fname, payload in zip(pdf["fname"], pdf["payload"]):
-                try:
-                    data = parse(bytes(payload))
-                except errors as exc:
-                    if permissive:
-                        print(f"skipping undecodable member {fname}: {exc}", file=sys.stderr)
-                        continue
-                    raise ValueError(f"undecodable {label} member {fname}: {exc}") from exc
-                nrows, ncols = data.shape
-                yield pd.DataFrame(
-                    {
-                        "fname": fname,
-                        "cell_row": np.repeat(np.arange(nrows, dtype="int32"), ncols),
-                        "cell_col": np.tile(np.arange(ncols, dtype="int32"), nrows),
-                        "value": data.ravel(),
-                    }
-                )
+        for ts_us, data in parsed_members(it, parse, errors, label, permissive):
+            nrows, ncols = data.shape
+            yield pd.DataFrame(
+                {
+                    "ts_us": repeat_ts(ts_us, nrows * ncols),
+                    "cell_row": np.repeat(np.arange(nrows, dtype="int32"), ncols),
+                    "cell_col": np.tile(np.arange(ncols, dtype="int32"), nrows),
+                    "value": data.ravel(),
+                }
+            )
 
-    decoded = manifest.select("fname", "payload").mapInPandas(
-        rows, schema="fname string, cell_row int, cell_col int, value double"
+    decoded = with_member_ts(manifest, date_type).mapInPandas(
+        rows, schema="ts_us long, cell_row int, cell_col int, value double"
     )
     return decoded.select(
-        filename_to_ts("fname", date_type).alias("ts"),
+        F.timestamp_micros("ts_us").alias("ts"),
         "cell_row",
         "cell_col",
         F.when(F.isnan("value"), F.lit(None).cast("double"))

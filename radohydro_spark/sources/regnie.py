@@ -18,12 +18,14 @@ emitting long obs rows; -999 → NULL at ingest.
 
 from __future__ import annotations
 
+import functools
 import gzip
+
 import numpy as np
 
 from pyspark.sql import DataFrame
 
-from radohydro_spark.sources.manifest import decode_members
+from radohydro_spark.sources.manifest import MemberCodec, decode_members
 
 REGNIE_COLS = 611
 REGNIE_ROWS = 971
@@ -116,6 +118,16 @@ def decode_regnie_day(
     return np.where(data == REGNIE_NAN, np.nan, data)
 
 
+def regnie_codec(
+    compat_heuristic: bool = False, no_per_line: int = REGNIE_COLS
+) -> MemberCodec:
+    """The REGNIE member codec for one parse configuration."""
+    parse = functools.partial(
+        decode_regnie_day, compat_heuristic=compat_heuristic, no_per_line=no_per_line
+    )
+    return MemberCodec(parse, (), "REGNIE")
+
+
 def decode_regnie(
     manifest: DataFrame,
     compat_heuristic: bool = False,
@@ -126,12 +138,4 @@ def decode_regnie(
     Day-file names are ``raYYMMDD...`` (two-digit year, reference
     radohydro.py:434).
     """
-    return decode_members(
-        manifest,
-        lambda payload: decode_regnie_day(
-            payload, compat_heuristic=compat_heuristic, no_per_line=no_per_line
-        ),
-        (),
-        "REGNIE",
-        "days2",
-    )
+    return decode_members(manifest, *regnie_codec(compat_heuristic, no_per_line), "days2")

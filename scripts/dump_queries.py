@@ -31,7 +31,8 @@ def describe(name: str, fn) -> tuple[str, str]:
     return entry, ""
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md's full text, from the query registry and its docstrings."""
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     lines = [
@@ -49,9 +50,13 @@ def main() -> None:
         oracle = "exact" if name in oracles else "rows-only (weak)"
         desc = desc.replace("|", "\\|")
         lines.append(f"| {i} | `{name}` | {oracle} | `{entry}` | {desc} |")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
     with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote QUERIES.md ({len(qs)} queries)")
+        f.write(render())
+    print(f"wrote QUERIES.md ({len(entrymod.queries())} queries)")
 
 
 if __name__ == "__main__":

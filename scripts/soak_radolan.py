@@ -2,15 +2,16 @@
 through the real ingest entry.
 
 One day (``n_days=1``) is the reference's actual daily workload
-(radohydro.py:150,181; ~19.4M obs rows).  The month (30 days, ~583M
-decoded obs rows) is ~1.4× past the reference's documented cliff in
+(radohydro.py:150,181; ~19.4M cells).  The month (30 days, ~583M
+decoded cells) is ~1.4× past the reference's documented cliff in
 timestep count: it np.dstacks every decoded grid into one dense in-RAM
 array and ``sys.exit``s when that outgrows memory (radohydro.py:257-260,
-README.md:17).  ``radohydro_run`` runs manifest → date filter → ASCII
-decode UDF → cell grid → spatial join → NULL policy → weights →
-weighted agg → per-basin CSV + wide GeoParquet sinks; nothing is ever
-stacked dense, so memory is bounded by partition size, not by the
-number of timesteps.
+README.md:17).  ``radohydro_run`` runs manifest → date filter → cell
+grid → spatial join → the fused member kernel (a NaN scan of the
+fragment cells, NULL policy and weights on the driver, then one
+per-basin ``np.bincount`` per raster) → per-basin CSV + wide GeoParquet
+sinks; nothing is ever stacked dense, so memory is bounded by one
+raster per task, not by the number of timesteps.
 
     python scripts/soak_radolan.py [n_days] [n_basins]   # default 30 20
 
@@ -72,7 +73,7 @@ def main() -> None:
         date_type="minutes",
     ).count()
     measure(tr, f"radohydro_run {n_days} days {n_basins} basins", run, lambda n: {
-        "obs_rows_decoded": n_files * N_ROWS * N_COLS, "result_rows": n,
+        "cells_decoded": n_files * N_ROWS * N_COLS, "result_rows": n,
         "basin_csvs": sum(f.endswith(".csv") for f in os.listdir(out)),
     })
     shutil.rmtree(mirror, ignore_errors=True)

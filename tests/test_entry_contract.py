@@ -58,3 +58,21 @@ def test_query_notes_reference_real_queries():
         if n not in entry.QUERY_NOTES and not getattr(fn, "__doc__", None)
     ]
     assert not undescribed, f"queries with no description: {undescribed}"
+
+
+def test_queries_md_is_rendered_from_the_registry():
+    """QUERIES.md is generated, never hand-edited: it must equal what
+    ``scripts/dump_queries.py`` renders from queries() and the query
+    docstrings today.  No Spark."""
+    import importlib.util
+    from pathlib import Path
+
+    repo = Path(entry.__file__).resolve().parent
+    spec = importlib.util.spec_from_file_location(
+        "dump_queries", repo / "scripts" / "dump_queries.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert (repo / "QUERIES.md").read_text() == mod.render(), (
+        "QUERIES.md is stale: run python scripts/dump_queries.py"
+    )

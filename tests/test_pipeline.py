@@ -292,3 +292,133 @@ def test_api_index_long_horizon_finite(spark):
         assert np.isfinite(got).all(), f"key {key}: non-finite api"
         rel = np.abs(got - ref) / np.maximum(np.abs(ref), 1e-12)
         assert rel.max() < 1e-9, f"key {key}: max rel err {rel.max()}"
+
+
+class TestFusedMembers:
+    """``precip_from_members`` against ``precip_timeseries`` over
+    ``decode_members`` on the same ESRI-ASCII members: same rows, same
+    ``ts``, equal after rounding."""
+
+    CELL = 1000.0
+    # a 4 x 3 north-up grid; its upper-left corner
+    ULX, ULY = 406000.0, 5622800.0
+
+    def _meta(self, west_positive=False):
+        if west_positive:  # column 0 at the EAST edge, columns run west
+            return {"n_rows": 4, "n_cols": 3, "ulx": self.ULX + 3 * self.CELL,
+                    "uly": self.ULY, "xres": -self.CELL, "yres": -self.CELL}
+        return {"n_rows": 4, "n_cols": 3, "ulx": self.ULX, "uly": self.ULY,
+                "xres": self.CELL, "yres": -self.CELL}
+
+    def _member(self, grid):
+        rows = [" ".join("-1" if v != v else str(int(v)) for v in row) for row in grid]
+        head = (f"ncols {grid.shape[1]}\nnrows {grid.shape[0]}\nxllcorner {self.ULX}\n"
+                f"yllcorner {self.ULY - grid.shape[0] * self.CELL}\n"
+                f"cellsize {self.CELL}\nNODATA_value -1\n")
+        return (head + "\n".join(rows)).encode("ascii")
+
+    def _manifest(self, spark, n_ts=3, dirty=(), corrupt=False):
+        """``n_ts`` hourly members; ``dirty`` holds (hour, row, col) NaN cells."""
+        import numpy as np
+
+        members = []
+        for h in range(n_ts):
+            grid = (np.arange(12, dtype="float64").reshape(4, 3) * 7 + h * 13) % 50
+            for hh, r, c in dirty:
+                if hh == h:
+                    grid[r, c] = np.nan
+            members.append((f"RW-20240101{h:02d}00.asc", bytearray(self._member(grid))))
+        if corrupt:
+            members.append(("RW-202401010500.asc", bytearray(b"ncols 3\nnrows 4\ngarbage")))
+        return spark.createDataFrame(members, "fname string, payload binary")
+
+    def _basins(self, spark):
+        x, y, c = self.ULX, self.ULY, self.CELL
+        return _basins(spark, [
+            # cells (row 0, cols 0-1) + a 40% sliver of (row 1, cols 0-1)
+            (1, (x + 100.0, y - 1400.0, x + 1900.0, y)),
+            # inside cell (row 2, col 2) only
+            (2, (x + 2 * c + 200.0, y - 3 * c + 200.0, x + 3 * c - 200.0, y - 2 * c - 200.0)),
+            # the whole grid, and past its west edge
+            (3, (x - 500.0, y - 4 * c, x + 3 * c, y)),
+        ])
+
+    def _both(self, spark, manifest, basins, meta, **kw):
+        from radohydro_spark.plans.pipeline import precip_from_members
+        from radohydro_spark.sources.ascii_grid import CODEC, decode_ascii_grids
+
+        gm = (meta["ulx"], meta["uly"], meta["xres"], meta["yres"])
+        permissive = kw.pop("permissive", False)
+        fused = precip_from_members(
+            manifest, CODEC.parse, meta, basins, "minutes", CODEC.errors, CODEC.label,
+            permissive=permissive, **kw,
+        )
+        cells = create_cell_grid(spark, meta["n_rows"], meta["n_cols"], *gm)
+        generic = precip_timeseries(
+            decode_ascii_grids(manifest, "minutes", permissive=permissive),
+            cells, basins, grid_meta=gm, **kw,
+        )
+        as_dict = lambda df: {(r.basin_id, r.ts): r.rainfall_mm for r in df.collect()}  # noqa: E731
+        got, want = as_dict(fused), as_dict(generic)
+        assert got == want
+        return got
+
+    def test_partly_dirty_basin(self, spark):
+        # basin 1's cell (0, 0) is NaN at hour 1: dropped at every hour,
+        # the weights renormalize over its clean cells
+        got = self._both(spark, self._manifest(spark, dirty=[(1, 0, 0)]),
+                         self._basins(spark), self._meta())
+        assert len(got) == 9 and all(v is not None for v in got.values())
+
+    def test_all_dirty_basin_null_rows(self, spark):
+        # basin 2's only cell (2, 2) is NaN at hour 2: kept, NULL at hour 2
+        got = self._both(spark, self._manifest(spark, dirty=[(2, 2, 2)]),
+                         self._basins(spark), self._meta())
+        assert got[(2, T0 + dt.timedelta(hours=2))] is None
+        assert got[(2, T0)] is not None
+
+    def test_remove_nan(self, spark):
+        got = self._both(spark, self._manifest(spark, dirty=[(2, 2, 2), (0, 0, 0)]),
+                         self._basins(spark), self._meta(), remove_nan=True)
+        assert {b for b, _ in got} == {1, 3}  # basin 2 lost its only cell
+
+    def test_west_positive_grid(self, spark):
+        got = self._both(spark, self._manifest(spark, dirty=[(1, 0, 0)]),
+                         self._basins(spark), self._meta(west_positive=True))
+        assert {b for b, _ in got} == {1, 2, 3}
+
+    def test_empty_date_range(self, spark):
+        from radohydro_spark.sources.manifest import filter_members_by_range
+
+        manifest = filter_members_by_range(
+            self._manifest(spark), "2023-01-01 00:00:00", "2023-01-02 00:00:00", "minutes"
+        )
+        assert self._both(spark, manifest, self._basins(spark), self._meta()) == {}
+
+    def test_permissive_corrupt_member(self, spark):
+        from radohydro_spark.plans.pipeline import precip_from_members
+        from radohydro_spark.sources.ascii_grid import CODEC
+
+        manifest = self._manifest(spark, corrupt=True)
+        got = self._both(spark, manifest, self._basins(spark), self._meta(), permissive=True)
+        assert len(got) == 9
+        with pytest.raises(Exception, match="undecodable ASCII grid member RW-202401010500"):
+            precip_from_members(
+                manifest, CODEC.parse, self._meta(), self._basins(spark), "minutes",
+                CODEC.errors, CODEC.label,
+            ).collect()
+
+    @pytest.mark.parametrize("gate", [0, 1_000_000])
+    def test_fragment_gate(self, spark, monkeypatch, gate):
+        """Above ``FUSED_MAX_FRAGMENTS`` the generic plan runs (its
+        result is not cached); below it the fused kernel (cached)."""
+        import radohydro_spark.plans.pipeline as pipeline
+        from radohydro_spark.sources.ascii_grid import CODEC
+
+        monkeypatch.setattr(pipeline, "FUSED_MAX_FRAGMENTS", gate)
+        manifest, basins = self._manifest(spark, dirty=[(1, 0, 0)]), self._basins(spark)
+        self._both(spark, manifest, basins, self._meta())
+        res = pipeline.precip_from_members(
+            manifest, CODEC.parse, self._meta(), basins, "minutes", CODEC.errors, CODEC.label
+        )
+        assert res.is_cached == (gate > 0)

@@ -70,6 +70,16 @@ class TestAsciiGrid:
         assert rows[(1, 1)]["value"] is None  # nodata -> NULL
         assert rows[(0, 0)]["ts"] == dt.datetime(2024, 1, 1, 1, 50)
 
+    def test_decode_stamps_each_member_once(self, spark):
+        """Every cell of a member carries that member's stamp."""
+        m = _manifest(
+            spark, [("RW-20240101-0150.asc", ASC_3x3), ("RW-20240102-2300.asc", ASC_3x3)]
+        )
+        stamps = [r["ts"] for r in decode_ascii_grids(m, date_type="minutes").collect()]
+        assert sorted(stamps) == (
+            [dt.datetime(2024, 1, 1, 1, 50)] * 9 + [dt.datetime(2024, 1, 2, 23, 0)] * 9
+        )
+
 
 class TestRegnie:
     def _line(self, vals, width=4):

@@ -252,10 +252,7 @@ def _north_up_meta(g) -> dict:
 def _member_precip(manifest, codec, g, basins, date_type: str) -> DataFrame:
     """The fused member kernel over north-up members of grid ``g``, in
     the precip queries' (basin_id, ts string, rainfall_mm) shape."""
-    res = precip_from_members(
-        manifest, codec.parse, _north_up_meta(g), basins, date_type,
-        errors=codec.errors, label=codec.label,
-    )
+    res = precip_from_members(manifest, codec, _north_up_meta(g), basins, date_type)
     return res.select(
         "basin_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),

@@ -19,7 +19,6 @@ Semantics pinned from reference geotools/geotools.py:254-262 (see SURVEY.md
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -56,7 +55,16 @@ def apply_nan_policy(
     if not pruned:
         frag_cells = fragments.select("cell_row", "cell_col").distinct()
         obs = obs.join(F.broadcast(frag_cells), ["cell_row", "cell_col"], "left_semi")
-    flags = cell_dirty_flags(obs)
+    return drop_dirty_cells(fragments, cell_dirty_flags(obs), remove_nan)
+
+
+def drop_dirty_cells(
+    fragments: DataFrame, flags: DataFrame, remove_nan: bool = False
+) -> DataFrame:
+    """A5 given per-cell flags ``(cell_row, cell_col, is_dirty)``, one row
+    per cell at most; a fragment cell without a flag is clean.  The fused
+    member kernel (plans/pipeline.py ``precip_from_members``) feeds it
+    the dirty cells its first pass over the members found."""
     fb = fragments.join(F.broadcast(flags), ["cell_row", "cell_col"], "left").fillna(
         {"is_dirty": 0}
     )
@@ -81,25 +89,3 @@ def basin_weights(fragments: DataFrame) -> DataFrame:
     raw = F.col("frag_area") / F.col("cell_area")
     total = F.sum(raw).over(W.partitionBy("basin_id"))
     return fragments.withColumn("weight", raw / total)
-
-
-def nan_policy_weights(
-    basin_idx: np.ndarray, dirty: np.ndarray, raw: np.ndarray, remove_nan: bool = False
-) -> tuple[np.ndarray, np.ndarray]:
-    """A5 then A3 over fragments collected to the driver — the same law as
-    ``apply_nan_policy`` + ``basin_weights``, for the fused member kernel
-    (plans/pipeline.py ``precip_from_members``).
-
-    ``basin_idx`` is each fragment's dense basin index, ``dirty`` its
-    cell's dirty flag and ``raw`` its ``frag_area / cell_area``.  Returns
-    the kept-fragment mask and the kept fragments' normalized weights.
-    """
-    n_basins = int(basin_idx.max()) + 1 if len(basin_idx) else 0
-    clean = ~dirty
-    keep = clean
-    if not remove_nan:
-        n_clean = np.bincount(basin_idx, weights=clean, minlength=n_basins)
-        keep = clean | (n_clean[basin_idx] == 0)
-    kept = basin_idx[keep]
-    total = np.bincount(kept, weights=raw[keep], minlength=n_basins)
-    return keep, raw[keep] / total[kept]

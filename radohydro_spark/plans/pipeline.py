@@ -20,11 +20,13 @@ timestep:
   members (what ``radohydro_run`` uses): J1 on the cell dimension, then
   two ``mapInPandas`` passes over the manifest that each parse a member
   and read only its fragment cells.  Pass 1 reports which fragment cells
-  are ever NaN; the driver applies A5 and A3 to the collected fragments;
-  pass 2 turns each member into its n_basins weighted means with one
-  ``np.bincount``.  No per-cell row, persist or shuffle exists at any
-  point: at tiny group cardinality a direct-indexed array aggregate beats
-  a hash aggregate (EDBT'19, PAPERS.md).
+  are ever NaN; A5 and A3 run on the fragments as in the generic plan and
+  the driver collects the weights; pass 2 turns each member into its
+  n_basins weighted means with one ``np.bincount``.  No per-cell row or
+  fact-sized persist exists at any point, and only dimension-sized rows
+  (NaN flags, fragments) are shuffled: at tiny group cardinality a
+  direct-indexed array aggregate beats a hash aggregate (EDBT'19,
+  PAPERS.md).
 
 The reference's explicit IR hand-offs (dense stack → wide GDF → fragment GDF
 → ndarray) become logical-plan nodes; ``del stack`` (radohydro.py:531)
@@ -32,8 +34,6 @@ becomes lazy evaluation.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -50,25 +50,18 @@ from radohydro_spark.operators.spatial import (
 from radohydro_spark.operators.weights import (
     apply_nan_policy,
     basin_weights,
-    nan_policy_weights,
+    drop_dirty_cells,
 )
 # release_persisted is re-exported: the bench and harnesses import it here
 from radohydro_spark.session import pin, release_persisted  # noqa: F401
 from radohydro_spark.sources.manifest import (
-    decode_members,
+    MemberCodec,
     filter_members_by_range,
     local_manifest,
     parsed_members,
     repeat_ts,
     with_member_ts,
 )
-
-# Fragment count above which precip_from_members hands a run to the
-# decode_members -> precip_timeseries plan.  The fused kernel ships each
-# kept fragment's cell index, basin index and weight (24 B) to every task
-# in its UDF closure; the cap holds that near the 64 MB
-# autoBroadcastJoinThreshold get_spark sets.
-FUSED_MAX_FRAGMENTS = 2_500_000
 
 
 def radohydro_run(
@@ -140,16 +133,7 @@ def radohydro_run(
     # no buffered clip window (F3): the kernel reads only fragment cells,
     # a tighter clip than any bbox window, and J1 derives each basin's
     # candidate cells from its own bbox
-    result = precip_from_members(
-        manifest,
-        codec.parse,
-        meta,
-        basins,
-        date_type,
-        errors=codec.errors,
-        label=codec.label,
-        numerator=numerator,
-    )
+    result = precip_from_members(manifest, codec, meta, basins, date_type, numerator)
     write_basin_csvs(result, basins, out_dir)
     if write_wide:
         if wide_format == "shapefile":
@@ -192,17 +176,6 @@ def precip_timeseries(
     # but feed three subtrees: the semi-join cell set, the dirty-flag join,
     # and the weight broadcast — cache so the clip join runs once, not 3×
     fragments = pin(spatial_intersect(cells, basins, grid_meta=grid_meta).cache())
-    return _timeseries_from_fragments(obs, fragments, remove_nan, numerator, round_decimals)
-
-
-def _timeseries_from_fragments(
-    obs: DataFrame,
-    fragments: DataFrame,
-    remove_nan: bool,
-    numerator: float,
-    round_decimals: int | None,
-) -> DataFrame:
-    """A5 → A3 → A4 of ``precip_timeseries`` over cached fragments."""
     # one scan of the fact table: prune obs to the fragment-covered cells
     # (broadcast semi-join), persist the survivors — basin-covered cells are
     # a sliver of a full grid, so this is dimension-of-fact-sized — and feed
@@ -229,80 +202,80 @@ def _timeseries_from_fragments(
 
 def precip_from_members(
     manifest: DataFrame,
-    parse: Callable[[bytes], np.ndarray],
+    codec: MemberCodec,
     meta: dict,
     basins: DataFrame,
-    date_type: str = "hours",
-    errors: tuple[type[Exception], ...] = (),
-    label: str = "raster",
-    permissive: bool = False,
-    remove_nan: bool = False,
+    date_type: str,
     numerator: float = 10.0,
-    round_decimals: int | None = 3,
 ) -> DataFrame:
-    """``precip_timeseries(decode_members(manifest, …), …)`` without the
-    long obs table: the same rows, straight from raster members.
+    """``precip_timeseries(decode_members(manifest, *codec, date_type), …)``
+    without the long obs table: the same rows, straight from raster
+    members.
 
-    ``manifest(fname, payload)`` holds the members; ``parse``/``errors``/
-    ``label``/``permissive`` are ``decode_members``' and ``date_type``
-    stamps each member from its filename (F8).  ``meta`` is the members'
-    grid (``n_rows``, ``n_cols``, ``ulx``, ``uly``, ``xres``, ``yres``,
-    row 0 = the parsed grid's row 0); a member of another shape is
-    undecodable.  ``remove_nan``, ``numerator`` and ``round_decimals``
-    mean what they mean in ``precip_timeseries``.
+    ``manifest(fname, payload)`` holds the members, decoded strictly by
+    ``codec``; ``date_type`` stamps each member from its filename (F8).
+    ``meta`` is the members' grid (``n_rows``, ``n_cols``, ``ulx``,
+    ``uly``, ``xres``, ``yres``, row 0 = the parsed grid's row 0); a
+    member of another shape is undecodable.  ``numerator`` means what it
+    means in ``precip_timeseries``; the NaN policy is its default and
+    ``rainfall_mm`` is rounded to 3 decimals.
 
     Passes (see the module docstring): J1 builds the cached fragments;
-    pass 1 collects the fragment cells that are NaN in any member; the
-    driver applies A5/A3 (``nan_policy_weights``); pass 2 emits per member
-    ``Σ w·v / numerator`` for each basin with kept cells — a NaN kept
-    value poisons its basin's sum, which becomes NULL (the A4 rule).  The
-    result is cached, so its sinks read it once.  Above
-    ``FUSED_MAX_FRAGMENTS`` fragments it runs the generic plan instead.
+    pass 1 finds the fragment cells that are NaN in any member; A5/A3
+    (``drop_dirty_cells``, ``basin_weights``) turn them into weights the
+    driver collects; pass 2 emits per member ``Σ w·v / numerator`` for
+    each basin with fragments — a NaN kept value poisons its basin's sum,
+    which becomes NULL (the A4 rule).  The result is cached, so its sinks
+    read it once.
     """
     spark = manifest.sparkSession
     n_rows, n_cols = int(meta["n_rows"]), int(meta["n_cols"])
     grid_meta = (meta["ulx"], meta["uly"], meta["xres"], meta["yres"])
     cells = create_cell_grid(spark, n_rows, n_cols, *grid_meta)
     fragments = pin(spatial_intersect(cells, basins, grid_meta=grid_meta).cache())
-    if fragments.count() > FUSED_MAX_FRAGMENTS:
-        obs = decode_members(manifest, parse, errors, label, date_type, permissive)
-        return _timeseries_from_fragments(obs, fragments, remove_nan, numerator, round_decimals)
 
-    frags = fragments.select(
-        "basin_id", "cell_row", "cell_col", "frag_area", "cell_area"
-    ).toPandas()
-    flat = frags["cell_row"].to_numpy("int64") * n_cols + frags["cell_col"].to_numpy("int64")
-    frag_cells, cell_idx = np.unique(flat, return_inverse=True)
-    basin_ids, basin_idx = np.unique(frags["basin_id"].to_numpy(), return_inverse=True)
+    def flat_cells(pdf: pd.DataFrame) -> np.ndarray:
+        return pdf["cell_row"].to_numpy("int64") * n_cols + pdf["cell_col"].to_numpy("int64")
+
+    frag_cells = np.unique(flat_cells(fragments.select("cell_row", "cell_col").toPandas()))
     members = with_member_ts(manifest, date_type)
     shape = (n_rows, n_cols)
 
-    def nan_cells(it):
+    def dirty_cells(it):
         seen = np.zeros(len(frag_cells), dtype=bool)
-        for _, grid in parsed_members(it, parse, errors, label, permissive, shape):
+        for _, grid in parsed_members(it, *codec, False, shape):
             seen |= np.isnan(grid.ravel()[frag_cells])
-        yield pd.DataFrame({"pos": np.flatnonzero(seen).astype("int32")})
+        flat = frag_cells[seen]
+        yield pd.DataFrame(
+            {
+                "cell_row": (flat // n_cols).astype("int32"),
+                "cell_col": (flat % n_cols).astype("int32"),
+                "is_dirty": np.ones(len(flat), dtype="int32"),
+            }
+        )
 
-    dirty = np.zeros(len(frag_cells), dtype=bool)
-    dirty[members.mapInPandas(nan_cells, "pos int").toPandas()["pos"].to_numpy()] = True
-
-    raw = frags["frag_area"].to_numpy() / frags["cell_area"].to_numpy()
-    keep, weight = nan_policy_weights(basin_idx, dirty[cell_idx], raw, remove_nan)
-    kept_cells, kept_basins = frag_cells[cell_idx[keep]], basin_idx[keep]
+    flags = members.mapInPandas(
+        dirty_cells, "cell_row int, cell_col int, is_dirty int"
+    ).distinct()
+    weights = (
+        basin_weights(drop_dirty_cells(fragments, flags))
+        .select("basin_id", "cell_row", "cell_col", "weight")
+        .toPandas()
+    )
+    kept_cells, weight = flat_cells(weights), weights["weight"].to_numpy()
+    basin_ids, basin_idx = np.unique(weights["basin_id"].to_numpy(), return_inverse=True)
     n_basins = len(basin_ids)
-    present = np.bincount(kept_basins, minlength=n_basins) > 0
-    out_ids = basin_ids[present]
 
     def basin_means(it):
-        for ts_us, grid in parsed_members(it, parse, errors, label, permissive, shape):
+        for ts_us, grid in parsed_members(it, *codec, False, shape):
             sums = np.bincount(
-                kept_basins, weights=weight * grid.ravel()[kept_cells], minlength=n_basins
+                basin_idx, weights=weight * grid.ravel()[kept_cells], minlength=n_basins
             )
             yield pd.DataFrame(
                 {
-                    "basin_id": out_ids,
-                    "ts_us": repeat_ts(ts_us, len(out_ids)),
-                    "rainfall_mm": sums[present] / float(numerator),
+                    "basin_id": basin_ids,
+                    "ts_us": repeat_ts(ts_us, n_basins),
+                    "rainfall_mm": sums / float(numerator),
                 }
             )
 
@@ -314,9 +287,9 @@ def precip_from_members(
     rain = F.when(F.isnan("rainfall_mm"), F.lit(None).cast("double")).otherwise(
         F.col("rainfall_mm")
     )
-    if round_decimals is not None:
-        rain = F.round(rain, round_decimals)
     result = per_member.select(
-        "basin_id", F.timestamp_micros("ts_us").alias("ts"), rain.alias("rainfall_mm")
+        "basin_id",
+        F.timestamp_micros("ts_us").alias("ts"),
+        F.round(rain, 3).alias("rainfall_mm"),
     )
     return pin(result.cache())

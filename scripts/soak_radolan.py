@@ -8,7 +8,7 @@ timestep count: it np.dstacks every decoded grid into one dense in-RAM
 array and ``sys.exit``s when that outgrows memory (radohydro.py:257-260,
 README.md:17).  ``radohydro_run`` runs manifest → date filter → cell
 grid → spatial join → the fused member kernel (a NaN scan of the
-fragment cells, NULL policy and weights on the driver, then one
+fragment cells, NULL policy and weights on the fragments, then one
 per-basin ``np.bincount`` per raster) → per-basin CSV + wide GeoParquet
 sinks; nothing is ever stacked dense, so memory is bounded by one
 raster per task, not by the number of timesteps.

@@ -1,10 +1,12 @@
 """End-to-end soak: a REGNIE month through the fixed-width decode path.
 
 Synthesizes 31 gzipped fixed-width day files (971 x 611 grid, the real
-REGNIE shape, reference radohydro.py:95,392-395; ~18.4M obs rows for
-the month) and runs ``radohydro_run(source='regnie')``: manifest →
-raYYMMDD date filter → gunzip + fixed-width decode UDF (S7) →
-hard-coded lon/lat grid → spatial pipeline → sinks.
+REGNIE shape, reference radohydro.py:95,392-395; ~18.4M cells for the
+month) and runs ``radohydro_run(source='regnie')``: manifest →
+raYYMMDD date filter → hard-coded lon/lat grid → spatial join → the
+fused member kernel (gunzip + fixed-width parse (S7) per day, a NaN scan
+of the fragment cells, NULL policy and weights on the fragments, then
+one per-basin ``np.bincount`` per day) → sinks.
 
     python scripts/soak_regnie_month.py [n_basins]
 """
@@ -27,7 +29,9 @@ def synth_mirror(mirror: str, n_rows: int, n_cols: int) -> int:
     for day in range(1, 32):
         nod = ((r * 13 + c * 7) % 5 == 0) & ((day + r + c) % 8 == 0)
         vals = np.where(nod, -999, (r + c + day * 3) % 1200).astype(int)
-        payload = gzip.compress("\n".join("".join(f"{v:4d}" for v in row) for row in vals).encode())
+        body = "\n".join("".join(f"{v:4d}" for v in row) for row in vals)
+        # a real day file ends in a metadata line, which the decoder drops
+        payload = gzip.compress((body + "\nREGNIE synthetic trailer metadata line\n").encode())
         with open(os.path.join(mirror, f"ra2401{day:02d}.gz"), "wb") as f:
             f.write(payload)
     return 31

@@ -343,20 +343,15 @@ class TestFusedMembers:
             (3, (x - 500.0, y - 4 * c, x + 3 * c, y)),
         ])
 
-    def _both(self, spark, manifest, basins, meta, **kw):
+    def _both(self, spark, manifest, basins, meta):
         from radohydro_spark.plans.pipeline import precip_from_members
         from radohydro_spark.sources.ascii_grid import CODEC, decode_ascii_grids
 
         gm = (meta["ulx"], meta["uly"], meta["xres"], meta["yres"])
-        permissive = kw.pop("permissive", False)
-        fused = precip_from_members(
-            manifest, CODEC.parse, meta, basins, "minutes", CODEC.errors, CODEC.label,
-            permissive=permissive, **kw,
-        )
+        fused = precip_from_members(manifest, CODEC, meta, basins, "minutes")
         cells = create_cell_grid(spark, meta["n_rows"], meta["n_cols"], *gm)
         generic = precip_timeseries(
-            decode_ascii_grids(manifest, "minutes", permissive=permissive),
-            cells, basins, grid_meta=gm, **kw,
+            decode_ascii_grids(manifest, "minutes"), cells, basins, grid_meta=gm
         )
         as_dict = lambda df: {(r.basin_id, r.ts): r.rainfall_mm for r in df.collect()}  # noqa: E731
         got, want = as_dict(fused), as_dict(generic)
@@ -377,11 +372,6 @@ class TestFusedMembers:
         assert got[(2, T0 + dt.timedelta(hours=2))] is None
         assert got[(2, T0)] is not None
 
-    def test_remove_nan(self, spark):
-        got = self._both(spark, self._manifest(spark, dirty=[(2, 2, 2), (0, 0, 0)]),
-                         self._basins(spark), self._meta(), remove_nan=True)
-        assert {b for b, _ in got} == {1, 3}  # basin 2 lost its only cell
-
     def test_west_positive_grid(self, spark):
         got = self._both(spark, self._manifest(spark, dirty=[(1, 0, 0)]),
                          self._basins(spark), self._meta(west_positive=True))
@@ -395,30 +385,12 @@ class TestFusedMembers:
         )
         assert self._both(spark, manifest, self._basins(spark), self._meta()) == {}
 
-    def test_permissive_corrupt_member(self, spark):
+    def test_corrupt_member_raises(self, spark):
         from radohydro_spark.plans.pipeline import precip_from_members
         from radohydro_spark.sources.ascii_grid import CODEC
 
         manifest = self._manifest(spark, corrupt=True)
-        got = self._both(spark, manifest, self._basins(spark), self._meta(), permissive=True)
-        assert len(got) == 9
         with pytest.raises(Exception, match="undecodable ASCII grid member RW-202401010500"):
             precip_from_members(
-                manifest, CODEC.parse, self._meta(), self._basins(spark), "minutes",
-                CODEC.errors, CODEC.label,
+                manifest, CODEC, self._meta(), self._basins(spark), "minutes"
             ).collect()
-
-    @pytest.mark.parametrize("gate", [0, 1_000_000])
-    def test_fragment_gate(self, spark, monkeypatch, gate):
-        """Above ``FUSED_MAX_FRAGMENTS`` the generic plan runs (its
-        result is not cached); below it the fused kernel (cached)."""
-        import radohydro_spark.plans.pipeline as pipeline
-        from radohydro_spark.sources.ascii_grid import CODEC
-
-        monkeypatch.setattr(pipeline, "FUSED_MAX_FRAGMENTS", gate)
-        manifest, basins = self._manifest(spark, dirty=[(1, 0, 0)]), self._basins(spark)
-        self._both(spark, manifest, basins, self._meta())
-        res = pipeline.precip_from_members(
-            manifest, CODEC.parse, self._meta(), basins, "minutes", CODEC.errors, CODEC.label
-        )
-        assert res.is_cached == (gate > 0)

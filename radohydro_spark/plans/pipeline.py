@@ -23,8 +23,8 @@ timestep:
   are ever NaN; A5 and A3 run on the fragments as in the generic plan and
   the driver collects the weights; pass 2 turns each member into its
   n_basins weighted means with one ``np.bincount``.  No per-cell row or
-  fact-sized persist exists at any point, and only dimension-sized rows
-  (NaN flags, fragments) are shuffled: at tiny group cardinality a
+  fact-sized persist exists at any point, and only the dimension-sized
+  fragments are shuffled (the weight window): at tiny group cardinality a
   direct-indexed array aggregate beats a hash aggregate (EDBT'19,
   PAPERS.md).
 
@@ -245,18 +245,17 @@ def precip_from_members(
         seen = np.zeros(len(frag_cells), dtype=bool)
         for _, grid in parsed_members(it, *codec, False, shape):
             seen |= np.isnan(grid.ravel()[frag_cells])
-        flat = frag_cells[seen]
-        yield pd.DataFrame(
-            {
-                "cell_row": (flat // n_cols).astype("int32"),
-                "cell_col": (flat % n_cols).astype("int32"),
-                "is_dirty": np.ones(len(flat), dtype="int32"),
-            }
-        )
+        yield pd.DataFrame({"pos": np.flatnonzero(seen).astype("int32")})
 
-    flags = members.mapInPandas(
-        dirty_cells, "cell_row int, cell_col int, is_dirty int"
-    ).distinct()
+    pos = members.mapInPandas(dirty_cells, "pos int").toPandas()["pos"].to_numpy()
+    dirty = np.unique(frag_cells[pos])
+    # handed back as a local relation: no shuffle to dedupe the flags
+    flags = spark.createDataFrame(
+        pd.DataFrame(
+            {"cell_row": dirty // n_cols, "cell_col": dirty % n_cols, "is_dirty": 1}
+        ),
+        "cell_row int, cell_col int, is_dirty int",
+    )
     weights = (
         basin_weights(drop_dirty_cells(fragments, flags))
         .select("basin_id", "cell_row", "cell_col", "weight")

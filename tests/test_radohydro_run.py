@@ -420,10 +420,14 @@ def test_radohydro_run_persists_no_decoded_obs(spark, tmp_path):
     cells (no ``value`` column anywhere in a cached plan)."""
     from radohydro_spark.plans.pipeline import release_persisted
 
+    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
     spark.catalog.clearCache()
     release_persisted()
+    # unpersisting is asynchronous: blocks an earlier test cached may
+    # still be listed after the run, so look only at what the run added
+    before = {info.id() for info in storage()}
     _run(spark, _hourly_mirror(tmp_path / "mirror", _write_ascii), tmp_path / "out")
-    cached = [info.name() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()]
+    cached = [info.name() for info in storage() if info.id() not in before]
     assert len(cached) == 3, cached
     assert all("value#" not in plan for plan in cached), cached
     assert sorted(

@@ -2,6 +2,7 @@ from radohydro_spark.operators.spatial import (
     basin_bounds,
     buffered_clip_window,
     create_cell_grid,
+    grid_fragments,
     spatial_intersect,
 )
 from radohydro_spark.operators.weights import apply_nan_policy, basin_weights
@@ -15,6 +16,7 @@ __all__ = [
     "basin_bounds",
     "buffered_clip_window",
     "create_cell_grid",
+    "grid_fragments",
     "spatial_intersect",
     "apply_nan_policy",
     "basin_weights",

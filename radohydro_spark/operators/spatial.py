@@ -8,24 +8,31 @@ Spark-first re-expressions of the reference's geotools stages:
 * ``buffered_clip_window``   — port of ``buffered_raster_clipping``
   (reference geotools/geotools.py:29-99): bbox aggregation of basins plus a
   cell-buffer, returned as integer row/col ranges for predicate pushdown.
-* ``spatial_intersect``      — the J1 core operator (reference
+* ``grid_fragments``         — the J1 core operator (reference
   geotools/geotools.py:215-219, ``gp.overlay(..., 'intersection')``, flagged
-  "most time consuming timestep" at :214): implemented as a broadcast bbox
-  theta-join (basins side is small) followed by an exact rect∩polygon area
-  pandas UDF.  No shuffle: at 100 TB the obs table never enters this join —
-  only the cell dimension does.
+  "most time consuming timestep" at :214) on an affine grid, with no cell
+  table: each basin maps its bbox to its own cell-index window and computes
+  the exact rect∩polygon areas of that window in NumPy, the way
+  exactextract covers each polygon over its own raster window.  Windows
+  above ``_BAND_CELLS`` cells split into row bands spread over the tasks.
+* ``spatial_intersect``      — J1 over a given cell table: the grid route
+  restricted to the table when the transform is known, else a broadcast
+  bbox theta-join and the exact-area pandas UDF.  Neither route touches
+  the obs fact table.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+import numpy as np
 import pandas as pd
 
 from radohydro_spark.geometry.wkb import parse_wkb_polygons
-from radohydro_spark.session import pin
 
 
 def create_cell_grid(
@@ -87,30 +94,24 @@ def geom_bbox(wkb: pd.Series) -> pd.DataFrame:
     An EMPTY geometry (zero polygons, or a polygon with zero rings)
     yields NULL bounds instead of crashing the job (r12 review: one
     MULTIPOLYGON EMPTY row in a 100k-basin shapefile killed every
-    with_bbox consumer).  NULL bounds then drop naturally: bbox join
-    predicates are false on NULL, candidate-index sequences are empty,
-    and min/max aggregates skip NULLs."""
-    out = {"xmin": [], "ymin": [], "xmax": [], "ymax": []}
-    for blob in wkb:
-        xs: list[float] = []
-        ys: list[float] = []
-        for rings in parse_wkb_polygons(bytes(blob)):
-            if not rings:
-                continue
-            for x, y in rings[0]:
-                xs.append(x)
-                ys.append(y)
-        if xs:
-            out["xmin"].append(min(xs))
-            out["ymin"].append(min(ys))
-            out["xmax"].append(max(xs))
-            out["ymax"].append(max(ys))
-        else:
-            out["xmin"].append(None)
-            out["ymin"].append(None)
-            out["xmax"].append(None)
-            out["ymax"].append(None)
-    return pd.DataFrame(out)
+    with_bbox consumer).  NULL bounds then drop: bbox join predicates
+    are false on NULL, the grid route filters them out, and min/max
+    aggregates skip NULLs."""
+    boxes = [_bounds(parse_wkb_polygons(bytes(blob))) for blob in wkb]
+    return pd.DataFrame(
+        [box or (None, None, None, None) for box in boxes],
+        columns=["xmin", "ymin", "xmax", "ymax"],
+    )
+
+
+def _bounds(polys) -> tuple[float, float, float, float] | None:
+    """(xmin, ymin, xmax, ymax) over the exterior rings of parsed
+    polygons, or None when there is no exterior vertex."""
+    pts = [p for rings in polys if rings for p in rings[0]]
+    if not pts:
+        return None
+    xs, ys = zip(*pts)
+    return min(xs), min(ys), max(xs), max(ys)
 
 
 def with_bbox(basins: DataFrame, geom_col: str = "geom") -> DataFrame:
@@ -156,8 +157,6 @@ def buffered_clip_window(
     edge-interpolation renormalization (reference radohydro.py:12).  The
     buffer is domain semantics — must not be optimized away (SURVEY.md §4).
     """
-    import math
-
     xmin, ymin, xmax, ymax = bounds
     xmin -= buffer_cells * abs(xres)
     xmax += buffer_cells * abs(xres)
@@ -211,29 +210,138 @@ def rect_clip_area_udf(
     )
 
 
-# Candidate-tile edge length (in cells) for the grid_meta fast path of
-# spatial_intersect: the bbox explode emits one key per TILE x TILE block
-# instead of per cell, shrinking the exploded relation ~TILE^2 while the
-# exact per-cell bbox predicate after the join reproduces the per-cell
-# candidate set bit-for-bit.  8 balances explode savings (64x) against
-# join fan-out slack (at most one extra tile ring around each bbox).
-_CAND_TILE = 8
+# A basin whose cell window holds more cells than this is cut into row
+# bands, which the round-robin exchange spreads over the tasks: a
+# Germany-sized basin on the 900x900 RADOLAN grid (810k cells) becomes
+# 13 bands, not one task.
+_BAND_CELLS = 1 << 16
 
-# Per-cell candidate keys are used (and broadcast) below this EXACT
-# candidate count; above it the explode switches to coarse tiles.  The
-# per-cell form is faster in the small regime (no superset inflation, no
-# recovery filter — measured 2x at the reference's 20-basin shape); the
-# tile form is what survives 100k basins (SOAK.md).  Module-level so
-# tests can force the tile regime on small fixtures.
-_PER_CELL_BROADCAST_MAX = 2_000_000
+_FRAG_FIELDS = ("cell_row", "cell_col", "left", "bottom", "right", "top")
 
 
-def _tile(idx_col):
-    """Floor-divide a (possibly negative) integer cell index into its
-    candidate-tile index.  F.floor on the double quotient is exact for
-    any index that fits a double's 53-bit mantissa (grid indices are
-    < 1e6 by construction)."""
-    return F.floor(idx_col / _CAND_TILE).cast("int")
+def _index_range(lo: float, hi: float, origin: float, res: float) -> tuple[int, int]:
+    """Inclusive index range of the cells along one axis whose footprint
+    overlaps the open interval (lo, hi).  A negative resolution flips
+    which end maps to index 0; the upper bound is clamped to the lower,
+    because a degenerate bbox on a cell edge gives i1 < i0."""
+    if res < 0:
+        lo, hi = hi, lo
+    i0 = math.floor((lo - origin) / res)
+    return i0, max(i0, math.ceil((hi - origin) / res) - 1)
+
+
+def _bands(
+    basins: DataFrame, grid_meta: tuple[float, float, float, float]
+) -> DataFrame:
+    """One ``(basin_id, geom, _r0, _r1, _c0, _c1)`` row per row band of
+    each basin's inclusive cell window, clamped to the basin row's
+    ``_row_lo``/``_row_hi``/``_col_lo``/``_col_hi``.  An EMPTY geometry
+    and a window off the grid have no band."""
+    ulx, uly, xres, yres = (float(v) for v in grid_meta)
+
+    def bands(it):
+        for pdf in it:
+            out = []
+            for bid, blob, row_lo, row_hi, col_lo, col_hi in pdf.itertuples(index=False):
+                box = _bounds(parse_wkb_polygons(bytes(blob)))
+                if box is None:
+                    continue
+                xmin, ymin, xmax, ymax = box
+                c0, c1 = _index_range(xmin, xmax, ulx, xres)
+                r0, r1 = _index_range(ymin, ymax, uly, yres)
+                r0, r1 = max(r0, row_lo), min(r1, row_hi)
+                c0, c1 = max(c0, col_lo), min(c1, col_hi)
+                if r0 > r1 or c0 > c1:
+                    continue
+                band = max(1, _BAND_CELLS // (c1 - c0 + 1))  # rows per band
+                for b0 in range(r0, r1 + 1, band):
+                    out.append((bid, blob, b0, min(b0 + band - 1, r1), c0, c1))
+            yield pd.DataFrame(out, columns=["basin_id", "geom", "_r0", "_r1", "_c0", "_c1"])
+
+    id_type = basins.schema["basin_id"].dataType.simpleString()
+    return basins.mapInPandas(
+        bands, f"basin_id {id_type}, geom binary, _r0 int, _r1 int, _c0 int, _c1 int"
+    )
+
+
+def _window_fragments(
+    basins: DataFrame, grid_meta: tuple[float, float, float, float]
+) -> DataFrame:
+    """Fragments of every ``basins(basin_id, geom, _row_lo, _row_hi,
+    _col_lo, _col_hi)`` row over its own clamped cell window (see
+    :func:`_bands`)."""
+    ulx, uly, xres, yres = (float(v) for v in grid_meta)
+    # the bands are dimension rows whose cost is their cell count, not
+    # their bytes: spread them over the session's cores
+    n_parts = int(basins.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    bands = _bands(basins, grid_meta).repartition(n_parts)
+
+    def window_fragments(it):
+        from radohydro_spark.geometry.clip_vec import polygon_rect_areas
+
+        parts, pending = [], 0
+        for pdf in it:
+            for bid, blob, br0, br1, bc0, bc1 in pdf.itertuples(index=False):
+                rows = np.repeat(np.arange(br0, br1 + 1, dtype=np.int32), bc1 - bc0 + 1)
+                cols = np.tile(np.arange(bc0, bc1 + 1, dtype=np.int32), br1 - br0 + 1)
+                # create_cell_grid's corner arithmetic, operation for operation
+                x0, x1 = ulx + cols * xres, ulx + (cols + 1) * xres
+                y0, y1 = uly + rows * yres, uly + (rows + 1) * yres
+                left, right = np.minimum(x0, x1), np.maximum(x0, x1)
+                bottom, top = np.minimum(y0, y1), np.maximum(y0, y1)
+                area = polygon_rect_areas(
+                    parse_wkb_polygons(bytes(blob)), left, bottom, right, top
+                )
+                frag = pd.DataFrame(
+                    dict(zip(_FRAG_FIELDS, (rows, cols, left, bottom, right, top)))
+                )
+                frag["basin_id"] = bid
+                frag["frag_area"] = area
+                frag["cell_area"] = (right - left) * (top - bottom)
+                parts.append(frag[area > 0])
+                pending += len(area)
+                # one Arrow batch per ~band of cells, not per task
+                if pending >= _BAND_CELLS:
+                    yield pd.concat(parts, ignore_index=True)
+                    parts, pending = [], 0
+        if parts:
+            yield pd.concat(parts, ignore_index=True)
+
+    schema = T.StructType(
+        [T.StructField(c, T.IntegerType()) for c in _FRAG_FIELDS[:2]]
+        + [T.StructField(c, T.DoubleType()) for c in _FRAG_FIELDS[2:]]
+        + [
+            T.StructField("basin_id", basins.schema["basin_id"].dataType),
+            T.StructField("frag_area", T.DoubleType()),
+            T.StructField("cell_area", T.DoubleType()),
+        ]
+    )
+    return bands.mapInPandas(window_fragments, schema)
+
+
+def grid_fragments(basins: DataFrame, meta: dict) -> DataFrame:
+    """J1 on an affine grid: the fragments of ``basins(basin_id, geom)``
+    over the grid ``meta`` (``n_rows``, ``n_cols``, ``ulx``, ``uly``,
+    ``xres``, ``yres``), with no cell table.
+
+    Each basin's bbox maps to the inclusive index window of the cells its
+    footprint overlaps, clamped to the grid; the window's cell bounds
+    follow ``create_cell_grid``'s arithmetic, and one
+    ``clip_vec.polygon_rect_areas`` call gives their exact areas — each
+    polygon over its own raster window, as in exactextract.  A window of
+    more than ``_BAND_CELLS`` cells is cut into row bands.  Returns the
+    nine columns of :func:`spatial_intersect`, in its order, for
+    ``frag_area > 0``; an EMPTY geometry has no rows.
+    """
+    bounded = basins.select(
+        "basin_id",
+        "geom",
+        F.lit(0).alias("_row_lo"),
+        F.lit(int(meta["n_rows"]) - 1).alias("_row_hi"),
+        F.lit(0).alias("_col_lo"),
+        F.lit(int(meta["n_cols"]) - 1).alias("_col_hi"),
+    )
+    return _window_fragments(bounded, (meta["ulx"], meta["uly"], meta["xres"], meta["yres"]))
 
 
 def spatial_intersect(
@@ -243,175 +351,41 @@ def spatial_intersect(
 ) -> DataFrame:
     """J1 — spatial overlay intersection join producing fragments.
 
-    Plan shape (scale-critical): ``broadcast(basins)`` bbox theta-join
-    against the cell dimension, then the exact-area pandas UDF only on
-    surviving candidate pairs, then ``frag_area > 0`` filter.  The obs fact
-    table is never involved; at 100 TB this join touches only dimension
-    rows.
+    ``grid_meta = (ulx, uly, xres, yres)`` says that ``cells`` are rows of
+    the ``create_cell_grid`` table with that transform (the RADOLAN/REGNIE
+    case): the fragments come from :func:`grid_fragments` clamped to the
+    table's index bounds, then a left-semi join on ``(cell_row,
+    cell_col)`` keeps exactly the table's own cells, so a window-filtered
+    table gets its own fragments.  Without ``grid_meta``, arbitrary
+    rectilinear cell tables take a ``broadcast(basins)`` bbox theta-join
+    and the exact-area pandas UDF on the surviving candidate pairs.
+    Neither route touches the obs fact table.
 
-    ``grid_meta = (ulx, uly, xres, yres)``: when the cell grid is affine
-    (create_cell_grid output — the RADOLAN/REGNIE case), pass the
-    transform and the bbox theta-join becomes an **equi-join**: each
-    basin's bbox maps to a cell-index rectangle, exploded into candidate
-    (cell_row, cell_col) keys and broadcast against the cells dimension.
-    That replaces the nested-loop's |cells| x |basins| predicate sweep with
-    an O(candidates) hash probe — the fix for the reference's >10k-polygon
-    cliff (README.md:18): 10k basins x 810k cells = 8.1e9 nested-loop pairs
-    vs ~10^6 candidate keys.  Without ``grid_meta`` the generic theta-join
-    path handles arbitrary rectilinear cell tables.
-
-    Returns FRAGMENTS_SCHEMA.  The basin side is projected to
-    ``(basin_id, geom)`` before the join: passthrough attributes re-join at
-    sink time on ``basin_id`` (J3), and shapefile attrs may collide with
-    the cell grid's ``left/bottom/right/top`` columns otherwise.
+    Returns ``cells``' columns, then ``basin_id``, ``frag_area`` and
+    ``cell_area``, for ``frag_area > 0``.  The basin side is projected to
+    ``(basin_id, geom)`` first: passthrough attributes re-join at sink
+    time on ``basin_id`` (J3), and shapefile attrs may collide with the
+    cell grid's ``left/bottom/right/top`` columns otherwise.
     """
-    b = with_bbox(basins.select("basin_id", "geom"))
+    b = basins.select("basin_id", "geom")
     if grid_meta is not None:
-        # the pricing aggregate below AND the candidate explode both
-        # evaluate b — cache it so the WKB-parsing bbox UDF runs once
-        # over the basin dimension, not once per consumer (r12 review)
-        b = pin(b.cache())
-        ulx, uly, xres, yres = (float(v) for v in grid_meta)
-        # inclusive index range of cells whose footprint overlaps the bbox:
-        # open interval semantics match the theta-join's strict < / >.
-        # Negative resolutions flip which bbox corner maps to index 0 —
-        # handled for BOTH axes (the xres<0 branch was missing until the
-        # r12 review: a west-positive grid silently lost fragments)
-        if xres < 0:
-            col0 = F.floor((F.col("xmax") - ulx) / xres).cast("int")
-            col1 = F.ceil((F.col("xmin") - ulx) / xres).cast("int") - 1
-        else:
-            col0 = F.floor((F.col("xmin") - ulx) / xres).cast("int")
-            col1 = F.ceil((F.col("xmax") - ulx) / xres).cast("int") - 1
-        if yres < 0:  # north-up: row 0 at the top
-            row0 = F.floor((F.col("ymax") - uly) / yres).cast("int")
-            row1 = F.ceil((F.col("ymin") - uly) / yres).cast("int") - 1
-        else:
-            row0 = F.floor((F.col("ymin") - uly) / yres).cast("int")
-            row1 = F.ceil((F.col("ymax") - uly) / yres).cast("int") - 1
-        # clamp the upper bound: a degenerate bbox aligned to a cell edge
-        # can give col1 < col0 (resp. row1 < row0), and F.sequence would
-        # silently descend, fabricating candidate keys
-        row1g, col1g = F.greatest(row0, row1), F.greatest(col0, col1)
-        tr0, tr1 = _tile(row0), _tile(row1g)
-        tc0, tc1 = _tile(col0), _tile(col1g)
-        # Every sizing decision below comes from ONE tiny aggregate over
-        # the basin DIMENSION (the dimension-sized-action contract) —
-        # never from Catalyst's estimate, which undercounts an exploded
-        # relation catastrophically (25k basins -> 25M candidate rows
-        # estimated as megabytes; a forced broadcast OOMed the driver and
-        # a mis-picked ShuffledHashJoin build OOMed an executor — both
-        # measured by scripts/soak_basins.py before the r10 fix).  The
-        # aggregate prices BOTH explode granularities:
-        #   n_cells — per-cell candidate keys (exact candidate count)
-        #   n_tiles — 8x8 coarse-tile keys (~64x fewer rows)
-        stats = b.select(
-            F.count("*").alias("nb"),
-            F.sum(
-                (row1g - row0 + 1).cast("long") * (col1g - col0 + 1).cast("long")
-            ).alias("n_cells"),
-            F.sum(
-                (tr1 - tr0 + 1).cast("long") * (tc1 - tc0 + 1).cast("long")
-            ).alias("n_tiles"),
-        ).first()
-        n_basins = stats["nb"]
-        n_cells_cand = stats["n_cells"] or 0
-        n_tiles_cand = stats["n_tiles"] or 0
-        if n_cells_cand <= _PER_CELL_BROADCAST_MAX:
-            # SMALL regime (the reference's 20-basin shape): per-cell
-            # keys broadcast directly — one hash probe per cell, no
-            # superset inflation, no post-join filter.  Measured 2x
-            # faster than the tile join here (the tile key space is
-            # low-cardinality, so every cell probes into multi-match
-            # hash buckets and the inflated superset pays a filter).
-            cand_keys = (
-                b.withColumn(
-                    "cell_row", F.explode(F.sequence(row0, row1g))
-                )
-                .withColumn(
-                    "cell_col", F.explode(F.sequence(col0, col1g))
-                )
-                .select("basin_id", "cell_row", "cell_col")
-            )
-            probed = cells.join(
-                F.broadcast(cand_keys), ["cell_row", "cell_col"], "inner"
-            )
-        else:
-            # SCALE regime — COARSE-TILE explode (r11): candidate keys
-            # are TILE x TILE cell blocks, ~64x fewer exploded rows for
-            # the same coverage (measured in scripts/soak_basins.py: the
-            # 100k-basin exploded relation drops from ~110M three-int
-            # rows to ~2M tile rows — 100k basins 506s -> 198s, spill
-            # 6.7 GB -> zero).  The exact per-cell index-range test runs
-            # AFTER the tile join as a free column predicate — the SAME
-            # floor/ceil arithmetic as the per-cell explode, so the
-            # candidate set is bit-identical, just produced 64x cheaper.
-            # The index bounds (4 ints) ride the tile keys instead of
-            # the WKB geometry — keys-only: ~40 B/row vs kilobyte
-            # polygons.  Tile-count tiers: broadcast <=1M tile rows
-            # (~56 MB), shuffled-hash <=20M (narrow build fits executor
-            # memory), sort-merge beyond — the only strategy whose
-            # memory bounds by SPILL, not heap; at 64 cells/tile these
-            # tiers cover 64x more BASINS than per-cell tiers did.
-            cand_keys = (
-                b.withColumn("_r0", row0)
-                .withColumn("_r1", row1g)
-                .withColumn("_c0", col0)
-                .withColumn("_c1", col1g)
-                .withColumn("_tr", F.explode(F.sequence(tr0, tr1)))
-                .withColumn("_tc", F.explode(F.sequence(tc0, tc1)))
-                .select("basin_id", "_tr", "_tc", "_r0", "_r1", "_c0", "_c1")
-            )
-            if n_tiles_cand <= 1_000_000:
-                probe = F.broadcast(cand_keys)
-            elif n_tiles_cand <= 20_000_000:
-                probe = cand_keys.hint("shuffle_hash")
-            else:
-                probe = cand_keys.hint("merge")
-            cells_t = cells.withColumn(
-                "_tr", _tile(F.col("cell_row"))
-            ).withColumn("_tc", _tile(F.col("cell_col")))
-            probed = (
-                cells_t.join(probe, ["_tr", "_tc"], "inner")
-                # exact per-cell recovery: reduces the tile superset to
-                # PRECISELY the per-cell candidate set (no float seam),
-                # BEFORE the geometry join and the clip UDF; cheap
-                # column predicate inside the join's output stage — no
-                # exchange
-                .filter(
-                    (F.col("cell_row") >= F.col("_r0"))
-                    & (F.col("cell_row") <= F.col("_r1"))
-                    & (F.col("cell_col") >= F.col("_c0"))
-                    & (F.col("cell_col") <= F.col("_c1"))
-                )
-            )
-        # geometry re-joins on basin_id AFTER the candidate fan-out: the
-        # WKB must not ride the explode (25k basins x ~1k cells each with
-        # ~100B polygons = gigabytes of duplicated bytes vs three ints per
-        # row).  Broadcast the geometry dimension while it is genuinely
-        # dimension-sized; past that, sort-merge — NEVER an unhinted join
-        # here, because the candidate side's mis-estimated stats would
-        # make it the hash build side (the measured 100k-basin failure).
-        geom_dim = b.select("basin_id", "geom")
-        geom_side = (
-            F.broadcast(geom_dim)
-            if n_basins <= 100_000
-            else geom_dim.hint("merge")
+        keys = ["cell_row", "cell_col"]
+        bounds = cells.agg(
+            F.min("cell_row").alias("_row_lo"),
+            F.max("cell_row").alias("_row_hi"),
+            F.min("cell_col").alias("_col_lo"),
+            F.max("cell_col").alias("_col_hi"),
         )
-        cand = (
-            probed.join(geom_side, "basin_id")
-            # same column order as the theta path (join keys float left)
-            .select(*cells.columns, "basin_id", "geom")
-        )
-    else:
-        cand = cells.join(
-            F.broadcast(b),
-            (F.col("left") < F.col("xmax"))
-            & (F.col("right") > F.col("xmin"))
-            & (F.col("bottom") < F.col("ymax"))
-            & (F.col("top") > F.col("ymin")),
-            "inner",
-        )
+        frags = _window_fragments(b.crossJoin(F.broadcast(bounds)), grid_meta)
+        return frags.join(cells.select(*keys), keys, "left_semi")
+    cand = cells.join(
+        F.broadcast(with_bbox(b)),
+        (F.col("left") < F.col("xmax"))
+        & (F.col("right") > F.col("xmin"))
+        & (F.col("bottom") < F.col("ymax"))
+        & (F.col("top") > F.col("ymin")),
+        "inner",
+    )
     cand = cand.withColumn(
         "frag_area",
         rect_clip_area_udf(
@@ -442,13 +416,13 @@ def rasterize(
     also matches it for cells fully inside one polygon).  ``fill`` replaces
     the reference's -9999 sentinel (geotools/geotools.py:367) — default NULL.
 
-    ``attr`` may be ANY basin column: spatial_intersect strips passthrough
-    attributes before its join (deliberately — WKB must not ride the
-    candidate explode), so non-key attributes re-join here on ``basin_id``
-    from the dimension table (r12 review: referencing a stripped column
-    used to crash).  ``grid_meta`` forwards to spatial_intersect so an
-    affine-grid burn takes the equi-join candidate path instead of the
-    nested-loop bbox sweep (the >10k-polygon cliff)."""
+    ``attr`` may be ANY basin column: spatial_intersect keeps only
+    ``basin_id`` and ``geom`` of the basins, so non-key attributes re-join
+    here on ``basin_id`` from the dimension table (r12 review: referencing
+    a stripped column used to crash).  ``grid_meta`` forwards to
+    spatial_intersect so an affine-grid burn computes each basin's
+    fragments over its own cell window instead of the nested-loop bbox
+    sweep (the >10k-polygon cliff)."""
     from pyspark.sql import Window as W
 
     frags = spatial_intersect(cells, basins, grid_meta=grid_meta)
@@ -551,8 +525,7 @@ def polygon_overlay(
     layers, the specialized rect path exist.  Both layers are dimension
     tables in the reference workload (fact tables never carry
     geometry); for two genuinely fact-sized polygon layers, tile both
-    sides on a coarse grid first (the spatial_intersect coarse-tile
-    pattern) and feed the per-tile pairs here.
+    sides on a coarse grid first and feed the per-tile pairs here.
 
     Returns (a_id, b_id, frag_area).
     """

@@ -17,7 +17,8 @@ timestep:
                             result (long)
 
 * ``precip_from_members(manifest, …)`` — the fused plan over raster
-  members (what ``radohydro_run`` uses): J1 on the cell dimension, then
+  members (what ``radohydro_run`` uses): J1 straight from the basins and
+  the members' grid transform (``grid_fragments``, no cell table), then
   two ``mapInPandas`` passes over the manifest that each parse a member
   and read only its fragment cells.  Pass 1 reports which fragment cells
   are ever NaN; A5 and A3 run on the fragments as in the generic plan and
@@ -43,7 +44,7 @@ from pyspark.sql import functions as F
 
 from radohydro_spark.operators.aggregate import weighted_basin_timeseries
 from radohydro_spark.operators.spatial import (
-    create_cell_grid,
+    grid_fragments,
     spatial_intersect,
     window_predicate,
 )
@@ -83,8 +84,8 @@ def radohydro_run(
     503-546) as one Spark job against a local/object-store mirror:
 
         manifest(mirror) → date filter (S5, BEFORE decode)
-        → cell grid from a sample member (compute-once, broadcast)
-        → fused member kernel (S6/S7 decode + J1/A5/A3/A4)
+        → grid transform from a sample member (REGNIE: fixed by spec)
+        → fused member kernel (J1 per basin window, S6/S7 decode + A5/A3/A4)
         → K1 per-basin CSVs [+ K2 wide GeoParquet]
 
     Returns the long result DataFrame, cached: the sinks read it instead
@@ -132,7 +133,7 @@ def radohydro_run(
 
     # no buffered clip window (F3): the kernel reads only fragment cells,
     # a tighter clip than any bbox window, and J1 derives each basin's
-    # candidate cells from its own bbox
+    # cells from its own bbox
     result = precip_from_members(manifest, codec, meta, basins, date_type, numerator)
     write_basin_csvs(result, basins, out_dir)
     if write_wide:
@@ -220,19 +221,17 @@ def precip_from_members(
     means in ``precip_timeseries``; the NaN policy is its default and
     ``rainfall_mm`` is rounded to 3 decimals.
 
-    Passes (see the module docstring): J1 builds the cached fragments;
-    pass 1 finds the fragment cells that are NaN in any member; A5/A3
-    (``drop_dirty_cells``, ``basin_weights``) turn them into weights the
-    driver collects; pass 2 emits per member ``Σ w·v / numerator`` for
-    each basin with fragments — a NaN kept value poisons its basin's sum,
-    which becomes NULL (the A4 rule).  The result is cached, so its sinks
-    read it once.
+    Passes (see the module docstring): J1 (``grid_fragments``) builds
+    the cached fragments; pass 1 finds the fragment cells that are NaN in
+    any member; A5/A3 (``drop_dirty_cells``, ``basin_weights``) turn them
+    into weights the driver collects; pass 2 emits per member
+    ``Σ w·v / numerator`` for each basin with fragments — a NaN kept value
+    poisons its basin's sum, which becomes NULL (the A4 rule).  The result
+    is cached, so its sinks read it once.
     """
     spark = manifest.sparkSession
     n_rows, n_cols = int(meta["n_rows"]), int(meta["n_cols"])
-    grid_meta = (meta["ulx"], meta["uly"], meta["xres"], meta["yres"])
-    cells = create_cell_grid(spark, n_rows, n_cols, *grid_meta)
-    fragments = pin(spatial_intersect(cells, basins, grid_meta=grid_meta).cache())
+    fragments = pin(grid_fragments(basins, meta).cache())
 
     def flat_cells(pdf: pd.DataFrame) -> np.ndarray:
         return pdf["cell_row"].to_numpy("int64") * n_cols + pdf["cell_col"].to_numpy("int64")

@@ -4,7 +4,10 @@ Evidence artifact for plan-shape review: shows PushedFilters / ReadSchema
 pruning at the scans, broadcast vs shuffle joins, and WholeStageCodegen
 spans for each bench query.  Regenerate after plan-affecting changes:
 
-    python scripts/dump_plans.py [sf_dir]
+    python scripts/dump_plans.py [sf_dir] [query ...]
+
+Named queries rewrite only their own sections, in place; with none, the
+whole file is rewritten.
 """
 
 from __future__ import annotations
@@ -225,10 +228,32 @@ HEADLINE = [
 ]
 
 
+def _section(spark, qs, name: str, sf_dir: str) -> list[str]:
+    df = qs[name](spark, sf_dir)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return [f"## {name}", "", "```", buf.getvalue().rstrip(), "```", ""]
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    names = sys.argv[2:]
+    path = os.path.join(ROOT, "PLANS.md")
     spark = get_spark("plans")
     qs = entrymod.queries()
+    if names:
+        text = open(path).read()
+        for name in names:
+            head = f"## {name}\n"
+            start = text.index(head)
+            end = text.find("\n## ", start + len(head))
+            end = len(text) if end < 0 else end + 1
+            text = text[:start] + "\n".join(_section(spark, qs, name, sf_dir) + [""]) + text[end:]
+        with open(path, "w") as f:
+            f.write(text)
+        print(f"rewrote {len(names)} PLANS.md sections")
+        return
     out = [
         "# PLANS — formatted physical plans of headline queries",
         "",
@@ -239,12 +264,8 @@ def main() -> None:
         "",
     ]
     for name in HEADLINE:
-        df = qs[name](spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        out += [f"## {name}", "", "```", buf.getvalue().rstrip(), "```", ""]
-    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
+        out += _section(spark, qs, name, sf_dir)
+    with open(path, "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote PLANS.md ({len(HEADLINE)} plans)")
 

@@ -50,9 +50,14 @@ def session(name: str):
     """``(spark, tracer)``: the UI is on so the tracer can read stage
     totals.  A long measurement (a 1,000-merge BPE run) launches
     thousands of jobs and stages; the retention limits keep every one
-    visible to the tracer's settle poll."""
+    visible to the tracer's settle poll.
+
+    ``SPARK_GRAFT_CPUS`` defaults to the cores this process may run on:
+    ``get_spark``'s own default, ``local[32]``, starts dozens of Python
+    workers on a small host, and a 10k-basin day then exhausts memory."""
     from radohydro_spark import get_spark
 
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     spark = get_spark(
         name,
         extra_conf={

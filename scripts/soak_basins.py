@@ -2,17 +2,19 @@
 
 The reference README documents "considerable performance decrease"
 beyond ~10k polygons (README.md:18) because ``gp.overlay`` sweeps
-|cells| × |basins| candidate pairs.  The engine's ``spatial_intersect``
-grid_meta path replaces that sweep with an exploded candidate-key
-equi-join whose work is O(sum of per-basin bbox cells): LINEAR in
-basins for a fixed basin-size distribution.  The candidate exchange
-carries three ints per row (geometry re-joins on basin_id after the
-probe) and NO side is force-broadcast: AQE picks broadcast for the
-20-basin case and a shuffled hash join for the 25k+ regime.
+|cells| × |basins| candidate pairs.  The engine's ``grid_fragments``
+builds no cell table: each basin computes the exact areas of its own
+cell window, so the work is O(sum of per-basin bbox cells), LINEAR in
+basins for a fixed basin-size distribution.
 
-Sweeps n_basins over the full 900x900 RADOLAN-scale cell grid; each
-step also runs the exact-area UDF and the weights-shaped reduction
-downstream consumers run.
+Sweeps n_basins over the 900x900 RADOLAN-scale grid and times two
+routes, each followed by the weights-shaped reduction downstream
+consumers run:
+
+* ``grid_fragments`` — what ``radohydro_run`` runs;
+* ``spatial_intersect(cells, …, grid_meta=…)`` over a persisted cell
+  table — the same fragments restricted to the table by a left-semi
+  join.
 
     python scripts/soak_basins.py [n_basins ...]   # default 1000 5000 25000
 """
@@ -28,23 +30,33 @@ from soak import measure, session
 
 def main() -> None:
     basin_counts = [int(a) for a in sys.argv[1:]] or [1000, 5000, 25000]
-    from radohydro_spark.operators.spatial import create_cell_grid, spatial_intersect
+    from radohydro_spark.operators.spatial import (
+        create_cell_grid,
+        grid_fragments,
+        spatial_intersect,
+    )
     from radohydro_spark.sources.synthetic import RADOLAN_SCALE as g, radolan_scale_basins
 
     spark, tr = session("soak_basins")
     uly = g.y0 + g.n_rows * g.cell
-    cells = create_cell_grid(spark, g.n_rows, g.n_cols, g.x0, uly, g.cell, -g.cell).persist()
+    gm = (g.x0, uly, g.cell, -g.cell)
+    meta = dict(n_rows=g.n_rows, n_cols=g.n_cols, ulx=g.x0, uly=uly, xres=g.cell, yres=-g.cell)
+    cells = create_cell_grid(spark, g.n_rows, g.n_cols, *gm).persist()
     print("cells:", cells.count(), flush=True)
     for n in basin_counts:
         basins = radolan_scale_basins(spark, g, n_basins=n)
+        routes = {
+            "grid_fragments": lambda: grid_fragments(basins, meta),
+            "spatial_intersect": lambda: spatial_intersect(cells, basins, grid_meta=gm),
+        }
+        for route, frags in routes.items():
 
-        def run():
-            frags = spatial_intersect(cells, basins, grid_meta=(g.x0, uly, g.cell, -g.cell))
-            return frags.groupBy("basin_id").agg(
-                F.count("*").alias("n_frags"), F.sum("frag_area").alias("area")
-            ).count()
+            def run():
+                return frags().groupBy("basin_id").agg(
+                    F.count("*").alias("n_frags"), F.sum("frag_area").alias("area")
+                ).count()
 
-        measure(tr, f"{n} basins", run, lambda k: {"basins_out": k})
+            measure(tr, f"{n} basins {route}", run, lambda k: {"basins_out": k})
 
 
 if __name__ == "__main__":

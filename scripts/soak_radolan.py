@@ -6,10 +6,10 @@ One day (``n_days=1``) is the reference's actual daily workload
 decoded cells) is ~1.4× past the reference's documented cliff in
 timestep count: it np.dstacks every decoded grid into one dense in-RAM
 array and ``sys.exit``s when that outgrows memory (radohydro.py:257-260,
-README.md:17).  ``radohydro_run`` runs manifest → date filter → cell
-grid → spatial join → the fused member kernel (a NaN scan of the
-fragment cells, NULL policy and weights on the fragments, then one
-per-basin ``np.bincount`` per raster) → per-basin CSV + wide GeoParquet
+README.md:17).  ``radohydro_run`` runs manifest → date filter → grid
+transform → fragments over each basin's own cell window → the fused
+member kernel (a NaN scan of the fragment cells, NULL policy and
+weights on the fragments, then one per-basin ``np.bincount`` per raster) → per-basin CSV + wide GeoParquet
 sinks; nothing is ever stacked dense, so memory is bounded by one
 raster per task, not by the number of timesteps.
 

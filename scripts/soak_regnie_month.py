@@ -3,8 +3,8 @@
 Synthesizes 31 gzipped fixed-width day files (971 x 611 grid, the real
 REGNIE shape, reference radohydro.py:95,392-395; ~18.4M cells for the
 month) and runs ``radohydro_run(source='regnie')``: manifest →
-raYYMMDD date filter → hard-coded lon/lat grid → spatial join → the
-fused member kernel (gunzip + fixed-width parse (S7) per day, a NaN scan
+raYYMMDD date filter → hard-coded lon/lat grid → fragments over each
+basin's own cell window → the fused member kernel (gunzip + fixed-width parse (S7) per day, a NaN scan
 of the fragment cells, NULL policy and weights on the fragments, then
 one per-basin ``np.bincount`` per day) → sinks.
 

@@ -524,64 +524,3 @@ def test_window_distinct_running_single_shuffle(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan[:1200]
     assert "CartesianProduct" not in plan
-
-
-def test_spatial_intersect_small_regime_is_per_cell_broadcast(spark):
-    """r11: below _PER_CELL_BROADCAST_MAX exact candidates the grid_meta
-    path explodes PER-CELL keys and broadcasts them — no tile superset,
-    no recovery filter (measured 2x faster at the reference's 20-basin
-    shape); never a CartesianProduct or SMJ."""
-    cells = synthetic_cells(spark)
-    basins = synthetic_basins(spark)
-    plan = _plan(
-        spatial_intersect(
-            cells, basins, grid_meta=(400000.0, 5600000.0, 1000.0, 1000.0)
-        )
-    )
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "_r0" not in plan  # per-cell regime: no tile recovery filter
-
-
-def test_spatial_intersect_tile_regime_shape(spark, monkeypatch):
-    """Forcing the tile regime (threshold -> 0) on the small fixture:
-    coarse-tile keys broadcast, and the exact per-cell index-range
-    recovery filter appears in the plan."""
-    import radohydro_spark.operators.spatial as sp
-
-    monkeypatch.setattr(sp, "_PER_CELL_BROADCAST_MAX", 0)
-    cells = synthetic_cells(spark)
-    basins = synthetic_basins(spark)
-    plan = _plan(
-        sp.spatial_intersect(
-            cells, basins, grid_meta=(400000.0, 5600000.0, 1000.0, 1000.0)
-        )
-    )
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan  # tiny tile count -> broadcast
-    assert "BroadcastHashJoin" in plan
-    assert "_r0" in plan and "_c1" in plan  # tile recovery filter present
-
-
-def test_spatial_intersect_both_regimes_equal_theta_path(spark, monkeypatch):
-    """Per-cell regime, forced tile regime, and the generic bbox theta
-    path must produce identical fragments — the explode granularity is
-    an execution strategy, not a semantics change."""
-    import radohydro_spark.operators.spatial as sp
-
-    cells = synthetic_cells(spark)
-    basins = synthetic_basins(spark)
-
-    def key(df):
-        return {
-            (r["cell_row"], r["cell_col"], r["basin_id"], round(r["frag_area"], 9))
-            for r in df.collect()
-        }
-
-    gm = (400000.0, 5600000.0, 1000.0, 1000.0)
-    per_cell = key(sp.spatial_intersect(cells, basins, grid_meta=gm))
-    monkeypatch.setattr(sp, "_PER_CELL_BROADCAST_MAX", 0)
-    tiled = key(sp.spatial_intersect(cells, basins, grid_meta=gm))
-    theta = key(sp.spatial_intersect(cells, basins))
-    assert per_cell and per_cell == tiled == theta

@@ -415,9 +415,9 @@ def test_radohydro_run_regnie_mirror_matches_generic_plan(spark, tmp_path):
 
 
 def test_radohydro_run_persists_no_decoded_obs(spark, tmp_path):
-    """The member route caches only dimension-sized frames — the basin
-    bboxes, the fragments and the result — and no relation over decoded
-    cells (no ``value`` column anywhere in a cached plan)."""
+    """The member route caches only dimension-sized frames — the
+    fragments and the result — and no relation over decoded cells (no
+    ``value`` column anywhere in a cached plan)."""
     from radohydro_spark.plans.pipeline import release_persisted
 
     storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
@@ -428,10 +428,10 @@ def test_radohydro_run_persists_no_decoded_obs(spark, tmp_path):
     before = {info.id() for info in storage()}
     _run(spark, _hourly_mirror(tmp_path / "mirror", _write_ascii), tmp_path / "out")
     cached = [info.name() for info in storage() if info.id() not in before]
-    assert len(cached) == 3, cached
+    assert len(cached) == 2, cached
     assert all("value#" not in plan for plan in cached), cached
     assert sorted(
-        next(k for k in ("geom_bbox", "frag_area", "basin_means") if k in plan)
+        next(k for k in ("basin_means", "window_fragments") if k in plan)
         for plan in cached
-    ) == ["basin_means", "frag_area", "geom_bbox"]
+    ) == ["basin_means", "window_fragments"]
     release_persisted()

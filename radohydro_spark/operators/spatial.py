@@ -14,7 +14,7 @@ Spark-first re-expressions of the reference's geotools stages:
   table: each basin maps its bbox to its own cell-index window and computes
   the exact rect∩polygon areas of that window in NumPy, the way
   exactextract covers each polygon over its own raster window.  Windows
-  above ``_BAND_CELLS`` cells split into row bands spread over the tasks.
+  above ``_BAND_CELLS`` cells split into row bands dealt over the tasks.
 * ``spatial_intersect``      — J1 over a given cell table: the grid route
   restricted to the table when the transform is known, else a broadcast
   bbox theta-join and the exact-area pandas UDF.  Neither route touches
@@ -24,6 +24,7 @@ Spark-first re-expressions of the reference's geotools stages:
 from __future__ import annotations
 
 import math
+import zlib
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -211,10 +212,12 @@ def rect_clip_area_udf(
 
 
 # A basin whose cell window holds more cells than this is cut into row
-# bands, which the round-robin exchange spreads over the tasks: a
-# Germany-sized basin on the 900x900 RADOLAN grid (810k cells) becomes
-# 13 bands, not one task.
-_BAND_CELLS = 1 << 16
+# bands dealt out over the tasks.  A 24-vertex basin over 700k cells of
+# the 900x900 RADOLAN grid took 8-10 s as one task and 1.8-3.0 s in
+# bands of 16k cells on 4 cores, no slower than 64k-cell bands and
+# faster than 256k (scripts/soak_basins.py large, SOAK.md); the finer
+# bands also give more cores a share.
+_BAND_CELLS = 1 << 14
 
 _FRAG_FIELDS = ("cell_row", "cell_col", "left", "bottom", "right", "top")
 
@@ -230,20 +233,39 @@ def _index_range(lo: float, hi: float, origin: float, res: float) -> tuple[int, 
     return i0, max(i0, math.ceil((hi - origin) / res) - 1)
 
 
-def _bands(
+def _window_fragments(
     basins: DataFrame, grid_meta: tuple[float, float, float, float]
 ) -> DataFrame:
-    """One ``(basin_id, geom, _r0, _r1, _c0, _c1)`` row per row band of
-    each basin's inclusive cell window, clamped to the basin row's
-    ``_row_lo``/``_row_hi``/``_col_lo``/``_col_hi``.  An EMPTY geometry
-    and a window off the grid have no band."""
-    ulx, uly, xres, yres = (float(v) for v in grid_meta)
+    """Fragments of every ``basins(basin_id, geom, _row_lo, _row_hi,
+    _col_lo, _col_hi)`` row over its own cell window, clamped to those
+    index bounds.  An EMPTY geometry and a window off the grid have no
+    rows.
 
-    def bands(it):
+    One Python stage of ``spark.sql.shuffle.partitions`` slot tasks, each
+    fed every basin by a broadcast nested-loop join, so no exchange
+    decides where a basin's work runs.  Every slot parses every basin and
+    maps its bbox to the window; the window's row bands are dealt round
+    the slots from one picked by the WKB's crc32, so each band is
+    computed exactly once, a large basin's bands run on every slot and
+    one-band basins spread over them.  The extra parses are linear in
+    vertices, the areas in vertices x cells."""
+    spark = basins.sparkSession
+    ulx, uly, xres, yres = (float(v) for v in grid_meta)
+    n_slots = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    slots = spark.range(0, n_slots, 1, n_slots).select(F.col("id").cast("int").alias("_slot"))
+    rows_in = slots.crossJoin(F.broadcast(basins)).select(
+        "_slot", "basin_id", "geom", "_row_lo", "_row_hi", "_col_lo", "_col_hi"
+    )
+
+    def window_fragments(it):
+        from radohydro_spark.geometry.clip_vec import polygon_rect_areas
+
+        parts, pending = [], 0
         for pdf in it:
-            out = []
-            for bid, blob, row_lo, row_hi, col_lo, col_hi in pdf.itertuples(index=False):
-                box = _bounds(parse_wkb_polygons(bytes(blob)))
+            for slot, bid, blob, row_lo, row_hi, col_lo, col_hi in pdf.itertuples(index=False):
+                blob = bytes(blob)
+                polys = parse_wkb_polygons(blob)
+                box = _bounds(polys)
                 if box is None:
                     continue
                 xmin, ymin, xmax, ymax = box
@@ -254,56 +276,32 @@ def _bands(
                 if r0 > r1 or c0 > c1:
                     continue
                 band = max(1, _BAND_CELLS // (c1 - c0 + 1))  # rows per band
-                for b0 in range(r0, r1 + 1, band):
-                    out.append((bid, blob, b0, min(b0 + band - 1, r1), c0, c1))
-            yield pd.DataFrame(out, columns=["basin_id", "geom", "_r0", "_r1", "_c0", "_c1"])
-
-    id_type = basins.schema["basin_id"].dataType.simpleString()
-    return basins.mapInPandas(
-        bands, f"basin_id {id_type}, geom binary, _r0 int, _r1 int, _c0 int, _c1 int"
-    )
-
-
-def _window_fragments(
-    basins: DataFrame, grid_meta: tuple[float, float, float, float]
-) -> DataFrame:
-    """Fragments of every ``basins(basin_id, geom, _row_lo, _row_hi,
-    _col_lo, _col_hi)`` row over its own clamped cell window (see
-    :func:`_bands`)."""
-    ulx, uly, xres, yres = (float(v) for v in grid_meta)
-    # the bands are dimension rows whose cost is their cell count, not
-    # their bytes: spread them over the session's cores
-    n_parts = int(basins.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    bands = _bands(basins, grid_meta).repartition(n_parts)
-
-    def window_fragments(it):
-        from radohydro_spark.geometry.clip_vec import polygon_rect_areas
-
-        parts, pending = [], 0
-        for pdf in it:
-            for bid, blob, br0, br1, bc0, bc1 in pdf.itertuples(index=False):
-                rows = np.repeat(np.arange(br0, br1 + 1, dtype=np.int32), bc1 - bc0 + 1)
-                cols = np.tile(np.arange(bc0, bc1 + 1, dtype=np.int32), br1 - br0 + 1)
-                # create_cell_grid's corner arithmetic, operation for operation
-                x0, x1 = ulx + cols * xres, ulx + (cols + 1) * xres
-                y0, y1 = uly + rows * yres, uly + (rows + 1) * yres
-                left, right = np.minimum(x0, x1), np.maximum(x0, x1)
-                bottom, top = np.minimum(y0, y1), np.maximum(y0, y1)
-                area = polygon_rect_areas(
-                    parse_wkb_polygons(bytes(blob)), left, bottom, right, top
-                )
-                frag = pd.DataFrame(
-                    dict(zip(_FRAG_FIELDS, (rows, cols, left, bottom, right, top)))
-                )
-                frag["basin_id"] = bid
-                frag["frag_area"] = area
-                frag["cell_area"] = (right - left) * (top - bottom)
-                parts.append(frag[area > 0])
-                pending += len(area)
-                # one Arrow batch per ~band of cells, not per task
-                if pending >= _BAND_CELLS:
-                    yield pd.concat(parts, ignore_index=True)
-                    parts, pending = [], 0
+                # band j belongs to the slot with j ≡ slot + crc32 (mod
+                # n_slots): one owner per band, and a one-band basin's
+                # owner varies with its WKB
+                first = (slot + zlib.crc32(blob)) % n_slots
+                for b0 in range(r0 + first * band, r1 + 1, n_slots * band):
+                    b1 = min(b0 + band - 1, r1)
+                    rows = np.repeat(np.arange(b0, b1 + 1, dtype=np.int32), c1 - c0 + 1)
+                    cols = np.tile(np.arange(c0, c1 + 1, dtype=np.int32), b1 - b0 + 1)
+                    # create_cell_grid's corner arithmetic, operation for operation
+                    x0, x1 = ulx + cols * xres, ulx + (cols + 1) * xres
+                    y0, y1 = uly + rows * yres, uly + (rows + 1) * yres
+                    left, right = np.minimum(x0, x1), np.maximum(x0, x1)
+                    bottom, top = np.minimum(y0, y1), np.maximum(y0, y1)
+                    area = polygon_rect_areas(polys, left, bottom, right, top)
+                    frag = pd.DataFrame(
+                        dict(zip(_FRAG_FIELDS, (rows, cols, left, bottom, right, top)))
+                    )
+                    frag["basin_id"] = bid
+                    frag["frag_area"] = area
+                    frag["cell_area"] = (right - left) * (top - bottom)
+                    parts.append(frag[area > 0])
+                    pending += len(area)
+                    # one Arrow batch per ~band of cells, not per task
+                    if pending >= _BAND_CELLS:
+                        yield pd.concat(parts, ignore_index=True)
+                        parts, pending = [], 0
         if parts:
             yield pd.concat(parts, ignore_index=True)
 
@@ -316,7 +314,7 @@ def _window_fragments(
             T.StructField("cell_area", T.DoubleType()),
         ]
     )
-    return bands.mapInPandas(window_fragments, schema)
+    return rows_in.mapInPandas(window_fragments, schema)
 
 
 def grid_fragments(basins: DataFrame, meta: dict) -> DataFrame:
@@ -329,7 +327,8 @@ def grid_fragments(basins: DataFrame, meta: dict) -> DataFrame:
     follow ``create_cell_grid``'s arithmetic, and one
     ``clip_vec.polygon_rect_areas`` call gives their exact areas — each
     polygon over its own raster window, as in exactextract.  A window of
-    more than ``_BAND_CELLS`` cells is cut into row bands.  Returns the
+    more than ``_BAND_CELLS`` cells is cut into row bands dealt over the
+    tasks (see :func:`_window_fragments`).  Returns the
     nine columns of :func:`spatial_intersect`, in its order, for
     ``frag_area > 0``; an EMPTY geometry has no rows.
     """
@@ -361,11 +360,18 @@ def spatial_intersect(
     and the exact-area pandas UDF on the surviving candidate pairs.
     Neither route touches the obs fact table.
 
-    Returns ``cells``' columns, then ``basin_id``, ``frag_area`` and
-    ``cell_area``, for ``frag_area > 0``.  The basin side is projected to
-    ``(basin_id, geom)`` first: passthrough attributes re-join at sink
-    time on ``basin_id`` (J3), and shapefile attrs may collide with the
-    cell grid's ``left/bottom/right/top`` columns otherwise.
+    The theta route returns ``cells``' columns, then ``basin_id``,
+    ``frag_area`` and ``cell_area``, for ``frag_area > 0``.  The grid
+    route returns :func:`grid_fragments`' nine columns: the six
+    ``create_cell_grid`` columns with bounds computed from ``grid_meta``,
+    then the same three; ``cells`` contributes only which ``(cell_row,
+    cell_col)`` pairs are kept, so any other column of it is not carried.
+    On a ``create_cell_grid`` table both routes give the same rows.
+
+    The basin side is projected to ``(basin_id, geom)`` first:
+    passthrough attributes re-join at sink time on ``basin_id`` (J3), and
+    shapefile attrs may collide with the cell grid's
+    ``left/bottom/right/top`` columns otherwise.
     """
     b = basins.select("basin_id", "geom")
     if grid_meta is not None:

@@ -131,10 +131,15 @@ def test_vectorized_kernel_matches_scalar():
 
 
 def test_spatial_intersect_grid_meta_path_equivalence(spark):
-    """The affine equi-join candidate path (grid_meta) must produce exactly
-    the theta-join's fragments, including boundary-aligned basins."""
+    """The grid route (grid_meta, and grid_fragments with no cell table)
+    must produce exactly the theta-join's fragments, including
+    boundary-aligned basins, on a south-up grid."""
     from radohydro_spark.geometry.wkb import wkb_box
-    from radohydro_spark.operators.spatial import create_cell_grid, spatial_intersect
+    from radohydro_spark.operators.spatial import (
+        create_cell_grid,
+        grid_fragments,
+        spatial_intersect,
+    )
     from radohydro_spark.schemas import BASINS_SCHEMA
     import pandas as pd
 
@@ -155,14 +160,21 @@ def test_spatial_intersect_grid_meta_path_equivalence(spark):
     equi = spatial_intersect(
         cells, basins, grid_meta=(1000.0, 2000.0, 100.0, 100.0)
     ).orderBy(*key).collect()
+    meta = dict(n_rows=6, n_cols=8, ulx=1000.0, uly=2000.0, xres=100.0, yres=100.0)
+    direct = grid_fragments(basins, meta).orderBy(*key).collect()
     assert [tuple(r) for r in theta] == [tuple(r) for r in equi]
+    assert [tuple(r) for r in theta] == [tuple(r) for r in direct]
     assert len(theta) > 0
 
 
 def test_spatial_intersect_grid_meta_north_up(spark):
     """Same equivalence with a negative yres (north-up raster, row 0 top)."""
     from radohydro_spark.geometry.wkb import wkb_box
-    from radohydro_spark.operators.spatial import create_cell_grid, spatial_intersect
+    from radohydro_spark.operators.spatial import (
+        create_cell_grid,
+        grid_fragments,
+        spatial_intersect,
+    )
     from radohydro_spark.schemas import BASINS_SCHEMA
     import pandas as pd
 
@@ -175,7 +187,10 @@ def test_spatial_intersect_grid_meta_north_up(spark):
     key = ["basin_id", "cell_row", "cell_col"]
     theta = spatial_intersect(cells, basins).orderBy(*key).collect()
     equi = spatial_intersect(cells, basins, grid_meta=(0.0, 500.0, 100.0, -100.0)).orderBy(*key).collect()
+    meta = dict(n_rows=5, n_cols=5, ulx=0.0, uly=500.0, xres=100.0, yres=-100.0)
+    direct = grid_fragments(basins, meta).orderBy(*key).collect()
     assert [tuple(r) for r in theta] == [tuple(r) for r in equi]
+    assert [tuple(r) for r in theta] == [tuple(r) for r in direct]
     assert len(theta) > 0
 
 

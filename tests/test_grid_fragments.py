@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import struct
 
-import pytest
-
 from radohydro_spark.geometry.wkb import wkb_box, wkb_multipolygon
 from radohydro_spark.operators import spatial as sp
 from radohydro_spark.operators.spatial import (
@@ -48,18 +46,11 @@ def _assert_same(cells, basins, meta):
     return want
 
 
-@pytest.mark.parametrize(
-    "xres,yres,ulx,uly",
-    [
-        (100.0, -100.0, 0.0, 600.0),  # row 0 at the top
-        (100.0, 100.0, 0.0, 0.0),  # row 0 at the bottom
-        (-100.0, 100.0, 800.0, 0.0),  # col 0 at the east edge
-        (-100.0, -100.0, 800.0, 600.0),
-    ],
-    ids=["north-up", "south-up", "west-positive", "both-flipped"],
-)
-def test_grid_fragments_every_orientation(spark, xres, yres, ulx, uly):
-    cells, meta = _grid(spark, 6, 8, ulx, uly, xres, yres)
+def test_grid_fragments_both_axes_flipped(spark):
+    """Row 0 at the bottom-right: both resolutions negative.  The other
+    three orientations are pinned in tests/test_geometry.py and
+    tests/test_round12_ops.py."""
+    cells, meta = _grid(spark, 6, 8, 800.0, 600.0, -100.0, -100.0)
     basins = _basins(
         spark,
         [
@@ -119,20 +110,28 @@ def test_grid_fragments_empty_geometry_has_no_rows(spark):
 
 
 def test_grid_fragments_bands_a_large_window(spark, monkeypatch):
-    """A window above the band constant is cut into row bands; the bands
-    together give the unbanded fragments."""
+    """A window above the band constant is cut into row bands dealt over
+    the slot tasks; the bands together give the unbanded fragments, each
+    cell once."""
+    from pyspark.sql import functions as F
+
     cells, meta = _grid(spark, 12, 9, 0.0, 1200.0, 100.0, -100.0)
     tri = [(30.0, 40.0), (870.0, 110.0), (410.0, 1170.0)]
     basins = _basins(spark, [wkb_multipolygon([[tri]]), wkb_box(250.0, 250.0, 460.0, 380.0)])
     whole = _rows(grid_fragments(basins, meta))
     monkeypatch.setattr(sp, "_BAND_CELLS", 20)  # 9-column window: 2 rows a band
     assert _assert_same(cells, basins, meta) == whole
-    clamped = basins.selectExpr(
-        "basin_id", "geom", "0 AS _row_lo", "11 AS _row_hi", "0 AS _col_lo", "8 AS _col_hi"
+    tasks = (
+        grid_fragments(basins, meta)
+        .filter("basin_id = 1")
+        .select(F.spark_partition_id().alias("task"), "cell_row")
+        .collect()
     )
-    gm = (meta["ulx"], meta["uly"], meta["xres"], meta["yres"])
-    bands = sp._bands(clamped, gm).filter("basin_id = 1").orderBy("_r0").collect()
-    assert [(r["_r0"], r["_r1"]) for r in bands] == [(i, i + 1) for i in range(0, 12, 2)]
+    n_slots = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # six bands of two rows, each band in one task, the bands over every task
+    band_task = {(r["cell_row"] // 2, r["task"]) for r in tasks}
+    assert sorted(b for b, _ in band_task) == list(range(6))
+    assert len({t for _, t in band_task}) == min(n_slots, 6)
 
 
 def test_spatial_intersect_grid_meta_window_filtered_cells(spark):

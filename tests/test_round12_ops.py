@@ -805,7 +805,11 @@ def test_spatial_intersect_negative_xres_matches_theta_path(spark):
     """r12 review: the grid_meta equi-join path handled yres<0 but
     silently computed a wrong candidate window for xres<0 — fragments
     must match the theta path on a west-positive grid."""
-    from radohydro_spark.operators.spatial import create_cell_grid, spatial_intersect
+    from radohydro_spark.operators.spatial import (
+        create_cell_grid,
+        grid_fragments,
+        spatial_intersect,
+    )
     from radohydro_spark.geometry.wkb import wkb_box
 
     # west-positive grid: x decreases with cell_col
@@ -825,6 +829,11 @@ def test_spatial_intersect_negative_xres_matches_theta_path(spark):
         ).collect()
     }
     assert theta and fast == theta
+    # grid_fragments, with no cell table, gives the theta rows bit for bit
+    meta = dict(n_rows=4, n_cols=6, ulx=100.0, uly=0.0, xres=-10.0, yres=10.0)
+    key = ["basin_id", "cell_row", "cell_col"]
+    want = [tuple(r) for r in spatial_intersect(cells, basins).orderBy(*key).collect()]
+    assert [tuple(r) for r in grid_fragments(basins, meta).orderBy(*key).collect()] == want
 
 
 def test_geom_bbox_empty_geometry_rows_drop_not_crash(spark):

@@ -9,6 +9,7 @@
 from __future__ import annotations
 
 import argparse
+import os
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -28,6 +29,8 @@ def main(argv: list[str] | None = None) -> int:
     from radohydro_spark import get_spark
     from radohydro_spark.plans.pipeline import radohydro_run
 
+    # one task slot per usable core (get_spark alone defaults to local[32])
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     spark = get_spark("radohydro_spark_cli")
     result = radohydro_run(
         spark,

@@ -8,9 +8,10 @@ GeoTIFF raster (geotools/geotools.py:369-381).
 
 Engine mapping:
 
-* K1  per-basin CSV     — distributed partitioned CSV write; the bespoke
-                          headers are a driver post-pass over the
-                          dimension-sized output directory (n_basins files).
+* K1  per-basin CSV     — one ``groupBy(basin_id)`` builds each file's
+                          time-ordered body in the JVM; the driver streams
+                          the bodies and writes each behind its bespoke
+                          3-line header (n_basins files, no staging dir).
 * K2  wide vector sink  — sink-time pivot → parquet with a WKB geometry
                           column ("GeoParquet-style"): no 500-column dBase
                           cliff, no 10-char field-name truncation.
@@ -19,15 +20,18 @@ Engine mapping:
                           ascii_grid.py decodes, lossless round-trip) and
                           GeoTIFF.  Both render DISTRIBUTED: text lines /
                           DEFLATE strips are produced executor-side and
-                          streamed into the single output file; peak
-                          driver memory is one strip, never the raster.
+                          streamed in order into the single output file;
+                          peak driver memory is one partition of lines /
+                          strips, never the raster.
+
+Every sink that names its own files works the same way: executors render
+the bodies, the driver streams them (``toLocalIterator``) into the files.
 """
 
 from __future__ import annotations
 
 import math
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,19 +39,17 @@ from pyspark.sql import functions as F
 from radohydro_spark.operators.aggregate import pivot_wide
 
 
-def write_basin_csvs(
-    result: DataFrame,
-    basins: DataFrame,
-    out_dir: str,
-    name_prefix: str = "basin",
-    round_decimals: int = 3,
-) -> list[str]:
-    """K1 — one CSV per basin: 2 header lines (zero-padded basin id, basin
-    area) then ``Time[yymmddhhmm],rainfall[mm]`` rows.
+def write_basin_csvs(result: DataFrame, basins: DataFrame, out_dir: str) -> list[str]:
+    """K1 — one CSV per basin, ``basin_<padded id>.csv``: 2 header lines
+    (zero-padded basin id, basin area), the column line, then one
+    ``Time[yymmddhhmm],rainfall[mm]`` row per timestep in time order, the
+    rainfall rounded to 3 decimals and a NULL written as an empty field.
 
-    The fact table is written by Spark (``partitionBy('basin_id')``, one
-    shuffle-free task group per basin); only the header prepend + rename
-    touches the driver, and that is O(n_basins) — dimension-sized.
+    One ``groupBy(basin_id)`` builds each file's whole body in the JVM
+    (sorted ``collect_list`` of the rendered rows); the driver streams the
+    bodies through ``toLocalIterator`` and writes each behind its header,
+    so it holds one partition of bodies at a time.  Creates ``out_dir``
+    if needed; returns the written paths in basin-id order.
 
     Zero-pad width uses ``ceil(log10(n+1))`` — the reference's ``np.ceil(
     np.log(n))`` (geotools/geotools.py:300-303) is a natural-log latent
@@ -68,48 +70,36 @@ def write_basin_csvs(
             r["basin_id"]: sum(polygon_area(p) for p in parse_wkb_polygons(bytes(r["geom"])))
             for r in basins.select("basin_id", "geom").collect()
         }
-    n_basins = len(areas)
-    width = max(1, math.ceil(math.log10(n_basins + 1)))
+    width = max(1, math.ceil(math.log10(len(areas) + 1)))
 
-    staging = os.path.join(out_dir, "_staging")
-    (
-        result.select(
-            "basin_id",
-            F.date_format("ts", "yyMMddHHmm").alias("time"),
-            F.round("rainfall_mm", round_decimals).alias("rainfall"),
+    # (time, value) structs sort by time; a value renders as Java's
+    # Double.toString of its 3-decimal rounding, a NULL as an empty field
+    rows = F.array_sort(
+        F.collect_list(
+            F.struct(
+                F.date_format("ts", "yyMMddHHmm").alias("t"),
+                F.coalesce(F.round("rainfall_mm", 3).cast("string"), F.lit("")).alias("v"),
+            )
         )
-        .repartition("basin_id")
-        # sort by the PARTITION column first: the dynamic-partition
-        # writer requires its output ordered by basin_id and inserts its
-        # own (time-order-destroying) sort when the requirement is not
-        # already met — sorting by time alone only survived while the
-        # upstream generator was single-partition (r16: it no longer is)
-        .sortWithinPartitions("basin_id", "time")
-        .write.mode("overwrite")
-        .partitionBy("basin_id")
-        .csv(staging)
+    )
+    body = F.array_join(
+        F.transform(rows, lambda r: F.concat(r["t"], F.lit(","), r["v"], F.lit("\n"))),
+        "",
     )
 
+    os.makedirs(out_dir, exist_ok=True)
     written = []
-    for entry in sorted(os.listdir(staging)):
-        if not entry.startswith("basin_id="):
-            continue
-        bid = int(entry.split("=", 1)[1])
+    for row in result.groupBy("basin_id").agg(body.alias("body")).toLocalIterator():
+        bid = row["basin_id"]
         padded = str(bid).zfill(width)
-        final = os.path.join(out_dir, f"{name_prefix}_{padded}.csv")
-        parts = sorted(
-            p for p in os.listdir(os.path.join(staging, entry)) if p.endswith(".csv")
-        )
-        with open(final, "w") as out:
+        path = os.path.join(out_dir, f"basin_{padded}.csv")
+        with open(path, "w") as out:
             out.write(f"basinID,{padded}\n")
             out.write(f"area[m2],{areas.get(bid, float('nan'))}\n")
             out.write("Time[yymmddhhmm],rainfall[mm]\n")
-            for p in parts:
-                with open(os.path.join(staging, entry, p)) as f:
-                    out.write(f.read())
-        written.append(final)
-    shutil.rmtree(staging)
-    return written
+            out.write(row["body"])
+        written.append(path)
+    return sorted(written)
 
 
 def write_wide_geoparquet(
@@ -177,10 +167,10 @@ def write_ascii_grid(
 
     Fully distributed render: each raster row becomes one text line inside
     an Arrow-batched ``applyInPandas`` kernel (dense nodata fill + ``%g``
-    formatting executor-side), written row-sorted by a single WRITE task —
-    the driver never materializes a row, only splices the 6-line header
-    onto the part file with a streamed copy.  Row 0 is the TOP row,
-    matching the decoder in sources/ascii_grid.py.
+    formatting executor-side); the driver writes the 6-line header, then
+    streams the lines in row order through ``toLocalIterator``, holding
+    one partition of lines at a time, never the raster.  Row 0 is the TOP
+    row, matching the decoder in sources/ascii_grid.py.
     """
     import pandas as pd
 
@@ -206,15 +196,6 @@ def write_ascii_grid(
         "cell_row", F.coalesce("line", nodata_line).alias("line")
     )
 
-    staging = path + "._staging"
-    (
-        lines.repartition(1)
-        .sortWithinPartitions("cell_row")
-        .select("line")
-        .write.mode("overwrite")
-        .text(staging)
-    )
-    parts = sorted(p for p in os.listdir(staging) if p.startswith("part-"))
     with open(path, "w") as f:
         f.write(f"ncols {n_cols}\n")
         f.write(f"nrows {n_rows}\n")
@@ -222,10 +203,8 @@ def write_ascii_grid(
         f.write(f"yllcorner {yllcorner}\n")
         f.write(f"cellsize {cellsize}\n")
         f.write(f"NODATA_value {nodata}\n")
-        for p in parts:
-            with open(os.path.join(staging, p)) as src:
-                shutil.copyfileobj(src, f)
-    shutil.rmtree(staging)
+        for row in lines.orderBy("cell_row").toLocalIterator():
+            f.write(row["line"] + "\n")
 
 
 def write_geotiff(
@@ -248,9 +227,10 @@ def write_geotiff(
     Distributed strip pipeline: executors densify + DEFLATE-compress each
     ``rows_per_strip``-row strip (``applyInPandas`` keyed on
     ``cell_row // rows_per_strip``); the driver streams the finished strip
-    blobs in order through ``toLocalIterator`` — peak driver memory is ONE
-    strip, never the raster.  Byte-identical to ``encode_geotiff`` on the
-    equivalent dense array (same header builder).  Row 0 is the TOP row.
+    blobs in order through ``toLocalIterator`` straight into the file
+    behind a reserved header — peak driver memory is ONE strip, never the
+    raster.  Byte-identical to ``encode_geotiff`` on the equivalent dense
+    array (same header builder).  Row 0 is the TOP row.
     """
     import numpy as np
     import pandas as pd
@@ -260,7 +240,9 @@ def write_geotiff(
     vals, n_rows, n_cols = _raster_dims(raster, value_col)
     np_dtype = np.dtype(dtype)
 
-    def make_strip(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # unannotated: a partly annotated (key, pdf) function makes
+    # applyInPandas warn that it cannot infer the eval type on every call
+    def make_strip(key, pdf):
         strip_idx = int(key[0])
         r0 = strip_idx * rows_per_strip
         h = min(rows_per_strip, n_rows - r0)
@@ -286,10 +268,27 @@ def write_geotiff(
     )
     strips = all_strips.join(present, "strip_idx", "left")
 
-    # stream strips in order; driver holds one blob at a time
+    def header(strip_lengths: list[int]) -> bytes:
+        return build_geotiff_header(
+            n_rows,
+            n_cols,
+            np_dtype,
+            strip_lengths,
+            ulx,
+            uly,
+            xres,
+            yres,
+            nodata=nodata,
+            compress=compress,
+            rows_per_strip=rows_per_strip,
+        )
+
+    # the header's size depends only on the strip count: reserve it, stream
+    # the strips in order behind it (the driver holds one blob at a time),
+    # then write the real header, with the strips' offsets, over the reserve
     strip_lengths: list[int] = []
-    staging = path + "._strips"
-    with open(staging, "wb") as tmp:
+    with open(path, "wb") as f:
+        f.write(header([0] * n_strips))
         for row in strips.orderBy("strip_idx").toLocalIterator():
             blob = row["blob"]
             if blob is None:
@@ -302,23 +301,6 @@ def write_geotiff(
                 )
             blob = bytes(blob)
             strip_lengths.append(len(blob))
-            tmp.write(blob)
-
-    header = build_geotiff_header(
-        n_rows,
-        n_cols,
-        np_dtype,
-        strip_lengths,
-        ulx,
-        uly,
-        xres,
-        yres,
-        nodata=nodata,
-        compress=compress,
-        rows_per_strip=rows_per_strip,
-    )
-    with open(path, "wb") as f:
-        f.write(header)
-        with open(staging, "rb") as src:
-            shutil.copyfileobj(src, f)
-    os.remove(staging)
+            f.write(blob)
+        f.seek(0)
+        f.write(header(strip_lengths))

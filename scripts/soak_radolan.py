@@ -11,7 +11,8 @@ transform → fragments over each basin's own cell window → the fused
 member kernel (a NaN scan of the fragment cells, NULL policy and
 weights on the fragments, then one per-basin ``np.bincount`` per raster) → per-basin CSV + wide GeoParquet
 sinks; nothing is ever stacked dense, so memory is bounded by one
-raster per task, not by the number of timesteps.
+raster per task, not by the number of timesteps.  A second leg times
+the per-basin CSV sink (K1) alone, over the result cached again.
 
     python scripts/soak_radolan.py [n_days] [n_basins]   # default 30 20
 
@@ -59,6 +60,7 @@ def main() -> None:
     n_days = int(sys.argv[1]) if len(sys.argv) > 1 else 30
     n_basins = int(sys.argv[2]) if len(sys.argv) > 2 else 20
     from radohydro_spark.plans.pipeline import radohydro_run
+    from radohydro_spark.sinks import write_basin_csvs
     from radohydro_spark.sources.synthetic import RADOLAN_SCALE, radolan_scale_basins
 
     spark, tr = session("soak_radolan")
@@ -67,15 +69,25 @@ def main() -> None:
     synth = lambda: synth_mirror(mirror, n_days)  # noqa: E731
     n_files, _ = measure(tr, "synth", synth, lambda n: {"rasters": n})
     basins = radolan_scale_basins(spark, RADOLAN_SCALE, n_basins=n_basins)
-    run = lambda: radohydro_run(  # noqa: E731
-        spark, start="2024-01-01 00:00:00", end=f"2024-01-{n_days:02d} 23:59:00",
-        shapefile_path=basins, mirror_dir=mirror, out_dir=out, source="radolan",
-        date_type="minutes",
-    ).count()
-    measure(tr, f"radohydro_run {n_days} days {n_basins} basins", run, lambda n: {
-        "cells_decoded": n_files * N_ROWS * N_COLS, "result_rows": n,
+
+    def run():
+        result = radohydro_run(
+            spark, start="2024-01-01 00:00:00", end=f"2024-01-{n_days:02d} 23:59:00",
+            shapefile_path=basins, mirror_dir=mirror, out_dir=out, source="radolan",
+            date_type="minutes",
+        )
+        return result, result.count()
+
+    (result, _), _ = measure(tr, f"radohydro_run {n_days} days {n_basins} basins", run, lambda rn: {
+        "cells_decoded": n_files * N_ROWS * N_COLS, "result_rows": rn[1],
         "basin_csvs": sum(f.endswith(".csv") for f in os.listdir(out)),
     })
+    # the K1 sink alone, over the result cached again (measure released it)
+    result.persist().count()
+    csvs = os.path.join(out, "csv_only")
+    measure(tr, f"write_basin_csvs {n_basins} basins", lambda: write_basin_csvs(result, basins, csvs),
+            lambda files: {"basin_csvs": len(files)})
+    result.unpersist()
     shutil.rmtree(mirror, ignore_errors=True)
     shutil.rmtree(out, ignore_errors=True)
 

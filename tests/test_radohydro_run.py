@@ -168,6 +168,35 @@ def test_cli_entry(spark, tmp_path, capsys):
     assert len([p for p in os.listdir(out) if p.endswith(".csv")]) == 3
 
 
+def test_cli_entry_tmp_mirror(spark, tmp_path, capsys):
+    """test_cli_entry without the reference fixture: the basins go through
+    our own shapefile writer, and ``--out`` does not exist yet."""
+    from radohydro_spark.__main__ import main
+    from radohydro_spark.sinks.shapefile_writer import write_shapefile
+    from radohydro_spark.sources.ascii_grid import decode_ascii_grids, grid_meta
+
+    write_shapefile(_basins_df(spark), str(tmp_path / "basins.shp"))
+    mirror = _hourly_mirror(tmp_path / "mirror", _write_ascii)
+    out = tmp_path / "new" / "out"
+    rc = main(
+        [
+            "--start", "2024-01-01 00:00:00",
+            "--end", "2024-01-01 02:00:00",
+            "--shape", str(tmp_path / "basins.shp"),
+            "--mirror", mirror,
+            "--out", str(out),
+        ]
+    )
+    assert rc == 0
+    assert "wrote 9 (basin, timestep) rows" in capsys.readouterr().out
+    meta = grid_meta((tmp_path / "mirror" / "RW-202401010000.asc").read_bytes())
+    want = _generic(
+        spark, mirror, lambda m: decode_ascii_grids(m, "minutes"), meta,
+        "2024-01-01 00:00:00", "2024-01-01 02:00:00", "minutes", _basins_df(spark),
+    )
+    _check_run(None, out, want, _areas())
+
+
 def test_radohydro_run_geotiff_mirror(spark, tmp_path):
     """S9 path: the same debug1x3 run from a GeoTIFF mirror must reproduce
     the ASCII-grid run bit-for-bit (shared obs contract, SURVEY.md §2 S9)."""
@@ -264,11 +293,12 @@ def _generic(spark, mirror, decode, meta, start, end, date_type, basins):
 
 
 def _check_run(result, out, want, areas, wide=True):
-    """The returned frame, the per-basin CSVs and the wide table all carry
-    ``want``; CSV headers carry each basin's id and area."""
+    """The returned frame (unless None), the per-basin CSVs and the wide
+    table all carry ``want``; CSV headers carry each basin's id and area."""
     import pyarrow.parquet as pq
 
-    assert {(r.basin_id, r.ts): r.rainfall_mm for r in result.collect()} == want
+    if result is not None:
+        assert {(r.basin_id, r.ts): r.rainfall_mm for r in result.collect()} == want
     stamps = sorted({ts for _, ts in want})
     ids = sorted({b for b, _ in want})
     width = max(1, math.ceil(math.log10(len(areas) + 1)))

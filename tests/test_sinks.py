@@ -3,8 +3,10 @@ cell-grid export, and ASCII-raster round-trip through our own decoder."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from radohydro_spark.operators.spatial import rasterize
@@ -113,18 +115,105 @@ def test_cells_wide_parity(spark):
 
 
 def test_ascii_grid_empty_row_fill(spark, tmp_path):
-    # a raster row with no cells at all must still render as a nodata line
+    # raster rows with no cells at all (1 and 3) must still render as
+    # nodata lines, a NULL value as nodata; the input spans 2 partitions
     df = spark.createDataFrame(
-        [(0, 0, 1.5), (0, 2, 2.5), (2, 1, 3.5)],
+        [(0, 0, 1.5), (0, 2, 2.5), (2, 1, 3.5), (2, 2, None), (4, 0, 0.25)],
         "cell_row int, cell_col int, burn double",
-    )
+    ).repartition(2)
     path = str(tmp_path / "gap.asc")
     write_ascii_grid(df, path, xllcorner=0.0, yllcorner=0.0, cellsize=1.0)
-    lines = open(path).read().splitlines()
-    assert lines[0] == "ncols 3" and lines[1] == "nrows 3"
-    assert lines[6] == "1.5 -9999 2.5"
-    assert lines[7] == "-9999 -9999 -9999"  # the empty row 1
-    assert lines[8] == "-9999 3.5 -9999"
+    assert open(path).read() == (
+        "ncols 3\nnrows 5\nxllcorner 0.0\nyllcorner 0.0\ncellsize 1.0\n"
+        "NODATA_value -9999.0\n"
+        "1.5 -9999 2.5\n"
+        "-9999 -9999 -9999\n"
+        "-9999 3.5 -9999\n"
+        "-9999 -9999 -9999\n"
+        "0.25 -9999 -9999\n"
+    )
+    assert os.listdir(tmp_path) == ["gap.asc"]
+
+
+# K1 bytes as the partitioned-write sink (before the streamed one) wrote them
+_CSV_HEAD = "Time[yymmddhhmm],rainfall[mm]\n"
+
+
+def test_basin_csv_bytes(spark, tmp_path):
+    """NULL -> empty field, E-notation at >= 1e7, rounding to 0.0 and up
+    to 100000.0, time order restored from 3 partitions fed newest first,
+    a result basin missing from ``basins`` (area nan), a basin without
+    rows (no file), and an ``out_dir`` that does not exist yet."""
+    vals = [None, 12345678.9, 0.0004, 1e7, 0.0005, 1.23456,
+            2.5, 100.0, 0.1, 1e-4, 99999.9996, 3.0]  # fmt: skip
+    arr = F.array(*[F.lit(v).cast("double") for v in vals])
+    hour = F.make_interval(hours=F.col("id").cast("int"))
+    res = spark.range(12, numPartitions=3).select(
+        (1 + F.col("id") % 2).cast("int").alias("basin_id"),
+        (F.lit(dt.datetime(2024, 1, 1, 11, 0)) - hour).alias("ts"),
+        F.element_at(arr, (F.col("id") + 1).cast("int")).alias("rainfall_mm"),
+    ).unionByName(
+        spark.createDataFrame(
+            [(4, dt.datetime(2024, 1, 1), 1.0)], "basin_id int, ts timestamp, rainfall_mm double"
+        )
+    )
+    basins = spark.createDataFrame(
+        [(1, 1.5e6), (2, 2500.25), (3, 7.0)], "basin_id int, area double"
+    )
+    out = tmp_path / "not" / "yet"
+    files = write_basin_csvs(res, basins, str(out))
+    assert files == [str(out / f"basin_{i}.csv") for i in (1, 2, 4)]
+    assert sorted(os.listdir(out)) == ["basin_1.csv", "basin_2.csv", "basin_4.csv"]
+    assert open(files[0]).read() == (
+        "basinID,1\narea[m2],1500000.0\n" + _CSV_HEAD + "2401010100,100000.0\n"
+        "2401010300,0.1\n2401010500,2.5\n2401010700,0.001\n2401010900,0.0\n"
+        "2401011100,\n"
+    )
+    assert open(files[1]).read() == (
+        "basinID,2\narea[m2],2500.25\n" + _CSV_HEAD + "2401010000,3.0\n"
+        "2401010200,0.0\n2401010400,100.0\n2401010600,1.235\n"
+        "2401010800,1.0E7\n2401011000,1.23456789E7\n"
+    )
+    assert open(files[2]).read() == (
+        "basinID,4\narea[m2],nan\n" + _CSV_HEAD + "2401010000,1.0\n"
+    )
+
+
+@pytest.mark.parametrize(
+    "n, first, last, last_area, last_value",
+    [
+        (9, "1", "9", "4.5", "1.125"),
+        (10, "01", "10", "5.0", "1.25"),
+        (99, "01", "99", "49.5", "12.375"),
+        (100, "001", "100", "50.0", "12.5"),
+    ],
+)
+def test_basin_csv_pad_width(spark, tmp_path, n, first, last, last_area, last_value):
+    ids = spark.range(1, n + 1).select(F.col("id").cast("int").alias("basin_id"))
+    basins = ids.select("basin_id", (F.col("basin_id") * 0.5).alias("area"))
+    res = ids.select(
+        "basin_id",
+        F.lit(dt.datetime(2024, 3, 9, 23, 50)).alias("ts"),
+        (F.col("basin_id") / 8).alias("rainfall_mm"),
+    )
+    files = write_basin_csvs(res, basins, str(tmp_path))
+    names = [os.path.basename(f) for f in files]
+    assert names == [f"basin_{i:0{len(first)}d}.csv" for i in range(1, n + 1)]
+    assert (names[0], names[-1]) == (f"basin_{first}.csv", f"basin_{last}.csv")
+    assert open(files[0]).read() == (
+        f"basinID,{first}\narea[m2],0.5\n" + _CSV_HEAD + "2403092350,0.125\n"
+    )
+    assert open(files[-1]).read() == (
+        f"basinID,{last}\narea[m2],{last_area}\n" + _CSV_HEAD + f"2403092350,{last_value}\n"
+    )
+
+
+def test_basin_csv_empty_result(spark, tmp_path):
+    empty = spark.createDataFrame([], "basin_id int, ts timestamp, rainfall_mm double")
+    basins = spark.createDataFrame([(1, 1.0)], "basin_id int, area double")
+    out = tmp_path / "out"
+    assert write_basin_csvs(empty, basins, str(out)) == []
+    assert out.is_dir() and os.listdir(out) == []
 
 
 def test_geotiff_sink_matches_dense_encoder(spark, tmp_path):
